@@ -13,6 +13,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hbase_gis_spark.geo.sqlrender import EARTH_RADIUS_M
+
 
 def geohash_col(lat: Column, lon: Column, precision: int = 12) -> Column:
     """Geohash (base-32) column of (lat, lon) at fixed ``precision``.
@@ -110,9 +112,6 @@ def geohash_col_native(lat: Column, lon: Column, precision: int = 12) -> Column:
         "bcdefghjkmnpqrstuvwxyz",
     )
     return F.substring(gh12, 1, precision)
-
-
-EARTH_RADIUS_M = 6371008.8  # IUGG mean radius
 
 
 def haversine_distance(

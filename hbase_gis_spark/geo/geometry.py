@@ -155,8 +155,8 @@ def convex_ccw_edges(poly: Polygon) -> list[tuple[float, float, float, float]] |
 
     For a convex CCW ring, boundary-inclusive covers(P) is exactly the
     conjunction of edge cross products (B−A)×(P−A) >= 0 — a pure
-    comparison form usable as codegen'd Column predicates (and as the
-    oracle SQL, see oracles.halfplane_predicate_sql)."""
+    comparison form rendered as SQL by ``sqlrender.halfplane_sql`` for
+    Spark and the DuckDB oracle alike."""
     if len(poly.parts) != 1 or len(poly.parts[0]) != 1:
         return None
     ring = poly.parts[0][0]

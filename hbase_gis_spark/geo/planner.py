@@ -53,6 +53,17 @@ def minimum_bounding_prefixes(query: Polygon, max_precision: int = 7) -> list[st
     )
 
 
+def prefix_cover(poly: Polygon, max_precision: int = 7) -> list[str] | None:
+    """The planner's prefix cover, or None when no precision-1..7 cover
+    exists — pruning is only an optimisation, so the caller then scans
+    unpruned (``minimum_bounding_prefixes`` itself keeps raising, as
+    the reference does)."""
+    try:
+        return minimum_bounding_prefixes(poly, max_precision)
+    except NoCoveringPrefixError:
+        return None
+
+
 def knn_prefixes(lat: float, lon: float, precision: int = 7) -> list[str]:
     """The 9-cell candidate neighborhood for reference-faithful KNN
     (KNNQuery.java:84-88): origin cell at ``precision`` + 8 adjacent."""

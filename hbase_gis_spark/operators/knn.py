@@ -21,10 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hbase_gis_spark.functions.geo import haversine_distance, planar_distance
+from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.planner import knn_prefixes
 
-_METRICS = {"planar": planar_distance, "haversine": haversine_distance}
+_METRICS = {
+    "planar": R.planar_distance_sql,
+    "haversine": R.haversine_distance_sql,
+}
 
 
 def with_distance(
@@ -42,15 +45,10 @@ def with_distance(
     semantics, SURVEY.md §2 K3) or "haversine" (great-circle meters)."""
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {sorted(_METRICS)}")
-    return df.withColumn(
-        dist_col,
-        _METRICS[metric](
-            F.col(lon_col).cast("double"),
-            F.col(lat_col).cast("double"),
-            origin_lon,
-            origin_lat,
-        ),
+    dist = _METRICS[metric](
+        origin_lon, origin_lat, R.col(lon_col), R.col(lat_col)
     )
+    return df.withColumn(dist_col, F.expr(dist))
 
 
 def knn(
@@ -83,19 +81,15 @@ def knn(
     out = with_distance(
         df, origin_lon, origin_lat, lon_col, lat_col, metric=metric
     )
+    # drop NaN coordinates like the reference (KNNEndpoint.java:93)
+    cond = "NOT isnan(`distance`)"
     if pruned:
         if geohash_col is None:
             raise ValueError("pruned KNN needs a geohash column")
         prefixes = knn_prefixes(origin_lat, origin_lon, prefix_precision)
-        out = out.filter(
-            F.substring(F.col(geohash_col), 1, prefix_precision).isin(prefixes)
-        )
-    # drop NaN coordinates like the reference (KNNEndpoint.java:93)
-    out = out.filter(~F.isnan(F.col("distance")))
-    order = [F.col("distance").asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    return out.orderBy(*order).limit(k)
+        cond = f"{R.prefix_in_sql(prefixes, R.col(geohash_col))} AND {cond}"
+    order = ["distance"] if tiebreak_col is None else ["distance", tiebreak_col]
+    return out.filter(F.expr(cond)).orderBy(*order).limit(k)
 
 
 def knn_per_region(
@@ -150,14 +144,15 @@ def knn_multi(
     spatial twin of ``cosine_topk_multi`` (one pass amortized over all
     queries, vs. a scan per origin).
 
-    ``origins`` is a list of ``(query_id, lon, lat)``; it becomes a
-    tiny broadcast dim, the point table streams once through the
-    broadcast join, and the per-origin top-k is a rank window
-    partitioned by query_id (map-side WindowGroupLimit bounds each
-    partition's contribution to k rows before the exchange). Distance
-    is the reference's planar degree metric (SURVEY.md §2 K3), written
-    with the same operand order as :func:`planar_distance` so oracles
-    reproduce it bit-for-bit.
+    ``origins`` is a list of ``(query_id, lon, lat)``; it becomes an
+    inline ``VALUES`` relation broadcast as a tiny dim, the point table
+    streams once through the broadcast join, and the per-origin top-k
+    is a rank window partitioned by query_id (map-side WindowGroupLimit
+    bounds each partition's contribution to k rows before the
+    exchange). Distance is the reference's planar degree metric
+    (SURVEY.md §2 K3), written with the same operand order as
+    ``sqlrender.planar_distance_sql`` so oracles reproduce it
+    bit-for-bit.
 
     ``pruned=True`` (requires ``geohash_col``) joins on the 9
     per-origin candidate cells at ``prefix_precision`` instead of
@@ -177,19 +172,15 @@ def knn_multi(
             for q, lo, la in rows
             for p in knn_prefixes(la, lo, prefix_precision)
         ]
-        odf = spark.createDataFrame(
-            pref_rows,
-            "query_id long, q_lon double, q_lat double, prefix string",
-        )
+        odf = spark.sql(R.values_sql(
+            pref_rows, ["query_id", "q_lon", "q_lat", "prefix"]))
         joined = df.join(
             F.broadcast(odf),
             F.substring(F.col(geohash_col), 1, prefix_precision)
             == F.col("prefix"),
         ).drop("prefix")
     else:
-        odf = spark.createDataFrame(
-            rows, "query_id long, q_lon double, q_lat double"
-        )
+        odf = spark.sql(R.values_sql(rows, ["query_id", "q_lon", "q_lat"]))
         joined = df.crossJoin(F.broadcast(odf))
     dx = F.col(lon_col).cast("double") - F.col("q_lon")
     dy = F.col(lat_col).cast("double") - F.col("q_lat")
@@ -226,25 +217,11 @@ def within_radius(
     only admit extras (removed by the exact test), never drop a true
     match; the registered oracle is therefore the bare exact filter.
     """
-    import math
-
-    from pyspark.sql import functions as F
-
-    from hbase_gis_spark.functions.geo import haversine_distance
-
-    dlat = radius_m / 110574.0 * 1.05
-    coslat = max(math.cos(math.radians(origin_lat)), 0.01)
-    dlon = radius_m / (111320.0 * coslat) * 1.05
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    box = (
-        (lat >= origin_lat - dlat)
-        & (lat <= origin_lat + dlat)
-        & (lon >= origin_lon - dlon)
-        & (lon <= origin_lon + dlon)
-    )
-    dist = haversine_distance(lon, lat, origin_lon, origin_lat)
+    lon, lat = R.col(lon_col), R.col(lat_col)
+    dist = R.haversine_distance_sql(origin_lon, origin_lat, lon, lat)
     return (
-        df.filter(box)
-        .withColumn("distance", dist)
-        .filter(F.col("distance") <= F.lit(float(radius_m)))
+        df.filter(F.expr(R.radius_box_sql(
+            origin_lon, origin_lat, radius_m, lon, lat)))
+        .withColumn("distance", F.expr(dist))
+        .filter(F.expr(f"`distance` <= {R.lit(radius_m)}"))
     )

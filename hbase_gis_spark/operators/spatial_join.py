@@ -7,35 +7,38 @@ region-tagging shape a large pipeline needs — with two Spark-first
 execution modes chosen by input shape:
 
 - ``broadcast_mode`` (default, small polygon sets): ONE scan of the
-  point table; every polygon's covers() test is a codegen'd
-  conjunction of half-plane comparisons behind its own pushable bbox
+  point table; every polygon's covers() test is rendered SQL
+  (``geo.sqlrender``: half-planes for convex rings, the unrolled
+  ray-cast for other small shapes) behind its own pushable bbox
   pre-filter, assembled into an array and exploded. Zero shuffle, zero
-  Python for convex polygons; at 100 TB this is a map-only pass.
+  Python for small shapes; at 100 TB this is a map-only pass.
 - cell-join mode (``geohash_col`` given, scales to large polygon
   sets): polygons expand driver-side into covering geohash prefixes
   (the reference's planner, WithinQuery.java:79-102, per polygon); the
-  (cell, poly_id) table broadcast-hash-joins against the points' cell
-  key — candidates are only the points inside covering cells — then the
+  (cell, poly_id) table, an inline ``VALUES`` relation (no RDD, no
+  extra job), broadcast-hash-joins against the points' cell key —
+  candidates are only the points inside covering cells — then the
   same codegen'd exact test filters candidates. The join is an
   equi-join on the truncated cell key, so Catalyst plans a
   BroadcastHashJoin: no point-table shuffle at any size.
 
 Boundary semantics stay covers() (boundary-inclusive,
 WithinFilter.java:99); NaN coordinates drop (WithinFilter.java:93-95).
+A polygon too large for any prefix cover sends the whole set through
+broadcast mode: pruning is dropped, the result is the same.
+Non-convex shapes too large to render run the Arrow ray-cast kernel
+as a boolean column the rendered text refers to.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import parse_wkt
-from hbase_gis_spark.geo.planner import minimum_bounding_prefixes
-from hbase_gis_spark.operators.within import (
-    bbox_predicate,
-    covers_udf,
-    halfplane_predicate,
-)
+from hbase_gis_spark.geo.planner import prefix_cover
+from hbase_gis_spark.operators.within import covers_udf
 
 
 def cell_pyramid(
@@ -98,15 +101,6 @@ def cell_pyramid(
     )
 
 
-def _exact_predicate(wkt: str, lon: Column, lat: Column) -> Column:
-    """covers() with bbox pre-filter: convex → pure codegen; general →
-    ray-cast pandas UDF guarded by the bbox (only bbox survivors reach
-    Python)."""
-    hp = halfplane_predicate(wkt, lon, lat)
-    exact = hp if hp is not None else covers_udf(wkt, lon, lat)
-    return bbox_predicate(wkt, lon, lat) & exact
-
-
 def spatial_join(
     points: DataFrame,
     polygons: list[tuple[str, str]],
@@ -128,60 +122,65 @@ def spatial_join(
     """
     if not polygons:
         raise ValueError("polygons must be non-empty")
-    lon = F.col(lon_col).cast("double")
-    lat = F.col(lat_col).cast("double")
+    lon, lat = R.col(lon_col), R.col(lat_col)
+    parsed = [(pid, wkt, parse_wkt(wkt)) for pid, wkt in polygons]
+    boxes = [R.bbox_sql(poly, lon, lat) for _, _, poly in parsed]
     # coarse pre-filter: the OR of all polygon bboxes — plain range
     # comparisons, so Catalyst pushes it into the Parquet scan
     # (row-group stats pruning) where the exploded/joined exact tests
     # below cannot reach. Semantics-preserving: every covered point is
     # inside its polygon's bbox.
-    coarse = None
-    for _, wkt in polygons:
-        b = bbox_predicate(wkt, lon, lat)
-        coarse = b if coarse is None else (coarse | b)
-    points = points.filter(coarse)
-    if geohash_col is None:
-        # broadcast mode: array of per-polygon guarded ids, exploded.
-        hits = F.array(
-            *[
-                F.when(_exact_predicate(wkt, lon, lat), F.lit(pid))
-                for pid, wkt in polygons
-            ]
-        )
-        return points.withColumn(
-            poly_id_col,
-            F.explode(F.filter(hits, lambda x: x.isNotNull())),
-        )
+    points = points.filter(F.expr(" OR ".join(boxes)))
+    # per-polygon guarded covers() text; a shape too large to render
+    # becomes a kernel-evaluated boolean column the text refers to
+    guards, kernel_cols = [], []
+    for i, ((pid, wkt, poly), box) in enumerate(zip(parsed, boxes)):
+        exact = R.covers_sql(poly, lon, lat)
+        if exact is None:
+            name = f"__covers_{i}"
+            points = points.withColumn(name, covers_udf(
+                wkt, F.col(lon_col).cast("double"),
+                F.col(lat_col).cast("double")))
+            kernel_cols.append(name)
+            exact = R.col(name)
+        guards.append((pid, f"{box} AND {exact}"))
 
-    # cell-join mode: covering prefixes per polygon, truncated to the
-    # shortest precision across polygons so the candidate join is a
-    # single hash equi-join on a fixed-length cell key.
-    per_poly = {
-        pid: minimum_bounding_prefixes(parse_wkt(wkt), max_precision)
-        for pid, wkt in polygons
-    }
-    join_len = min(len(p[0]) for p in per_poly.values())
+    prefix_sets = None
+    if geohash_col is not None:
+        prefix_sets = [prefix_cover(poly, max_precision) for _, _, poly in parsed]
+    if prefix_sets is None or None in prefix_sets:
+        # broadcast mode: array of per-polygon guarded ids, exploded
+        hits = ", ".join(
+            f"CASE WHEN {g} THEN {R.value(pid)} END" for pid, g in guards)
+        out = points.withColumn(poly_id_col, F.expr(
+            f"explode(filter(array({hits}), x -> x IS NOT NULL))"))
+    else:
+        out = _cell_join(points, guards, prefix_sets, geohash_col, poly_id_col)
+    return out.drop(*kernel_cols) if kernel_cols else out
+
+
+def _cell_join(points, guards, prefix_sets, geohash_col, poly_id_col):
+    """Cell-join mode of :func:`spatial_join`: candidate points from the
+    polygons' covering cells, then the guarded covers() per candidate.
+
+    Covering prefixes are truncated to the shortest precision across
+    polygons so the candidate join is a single hash equi-join on a
+    fixed-length cell key."""
+    join_len = min(len(p[0]) for p in prefix_sets)
     cells = sorted(
-        {(pref[:join_len], pid) for pid, prefs in per_poly.items()
+        {(pref[:join_len], pid) for (pid, _), prefs in zip(guards, prefix_sets)
          for pref in prefs}
     )
-    spark = points.sparkSession
-    cell_df = spark.createDataFrame(cells, ["__cell", poly_id_col])
+    cell_df = points.sparkSession.sql(
+        R.values_sql(cells, ["__cell", poly_id_col]))
     cand = points.join(
         F.broadcast(cell_df),
-        F.substring(F.col(geohash_col), 1, join_len) == F.col("__cell"),
+        F.expr(f"substring({R.col(geohash_col)}, 1, {join_len}) = `__cell`"),
     ).drop("__cell")
-    # exact covers per candidate: CASE cascade on poly_id — convex
-    # polygons stay a codegen'd comparison tree over the whole cascade
-    exact = None
-    for pid, wkt in polygons:
-        branch = _exact_predicate(wkt, lon, lat)
-        exact = (
-            F.when(F.col(poly_id_col) == pid, branch)
-            if exact is None
-            else exact.when(F.col(poly_id_col) == pid, branch)
-        )
-    return cand.filter(exact.otherwise(F.lit(False)))
+    # exact covers per candidate: CASE cascade on poly_id — one
+    # codegen'd comparison tree over the whole cascade
+    arms = " ".join(f"WHEN {R.value(pid)} THEN {g}" for pid, g in guards)
+    return cand.filter(F.expr(f"CASE {R.col(poly_id_col)} {arms} ELSE FALSE END"))
 
 
 def distance_join(

@@ -10,19 +10,23 @@ Reference semantics (SURVEY.md §2 F1-F5, §3.1):
 - optional geohash-prefix pruning narrows the scan to the cells that can
   contain matches (WithinQuery.java:79-116).
 
-Spark-first execution layers THREE filters, cheapest first, so Catalyst
-can push what's pushable:
+Spark-first execution renders the whole predicate as ONE SQL expression
+(``geo.sqlrender``) applied with one ``F.expr``, cheapest conjuncts first
+so Catalyst can push what's pushable:
 1. a bbox range predicate on (lon, lat) — plain comparisons, pushed into
    the Parquet scan (row-group stats pruning); visible as PushedFilters;
 2. optionally, a geohash-prefix IN-list — partition pruning when the
-   table is stored partitioned by a geohash prefix;
-3. the exact covers() test: for CONVEX polygons a conjunction of
-   codegen'd half-plane comparisons (zero Python); for general
-   polygons the vectorized ray-cast as an Arrow-batched pandas UDF —
-   only rows surviving 1-2 reach Python.
+   table is stored partitioned by a geohash prefix. A polygon too large
+   for any prefix cover simply scans unpruned;
+3. the exact covers() test, inside whole-stage codegen: the CCW
+   half-plane conjunction for convex rings, the unrolled even-odd
+   ray-cast for other shapes up to ``sqlrender.RAYCAST_MAX_EDGES``
+   edges (concave, holed, multipolygon). Only larger non-convex shapes
+   run the Arrow-batched numpy ray-cast (:func:`covers_udf`), and only
+   rows surviving 1-2 reach Python.
 
 At 100 TB the bbox filter eliminates almost all row groups before any
-exact test runs; convex queries never leave the JVM at all.
+exact test runs; small shapes never leave the JVM at all.
 """
 
 from __future__ import annotations
@@ -32,35 +36,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
-from hbase_gis_spark.geo.planner import minimum_bounding_prefixes
-
-
-def halfplane_predicate(wkt: str, lon: Column, lat: Column) -> Column | None:
-    """Pure-JVM covers() for CONVEX single-ring polygons, else None.
-
-    Conjunction of CCW edge cross products (B−A)×(P−A) >= 0 — the same
-    comparisons (same operand order) as the DuckDB oracle, fully inside
-    whole-stage codegen: the exact test costs no Python at all. Spark
-    SQL orders NaN GREATER than every number, so a NaN coordinate would
-    satisfy every `>= 0` term — an explicit ~isnan conjunct drops such
-    points here (not only via the callers' bbox filter), matching the
-    reference (WithinFilter.java:93-95)."""
-    edges = convex_ccw_edges(parse_wkt(wkt))
-    if edges is None:
-        return None
-    pred = ~F.isnan(lon) & ~F.isnan(lat)
-    for ax, ay, bx, by in edges:
-        term = (
-            (F.lit(bx) - F.lit(ax)) * (lat - F.lit(ay))
-            - (F.lit(by) - F.lit(ay)) * (lon - F.lit(ax))
-        ) >= F.lit(0.0)
-        pred = pred & term
-    return pred
+from hbase_gis_spark.geo import sqlrender as R
+from hbase_gis_spark.geo.geometry import parse_wkt
+from hbase_gis_spark.geo.planner import prefix_cover
 
 
 def covers_udf(wkt: str, lon: Column, lat: Column) -> Column:
-    """Boundary-inclusive point-in-polygon predicate column.
+    """Boundary-inclusive point-in-polygon predicate column: the
+    Arrow-batched numpy ray-cast, for the non-convex shapes too large
+    to render as SQL (``sqlrender.covers_sql`` returns None).
 
     The WKT travels in the UDF closure (the Spark analog of the
     reference serializing the filter's WKT to region servers via
@@ -81,53 +65,6 @@ def covers_udf(wkt: str, lon: Column, lat: Column) -> Column:
     return _covers(lon, lat)
 
 
-def bbox_predicate(wkt: str, lon: Column, lat: Column) -> Column:
-    """Pushable bounding-box pre-filter for the polygon.
-
-    Redundant with the exact test but expressed as plain range
-    comparisons, so Catalyst pushes it into the Parquet scan — the
-    idiomatic substitute for the reference's server-side filter
-    pushdown (SURVEY.md §4)."""
-    min_lon, min_lat, max_lon, max_lat = parse_wkt(wkt).bounds()
-    return (
-        (lon >= F.lit(min_lon))
-        & (lon <= F.lit(max_lon))
-        & (lat >= F.lit(min_lat))
-        & (lat <= F.lit(max_lat))
-    )
-
-
-def prefix_predicate(
-    wkt: str, geohash: Column, max_precision: int = 7
-) -> Column:
-    """Geohash-prefix pruning predicate (superset filter).
-
-    ``substring(geohash, 1, p) IN prefixes`` — an equality IN-list so it
-    both pushes into Parquet scans and prunes partitions of a table
-    partitioned by ``substring(geohash, 1, p)``."""
-    prefixes = minimum_bounding_prefixes(parse_wkt(wkt), max_precision)
-    p = len(prefixes[0])
-    return F.substring(geohash, 1, p).isin(prefixes)
-
-
-def partition_prefix_predicate(
-    wkt: str, partition_col: str, partition_len: int, max_precision: int = 7
-) -> Column:
-    """Pruning predicate against a *partition column* holding a fixed
-    geohash prefix (written by sources.ingest.write_geo_table).
-
-    Spark evaluates arbitrary deterministic predicates on partition
-    columns against partition VALUES (directory metadata), so this
-    prunes whole directories before any file I/O — the true Spark
-    analog of the reference's rowkey-range scan restriction."""
-    prefixes = minimum_bounding_prefixes(parse_wkt(wkt), max_precision)
-    p = len(prefixes[0])
-    if p <= partition_len:
-        return F.substring(F.col(partition_col), 1, p).isin(prefixes)
-    truncated = sorted({x[:partition_len] for x in prefixes})
-    return F.col(partition_col).isin(truncated)
-
-
 def within(
     df: DataFrame,
     wkt: str,
@@ -144,27 +81,27 @@ def within(
     ``geohash_col``: if given, adds the row-level prefix predicate.
     ``partition_prefix_col``: if the table is stored partitioned by a
     geohash prefix (write_geo_table), adds the directory-pruning
-    predicate as well.
+    predicate as well. Both are dropped (bbox and exact test stay) for
+    a polygon no prefix cover contains.
     ``exact=False`` skips the final covers() test (candidates only —
     useful for plan inspection; reference "no filter" scans).
     """
-    lon = F.col(lon_col).cast("double")
-    lat = F.col(lat_col).cast("double")
-    pred = bbox_predicate(wkt, lon, lat)
-    if geohash_col is not None:
-        pred = prefix_predicate(wkt, F.col(geohash_col)) & pred
-    if partition_prefix_col is not None:
-        pred = (
-            partition_prefix_predicate(
-                wkt, partition_prefix_col, partition_prefix_len
-            )
-            & pred
-        )
-    out = df.filter(pred)
-    if exact:
-        # convex fast path: exact covers as codegen'd comparisons (no
-        # Python stage at all); general polygons use the Arrow-batched
-        # ray-cast UDF
-        hp = halfplane_predicate(wkt, lon, lat)
-        out = out.filter(hp if hp is not None else covers_udf(wkt, lon, lat))
+    poly = parse_wkt(wkt)
+    lon, lat = R.col(lon_col), R.col(lat_col)
+    conds = [R.bbox_sql(poly, lon, lat)]
+    prefixes = None
+    if geohash_col is not None or partition_prefix_col is not None:
+        prefixes = prefix_cover(poly)
+    if prefixes is not None and geohash_col is not None:
+        conds.insert(0, R.prefix_in_sql(prefixes, R.col(geohash_col)))
+    if prefixes is not None and partition_prefix_col is not None:
+        conds.insert(0, R.partition_in_sql(
+            prefixes, R.col(partition_prefix_col), partition_prefix_len))
+    exact_sql = R.covers_sql(poly, lon, lat) if exact else None
+    if exact_sql is not None:
+        conds.append(exact_sql)
+    out = df.filter(F.expr(" AND ".join(conds)))
+    if exact and exact_sql is None:
+        out = out.filter(covers_udf(
+            wkt, F.col(lon_col).cast("double"), F.col(lat_col).cast("double")))
     return out

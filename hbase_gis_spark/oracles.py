@@ -3,15 +3,15 @@ bit-for-bit.
 
 The driver (see __spark_entry__.py docstring) hash-compares Spark results
 against DuckDB results, so oracle SQL must reproduce not just the
-semantics but the exact double arithmetic. These helpers generate SQL
-text from the same query parameters the Spark operators receive.
+semantics but the exact double arithmetic. These helpers hand DuckDB the
+same text the Spark operators apply (``geo.sqlrender``): DOUBLE
+literals, same operand order.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
-from hbase_gis_spark.geo.geometry import parse_wkt
+from hbase_gis_spark.geo import sqlrender as R
+from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
 
 
 def halfplane_predicate_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
@@ -19,38 +19,17 @@ def halfplane_predicate_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "la
 
     For a convex CCW ring, covers(P) == every edge cross product
     (B-A)x(P-A) >= 0 (>= keeps the boundary, matching JTS ``covers``,
-    WithinFilter.java:99). Raises if the ring isn't convex — concave
-    query polygons have no simple half-plane oracle and should be
-    checked against the pandas-UDF path instead.
+    WithinFilter.java:99), NaN coordinates excluded. Raises if the
+    polygon isn't a single convex ring — concave query polygons have no
+    half-plane oracle and should be checked against ``Polygon.covers``.
     """
     poly = parse_wkt(wkt)
-    if len(poly.parts) != 1 or len(poly.parts[0]) != 1:
-        raise ValueError("half-plane oracle supports single-ring polygons only")
-    ring = poly.parts[0][0]
-    x, y = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    # orient CCW
-    if (x * y2 - x2 * y).sum() < 0:
-        ring = ring[::-1]
-        x, y = ring[:, 0], ring[:, 1]
-        x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    cross = (x2 - x) * (np.roll(y, -2) - y) - (y2 - y) * (np.roll(x, -2) - x)
-    if (cross < 0).any():
-        raise ValueError("half-plane oracle requires a convex ring")
-    terms = []
-    for j in range(ring.shape[0]):
-        ax, ay, bx, by = x[j], y[j], x2[j], y2[j]
-        terms.append(
-            f"(({bx!r} - {ax!r}) * ({lat_expr} - {ay!r}) - "
-            f"({by!r} - {ay!r}) * ({lon_expr} - {ax!r})) >= 0"
-        )
-    return "(" + " AND ".join(terms) + ")"
+    if convex_ccw_edges(poly) is None:
+        raise ValueError("half-plane oracle requires a convex single ring")
+    return R.covers_sql(poly, lon_expr, lat_expr)
 
 
 def distance_sql(origin_lon: float, origin_lat: float, lon_expr: str = "lon",
                  lat_expr: str = "lat") -> str:
-    """Planar degree distance, same op order as functions.geo.planar_distance."""
-    return (
-        f"sqrt(({lon_expr} - {origin_lon!r}) * ({lon_expr} - {origin_lon!r}) + "
-        f"({lat_expr} - {origin_lat!r}) * ({lat_expr} - {origin_lat!r}))"
-    )
+    """Planar degree distance, the text ``operators.knn`` applies."""
+    return R.planar_distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)

@@ -5,7 +5,8 @@ Two tiers, mirroring the DataFrame planner's fast/slow split:
 
 1. **Expression generators** (fast path): functions returning Spark-SQL
    text to splice into a query — plain comparisons/arithmetic that stay
-   inside whole-stage codegen exactly like the Column forms.
+   inside whole-stage codegen. The spatial ones return the very text
+   the DataFrame operators apply (``geo.sqlrender``).
    Generated-text SQL is the idiomatic Spark substitute for a custom
    Catalyst expression here: nothing to install, and Catalyst pushes
    the bbox / prefix conjuncts into the Parquet scan just as with the
@@ -15,10 +16,11 @@ Two tiers, mirroring the DataFrame planner's fast/slow split:
    registers Arrow-batched pandas UDFs callable from SQL —
    ``hgs_geohash(lat, lon)`` and ``hgs_covers(wkt, lon, lat)`` (any
    polygon, including concave) — for the cases plain comparisons can't
-   express. Prefer tier 1 when the polygon is convex; when you do use
-   ``hgs_covers``, conjoin :func:`bbox_sql` so the UDF only sees rows
-   surviving the pushable pre-filter (the same discipline
-   ``operators.within`` applies).
+   express. Prefer tier 1 when the polygon is convex. ``hgs_covers`` is
+   still needed for non-convex shapes and for WKT held in a column; then
+   conjoin :func:`bbox_sql` so the UDF only sees rows surviving the
+   pushable pre-filter (the same discipline ``operators.within``
+   applies).
 
 Reference parity: this is the SQL analog of the reference's query
 surface (WithinFilter / KNN / TopX clients, SURVEY.md §2) — the same
@@ -33,38 +35,33 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hbase_gis_spark.functions.geo import EARTH_RADIUS_M
-from hbase_gis_spark.geo.geometry import parse_wkt
+from hbase_gis_spark.geo import sqlrender as R
+from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
 from hbase_gis_spark.geo.planner import minimum_bounding_prefixes
-from hbase_gis_spark.oracles import distance_sql, halfplane_predicate_sql
 
 
 def bbox_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
     """Pushable bounding-box pre-filter as SQL text (range comparisons
     reach the Parquet scan's PushedFilters)."""
-    min_lon, min_lat, max_lon, max_lat = parse_wkt(wkt).bounds()
-    return (
-        f"({lon_expr} >= {min_lon!r} AND {lon_expr} <= {max_lon!r} AND "
-        f"{lat_expr} >= {min_lat!r} AND {lat_expr} <= {max_lat!r})"
-    )
+    return R.bbox_sql(parse_wkt(wkt), lon_expr, lat_expr)
 
 
 def within_convex_sql(
     wkt: str, lon_expr: str = "lon", lat_expr: str = "lat"
 ) -> str:
     """Boundary-inclusive covers() for a CONVEX polygon as pure SQL:
-    bbox conjunct (pushable) + CCW half-plane cross products + explicit
-    NaN guard (Spark orders NaN greater than every number, so NaN
-    would pass every ``>= 0`` term without it). Identical comparisons,
-    same operand order, as ``operators.within.halfplane_predicate`` —
-    the SQL and DataFrame forms return the same rows.
+    bbox conjunct (pushable) + NaN guard + CCW half-plane cross
+    products — the very text ``operators.within`` applies, so the SQL
+    and DataFrame forms return the same rows.
 
     Raises ValueError for concave rings — use ``hgs_covers`` (see
     :func:`register_sql_api`) for those."""
-    half = halfplane_predicate_sql(wkt, lon_expr, lat_expr)
+    poly = parse_wkt(wkt)
+    if convex_ccw_edges(poly) is None:
+        raise ValueError("within_convex_sql requires a convex single ring")
     return (
-        f"({bbox_sql(wkt, lon_expr, lat_expr)} AND "
-        f"NOT isnan({lon_expr}) AND NOT isnan({lat_expr}) AND {half})"
+        f"({R.bbox_sql(poly, lon_expr, lat_expr)} AND "
+        f"{R.covers_sql(poly, lon_expr, lat_expr)})"
     )
 
 
@@ -75,9 +72,7 @@ def geohash_prefix_sql(
     IN-list on ``substring(geohash, 1, p)`` — pushes into Parquet scans
     and prunes partitions of tables partitioned by the prefix."""
     prefixes = minimum_bounding_prefixes(parse_wkt(wkt), max_precision)
-    p = len(prefixes[0])
-    in_list = ", ".join(f"'{x}'" for x in prefixes)
-    return f"substring({geohash_expr}, 1, {p}) IN ({in_list})"
+    return R.prefix_in_sql(prefixes, geohash_expr)
 
 
 def planar_distance_sql(
@@ -87,11 +82,11 @@ def planar_distance_sql(
     lat_expr: str = "lat",
 ) -> str:
     """Planar degree distance (the reference's KNN metric) as SQL text,
-    same op order as ``functions.geo.planar_distance``. KNN from SQL is
-    then ``ORDER BY <this> ASC, id ASC LIMIT k`` — Spark plans it as
+    the same text ``operators.knn`` applies. KNN from SQL is then
+    ``ORDER BY <this> ASC, id ASC LIMIT k`` — Spark plans it as
     TakeOrderedAndProject (bounded per-partition heaps + merge), the
     same physical plan as the DataFrame operator."""
-    return distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)
+    return R.planar_distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)
 
 
 def haversine_distance_sql(
@@ -100,17 +95,10 @@ def haversine_distance_sql(
     lon_expr: str = "lon",
     lat_expr: str = "lat",
 ) -> str:
-    """Great-circle distance in meters, same op order as
-    ``functions.geo.haversine_distance``."""
-    olat, olon = float(origin_lat), float(origin_lon)
-    dphi = f"radians({lat_expr} - {olat!r})"
-    dlmb = f"radians({lon_expr} - {olon!r})"
-    a = (
-        f"(sin({dphi} / 2) * sin({dphi} / 2) + "
-        f"cos(radians({olat!r})) * cos(radians({lat_expr})) * "
-        f"sin({dlmb} / 2) * sin({dlmb} / 2))"
-    )
-    return f"({2.0 * EARTH_RADIUS_M!r} * asin(sqrt({a})))"
+    """Great-circle distance in meters, the same text
+    ``operators.knn`` applies (op order of
+    ``functions.geo.haversine_distance``)."""
+    return R.haversine_distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)
 
 
 # --- text/dedup expression generators (tier 1, corpus family) ---------------

@@ -291,8 +291,130 @@ def test_spatial_join_overlap_and_modes_agree(spark):
     assert got_cell == expect
 
 
+def _star_wkt(n, cx, cy, r_out, r_in):
+    """A non-convex star ring of ``n`` vertices (alternating radii)."""
+    pts = []
+    for i in range(n):
+        r = r_out if i % 2 == 0 else r_in
+        a = 2 * math.pi * i / n
+        pts.append(f"{cx + r * math.cos(a)!r} {cy + r * math.sin(a)!r}")
+    return "POLYGON ((" + ", ".join(pts + pts[:1]) + "))"
+
+
+def _regular_wkt(n, cx, cy, r):
+    """A convex regular ring of ``n`` vertices."""
+    pts = [
+        f"{cx + r * math.cos(2 * math.pi * i / n)!r} "
+        f"{cy + r * math.sin(2 * math.pi * i / n)!r}"
+        for i in range(n)
+    ]
+    return "POLYGON ((" + ", ".join(pts + pts[:1]) + "))"
+
+
+_RENDERED_SHAPES = {
+    "concave": "POLYGON ((0 0, 3 1.3, 6 0, 4.7 3.1, 6 6, 3 4.4, 0 6, 1.3 2.9, 0 0))",
+    "holed": "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))",
+    "multipolygon": (
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), "
+        "((5 5, 6.5 5.2, 6 6, 5 6, 5 5)))"
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_RENDERED_SHAPES))
+def test_within_rendered_covers_matches_kernel(spark, shape):
+    """The SQL ray-cast returns exactly ``Polygon.covers``' rows on
+    vertices, points a + t·(b − a) on every edge, NaN and null
+    coordinates and random points in and around the bbox."""
+    import numpy as np
+
+    from hbase_gis_spark.geo import sqlrender
+    from hbase_gis_spark.geo.geometry import parse_wkt
+
+    wkt = _RENDERED_SHAPES[shape]
+    poly = parse_wkt(wkt)
+    assert sqlrender.covers_sql(poly, "lon", "lat") is not None
+    rng = np.random.default_rng(7)
+    pts = []
+    for ring in poly.rings:
+        for j in range(len(ring)):
+            a, b = ring[j], ring[(j + 1) % len(ring)]
+            pts.append(a)
+            pts += [a + t * (b - a) for t in (0.5, *rng.random(6))]
+    x0, y0, x1, y1 = poly.bounds()
+    pts += list(zip(rng.uniform(x0 - 1, x1 + 1, 300),
+                    rng.uniform(y0 - 1, y1 + 1, 300)))
+    pts += [(np.nan, 1.0), (1.0, np.nan)]
+    xs = np.array([float(p[0]) for p in pts])
+    ys = np.array([float(p[1]) for p in pts])
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))]
+    rows += [(len(pts), 0.5, None), (len(pts) + 1, None, 0.5)]
+    df = spark.createDataFrame(rows, "id long, lon double, lat double")
+    want = set(np.nonzero(poly.covers(xs, ys))[0].tolist())
+    assert len(want) > 20
+    got = {r.id for r in hgs.within(df, wkt).collect()}
+    assert got == want
+
+
+def test_within_thousand_vertex_rings(spark):
+    """A 1,000-vertex non-convex ring (Arrow kernel) and a 1,000-vertex
+    convex ring (half-plane text) run, returning the kernel's rows."""
+    import numpy as np
+
+    from hbase_gis_spark.geo.geometry import parse_wkt
+
+    rng = np.random.default_rng(3)
+    xs, ys = rng.uniform(-1, 1, 400), rng.uniform(-1, 1, 400)
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "id long, lon double, lat double",
+    )
+    for wkt in (_star_wkt(1000, 0.0, 0.0, 0.9, 0.5),
+                _regular_wkt(1000, 0.0, 0.0, 0.8)):
+        want = set(np.nonzero(parse_wkt(wkt).covers(xs, ys))[0].tolist())
+        got = {r.id for r in hgs.within(df, wkt).collect()}
+        assert got == want and len(want) > 50
+
+
+def test_huge_polygon_drops_only_pruning(spark):
+    """A polygon larger than any precision-1 9-cell neighbourhood has
+    no prefix cover: the pruned forms scan unpruned instead of raising
+    and return the unpruned rows."""
+    from hbase_gis_spark.geo.geometry import parse_wkt
+    from hbase_gis_spark.geo.planner import (
+        NoCoveringPrefixError,
+        minimum_bounding_prefixes,
+    )
+    from hbase_gis_spark.operators.spatial_join import spatial_join
+
+    wkt = "POLYGON ((-170 -80, 170 -80, 170 80, -170 80, -170 -80))"
+    with pytest.raises(NoCoveringPrefixError):
+        minimum_bounding_prefixes(parse_wkt(wkt))
+    pts = derived_points(spark, SF0001, with_geohash=True).withColumn(
+        "gh_prefix", F.substring("geohash", 1, 4)
+    )
+    plain = {r.id for r in hgs.within(pts, wkt).collect()}
+    pruned = {
+        r.id
+        for r in hgs.within(pts, wkt, geohash_col="geohash",
+                            partition_prefix_col="gh_prefix").collect()
+    }
+    assert plain == pruned and len(plain) > 0
+    polys = [("world", wkt), ("box", "POLYGON ((-74 40.7, -73.9 40.7, "
+                                     "-73.9 40.8, -74 40.8, -74 40.7))")]
+    bc = {(r.id, r.poly_id) for r in spatial_join(pts, polys).collect()}
+    cells = {
+        (r.id, r.poly_id)
+        for r in spatial_join(pts, polys, geohash_col="geohash").collect()
+    }
+    assert bc == cells and {i for i, p in bc if p == "world"} == plain
+
+
 def test_spatial_join_concave_falls_back_to_udf(spark):
-    """Non-convex polygon exercises the ray-cast UDF branch."""
+    """Non-convex polygons: a small one runs as the rendered SQL
+    ray-cast, one over ``RAYCAST_MAX_EDGES`` edges falls back to the
+    Arrow ray-cast kernel — in both join modes."""
+    from hbase_gis_spark.functions.geo import geohash_col
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
     # L-shape: covers (1,1) and (1,3) but not (3,3)
@@ -302,6 +424,15 @@ def test_spatial_join_concave_falls_back_to_udf(spark):
     )
     got = {(r.id, r.poly_id) for r in spatial_join(pts, polys).collect()}
     assert got == {(1, "l"), (2, "l")}
+
+    # a 1,000-vertex star around (1, 1): kernel path, next to the L
+    star = ("star", _star_wkt(1000, 1.0, 1.0, 0.5, 0.3))
+    pts = pts.withColumn("geohash", geohash_col(F.col("lat"), F.col("lon"), 12))
+    want = {(1, "l"), (2, "l"), (1, "star")}
+    for kw in ({}, {"geohash_col": "geohash"}):
+        got = {(r.id, r.poly_id)
+               for r in spatial_join(pts, polys + [star], **kw).collect()}
+        assert got == want, kw
 
 
 def test_asof_join_semantics(spark):

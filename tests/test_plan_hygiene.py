@@ -308,3 +308,21 @@ def test_round4b_plan_shapes(spark):
         assert "ArrowEvalPython" not in p, (
             f"{name} unexpectedly crosses the Python boundary"
         )
+
+    # small-shape geo queries: the covers test is rendered SQL and the
+    # cell table an inline VALUES relation — no Python stage, no RDD.
+    # The one exception: spatial_join_cells derives its point geohash
+    # with the pandas-UDF encoder (sources.tables.points_from_events
+    # keeps it as a pushdown barrier), so that UDF alone may appear.
+    import re
+
+    for name in ["within_concave", "within_multipolygon", "within_hole",
+                 "spatial_join", "spatial_join_cells", "knn_multi"]:
+        p = plan_of(name)
+        assert "BatchEvalPython" not in p, name
+        udfs = re.findall(r"ArrowEvalPython \[(\w+)\(", p)
+        allowed = {"_geohash"} if name == "spatial_join_cells" else set()
+        assert set(udfs) <= allowed, (
+            f"{name} unexpectedly crosses the Python boundary: {udfs}"
+        )
+        assert "Scan ExistingRDD" not in p, name

@@ -39,6 +39,38 @@ def test_within_convex_sql_matches_dataframe(spark, pts_view):
     assert got == want and len(want) > 0
 
 
+def test_convex_edge_point_agrees_across_engines(spark):
+    """A point on a convex edge: within(), Polygon.covers, spark.sql
+    over within_convex_sql and the DuckDB half-plane oracle all agree.
+    Plain decimal literals made the SQL forms compute (bx - ax) in
+    exact DECIMAL and drop this point while the DataFrame kept it."""
+    import duckdb
+
+    from hbase_gis_spark.geo.geometry import parse_wkt
+    from hbase_gis_spark.oracles import halfplane_predicate_sql
+
+    tri = (
+        "POLYGON ((-73.762035 40.544229, -73.630045 40.60392, "
+        "-73.7 40.7, -73.762035 40.544229))"
+    )
+    lon, lat = -73.69604, 40.5740745  # midpoint of the first edge
+    df = spark.createDataFrame([(1, lon, lat)], "id long, lon double, lat double")
+    df.createOrReplaceTempView("edge_pt")
+    assert parse_wkt(tri).covers_point(lon, lat)
+    assert hgs.within(df, tri).count() == 1
+    assert spark.sql(
+        f"SELECT id FROM edge_pt WHERE {hgs.within_convex_sql(tri)}"
+    ).count() == 1
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE TABLE edge_pt AS SELECT 1 AS id, "
+        f"CAST({lon!r} AS DOUBLE) AS lon, CAST({lat!r} AS DOUBLE) AS lat"
+    )
+    assert con.execute(
+        f"SELECT count(*) FROM edge_pt WHERE {halfplane_predicate_sql(tri)}"
+    ).fetchone()[0] == 1
+
+
 def test_within_convex_sql_rejects_concave():
     with pytest.raises(ValueError):
         hgs.within_convex_sql(CONCAVE_WKT)

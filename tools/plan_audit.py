@@ -11,6 +11,13 @@ Flags raised per query:
                        intended plan).
 - ``python_row_udf`` — BatchEvalPython (row-at-a-time Python UDF).
                        ArrowEvalPython (pandas UDFs) is allowed.
+- ``local_rdd``      — ``Scan ExistingRDD`` outside the sanctioned set:
+                       the plan of a ``createDataFrame`` over a Python
+                       list (an RDD of local rows, one extra Spark
+                       job). Small local tables belong in an
+                       inline ``VALUES`` relation
+                       (``geo.sqlrender.values_sql``), which plans as a
+                       LocalRelation.
 
 Usage: python tools/plan_audit.py [sf_dir]
 Exit code 1 if any unsanctioned flag fires — wired into pytest
@@ -110,6 +117,30 @@ BNLJ_SANCTIONED = {
 }
 
 
+# Queries whose plans scan an RDD today: a local
+# createDataFrame(list) dim (rank shards, corpus offsets, similarity and
+# dedup dims, ...) or a checkpointed stage (graph and clustering
+# loops). None is on the geo serving path; a new small table there
+# belongs in a VALUES relation, not in this set.
+LOCAL_RDD_SANCTIONED = {
+    "ann_recall_report", "balance_deciles", "benford_revenue",
+    "boilerplate_coverage", "bpe_learned_counts", "containment_pairs",
+    "corpus_pipeline", "curation_funnel", "curriculum_order", "dbscan",
+    "dedup_clusters", "dedup_keep_best", "dedup_minhash_lsh",
+    "dedup_ngram_jaccard", "dedup_recall_report",
+    "dedup_threshold_curve", "dup_cluster_sizes", "dup_source_matrix",
+    "edit_distance_pairs", "global_value_cuts", "heaps_law",
+    "ivf_nprobe_curve", "leakage_safe_split", "lorenz_revenue",
+    "lpa_communities", "pagerank_event_types", "pareto_customers",
+    "quality_dup_calibration", "quantile_transform", "retrieval_mrr",
+    "revenue_gini", "rfm_segments", "shuffle_audit", "sketch_stats",
+    "spatial_clusters", "spearman_value_time", "split_balance",
+    "split_drift_audit", "srm_check", "tfidf_cosine_pairs",
+    "theil_sen_trend", "time_to_purchase", "token_budget_sample",
+    "trajectory_similarity", "triangle_count",
+}
+
+
 def audit(spark, sf_dir: str) -> dict[str, list[str]]:
     import __spark_entry__ as entrymod
 
@@ -123,6 +154,8 @@ def audit(spark, sf_dir: str) -> dict[str, list[str]]:
             bad.append("bnlj")
         if "BatchEvalPython" in plan:
             bad.append("python_row_udf")
+        if "Scan ExistingRDD" in plan and name not in LOCAL_RDD_SANCTIONED:
+            bad.append("local_rdd")
         if bad:
             flags[name] = bad
     return flags
