@@ -164,14 +164,13 @@ def prefix_in_sql(prefixes: list[str], geohash: str) -> str:
 
 
 def partition_in_sql(prefixes: list[str], partition: str, partition_len: int) -> str:
-    """Prefix cover against a partition column holding a fixed-length
-    geohash prefix: matched on the prefix when it is no longer than the
-    partition value, else the prefixes truncated to partition length.
+    """Equal-length prefixes, no longer than ``partition_len``, against a
+    partition column holding fixed-length geohash prefixes: ``IN`` on
+    the value itself at full length, else on its leading characters.
     Spark evaluates it on partition values, before any file I/O."""
-    if len(prefixes[0]) <= partition_len:
-        return prefix_in_sql(prefixes, partition)
-    truncated = sorted({x[:partition_len] for x in prefixes})
-    return f"{partition} IN ({_in_list(truncated)})"
+    if len(prefixes[0]) == partition_len:
+        return f"{partition} IN ({_in_list(prefixes)})"
+    return prefix_in_sql(prefixes, partition)
 
 
 def planar_distance_sql(origin_lon: float, origin_lat: float, lon: str, lat: str) -> str:
@@ -199,16 +198,44 @@ def haversine_distance_sql(origin_lon: float, origin_lat: float, lon: str, lat: 
     return f"({lit(2.0 * EARTH_RADIUS_M)} * asin(sqrt({a})))"
 
 
+def radius_box(
+    origin_lon: float, origin_lat: float, radius_m: float
+) -> tuple[float, float, float, float]:
+    """``(min_lon, min_lat, max_lon, max_lat)`` of every point within
+    ``radius_m`` great-circle meters of the origin: the bounding box of
+    the spherical cap (latitude ± the angular radius; longitude ±
+    asin(sin(angle) / cos(lat))). The angle is padded by a millimetre
+    and a relative 1e-9, so float rounding in the haversine test can
+    never place a match outside the box.
+
+    A cap holding a pole spans every longitude, its latitude clipped to
+    ±90. Across the antimeridian the longitudes pass ±180; the caller
+    wraps them."""
+    angle = (max(radius_m, 0.0) * (1.0 + 1e-9) + 1e-3) / EARTH_RADIUS_M
+    dlat = math.degrees(angle)
+    min_lat, max_lat = origin_lat - dlat, origin_lat + dlat
+    if min_lat <= -90.0 or max_lat >= 90.0:
+        return -180.0, max(min_lat, -90.0), 180.0, min(max_lat, 90.0)
+    s = math.sin(angle) / math.cos(math.radians(origin_lat))
+    dlon = 180.0 if s >= 1.0 else math.degrees(math.asin(s)) * (1.0 + 1e-9) + 1e-9
+    if dlon >= 180.0:
+        return -180.0, min_lat, 180.0, max_lat
+    return origin_lon - dlon, min_lat, origin_lon + dlon, max_lat
+
+
 def radius_box_sql(
     origin_lon: float, origin_lat: float, radius_m: float, lon: str, lat: str
 ) -> str:
-    """Conservative degree box around a circle of ``radius_m`` meters:
-    worst-case meters per degree with 5 % slack, so it only admits
-    extras (removed by the exact haversine test), never drops a match."""
-    dlat = radius_m / 110574.0 * 1.05
-    coslat = max(math.cos(math.radians(origin_lat)), 0.01)
-    dlon = radius_m / (111320.0 * coslat) * 1.05
-    return (
-        f"({lat} >= {lit(origin_lat - dlat)} AND {lat} <= {lit(origin_lat + dlat)}"
-        f" AND {lon} >= {lit(origin_lon - dlon)} AND {lon} <= {lit(origin_lon + dlon)})"
-    )
+    """The :func:`radius_box` as range comparisons: it only admits
+    extras (removed by the exact haversine test), never drops a match.
+    A box across the antimeridian keeps both sides of it; one spanning
+    every longitude tests latitude only."""
+    min_lon, min_lat, max_lon, max_lat = radius_box(origin_lon, origin_lat, radius_m)
+    conds = [f"{lat} >= {lit(min_lat)}", f"{lat} <= {lit(max_lat)}"]
+    if min_lon < -180.0:
+        conds.append(f"({lon} >= {lit(min_lon + 360.0)} OR {lon} <= {lit(max_lon)})")
+    elif max_lon > 180.0:
+        conds.append(f"({lon} >= {lit(min_lon)} OR {lon} <= {lit(max_lon - 360.0)})")
+    elif min_lon > -180.0 or max_lon < 180.0:
+        conds += [f"{lon} >= {lit(min_lon)}", f"{lon} <= {lit(max_lon)}"]
+    return "(" + " AND ".join(conds) + ")"

@@ -12,8 +12,10 @@ Spark-first: exact KNN is the default — ``orderBy(distance).limit(k)``
 plans as TakeOrderedAndProject, which is exactly the reference's
 bounded-heap-per-partition + merge, but correct across the whole table.
 ``pruned=True`` reproduces the reference's 9-cell candidate semantics
-(same approximation) for parity testing; at scale it turns into
-partition pruning over geohash-prefixed storage.
+(same approximation) for parity testing; on a table that records its
+geohash layout (``write_geo_table``) it also reads only the partitions
+holding those cells. ``within_radius`` reads only the partitions its
+radius box touches. Exact KNN scans every partition.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hbase_gis_spark.geo import sqlrender as R
-from hbase_gis_spark.geo.planner import knn_prefixes
+from hbase_gis_spark.geo.planner import knn_prefixes, partition_cover, partition_layout
 
 _METRICS = {
     "planar": R.planar_distance_sql,
@@ -69,7 +71,9 @@ def knn(
     ``pruned=True`` (requires ``geohash_col``) restricts candidates to
     the origin's geohash cell + 8 neighbors at ``prefix_precision`` —
     the reference's approximate candidate set (may return < k rows;
-    KNNQuery.java:84-88). Default is exact over the full table.
+    KNNQuery.java:84-88); a table with a recorded layout then reads
+    only the partitions holding those cells. Default is exact over the
+    full table.
 
     ``tiebreak_col`` makes result sets deterministic under distance
     ties (the reference's heap order is arbitrary on ties; for oracle
@@ -88,6 +92,10 @@ def knn(
             raise ValueError("pruned KNN needs a geohash column")
         prefixes = knn_prefixes(origin_lat, origin_lon, prefix_precision)
         cond = f"{R.prefix_in_sql(prefixes, R.col(geohash_col))} AND {cond}"
+        cover = partition_cover(
+            partition_layout(df, lon_col, lat_col), prefixes=prefixes)
+        if cover is not None:
+            cond = f"{cover} AND {cond}"
     order = ["distance"] if tiebreak_col is None else ["distance", tiebreak_col]
     return out.filter(F.expr(cond)).orderBy(*order).limit(k)
 
@@ -159,7 +167,8 @@ def knn_multi(
     fanning out every row ×N: an equality join on the truncated cell
     key (broadcast hash join, never nested-loop), reproducing the
     reference's approximate candidate semantics per origin
-    (KNNQuery.java:84-88)."""
+    (KNNQuery.java:84-88). A table with a recorded layout then reads
+    only the partitions holding any origin's cells."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -174,6 +183,10 @@ def knn_multi(
         ]
         odf = spark.sql(R.values_sql(
             pref_rows, ["query_id", "q_lon", "q_lat", "prefix"]))
+        cover = partition_cover(partition_layout(df, lon_col, lat_col),
+                                prefixes=[p for *_, p in pref_rows])
+        if cover is not None:
+            df = df.filter(F.expr(cover))
         joined = df.join(
             F.broadcast(odf),
             F.substring(F.col(geohash_col), 1, prefix_precision)
@@ -213,15 +226,21 @@ def within_radius(
     Plan: a CONSERVATIVE degree bounding box runs first — plain
     comparisons on the raw columns, so Parquet row-group stats prune
     before any trig — then the exact haversine test on survivors. The
-    box uses the worst-case meters-per-degree with 5% slack, so it can
-    only admit extras (removed by the exact test), never drop a true
-    match; the registered oracle is therefore the bare exact filter.
+    box is the spherical cap's (``sqlrender.radius_box``, wrapped across
+    the antimeridian, every longitude around a pole), so it can only
+    admit extras (removed by the exact test), never drop a true match;
+    the registered oracle is therefore the bare exact filter. On a
+    table with a recorded layout the same box also picks the partitions
+    to read; a box across the antimeridian reads them all.
     """
     lon, lat = R.col(lon_col), R.col(lat_col)
     dist = R.haversine_distance_sql(origin_lon, origin_lat, lon, lat)
+    box = R.radius_box_sql(origin_lon, origin_lat, radius_m, lon, lat)
+    cover = partition_cover(
+        partition_layout(df, lon_col, lat_col),
+        boxes=[R.radius_box(origin_lon, origin_lat, radius_m)])
     return (
-        df.filter(F.expr(R.radius_box_sql(
-            origin_lon, origin_lat, radius_m, lon, lat)))
+        df.filter(F.expr(box if cover is None else f"{cover} AND {box}"))
         .withColumn("distance", F.expr(dist))
         .filter(F.expr(f"`distance` <= {R.lit(radius_m)}"))
     )

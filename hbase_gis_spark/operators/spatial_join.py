@@ -22,6 +22,10 @@ execution modes chosen by input shape:
   equi-join on the truncated cell key, so Catalyst plans a
   BroadcastHashJoin: no point-table shuffle at any size.
 
+In both modes a table that records its geohash layout
+(``write_geo_table``) reads only the partitions the polygons' boxes
+touch (``geo.planner.partition_cover``).
+
 Boundary semantics stay covers() (boundary-inclusive,
 WithinFilter.java:99); NaN coordinates drop (WithinFilter.java:93-95).
 A polygon too large for any prefix cover sends the whole set through
@@ -37,7 +41,7 @@ from pyspark.sql import functions as F
 
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import parse_wkt
-from hbase_gis_spark.geo.planner import prefix_cover
+from hbase_gis_spark.geo.planner import partition_cover, partition_layout, prefix_cover
 from hbase_gis_spark.operators.within import covers_udf
 
 
@@ -129,8 +133,12 @@ def spatial_join(
     # comparisons, so Catalyst pushes it into the Parquet scan
     # (row-group stats pruning) where the exploded/joined exact tests
     # below cannot reach. Semantics-preserving: every covered point is
-    # inside its polygon's bbox.
-    points = points.filter(F.expr(" OR ".join(boxes)))
+    # inside its polygon's bbox. The partitions those boxes touch go
+    # first, so Spark opens no other directory.
+    pre = "(" + " OR ".join(boxes) + ")"
+    cover = partition_cover(partition_layout(points, lon_col, lat_col),
+                            boxes=[poly.bounds() for _, _, poly in parsed])
+    points = points.filter(F.expr(pre if cover is None else f"{cover} AND {pre}"))
     # per-polygon guarded covers() text; a shape too large to render
     # becomes a kernel-evaluated boolean column the text refers to
     guards, kernel_cols = [], []

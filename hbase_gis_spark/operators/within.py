@@ -15,9 +15,10 @@ Spark-first execution renders the whole predicate as ONE SQL expression
 so Catalyst can push what's pushable:
 1. a bbox range predicate on (lon, lat) — plain comparisons, pushed into
    the Parquet scan (row-group stats pruning); visible as PushedFilters;
-2. optionally, a geohash-prefix IN-list — partition pruning when the
-   table is stored partitioned by a geohash prefix. A polygon too large
-   for any prefix cover simply scans unpruned;
+2. a partition IN-list when the table records its geohash layout
+   (``write_geo_table``; ``geo.planner.partition_cover``), and
+   optionally a row-level geohash-prefix IN-list. A polygon too large
+   for any prefix cover prunes partitions by its bbox instead;
 3. the exact covers() test, inside whole-stage codegen: the CCW
    half-plane conjunction for convex rings, the unrolled even-odd
    ray-cast for other shapes up to ``sqlrender.RAYCAST_MAX_EDGES``
@@ -38,7 +39,7 @@ from pyspark.sql import types as T
 
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import parse_wkt
-from hbase_gis_spark.geo.planner import prefix_cover
+from hbase_gis_spark.geo.planner import partition_cover, partition_layout, prefix_cover
 
 
 def covers_udf(wkt: str, lon: Column, lat: Column) -> Column:
@@ -72,31 +73,44 @@ def within(
     lat_col: str = "lat",
     geohash_col: str | None = None,
     partition_prefix_col: str | None = None,
-    partition_prefix_len: int = 4,
+    partition_prefix_len: int | None = None,
     exact: bool = True,
 ) -> DataFrame:
     """All rows of ``df`` whose (lon, lat) point is covered by the WKT
     polygon (boundary inclusive).
 
-    ``geohash_col``: if given, adds the row-level prefix predicate.
-    ``partition_prefix_col``: if the table is stored partitioned by a
-    geohash prefix (write_geo_table), adds the directory-pruning
-    predicate as well. Both are dropped (bbox and exact test stay) for
-    a polygon no prefix cover contains.
+    A table written by ``write_geo_table`` prunes by itself: its
+    recorded layout (``geo.planner.partition_layout``) supplies the
+    partition column and prefix length, and only the partitions of the
+    polygon's prefix cover (its bbox cells when it has none) are read.
+    ``partition_prefix_col``/``partition_prefix_len`` declare a layout
+    for a table without the record (length 4 when not given); a length
+    that contradicts the record raises ValueError.
+    ``geohash_col``: if given, adds the row-level prefix predicate,
+    dropped for a polygon no prefix cover contains.
     ``exact=False`` skips the final covers() test (candidates only —
     useful for plan inspection; reference "no filter" scans).
     """
     poly = parse_wkt(wkt)
     lon, lat = R.col(lon_col), R.col(lat_col)
     conds = [R.bbox_sql(poly, lon, lat)]
+    layout = partition_layout(df, lon_col, lat_col)
+    if partition_prefix_col is not None and (
+            layout is None or layout[0] != partition_prefix_col):
+        layout = (partition_prefix_col, partition_prefix_len or 4)
+    elif layout is not None and partition_prefix_len not in (None, layout[1]):
+        raise ValueError(
+            f"partition_prefix_len={partition_prefix_len} contradicts the "
+            f"table's recorded prefix length {layout[1]}")
     prefixes = None
-    if geohash_col is not None or partition_prefix_col is not None:
+    if geohash_col is not None or layout is not None:
         prefixes = prefix_cover(poly)
     if prefixes is not None and geohash_col is not None:
         conds.insert(0, R.prefix_in_sql(prefixes, R.col(geohash_col)))
-    if prefixes is not None and partition_prefix_col is not None:
-        conds.insert(0, R.partition_in_sql(
-            prefixes, R.col(partition_prefix_col), partition_prefix_len))
+    cover = partition_cover(
+        layout, prefixes=prefixes or (), boxes=() if prefixes else [poly.bounds()])
+    if cover is not None:
+        conds.insert(0, cover)
     exact_sql = R.covers_sql(poly, lon, lat) if exact else None
     if exact_sql is not None:
         conds.append(exact_sql)

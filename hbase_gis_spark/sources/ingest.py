@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hbase_gis_spark.functions.geo import geohash_col
+from hbase_gis_spark.geo.planner import LAYOUT_ROLES, layout_metadata
 
 WIFI_COLUMNS = [
     "lon", "lat", "id", "name", "address", "city", "url", "phone", "type", "zip"
@@ -170,10 +171,25 @@ def write_geo_table(
     predicate (within-query pruning, KNN candidate cells) a *directory*
     prune — at 100 TB the scan touches only matching partitions. Choose
     prefix_len so partitions are O(100MB-1GB): 4 chars ≈ 39 km cells.
+
+    The layout (partition column ``gh_prefix`` and ``prefix_len``) is
+    recorded as field metadata on the ``geohash``, ``lon`` and ``lat``
+    columns (``geo.planner.layout_metadata``); it travels in the Parquet
+    footers, and ``within``, ``knn(pruned=True)``, ``knn_multi``,
+    ``within_radius`` and ``spatial_join`` prune from it. The record
+    assumes ``geohash`` is the geohash of (lat, lon) with at least
+    ``prefix_len`` characters (``geohash_col``, ``bulk_points``,
+    ``ingest_points_tsv``); a table without ``lon``/``lat`` columns gets
+    no record. Appending with another ``prefix_len`` breaks the layout.
     """
+    out = df.withColumn("gh_prefix", F.substring("geohash", 1, prefix_len))
+    fields = {f.name: f.metadata for f in df.schema.fields}
+    if "lon" in fields and "lat" in fields:
+        for c in LAYOUT_ROLES:
+            out = out.withMetadata(
+                c, {**fields[c], **layout_metadata("gh_prefix", prefix_len, c)})
     (
-        df.withColumn("gh_prefix", F.substring("geohash", 1, prefix_len))
-        .repartition("gh_prefix")
+        out.repartition("gh_prefix")
         .write.mode(mode)
         .partitionBy("gh_prefix")
         .parquet(path)

@@ -37,7 +37,11 @@ from pyspark.sql import types as T
 
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
-from hbase_gis_spark.geo.planner import minimum_bounding_prefixes
+from hbase_gis_spark.geo.planner import (
+    minimum_bounding_prefixes,
+    partition_cover,
+    prefix_cover,
+)
 
 
 def bbox_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
@@ -47,22 +51,39 @@ def bbox_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
 
 
 def within_convex_sql(
-    wkt: str, lon_expr: str = "lon", lat_expr: str = "lat"
+    wkt: str,
+    lon_expr: str = "lon",
+    lat_expr: str = "lat",
+    partition: tuple[str, int] | None = None,
 ) -> str:
     """Boundary-inclusive covers() for a CONVEX polygon as pure SQL:
     bbox conjunct (pushable) + NaN guard + CCW half-plane cross
     products — the very text ``operators.within`` applies, so the SQL
     and DataFrame forms return the same rows.
 
+    ``partition``: the ``(column, prefix length)`` pair
+    ``geo.planner.partition_layout(df)`` returns for a
+    ``write_geo_table`` table; the text then starts with the partition
+    ``IN``-list ``within`` uses, and Spark reads only those partitions.
+    Without it the text is unchanged.
+
     Raises ValueError for concave rings — use ``hgs_covers`` (see
     :func:`register_sql_api`) for those."""
     poly = parse_wkt(wkt)
     if convex_ccw_edges(poly) is None:
         raise ValueError("within_convex_sql requires a convex single ring")
-    return (
-        f"({R.bbox_sql(poly, lon_expr, lat_expr)} AND "
-        f"{R.covers_sql(poly, lon_expr, lat_expr)})"
+    text = (
+        f"{R.bbox_sql(poly, lon_expr, lat_expr)} AND "
+        f"{R.covers_sql(poly, lon_expr, lat_expr)}"
     )
+    if partition is not None:
+        prefixes = prefix_cover(poly)
+        cover = partition_cover(
+            partition, prefixes=prefixes or (),
+            boxes=() if prefixes else [poly.bounds()])
+        if cover is not None:
+            text = f"{cover} AND {text}"
+    return f"({text})"
 
 
 def geohash_prefix_sql(

@@ -189,3 +189,56 @@ def test_cli_search(capsys):
     rc = main(["search", "hybrid", "--table", docs,
                "--terms", "dup"])  # missing --emb/--query-id
     assert rc == 2
+
+
+def test_cli_prunes_from_table_layout(tmp_path, spark, monkeypatch):
+    """within, knn --pruned and spatialjoin prune from the layout the
+    table records, whatever its prefix length: no column-name guess, no
+    assumed length 4 (which matched no partition of a prefix_len=3
+    table)."""
+    import re
+
+    import hbase_gis_spark.operators.knn as knn_mod
+    import hbase_gis_spark.operators.spatial_join as sj_mod
+    import hbase_gis_spark.operators.within as within_mod
+    from hbase_gis_spark.sources.ingest import bulk_points, read_geo_table, write_geo_table
+
+    table = str(tmp_path / "p3")
+    write_geo_table(bulk_points(spark, 2000, -74.05, -73.85, 40.60, 40.90),
+                    table, prefix_len=3)
+    plain = read_geo_table(spark, table).withMetadata("lon", {})
+    wkt = ("POLYGON ((-73.99 40.72, -73.97 40.76, -73.93 40.74, "
+           "-73.95 40.70, -73.99 40.72))")
+
+    built = []
+
+    def spy(mod, name):
+        real = getattr(mod, name)
+
+        def wrapper(*a, **kw):
+            built.append(real(*a, **kw))
+            return built[-1]
+        monkeypatch.setattr(mod, name, wrapper)
+        return real
+
+    within, knn, spatial_join = (spy(within_mod, "within"), spy(knn_mod, "knn"),
+                                 spy(sj_mod, "spatial_join"))
+    # a KNN origin on a stored point, so its geohash-7 cells are not empty
+    o = plain.orderBy("id").first()
+    n_knn = knn(plain, o.lon, o.lat, 4, geohash_col="geohash", pruned=True).count()
+    assert n_knn > 0
+    runs = [
+        (["within", "local", wkt, "--table", table],
+         f"Query matched {within(plain, wkt).count()} points"),
+        (["knn", repr(o.lon), repr(o.lat), "4", "--table", table, "--pruned"],
+         f"KNN returned {n_knn} points"),
+        (["spatialjoin", wkt, "--table", table],
+         f"Spatial join matched {spatial_join(plain, [('p0', wkt)]).count()} "),
+    ]
+    for argv, expected in runs:
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            assert main(argv) == 0
+        assert expected in out.getvalue(), (argv[0], out.getvalue()[-200:])
+        plan = built[-1]._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\],]*gh_prefix", plan), argv[0]

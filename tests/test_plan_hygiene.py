@@ -326,3 +326,43 @@ def test_round4b_plan_shapes(spark):
             f"{name} unexpectedly crosses the Python boundary: {udfs}"
         )
         assert "Scan ExistingRDD" not in p, name
+
+
+def test_geo_table_queries_prune_partitions(spark, tmp_path):
+    """On a ``write_geo_table`` table every geo query type carries a
+    non-empty PartitionFilters on its scan, with no partition argument
+    from the caller: within, within_radius, knn(pruned=True),
+    knn_multi(pruned=True), spatial_join in both modes and the SQL
+    within opt-in."""
+    import re
+
+    import hbase_gis_spark as hgs
+    from hbase_gis_spark.geo.planner import partition_layout
+    from hbase_gis_spark.operators.knn import knn, knn_multi, within_radius
+    from hbase_gis_spark.operators.spatial_join import spatial_join
+    from hbase_gis_spark.sources.ingest import bulk_points, read_geo_table, write_geo_table
+    from hbase_gis_spark.sqlapi import within_convex_sql
+
+    path = str(tmp_path / "geo")
+    write_geo_table(bulk_points(spark, 2000, -74.3, -73.6, 40.4, 41.0), path)
+    t = read_geo_table(spark, path)
+    wkt = ("POLYGON ((-73.99 40.72, -73.97 40.76, -73.93 40.74, "
+           "-73.95 40.70, -73.99 40.72))")
+    t.createOrReplaceTempView("hygiene_geo")
+    queries = {
+        "within": hgs.within(t, wkt),
+        "within_radius": within_radius(t, -73.95, 40.75, 3000.0),
+        "knn_pruned": knn(t, -73.95, 40.75, 5, geohash_col="geohash",
+                          pruned=True, prefix_precision=6),
+        "knn_multi_pruned": knn_multi(t, [(1, -73.95, 40.75)], 5,
+                                      geohash_col="geohash", pruned=True),
+        "spatial_join": spatial_join(t, [("a", wkt)]),
+        "spatial_join_cells": spatial_join(t, [("a", wkt)], geohash_col="geohash"),
+        "sql_within": spark.sql(
+            "SELECT id FROM hygiene_geo WHERE "
+            + within_convex_sql(wkt, partition=partition_layout(t))),
+    }
+    for name, q in queries.items():
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        filters = re.findall(r"PartitionFilters: \[([^\],]*)", plan)
+        assert any("gh_prefix" in f for f in filters), (name, filters)
