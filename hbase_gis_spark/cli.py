@@ -8,8 +8,8 @@ Reference CLI surface (SURVEY.md §3):
 - TopX via coprocessor client                    (TopXEndpoint/TestTopX)
 
 Here a "table" is a geohash-partitioned parquet path (write_geo_table);
-``within``, ``knn --pruned`` and ``spatialjoin`` read only the
-partitions the query can touch, from the layout the table records.
+``within`` and ``spatialjoin`` read only the partitions the query can
+touch, from the layout the table records; exact ``knn`` reads them all.
 ``within`` accepts the reference's local|remote token for familiarity —
 in Spark both modes produce the same plan (driver/executor replaces
 client/region-server), so the token is accepted and ignored beyond
@@ -20,7 +20,7 @@ Usage (python -m hbase_gis_spark ...):
     ingest      <table-path> <source.tsv>
     bulkingest  <table-path> <count> --bbox=<lon_min,lon_max,lat_min,lat_max>
     within      <local|remote> "<WKT POLYGON>" --table <path>
-    knn         <lon> <lat> <n> --table <path> [--pruned]
+    knn         <lon> <lat> <n> --table <path>
     topx        <x> <ref_col> <ts_col> --table <path>
     spatialjoin "<WKT>" ["<WKT>" ...] --table <path> [--cells]
     audit       unique|benford|orphans --table <path> --keys ...
@@ -103,9 +103,7 @@ def cmd_knn(args: argparse.Namespace) -> int:
     spark = _spark("knn")
     t0 = time.perf_counter()
     df = read_geo_table(spark, args.table)
-    rows = knn(df, args.lon, args.lat, args.n, tiebreak_col="id",
-               geohash_col="geohash" if args.pruned else None,
-               pruned=args.pruned).collect()
+    rows = knn(df, args.lon, args.lat, args.n, tiebreak_col="id").collect()
     for r in rows:
         print(f"{r.id}\t{r.lon}\t{r.lat}\t{r.distance}")
     print(
@@ -422,11 +420,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("lat", type=float)
     s.add_argument("n", type=int)
     s.add_argument("--table", required=True)
-    s.add_argument(
-        "--pruned", action="store_true",
-        help="the reference's approximate KNN: candidates from the origin's "
-        "9 geohash-7 cells only",
-    )
     s.set_defaults(fn=cmd_knn)
 
     s = sub.add_parser(

@@ -164,12 +164,14 @@ def prefix_in_sql(prefixes: list[str], geohash: str) -> str:
 
 
 def partition_in_sql(prefixes: list[str], partition: str, partition_len: int) -> str:
-    """Equal-length prefixes, no longer than ``partition_len``, against a
-    partition column holding fixed-length geohash prefixes: ``IN`` on
-    the value itself at full length, else on its leading characters.
-    Spark evaluates it on partition values, before any file I/O."""
-    if len(prefixes[0]) == partition_len:
-        return f"{partition} IN ({_in_list(prefixes)})"
+    """Equal-length geohash prefixes against a partition column holding
+    fixed-length geohash prefixes: ``IN`` on the value itself for
+    prefixes at least as long as the partition value (longer ones
+    truncated to it), else on its leading characters. Spark evaluates
+    it on partition values, before any file I/O."""
+    if len(prefixes[0]) >= partition_len:
+        truncated = sorted({x[:partition_len] for x in prefixes})
+        return f"{partition} IN ({_in_list(truncated)})"
     return prefix_in_sql(prefixes, partition)
 
 

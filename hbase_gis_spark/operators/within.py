@@ -15,10 +15,10 @@ Spark-first execution renders the whole predicate as ONE SQL expression
 so Catalyst can push what's pushable:
 1. a bbox range predicate on (lon, lat) — plain comparisons, pushed into
    the Parquet scan (row-group stats pruning); visible as PushedFilters;
-2. a partition IN-list when the table records its geohash layout
-   (``write_geo_table``; ``geo.planner.partition_cover``), and
-   optionally a row-level geohash-prefix IN-list. A polygon too large
-   for any prefix cover prunes partitions by its bbox instead;
+2. a partition IN-list of the cells the polygon's bbox touches when
+   the table records its geohash layout (``write_geo_table``;
+   ``geo.planner.partition_cover``), and optionally a row-level
+   geohash-prefix IN-list;
 3. the exact covers() test, inside whole-stage codegen: the CCW
    half-plane conjunction for convex rings, the unrolled even-odd
    ray-cast for other shapes up to ``sqlrender.RAYCAST_MAX_EDGES``
@@ -82,7 +82,9 @@ def within(
     A table written by ``write_geo_table`` prunes by itself: its
     recorded layout (``geo.planner.partition_layout``) supplies the
     partition column and prefix length, and only the partitions of the
-    polygon's prefix cover (its bbox cells when it has none) are read.
+    cells the polygon's bbox touches are read. Taken from the bbox, not
+    the prefix cover: a point on a cell's north or east edge is stored
+    in the next cell, which the bbox cells include.
     ``partition_prefix_col``/``partition_prefix_len`` declare a layout
     for a table without the record (length 4 when not given); a length
     that contradicts the record raises ValueError.
@@ -102,13 +104,11 @@ def within(
         raise ValueError(
             f"partition_prefix_len={partition_prefix_len} contradicts the "
             f"table's recorded prefix length {layout[1]}")
-    prefixes = None
-    if geohash_col is not None or layout is not None:
+    if geohash_col is not None:
         prefixes = prefix_cover(poly)
-    if prefixes is not None and geohash_col is not None:
-        conds.insert(0, R.prefix_in_sql(prefixes, R.col(geohash_col)))
-    cover = partition_cover(
-        layout, prefixes=prefixes or (), boxes=() if prefixes else [poly.bounds()])
+        if prefixes is not None:
+            conds.insert(0, R.prefix_in_sql(prefixes, R.col(geohash_col)))
+    cover = partition_cover(layout, boxes=[poly.bounds()])
     if cover is not None:
         conds.insert(0, cover)
     exact_sql = R.covers_sql(poly, lon, lat) if exact else None

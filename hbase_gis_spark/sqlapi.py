@@ -40,7 +40,6 @@ from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
 from hbase_gis_spark.geo.planner import (
     minimum_bounding_prefixes,
     partition_cover,
-    prefix_cover,
 )
 
 
@@ -76,13 +75,9 @@ def within_convex_sql(
         f"{R.bbox_sql(poly, lon_expr, lat_expr)} AND "
         f"{R.covers_sql(poly, lon_expr, lat_expr)}"
     )
-    if partition is not None:
-        prefixes = prefix_cover(poly)
-        cover = partition_cover(
-            partition, prefixes=prefixes or (),
-            boxes=() if prefixes else [poly.bounds()])
-        if cover is not None:
-            text = f"{cover} AND {text}"
+    cover = partition_cover(partition, boxes=[poly.bounds()])
+    if cover is not None:
+        text = f"{cover} AND {text}"
     return f"({text})"
 
 

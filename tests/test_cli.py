@@ -192,13 +192,11 @@ def test_cli_search(capsys):
 
 
 def test_cli_prunes_from_table_layout(tmp_path, spark, monkeypatch):
-    """within, knn --pruned and spatialjoin prune from the layout the
-    table records, whatever its prefix length: no column-name guess, no
-    assumed length 4 (which matched no partition of a prefix_len=3
-    table)."""
+    """within and spatialjoin prune from the layout the table records,
+    whatever its prefix length: no column-name guess, no assumed length
+    4 (which matched no partition of a prefix_len=3 table)."""
     import re
 
-    import hbase_gis_spark.operators.knn as knn_mod
     import hbase_gis_spark.operators.spatial_join as sj_mod
     import hbase_gis_spark.operators.within as within_mod
     from hbase_gis_spark.sources.ingest import bulk_points, read_geo_table, write_geo_table
@@ -221,17 +219,10 @@ def test_cli_prunes_from_table_layout(tmp_path, spark, monkeypatch):
         monkeypatch.setattr(mod, name, wrapper)
         return real
 
-    within, knn, spatial_join = (spy(within_mod, "within"), spy(knn_mod, "knn"),
-                                 spy(sj_mod, "spatial_join"))
-    # a KNN origin on a stored point, so its geohash-7 cells are not empty
-    o = plain.orderBy("id").first()
-    n_knn = knn(plain, o.lon, o.lat, 4, geohash_col="geohash", pruned=True).count()
-    assert n_knn > 0
+    within, spatial_join = spy(within_mod, "within"), spy(sj_mod, "spatial_join")
     runs = [
         (["within", "local", wkt, "--table", table],
          f"Query matched {within(plain, wkt).count()} points"),
-        (["knn", repr(o.lon), repr(o.lat), "4", "--table", table, "--pruned"],
-         f"KNN returned {n_knn} points"),
         (["spatialjoin", wkt, "--table", table],
          f"Spatial join matched {spatial_join(plain, [('p0', wkt)]).count()} "),
     ]

@@ -266,9 +266,11 @@ def test_clean_text_scrubs_urls_emails(spark):
     assert got == "visit or mail now"
 
 
-def test_spatial_join_overlap_and_modes_agree(spark):
+def test_spatial_join_overlap_and_modes_agree(spark, monkeypatch):
     """Overlapping polygons tag a point once per polygon; broadcast and
-    cell-join modes return identical rows; uncovered points drop."""
+    cell-join modes return identical rows; uncovered points drop. A set
+    below ``CELL_JOIN_MIN_POLYGONS`` runs its guards without a join."""
+    import hbase_gis_spark.operators.spatial_join as sj_mod
     from hbase_gis_spark.functions.geo import geohash_col
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
@@ -283,12 +285,14 @@ def test_spatial_join_overlap_and_modes_agree(spark):
     ).withColumn("geohash", geohash_col(F.col("lat"), F.col("lon"), 12))
     expect = {(1, "a"), (2, "a"), (2, "b"), (3, "b"), (5, "a"), (5, "b")}
     got_bc = {(r.id, r.poly_id) for r in spatial_join(pts, polys).collect()}
-    got_cell = {
-        (r.id, r.poly_id)
-        for r in spatial_join(pts, polys, geohash_col="geohash").collect()
-    }
+    small = spatial_join(pts, polys, geohash_col="geohash")
+    assert "Join" not in small._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
+    joined = spatial_join(pts, polys, geohash_col="geohash")
+    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
     assert got_bc == expect
-    assert got_cell == expect
+    assert {(r.id, r.poly_id) for r in small.collect()} == expect
+    assert {(r.id, r.poly_id) for r in joined.collect()} == expect
 
 
 def _star_wkt(n, cx, cy, r_out, r_in):
@@ -410,10 +414,11 @@ def test_huge_polygon_drops_only_pruning(spark):
     assert bc == cells and {i for i, p in bc if p == "world"} == plain
 
 
-def test_spatial_join_concave_falls_back_to_udf(spark):
+def test_spatial_join_concave_falls_back_to_udf(spark, monkeypatch):
     """Non-convex polygons: a small one runs as the rendered SQL
     ray-cast, one over ``RAYCAST_MAX_EDGES`` edges falls back to the
     Arrow ray-cast kernel — in both join modes."""
+    import hbase_gis_spark.operators.spatial_join as sj_mod
     from hbase_gis_spark.functions.geo import geohash_col
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
@@ -429,6 +434,8 @@ def test_spatial_join_concave_falls_back_to_udf(spark):
     star = ("star", _star_wkt(1000, 1.0, 1.0, 0.5, 0.3))
     pts = pts.withColumn("geohash", geohash_col(F.col("lat"), F.col("lon"), 12))
     want = {(1, "l"), (2, "l"), (1, "star")}
+    # cell-join the two polygons instead of guarding them
+    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
     for kw in ({}, {"geohash_col": "geohash"}):
         got = {(r.id, r.poly_id)
                for r in spatial_join(pts, polys + [star], **kw).collect()}

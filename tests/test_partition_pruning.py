@@ -27,6 +27,7 @@ from hbase_gis_spark.geo.planner import (
     partition_cover,
     partition_layout,
 )
+import hbase_gis_spark.operators.spatial_join as sj_mod
 from hbase_gis_spark.operators.knn import knn, knn_multi, within_radius
 from hbase_gis_spark.operators.spatial_join import spatial_join
 from hbase_gis_spark.sources.ingest import bulk_points, read_geo_table, write_geo_table
@@ -240,8 +241,10 @@ polygon_sets = st.lists(
 @example(plen=4, wkts=[_rect(-74.2, 40.5, 0.5, 0.3), _rect(-60.0, 88.5, 40.0, 1.0)],
          cells=True)
 @example(plen=3, wkts=[_rect(-74.2, 40.5, 0.5, 0.3)], cells=False)
-def test_spatial_join_prunes_partitions(spark, tables, plen, wkts, cells):
+def test_spatial_join_prunes_partitions(spark, tables, monkeypatch, plen, wkts, cells):
     t, plain, values = tables[plen]
+    # cell-join even these few polygons
+    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
     polys = [(f"p{i}", w) for i, w in enumerate(wkts)]
     cover = partition_cover(("gh_prefix", plen),
                             boxes=[parse_wkt(w).bounds() for w in wkts])
@@ -311,6 +314,40 @@ def test_within_respects_recorded_prefix_len(spark, tmp_path):
     ).collect()} == full
     with pytest.raises(ValueError, match="prefix length 3"):
         hgs.within(t, wkt, partition_prefix_col="gh_prefix", partition_prefix_len=4)
+
+
+def test_cell_aligned_polygon_keeps_edge_points(spark, tmp_path):
+    """A point on a cell's north or east edge is stored in the next
+    cell. ``within`` on the cell's own polygon still returns it: the
+    partition cover comes from the polygon's bbox, which includes the
+    next cells, not from its prefix cover (the cell alone)."""
+    from hbase_gis_spark.sqlapi import within_convex_sql
+
+    lat0, lat1, lon0, lon1 = gh.decode_bbox("dr5r")
+    wkt = (f"POLYGON (({lon0!r} {lat0!r}, {lon1!r} {lat0!r}, {lon1!r} {lat1!r}, "
+           f"{lon0!r} {lat1!r}, {lon0!r} {lat0!r}))")
+    edge = [(lon0 + u * (lon1 - lon0), lat1) for u in (0.0, 0.3, 0.7)]
+    edge += [(lon1, lat0 + v * (lat1 - lat0)) for v in (0.0, 0.4, 0.9)]
+    edge += [(lon1, lat1), ((lon0 + lon1) / 2, (lat0 + lat1) / 2)]
+    rows = [(f"e{i}", x, y) for i, (x, y) in enumerate(edge)]
+    df = spark.createDataFrame(rows, "id string, lon double, lat double")
+    path = str(tmp_path / "edges")
+    write_geo_table(df.withColumn("geohash", geohash_col(F.col("lat"), F.col("lon"), 12)),
+                    path, prefix_len=4)
+    t = read_geo_table(spark, path)
+    stored = {r.gh_prefix for r in t.select("gh_prefix").distinct().collect()}
+    mid_lon, mid_lat = (lon0 + lon1) / 2, (lat0 + lat1) / 2
+    beyond = {gh.encode(lat1, mid_lon, 4), gh.encode(mid_lat, lon1, 4),
+              gh.encode(lat1, lon1, 4)}  # north, east, north-east
+    assert "dr5r" not in beyond and stored == beyond | {"dr5r"}
+    want = sorted(i for i, _, _ in rows)
+    assert sorted(r.id for r in hgs.within(t, wkt).collect()) == want
+    assert sorted(r.id for r in hgs.within(
+        t, wkt, partition_prefix_col="gh_prefix").collect()) == want
+    t.createOrReplaceTempView("edge_pts")
+    sql = within_convex_sql(wkt, partition=partition_layout(t))
+    assert sorted(r.id for r in spark.sql(
+        f"SELECT id FROM edge_pts WHERE {sql}").collect()) == want
 
 
 def test_record_switches_off(spark, tables):
