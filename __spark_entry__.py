@@ -242,8 +242,8 @@ def _q_spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-mode spatial join: one scan, per-polygon codegen'd
-    covers tests exploded to (point, poly_id) rows."""
+    """Spatial join: one scan, per-polygon codegen'd covers tests
+    exploded to (point, poly_id) rows."""
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
     pts = derived_points(spark, sf_dir)
@@ -251,9 +251,10 @@ def _q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_spatial_join_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-join-mode spatial join: geohash-cell candidate broadcast
-    hash join, then the exact covers cascade — same rows as broadcast
-    mode."""
+    """The spatial join over points that carry a geohash column,
+    passed as ``geohash_col``: the operator ignores it (its cell-join
+    mode was removed) and runs the same one-scan plan as
+    ``spatial_join``. Kept so the registry keeps its query count."""
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
     pts = derived_points(spark, sf_dir, with_geohash=True)

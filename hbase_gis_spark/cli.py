@@ -22,7 +22,7 @@ Usage (python -m hbase_gis_spark ...):
     within      <local|remote> "<WKT POLYGON>" --table <path>
     knn         <lon> <lat> <n> --table <path>
     topx        <x> <ref_col> <ts_col> --table <path>
-    spatialjoin "<WKT>" ["<WKT>" ...] --table <path> [--cells]
+    spatialjoin "<WKT>" ["<WKT>" ...] --table <path>
     audit       unique|benford|orphans --table <path> --keys ...
 """
 
@@ -34,15 +34,9 @@ import time
 
 
 def _spark(app: str):
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    return (
-        SparkSession.builder.master("local[*]")
-        .appName(app)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    return make_session(app, master="local[*]")
 
 
 def cmd_ingest(args: argparse.Namespace) -> int:
@@ -121,8 +115,7 @@ def cmd_spatialjoin(args: argparse.Namespace) -> int:
     t0 = time.perf_counter()
     df = read_geo_table(spark, args.table)
     polys = [(f"p{i}", wkt) for i, wkt in enumerate(args.wkt)]
-    gh = "geohash" if args.cells and "geohash" in df.columns else None
-    rows = spatial_join(df, polys, geohash_col=gh).collect()
+    rows = spatial_join(df, polys).collect()
     for r in rows:
         print(f"{r.id}\t{r.poly_id}\t{r.lon}\t{r.lat}")
     print(
@@ -427,10 +420,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     s.add_argument("wkt", nargs="+", help="one or more WKT polygons")
     s.add_argument("--table", required=True)
-    s.add_argument(
-        "--cells", action="store_true",
-        help="use the geohash-cell broadcast-join mode",
-    )
     s.set_defaults(fn=cmd_spatialjoin)
 
     s = sub.add_parser("topx", help="per-group X earliest rows")

@@ -1903,8 +1903,8 @@ def dup_substring_spans(
     dup-gram set the semi join plans as a BROADCAST probe (the
     position stream never shuffles at all; a fact-scale verdict frame
     falls back to a sort-merge join whose skewed partition AQE can
-    split). Measured on a purpose-built skewed fixture (round 8,
-    tools/bench_skew_ab.py; SCALE.md "The de-skew trade, measured"):
+    split). Measured on a purpose-built skewed fixture (round 8, with
+    a since-removed A/B tool; SCALE.md "The de-skew trade, measured"):
     the window plan actually stays FASTER locally until the hot group
     is tens of millions of rows (one in-memory Tungsten sort beats
     the probe's second explode pass), then hits the single-task

@@ -3,36 +3,24 @@
 The reference has no joins at all (SURVEY.md §2 "explicitly absent");
 its within-query (WithinQuery.java:104-174) tests ONE polygon per scan.
 This operator generalizes that to a polygon SET — the geofencing /
-region-tagging shape a large pipeline needs — with two Spark-first
-execution modes chosen by input shape:
+region-tagging shape a large pipeline needs — in ONE scan of the
+point table: every polygon's covers() test is rendered SQL
+(``geo.sqlrender``: half-planes for convex rings, the unrolled
+ray-cast for other small shapes) behind its own pushable bbox
+pre-filter, assembled into an array and exploded. Zero shuffle, zero
+Python for small shapes; at 100 TB this is a map-only pass.
 
-- ``broadcast_mode`` (default, small polygon sets): ONE scan of the
-  point table; every polygon's covers() test is rendered SQL
-  (``geo.sqlrender``: half-planes for convex rings, the unrolled
-  ray-cast for other small shapes) behind its own pushable bbox
-  pre-filter, assembled into an array and exploded. Zero shuffle, zero
-  Python for small shapes; at 100 TB this is a map-only pass.
-- cell-join mode (``geohash_col`` given and at least
-  ``CELL_JOIN_MIN_POLYGONS`` polygons; scales to large polygon
-  sets): polygons expand driver-side into covering geohash prefixes
-  (the reference's planner, WithinQuery.java:79-102, per polygon); the
-  (cell, poly_id) table, an inline ``VALUES`` relation (no RDD, no
-  extra job), broadcast-hash-joins against the points' cell key —
-  candidates are only the points inside covering cells — then the
-  same codegen'd exact test filters candidates. The join is an
-  equi-join on the truncated cell key, so Catalyst plans a
-  BroadcastHashJoin: no point-table shuffle at any size. A smaller
-  set runs as broadcast mode: its guards cost a few comparisons per
-  point, less than the broadcast job the join adds to every query.
+The reference's two ``within`` execution modes are one plan here, and
+so is this join: a geohash-cell broadcast join was measured slower
+than these guards at every polygon count tried (4 to 256 polygons over
+40 k points), so there is no second mode.
 
-In both modes a table that records its geohash layout
-(``write_geo_table``) reads only the partitions the polygons' boxes
-touch (``geo.planner.partition_cover``).
+A table that records its geohash layout (``write_geo_table``) reads
+only the partitions the polygons' boxes touch
+(``geo.planner.partition_cover``).
 
 Boundary semantics stay covers() (boundary-inclusive,
 WithinFilter.java:99); NaN coordinates drop (WithinFilter.java:93-95).
-A polygon too large for any prefix cover sends the whole set through
-broadcast mode: pruning is dropped, the result is the same.
 Non-convex shapes too large to render run the Arrow ray-cast kernel
 as a boolean column the rendered text refers to.
 """
@@ -44,18 +32,8 @@ from pyspark.sql import functions as F
 
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import parse_wkt
-from hbase_gis_spark.geo.planner import partition_cover, partition_layout, prefix_cover
+from hbase_gis_spark.geo.planner import partition_cover, partition_layout
 from hbase_gis_spark.operators.within import covers_udf
-
-# Fewest polygons a ``geohash_col`` call cell-joins; smaller sets run
-# the per-polygon guards of broadcast mode. On 40 k points in 28
-# geohash-4 partitions (one client, 4 cores, grouped by poly_id) the
-# guards won at every size tried: 4 polygons 0.41 s against 0.58 s
-# cell-joined, 16: 0.51 / 0.74 s, 64: 1.4 / 3.0 s, 256: 6.1 / 10.7 s.
-# The join is kept for larger sets because per candidate point it
-# probes a hash table where the guards evaluate every polygon's arm,
-# a term that only a much larger table than this makes dominant.
-CELL_JOIN_MIN_POLYGONS = 16
 
 
 def cell_pyramid(
@@ -124,7 +102,6 @@ def spatial_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     geohash_col: str | None = None,
-    max_precision: int = 7,
     poly_id_col: str = "poly_id",
 ) -> DataFrame:
     """Inner-join ``points`` to the polygons covering them.
@@ -136,6 +113,9 @@ def spatial_join(
     Returns the point rows with one output row per covering polygon
     (points covered by nothing are dropped; points in overlapping
     polygons appear once per polygon).
+
+    ``geohash_col`` is unused; it is accepted so callers written for
+    the removed cell-join mode keep working.
     """
     if not polygons:
         raise ValueError("polygons must be non-empty")
@@ -144,7 +124,7 @@ def spatial_join(
     boxes = [R.bbox_sql(poly, lon, lat) for _, _, poly in parsed]
     # coarse pre-filter: the OR of all polygon bboxes — plain range
     # comparisons, so Catalyst pushes it into the Parquet scan
-    # (row-group stats pruning) where the exploded/joined exact tests
+    # (row-group stats pruning) where the exploded exact tests
     # below cannot reach. Semantics-preserving: every covered point is
     # inside its polygon's bbox. The partitions those boxes touch go
     # first, so Spark opens no other directory.
@@ -152,9 +132,9 @@ def spatial_join(
     cover = partition_cover(partition_layout(points, lon_col, lat_col),
                             boxes=[poly.bounds() for _, _, poly in parsed])
     points = points.filter(F.expr(pre if cover is None else f"{cover} AND {pre}"))
-    # per-polygon guarded covers() text; a shape too large to render
+    # per-polygon guarded covers() arm; a shape too large to render
     # becomes a kernel-evaluated boolean column the text refers to
-    guards, kernel_cols = [], []
+    hits, kernel_cols = [], []
     for i, ((pid, wkt, poly), box) in enumerate(zip(parsed, boxes)):
         exact = R.covers_sql(poly, lon, lat)
         if exact is None:
@@ -164,44 +144,11 @@ def spatial_join(
                 F.col(lat_col).cast("double")))
             kernel_cols.append(name)
             exact = R.col(name)
-        guards.append((pid, f"{box} AND {exact}"))
-
-    prefix_sets = None
-    if geohash_col is not None and len(parsed) >= CELL_JOIN_MIN_POLYGONS:
-        prefix_sets = [prefix_cover(poly, max_precision) for _, _, poly in parsed]
-    if prefix_sets is None or None in prefix_sets:
-        # broadcast mode: array of per-polygon guarded ids, exploded
-        hits = ", ".join(
-            f"CASE WHEN {g} THEN {R.value(pid)} END" for pid, g in guards)
-        out = points.withColumn(poly_id_col, F.expr(
-            f"explode(filter(array({hits}), x -> x IS NOT NULL))"))
-    else:
-        out = _cell_join(points, guards, prefix_sets, geohash_col, poly_id_col)
+        hits.append(f"CASE WHEN {box} AND {exact} THEN {R.value(pid)} END")
+    # array of the covering polygons' ids, exploded
+    out = points.withColumn(poly_id_col, F.expr(
+        f"explode(filter(array({', '.join(hits)}), x -> x IS NOT NULL))"))
     return out.drop(*kernel_cols) if kernel_cols else out
-
-
-def _cell_join(points, guards, prefix_sets, geohash_col, poly_id_col):
-    """Cell-join mode of :func:`spatial_join`: candidate points from the
-    polygons' covering cells, then the guarded covers() per candidate.
-
-    Covering prefixes are truncated to the shortest precision across
-    polygons so the candidate join is a single hash equi-join on a
-    fixed-length cell key."""
-    join_len = min(len(p[0]) for p in prefix_sets)
-    cells = sorted(
-        {(pref[:join_len], pid) for (pid, _), prefs in zip(guards, prefix_sets)
-         for pref in prefs}
-    )
-    cell_df = points.sparkSession.sql(
-        R.values_sql(cells, ["__cell", poly_id_col]))
-    cand = points.join(
-        F.broadcast(cell_df),
-        F.expr(f"substring({R.col(geohash_col)}, 1, {join_len}) = `__cell`"),
-    ).drop("__cell")
-    # exact covers per candidate: CASE cascade on poly_id — one
-    # codegen'd comparison tree over the whole cascade
-    arms = " ".join(f"WHEN {R.value(pid)} THEN {g}" for pid, g in guards)
-    return cand.filter(F.expr(f"CASE {R.col(poly_id_col)} {arms} ELSE FALSE END"))
 
 
 def distance_join(

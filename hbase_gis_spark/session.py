@@ -21,6 +21,11 @@ What each setting buys at 100 TB (and why it's safe at sf0.001):
   and toPandas edge moves via Arrow batches, not pickled rows.
 - **nanosAsLong**: the testdata parquet carries TIMESTAMP(NANOS);
   see sources/tables.py for the µs oracle convention.
+- **UI off**: local runs, tools and tests never read it; ``extra``
+  turns it back on.
+
+This is the only place the package, its CLI, its tools and its test
+suite build a SparkSession.
 """
 
 from __future__ import annotations
@@ -31,16 +36,16 @@ from pyspark.sql import SparkSession
 def make_session(
     app: str = "hbase_gis_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     driver_mem: str | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build a SparkSession with the engine's recommended configs.
 
     ``master=None`` defers to the environment (spark-submit / cluster
-    manager); tests and local runs pass ``local[N]``.
-    ``shuffle_partitions=None`` picks 2× defaultParallelism after the
-    session exists (so it adapts to the actual core count)."""
+    manager); tests and local runs pass ``local[N]``. Shuffle
+    partitions are set to 2× defaultParallelism once the session
+    exists, so they follow the actual core count. ``extra`` configs
+    go to the builder after the defaults above and override them."""
     b = SparkSession.builder.appName(app)
     if master:
         b = b.master(master)
@@ -53,16 +58,14 @@ def make_session(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
     )
-    if shuffle_partitions is not None:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    if shuffle_partitions is None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(2 * spark.sparkContext.defaultParallelism),
-        )
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(2 * spark.sparkContext.defaultParallelism),
+    )
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark

@@ -58,11 +58,6 @@ def _dedup_keyed(
     )
 
 
-# back-compat alias (pre-"last" API)
-def _dedup_first(df: DataFrame, key: str, order: str) -> DataFrame:
-    return _dedup_keyed(df, key, order, keep="first")
-
-
 def ingest_points_tsv(
     spark: SparkSession,
     path: str,
@@ -124,7 +119,7 @@ def ingest_taxi_csv(
         .withColumn("rowkey", F.concat_ws("|", "pu_ts", "do_ts"))
     )
     if dedup:
-        typed = _dedup_first(typed, "rowkey", "__arrival")
+        typed = _dedup_keyed(typed, "rowkey", "__arrival", keep="first")
     return typed.drop("__arrival")
 
 

@@ -17,17 +17,9 @@ def pytest_sessionstart(session):
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("hbase_gis_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = make_session(app="hbase_gis_spark-tests", master="local[4]")
     s.sparkContext.setLogLevel("ERROR")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     yield s
     s.stop()

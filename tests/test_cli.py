@@ -37,7 +37,7 @@ def test_cli_spatialjoin(tmp_path, spark):
              "-75.01 44.01, -75.99 44.01))")
     out = io.StringIO()
     with contextlib.redirect_stdout(out):
-        assert main(["spatialjoin", whole, whole, "--table", table, "--cells"]) == 0
+        assert main(["spatialjoin", whole, whole, "--table", table]) == 0
     # every point tagged by both copies of the covering polygon
     assert "Spatial join matched 400 (point, polygon) rows" in out.getvalue()
 

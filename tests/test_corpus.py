@@ -217,14 +217,22 @@ def test_chunk_documents_coverage_and_overlap(spark):
 
 
 def test_make_session_configs(spark):
-    # getOrCreate in an existing-session test context: runtime confs
-    # still apply; verify the session factory is importable and sets
-    # the runtime-settable keys on the active session
+    """The suite's session already runs the factory's settings:
+    ``make_session`` on it (getOrCreate re-applies every runtime conf)
+    returns the same session and changes no setting, so no test's
+    configuration depends on which test called the factory first. The
+    app name is passed through, being the session's name, not a
+    setting."""
     from hbase_gis_spark import make_session
 
-    s = make_session()
+    before = dict(spark.conf.getAll)
+    s = make_session(app=spark.conf.get("spark.app.name"))
+    assert s is spark
+    assert dict(s.conf.getAll) == before
     assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-    assert int(s.conf.get("spark.sql.shuffle.partitions")) > 0
+    assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+    assert s.conf.get("spark.sql.shuffle.partitions") == str(
+        2 * s.sparkContext.defaultParallelism)
 
 
 from hypothesis import given, settings, strategies as st

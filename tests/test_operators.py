@@ -266,11 +266,10 @@ def test_clean_text_scrubs_urls_emails(spark):
     assert got == "visit or mail now"
 
 
-def test_spatial_join_overlap_and_modes_agree(spark, monkeypatch):
-    """Overlapping polygons tag a point once per polygon; broadcast and
-    cell-join modes return identical rows; uncovered points drop. A set
-    below ``CELL_JOIN_MIN_POLYGONS`` runs its guards without a join."""
-    import hbase_gis_spark.operators.spatial_join as sj_mod
+def test_spatial_join_overlap_and_modes_agree(spark):
+    """Overlapping polygons tag a point once per polygon; uncovered
+    points drop. A call naming ``geohash_col`` returns the same rows
+    and plans no join."""
     from hbase_gis_spark.functions.geo import geohash_col
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
@@ -287,12 +286,8 @@ def test_spatial_join_overlap_and_modes_agree(spark, monkeypatch):
     got_bc = {(r.id, r.poly_id) for r in spatial_join(pts, polys).collect()}
     small = spatial_join(pts, polys, geohash_col="geohash")
     assert "Join" not in small._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
-    joined = spatial_join(pts, polys, geohash_col="geohash")
-    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
     assert got_bc == expect
     assert {(r.id, r.poly_id) for r in small.collect()} == expect
-    assert {(r.id, r.poly_id) for r in joined.collect()} == expect
 
 
 def _star_wkt(n, cx, cy, r_out, r_in):
@@ -414,12 +409,10 @@ def test_huge_polygon_drops_only_pruning(spark):
     assert bc == cells and {i for i, p in bc if p == "world"} == plain
 
 
-def test_spatial_join_concave_falls_back_to_udf(spark, monkeypatch):
+def test_spatial_join_concave_falls_back_to_udf(spark):
     """Non-convex polygons: a small one runs as the rendered SQL
     ray-cast, one over ``RAYCAST_MAX_EDGES`` edges falls back to the
-    Arrow ray-cast kernel — in both join modes."""
-    import hbase_gis_spark.operators.spatial_join as sj_mod
-    from hbase_gis_spark.functions.geo import geohash_col
+    Arrow ray-cast kernel."""
     from hbase_gis_spark.operators.spatial_join import spatial_join
 
     # L-shape: covers (1,1) and (1,3) but not (3,3)
@@ -432,14 +425,8 @@ def test_spatial_join_concave_falls_back_to_udf(spark, monkeypatch):
 
     # a 1,000-vertex star around (1, 1): kernel path, next to the L
     star = ("star", _star_wkt(1000, 1.0, 1.0, 0.5, 0.3))
-    pts = pts.withColumn("geohash", geohash_col(F.col("lat"), F.col("lon"), 12))
-    want = {(1, "l"), (2, "l"), (1, "star")}
-    # cell-join the two polygons instead of guarding them
-    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
-    for kw in ({}, {"geohash_col": "geohash"}):
-        got = {(r.id, r.poly_id)
-               for r in spatial_join(pts, polys + [star], **kw).collect()}
-        assert got == want, kw
+    got = {(r.id, r.poly_id) for r in spatial_join(pts, polys + [star]).collect()}
+    assert got == {(1, "l"), (2, "l"), (1, "star")}
 
 
 def test_asof_join_semantics(spark):

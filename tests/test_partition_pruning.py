@@ -27,7 +27,6 @@ from hbase_gis_spark.geo.planner import (
     partition_cover,
     partition_layout,
 )
-import hbase_gis_spark.operators.spatial_join as sj_mod
 from hbase_gis_spark.operators.knn import knn, knn_multi, within_radius
 from hbase_gis_spark.operators.spatial_join import spatial_join
 from hbase_gis_spark.sources.ingest import bulk_points, read_geo_table, write_geo_table
@@ -236,22 +235,17 @@ polygon_sets = st.lists(
 
 
 @EXAMPLES
-@given(plen=st.sampled_from([3, 4]), wkts=polygon_sets,
-       cells=st.booleans())
-@example(plen=4, wkts=[_rect(-74.2, 40.5, 0.5, 0.3), _rect(-60.0, 88.5, 40.0, 1.0)],
-         cells=True)
-@example(plen=3, wkts=[_rect(-74.2, 40.5, 0.5, 0.3)], cells=False)
-def test_spatial_join_prunes_partitions(spark, tables, monkeypatch, plen, wkts, cells):
+@given(plen=st.sampled_from([3, 4]), wkts=polygon_sets)
+@example(plen=4, wkts=[_rect(-74.2, 40.5, 0.5, 0.3), _rect(-60.0, 88.5, 40.0, 1.0)])
+@example(plen=3, wkts=[_rect(-74.2, 40.5, 0.5, 0.3)])
+def test_spatial_join_prunes_partitions(spark, tables, plen, wkts):
     t, plain, values = tables[plen]
-    # cell-join even these few polygons
-    monkeypatch.setattr(sj_mod, "CELL_JOIN_MIN_POLYGONS", 1)
     polys = [(f"p{i}", w) for i, w in enumerate(wkts)]
     cover = partition_cover(("gh_prefix", plen),
                             boxes=[parse_wkt(w).bounds() for w in wkts])
 
     def run(d):
-        return spatial_join(d, polys, geohash_col="geohash" if cells else None
-                            ).select("id", "poly_id")
+        return spatial_join(d, polys).select("id", "poly_id")
 
     assert_pruned_equal(spark, run, t, plain, values, cover)
 

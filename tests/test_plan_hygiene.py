@@ -40,6 +40,27 @@ def test_no_rdd_access_in_package():
     assert offenders == [], f".rdd access found: {offenders}"
 
 
+def test_sessions_come_from_make_session():
+    """``hbase_gis_spark.session.make_session`` is the one place the
+    package, its tools and this suite build a SparkSession, so the CLI,
+    the tools, the tests and the benchmark all run one configuration.
+    A text match (as ``grep`` would see it), docstrings included."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    builder = re.compile("SparkSession" + r".builder")
+    factory = root / "hbase_gis_spark" / "session.py"
+    offenders = [
+        f"{path.relative_to(root)}:{n}"
+        for d in ("hbase_gis_spark", "tools", "tests")
+        for path in sorted((root / d).rglob("*.py")) if path != factory
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if builder.search(line)
+    ]
+    assert offenders == [], f"sessions built outside make_session: {offenders}"
+
+
 def test_tpch_date_filters_reach_parquet_scans(spark):
     """The sargable timestamp predicates of the TPC-H-shaped queries
     must appear as PushedFilters on their parquet scans — the property
@@ -310,7 +331,7 @@ def test_round4b_plan_shapes(spark):
         )
 
     # small-shape geo queries: the covers test is rendered SQL and the
-    # cell table an inline VALUES relation — no Python stage, no RDD.
+    # knn_multi origins an inline VALUES relation — no Python stage, no RDD.
     # The one exception: spatial_join_cells derives its point geohash
     # with the pandas-UDF encoder (sources.tables.points_from_events
     # keeps it as a pushdown barrier), so that UDF alone may appear.
@@ -332,8 +353,8 @@ def test_geo_table_queries_prune_partitions(spark, tmp_path):
     """On a ``write_geo_table`` table every geo query type carries a
     non-empty PartitionFilters on its scan, with no partition argument
     from the caller: within, within_radius, knn(pruned=True),
-    knn_multi(pruned=True), spatial_join in both modes and the SQL
-    within opt-in."""
+    knn_multi(pruned=True), spatial_join with and without
+    ``geohash_col`` and the SQL within opt-in."""
     import re
 
     import hbase_gis_spark as hgs

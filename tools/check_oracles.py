@@ -17,9 +17,8 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entrymod
+from hbase_gis_spark.session import make_session
 from hbase_gis_spark.sources.tables import TABLES
 
 
@@ -48,13 +47,7 @@ def main() -> int:
 
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = make_session(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connection(sf_dir)
 

@@ -53,21 +53,12 @@ DEFAULT_QUERIES = [
 
 
 def run_once(sf_dir: str, cpus: int, names: list[str], rounds: int):
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"core-scale-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = make_session(
+        f"core-scale-{cpus}", master=f"local[{cpus}]", driver_mem="16g"
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

@@ -22,20 +22,11 @@ def main() -> None:
     outdir = os.path.join(here, "..", "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = make_session("dump-plans", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     import __spark_entry__ as entrymod
 

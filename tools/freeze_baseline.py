@@ -27,19 +27,10 @@ def main() -> int:
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = make_session(master="local[32]", driver_mem="16g")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     import __spark_entry__ as entrymod
 

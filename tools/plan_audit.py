@@ -163,17 +163,10 @@ def audit(spark, sf_dir: str) -> dict[str, list[str]]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = make_session(master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     flags = audit(spark, sf_dir)
     for name, bad in sorted(flags.items()):
         print(f"FLAG  {name}: {', '.join(bad)}")

@@ -33,22 +33,13 @@ def main() -> None:
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.1"
     only = [a for a in args if "/" not in a]
 
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-queries")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = make_session(
+        "profile-queries", master=f"local[{cpus}]", driver_mem="16g"
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     import __spark_entry__ as entrymod
 

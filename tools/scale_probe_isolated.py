@@ -1,6 +1,6 @@
-"""Hang-proof variant of tools/scale_probe.py: each (query, sf_dir)
-measurement runs in its OWN short-lived Spark subprocess under a hard
-wall-clock cap, so one pathological query (or the py4j stall this
+"""Scale probe across two sf dirs: each (query, sf_dir) measurement
+runs in its OWN short-lived Spark subprocess under a hard wall-clock
+cap, so one pathological query (or the py4j stall this
 machine exhibited twice at ~20 min under load) cannot take the whole
 probe down — a timeout is recorded as a finding, not a crash.
 
@@ -12,7 +12,9 @@ only. Single-measurement mode is this same file invoked with
 Usage:
   python tools/scale_probe_isolated.py SMALL_DIR BIG_DIR FACTOR \
       [cap_sec] [q ...]
-Prints one JSON line mirroring scale_probe.py's report.
+Prints one JSON line: per query, the seconds on each side and their
+ratio. (It replaced an in-process probe, ``tools/scale_probe.py``,
+removed after commit 50a0871.)
 """
 
 from __future__ import annotations
@@ -41,19 +43,10 @@ DEFAULT_QUERIES = [
 
 
 def run_one(name: str, sf_dir: str) -> None:
-    from pyspark.sql import SparkSession
+    from hbase_gis_spark.session import make_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = make_session(master="local[32]", driver_mem="24g")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
