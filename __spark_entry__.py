@@ -1767,9 +1767,7 @@ def _q_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("shard").cast("bigint") * SHUF_ORD_BASE + F.col("pos")
         ).alias("ordkey"),
     )
-    return spearman_corr(
-        keyed, "doc_id", "ordkey", id_col="doc_id", cache=True
-    )
+    return spearman_corr(keyed, "doc_id", "ordkey", cache=True)
 
 
 ATTR_LOOKBACK_US = 24 * 3600 * 1_000_000
@@ -4065,9 +4063,7 @@ def _q_spearman_value_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "value", ts_us().cast("double").alias("__t")
     )
-    return spearman_corr(
-        ev, "value", "__t", id_col="event_id", cache=True
-    )
+    return spearman_corr(ev, "value", "__t", cache=True)
 
 
 def _q_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6677,7 +6673,7 @@ def oracle_sql() -> dict[str, str]:
       FROM pts
     ) WHERE region_rank <= {KNNR_K}
     """
-    # haversine with IDENTICAL op order to functions.geo.haversine_distance
+    # haversine with IDENTICAL op order to sqlrender.haversine_distance_sql
     hav = (
         f"(2.0 * 6371008.8) * asin(sqrt("
         f"sin(radians(lat - {KNN_LAT!r}) / 2) * sin(radians(lat - {KNN_LAT!r}) / 2)"

@@ -1,9 +1,10 @@
-"""Geo column functions: geohash encode UDF and planar distance expression.
+"""Geo column functions: the geohash encoders.
 
-The only Python-side hot path in the spatial operators is geohash encode
-(pandas UDF, Arrow-batched, vectorized numpy bisection in
-``geo.geohash.encode_many``). Point-in-polygon lives in
-``operators.within``. Distance is a pure JVM column expression.
+``geohash_col`` is the pure-Column encoder; ``geohash_udf`` is the
+pandas-UDF kernel (Arrow-batched, vectorized numpy bisection in
+``geo.geohash.encode_many``) behind ``geohash_col_py`` and the SQL
+function ``hgs_geohash``. Point-in-polygon lives in ``operators.within``
+and the distances in ``geo.sqlrender``.
 """
 
 from __future__ import annotations
@@ -12,8 +13,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from hbase_gis_spark.geo.sqlrender import EARTH_RADIUS_M
 
 
 def geohash_col(lat: Column, lon: Column, precision: int = 12) -> Column:
@@ -30,11 +29,9 @@ def geohash_col(lat: Column, lon: Column, precision: int = 12) -> Column:
     return geohash_col_native(lat, lon, precision)
 
 
-def geohash_col_py(lat: Column, lon: Column, precision: int = 12) -> Column:
-    """Pandas-UDF geohash encode (Arrow-batched numpy bisection kernel).
-
-    The reference implementation the native encoder is pinned against
-    (tests/test_geohash.py)."""
+def geohash_udf(precision: int = 12):
+    """The pandas UDF ``(lat, lon) -> geohash`` at ``precision``
+    (Arrow-batched numpy bisection kernel)."""
 
     @F.pandas_udf(T.StringType())
     def _geohash(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
@@ -48,7 +45,13 @@ def geohash_col_py(lat: Column, lon: Column, precision: int = 12) -> Column:
         )
         return pd.Series(out)
 
-    return _geohash(lat, lon)
+    return _geohash
+
+
+def geohash_col_py(lat: Column, lon: Column, precision: int = 12) -> Column:
+    """Pandas-UDF geohash encode — the reference implementation the
+    native encoder is pinned against (tests/test_geohash.py)."""
+    return geohash_udf(precision)(lat, lon)
 
 
 _SPREAD_MASKS = (
@@ -112,37 +115,3 @@ def geohash_col_native(lat: Column, lon: Column, precision: int = 12) -> Column:
         "bcdefghjkmnpqrstuvwxyz",
     )
     return F.substring(gh12, 1, precision)
-
-
-def haversine_distance(
-    lon: Column, lat: Column, origin_lon: float, origin_lat: float
-) -> Column:
-    """Great-circle distance in METERS to a fixed origin.
-
-    The reference is strictly planar (SURVEY.md §2 K3); this is the
-    opt-in metric for callers who need real geodesic ranking. Written
-    in a fixed op order so a DuckDB oracle reproduces it exactly:
-    2R·asin(sqrt(sin²(Δφ/2) + cos φ1 · cos φ2 · sin²(Δλ/2)))."""
-    phi1 = F.radians(F.lit(float(origin_lat)))
-    phi2 = F.radians(lat)
-    dphi = F.radians(lat - F.lit(float(origin_lat)))
-    dlmb = F.radians(lon - F.lit(float(origin_lon)))
-    a = (
-        F.sin(dphi / 2) * F.sin(dphi / 2)
-        + F.cos(phi1) * F.cos(phi2) * F.sin(dlmb / 2) * F.sin(dlmb / 2)
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
-
-
-def planar_distance(
-    lon: Column, lat: Column, origin_lon: float, origin_lat: float
-) -> Column:
-    """Euclidean distance in degree space — the reference's metric
-    (DistanceComparator.java:18-27 uses Point2D.distance, NOT haversine).
-
-    Kept as a JVM column expression (whole-stage codegen'd); written as
-    sqrt(dx*dx + dy*dy) so the DuckDB oracle can reproduce it bit-for-bit.
-    """
-    dx = lon - F.lit(float(origin_lon))
-    dy = lat - F.lit(float(origin_lat))
-    return F.sqrt(dx * dx + dy * dy)

@@ -175,11 +175,18 @@ def partition_in_sql(prefixes: list[str], partition: str, partition_len: int) ->
     return prefix_in_sql(prefixes, partition)
 
 
-def planar_distance_sql(origin_lon: float, origin_lat: float, lon: str, lat: str) -> str:
+def planar_distance_sql(
+    origin_lon: float | str, origin_lat: float | str, lon: str, lat: str
+) -> str:
     """Degree-space Euclidean distance (the reference's KNN metric),
-    sqrt(dx*dx + dy*dy)."""
-    dx = f"({lon} - {lit(origin_lon)})"
-    dy = f"({lat} - {lit(origin_lat)})"
+    sqrt(dx*dx + dy*dy) with dx = lon - origin_lon. The origin is a
+    number (written as a DOUBLE literal) or SQL text, such as the
+    other side's columns in a join."""
+    def operand(v):
+        return v if isinstance(v, str) else lit(v)
+
+    dx = f"({lon} - {operand(origin_lon)})"
+    dy = f"({lat} - {operand(origin_lat)})"
     return f"sqrt({dx} * {dx} + {dy} * {dy})"
 
 

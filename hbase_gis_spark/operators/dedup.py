@@ -1367,38 +1367,28 @@ def shingle_hashes32(shingle_col) -> Column:
     return F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(4294967295)))
 
 
-def minhash_signature(text_col, n: int = 3, num_hashes: int = 64) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``) from a
-    text column, as one expression. Convenience form — inside operators
-    prefer the staged pipeline (shingles → hashes32 → signature as
-    separate projections, see :func:`minhash_lsh_pairs`) so the shingle
-    hashing isn't re-evaluated per permutation."""
-    return minhash_signature_from_hashes(
-        shingle_hashes32(word_shingles(text_col, n)), num_hashes
-    )
-
-
-def minhash_signature_from_hashes(
-    h32_col, num_hashes: int = 64, use_arrow: bool = True
-) -> Column:
+def minhash_signature_from_hashes(h32_col, num_hashes: int = 64) -> Column:
     """MinHash signature from a materialized 32-bit shingle-hash array.
 
-    Permutation i: min over shingles of (a_i * h + b_i) % P — integer
-    arithmetic, so the Arrow kernel (default) is exactly equal to the
-    expression form (pinned in tests/test_dedup.py). The expression
-    twin builds an explicit ``num_hashes``-element array (not a nested
-    transform over a seed sequence) so each permutation references the
-    hash array as an attribute — Catalyst keeps the producing
-    projection materialized (multi-reference, non-cheap) and each
-    min-reduction reads the same computed array instead of re-hashing
-    every shingle."""
-    h32 = F.col(h32_col) if isinstance(h32_col, str) else h32_col
-    if use_arrow:
-        from hbase_gis_spark.functions.arrowkernels import minhash_mins
+    Permutation i: min over shingles of (a_i * h + b_i) % P, computed
+    by the Arrow kernel ``minhash_mins`` — integer arithmetic, so it
+    equals :func:`minhash_signature_hof` exactly (pinned in
+    tests/test_dedup.py)."""
+    from hbase_gis_spark.functions.arrowkernels import minhash_mins
 
-        return minhash_mins(
-            h32, num_hashes, _MINHASH_A0, _MINHASH_B0, _MINHASH_P
-        )
+    h32 = F.col(h32_col) if isinstance(h32_col, str) else h32_col
+    return minhash_mins(h32, num_hashes, _MINHASH_A0, _MINHASH_B0, _MINHASH_P)
+
+
+def minhash_signature_hof(h32_col, num_hashes: int = 64) -> Column:
+    """The expression form of :func:`minhash_signature_from_hashes`:
+    the reference its Arrow kernel is checked against. It builds an
+    explicit ``num_hashes``-element array (not a nested transform over
+    a seed sequence) so each permutation references the hash array as
+    an attribute — Catalyst keeps the producing projection materialized
+    (multi-reference, non-cheap) and each min-reduction reads the same
+    computed array instead of re-hashing every shingle."""
+    h32 = F.col(h32_col) if isinstance(h32_col, str) else h32_col
     mins = []
     for i in range(num_hashes):
         a = F.lit(i * 2 + _MINHASH_A0)
@@ -1651,7 +1641,6 @@ def embedding_dup_lsh(
     max_bucket: int | None = None,
     dim: int = 64,
     seed: int = 13,
-    use_arrow: bool = True,
     target_bucket: int = 64,
 ) -> DataFrame:
     """Embedding near-dup pairs via hyperplane-LSH banding — the scale
@@ -1697,9 +1686,7 @@ def embedding_dup_lsh(
     computed twice (once per join side) — measured 0.3 s, irrelevant.
     """
     from hbase_gis_spark.operators.similarity import (
-        cosine_expr,
         derive_band_bits,
-        dot_expr,
         fold_dots,
         hyperplane_planes,
         pair_cosine,
@@ -1718,24 +1705,12 @@ def embedding_dup_lsh(
     planes = hyperplane_planes(dim, n_planes, seed)
     # Plane dots once per vector as a staged array column. The Arrow
     # kernel (fold_dots) is bit-identical to the interpreted HOF fold
-    # but vectorized — measured ~3x on the whole query at sf0.1, and
-    # the gap grows with n_planes · rows. use_arrow=False keeps the
-    # pure-expression twin for the equality pin in tests.
-    if use_arrow:
-        dots = fold_dots(F.col("v"), planes)
-    else:
-        dots = F.array(
-            *[
-                dot_expr(
-                    F.col("v"), F.array(*[F.lit(float(x)) for x in p])
-                )
-                for p in planes
-            ]
-        )
+    # (similarity.dots_expr) but vectorized — measured ~3x on the whole
+    # query at sf0.1, and the gap grows with n_planes · rows.
     base = _spread(df).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-    sigs = base.select("id", "v", dots.alias("__dots"))
+    sigs = base.select("id", "v", fold_dots(F.col("v"), planes).alias("__dots"))
 
     def band_sig(b: int) -> Column:
         terms = []
@@ -1780,15 +1755,12 @@ def embedding_dup_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    cos = (
-        pair_cosine(F.col("va.v"), F.col("vb.v"))
-        if use_arrow
-        else cosine_expr(F.col("va.v"), F.col("vb.v"))
-    )
     return (
         cand.join(base.alias("va"), F.col("id_a") == F.col("va.id"))
         .join(base.alias("vb"), F.col("id_b") == F.col("vb.id"))
-        .select("id_a", "id_b", cos.alias("cosine"))
+        .select(
+            "id_a", "id_b", pair_cosine(F.col("va.v"), F.col("vb.v")).alias("cosine")
+        )
         .filter(F.col("cosine") >= F.lit(threshold))
     )
 

@@ -667,7 +667,6 @@ def spearman_corr(
     x_col: str,
     y_col: str,
     n_shards: int = 64,
-    id_col: str | None = None,
     cache: bool = False,
 ) -> DataFrame:
     """Spearman rank correlation between two numeric columns — the
@@ -694,8 +693,7 @@ def spearman_corr(
     shards + per-shard rank/tie windows, the rank.py machinery), so
     the two rank frames never need re-pairing: no row-identity join,
     no synthetic id, no checkpoint in any path, deterministic lineage
-    end to end. ``id_col`` is retained for API compatibility and
-    ignored. Cost: ONE bounded two-column boundary sketch + ONE
+    end to end. Cost: ONE bounded two-column boundary sketch + ONE
     bounded two-key shard-size aggregate (the four former per-column
     driver jobs, batched in optimization r11) and ONE lazy plan with
     exactly two exchanges (x-shards, y-shards) + one aggregate —

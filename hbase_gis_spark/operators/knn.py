@@ -158,9 +158,8 @@ def knn_multi(
     is a rank window partitioned by query_id (map-side WindowGroupLimit
     bounds each partition's contribution to k rows before the
     exchange). Distance is the reference's planar degree metric
-    (SURVEY.md §2 K3), written with the same operand order as
-    ``sqlrender.planar_distance_sql`` so oracles reproduce it
-    bit-for-bit.
+    (SURVEY.md §2 K3), rendered by ``sqlrender.planar_distance_sql``
+    against the origin columns, so oracles reproduce it bit-for-bit.
 
     ``pruned=True`` (requires ``geohash_col``) joins on the 9
     per-origin candidate cells at ``prefix_precision`` instead of
@@ -195,11 +194,13 @@ def knn_multi(
     else:
         odf = spark.sql(R.values_sql(rows, ["query_id", "q_lon", "q_lat"]))
         joined = df.crossJoin(F.broadcast(odf))
-    dx = F.col(lon_col).cast("double") - F.col("q_lon")
-    dy = F.col(lat_col).cast("double") - F.col("q_lat")
-    scored = joined.withColumn(
-        "distance", F.sqrt(dx * dx + dy * dy)
-    ).filter(~F.isnan(F.col("distance")))
+    dist = R.planar_distance_sql(
+        R.col("q_lon"), R.col("q_lat"),
+        f"CAST({R.col(lon_col)} AS DOUBLE)", f"CAST({R.col(lat_col)} AS DOUBLE)",
+    )
+    scored = joined.withColumn("distance", F.expr(dist)).filter(
+        ~F.isnan(F.col("distance"))
+    )
     order = [F.col("distance").asc()]
     if tiebreak_col is not None:
         order.append(F.col(tiebreak_col).asc())

@@ -40,6 +40,22 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def dots_expr(vec_col: Column, M) -> Column:
+    """Array of :func:`dot_expr` folds of the vector against each row
+    of ``M`` (literal arrays) — the codegen twin of the Arrow kernel
+    ``fold_dots``, bit-identical to it (pinned in
+    tests/test_similarity.py)."""
+    return F.array(
+        *[dot_expr(vec_col, F.array(*[F.lit(float(x)) for x in m])) for m in M]
+    )
+
+
+def argmax_expr(dots: Column) -> Column:
+    """0-based index of the first maximum of a dot array
+    (array_position of array_max)."""
+    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+
+
 def cosine_topk(
     df: DataFrame,
     query_id: int,
@@ -113,24 +129,13 @@ def train_ivf_centroids(
     return kmeans_centroids(V, nlist, iters=iters, seed=seed)
 
 
-def ivf_cell_expr(
-    vec_col: Column, centroids: np.ndarray, use_arrow: bool = True
-) -> Column:
+def ivf_cell_expr(vec_col: Column, centroids: np.ndarray) -> Column:
     """0-based index of the max-dot-product centroid (array of dots →
     array_position of array_max). Cosine argmax == dot argmax because
     centroids are unit-norm and the vector's own norm is a positive
     constant across cells. Dots come from the fold-exact Arrow kernel
-    by default (bit-identical to the dot_expr fold)."""
-    if use_arrow:
-        dots = fold_dots(vec_col, centroids)
-    else:
-        dots = F.array(
-            *[
-                dot_expr(vec_col, F.array(*[F.lit(float(x)) for x in c]))
-                for c in centroids
-            ]
-        )
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+    (bit-identical to the :func:`dots_expr` fold)."""
+    return argmax_expr(fold_dots(vec_col, centroids))
 
 
 def ann_ivf_topk(
@@ -234,32 +239,17 @@ def hyperplane_planes(dim: int, n_planes: int, seed: int = 13) -> list[list[floa
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_signature(
-    vec_col: Column, planes: list[list[float]], use_arrow: bool = True
-) -> Column:
+def lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
     """Sign-bit signature: bit i = (vec · plane_i) >= 0. Packed bigint.
 
-    The plane dots come from the fold-exact Arrow kernel by default
-    (bit-identical to the interpreted dot_expr fold — see
-    functions/arrowkernels.py); ``use_arrow=False`` keeps the pure
-    expression twin for the equality pin in tests."""
-    if use_arrow:
-        dots = fold_dots(vec_col, planes)
-        bit_at = [
-            (F.element_at(dots, i + 1) >= 0).cast("bigint")
-            for i in range(len(planes))
-        ]
-    else:
-        bit_at = [
-            (
-                dot_expr(
-                    vec_col, F.array(*[F.lit(float(x)) for x in plane])
-                )
-                >= 0
-            ).cast("bigint")
-            for plane in planes
-        ]
-    terms = [F.shiftleft(b, i) for i, b in enumerate(bit_at)]
+    The plane dots come from the fold-exact Arrow kernel (bit-identical
+    to the interpreted :func:`dots_expr` fold — see
+    functions/arrowkernels.py)."""
+    dots = fold_dots(vec_col, planes)
+    terms = [
+        F.shiftleft((F.element_at(dots, i + 1) >= 0).cast("bigint"), i)
+        for i in range(len(planes))
+    ]
     out = terms[0]
     for t in terms[1:]:
         out = out + t
@@ -444,13 +434,27 @@ def mrl_truncation_report(
     )
 
 
+def _best_cells(
+    df: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, cell, cdot): each vector's best centroid and its dot, read
+    from one staged array of Arrow-kernel centroid dots."""
+    return df.select(
+        F.col(id_col),
+        fold_dots(F.col(vec_col), centroids).alias("__dots"),
+    ).select(
+        F.col(id_col),
+        argmax_expr(F.col("__dots")).alias("cell"),
+        F.array_max("__dots").alias("cdot"),
+    )
+
+
 def ivf_prototypes(
     df: DataFrame,
     centroids: np.ndarray,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-cell prototype (coreset) selection: the ``k`` vectors most
     aligned with their own cell centroid — the dataset-condensation /
@@ -466,33 +470,12 @@ def ivf_prototypes(
     bit-identically across engines (the established discipline of the
     IVF family).
 
-    Scale shape: ONE scan computes all centroid dots (Arrow kernel /
-    codegen fold), the rank window partitions by cell over ``nlist``
+    Scale shape: ONE scan computes all centroid dots (Arrow kernel),
+    the rank window partitions by cell over ``nlist``
     partitions — content-uniform under a healthy quantizer, and an
     unhealthy one is visible first in ``ivf_cells_hist``. No joins,
     no candidate explosion; cost is linear in the table."""
-    if use_arrow:
-        dots = fold_dots(F.col(vec_col), centroids)
-    else:
-        dots = F.array(
-            *[
-                dot_expr(
-                    F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                )
-                for c in centroids
-            ]
-        )
-    staged = df.select(
-        F.col(id_col),
-        dots.alias("__dots"),
-    ).select(
-        F.col(id_col),
-        (F.array_position(F.col("__dots"), F.array_max("__dots")) - 1)
-        .cast("int")
-        .alias("cell"),
-        F.array_max("__dots").alias("cdot"),
-    )
+    staged = _best_cells(df, centroids, id_col, vec_col)
     w = Window.partitionBy("cell").orderBy(
         F.col("cdot").desc(), F.col(id_col).asc()
     )
@@ -509,7 +492,6 @@ def embedding_outliers(
     k: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The ``k`` vectors LEAST aligned with their own best centroid —
     the embedding-space outlier queue (mislabeled items, encoder
@@ -521,32 +503,11 @@ def embedding_outliers(
     ties by ascending id. Same fold-exact dot discipline as the IVF
     family (centroids are unit-norm — max dot == max cosine).
 
-    Scale shape: ONE scan computes all centroid dots (Arrow kernel /
-    codegen fold) and the global bottom-k is
+    Scale shape: ONE scan computes all centroid dots (Arrow kernel)
+    and the global bottom-k is
     ``orderBy().limit(k)`` -> TakeOrderedAndProject (per-partition
     heaps + a k-row driver merge, never a global sort)."""
-    if use_arrow:
-        dots = fold_dots(F.col(vec_col), centroids)
-    else:
-        dots = F.array(
-            *[
-                dot_expr(
-                    F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                )
-                for c in centroids
-            ]
-        )
-    staged = df.select(
-        F.col(id_col),
-        dots.alias("__dots"),
-    ).select(
-        F.col(id_col),
-        (F.array_position(F.col("__dots"), F.array_max("__dots")) - 1)
-        .cast("int")
-        .alias("cell"),
-        F.array_max("__dots").alias("cdot"),
-    )
+    staged = _best_cells(df, centroids, id_col, vec_col)
     return staged.select(id_col, "cell", "cdot").orderBy(
         F.col("cdot").asc(), F.col(id_col).asc()
     ).limit(k)
@@ -890,7 +851,7 @@ def pq_code_expr(
         F.array(*[F.lit(h) for h in halfn]),
         lambda d, h: d - h,
     )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    return argmax_expr(scores)
 
 
 def pq_adc_topk(
@@ -1372,7 +1333,6 @@ def ivf_nprobe_recall_curve(
     centroids: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The nprobe TUNING CURVE for an IVF index: for every nprobe in
     1..nlist, how much of the query's EXACT top-k an
@@ -1410,11 +1370,7 @@ def ivf_nprobe_recall_curve(
     top = cosine_topk(df, query_id, k, id_col=id_col, vec_col=vec_col)
     hits = (
         df.join(top.select(id_col), id_col, "leftsemi")
-        .select(
-            ivf_cell_expr(
-                F.col(vec_col), centroids, use_arrow=use_arrow
-            ).alias("cell")
-        )
+        .select(ivf_cell_expr(F.col(vec_col), centroids).alias("cell"))
         .join(F.broadcast(ranks), "cell")
     )
     grid = spark.range(1, nlist + 1).select(
@@ -1445,7 +1401,6 @@ def ivf_reassign_report(
     retrained: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Index-maintenance decision report for a stored IVF layout — the
     operator that completes the stored-ANN arc the way
@@ -1470,38 +1425,21 @@ def ivf_reassign_report(
     bounded rewrite, :func:`ivf_reassign_delta`'s changed-rows set.
 
     Scale shape: ONE scan per side computes BOTH cell argmaxes from
-    staged dot arrays (Arrow kernel / codegen fold — the projection
-    is materialized once and referenced twice, the interpreted-HOF
+    staged dot arrays (Arrow kernel — the projection is materialized
+    once and referenced twice, the interpreted-HOF
     discipline), a union, and one nlist-bounded hash aggregate —
     map-side combined, no joins, no windows, linear in the table."""
 
     def _cells(df: DataFrame, is_batch: int) -> DataFrame:
         vc = F.col(vec_col)
-        if use_arrow:
-            fd, rd = fold_dots(vc, frozen), fold_dots(vc, retrained)
-        else:
-            fd = F.array(
-                *[
-                    dot_expr(vc, F.array(*[F.lit(float(x)) for x in c]))
-                    for c in frozen
-                ]
-            )
-            rd = F.array(
-                *[
-                    dot_expr(vc, F.array(*[F.lit(float(x)) for x in c]))
-                    for c in retrained
-                ]
-            )
         staged = df.select(
-            F.col(id_col), fd.alias("__fd"), rd.alias("__rd")
+            F.col(id_col),
+            fold_dots(vc, frozen).alias("__fd"),
+            fold_dots(vc, retrained).alias("__rd"),
         )
         return staged.select(
-            (F.array_position(F.col("__fd"), F.array_max("__fd")) - 1)
-            .cast("int")
-            .alias("cell"),
-            (F.array_position(F.col("__rd"), F.array_max("__rd")) - 1)
-            .cast("int")
-            .alias("__new_cell"),
+            argmax_expr(F.col("__fd")).alias("cell"),
+            argmax_expr(F.col("__rd")).alias("__new_cell"),
             F.lit(is_batch).alias("__is_batch"),
         )
 
@@ -1538,7 +1476,6 @@ def ivf_reassign_delta(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "ivf_cell",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """The bounded-rewrite set after a retrain: join the stored
     assignment ``catalog`` (id → frozen cell) with the vector table,
@@ -1553,18 +1490,17 @@ def ivf_reassign_delta(
     dedup_incremental postings-catalog discipline) the join plans
     with NO Exchange on either side, pinned by
     tests/test_similarity.py's plan test; one scan computes the new
-    argmax, output bounded by the changed rows. ``use_arrow``
-    defaults to FALSE here (unlike the rest of the IVF family): the
-    Arrow kernel's Python eval node discards the bucketed scan's
-    output-partitioning guarantee and the join re-Exchanges the
+    argmax, output bounded by the changed rows. The dots come from
+    the codegen fold (:func:`dots_expr`), unlike the rest of the IVF
+    family: the Arrow kernel's Python eval node discards the bucketed
+    scan's output-partitioning guarantee and the join re-Exchanges the
     vector side — measured, 1 Exchange vs 0 — defeating the
-    co-location this operator exists for; the codegen fold computes
+    co-location this operator exists for; the fold computes
     bit-identical dots (fold_dots' contract) and keeps the plan
     shuffle-free."""
     newc = vectors.select(
         F.col(id_col),
-        ivf_cell_expr(F.col(vec_col), retrained, use_arrow=use_arrow)
-        .alias("__new_cell"),
+        argmax_expr(dots_expr(F.col(vec_col), retrained)).alias("__new_cell"),
     )
     return (
         catalog.select(id_col, F.col(cell_col).alias("old_cell"))

@@ -208,13 +208,11 @@ def distance_join(
         F.col("py").alias("ay"),
         home,
     )
-    dxc = F.col("bx") - F.col("ax")
-    dyc = F.col("by") - F.col("ay")
-    dist = F.sqrt(dxc * dxc + dyc * dyc)
     same = (
         a_home.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("distance", dist)
+        .withColumn("distance", F.expr(
+            R.planar_distance_sql(*map(R.col, ("ax", "ay", "bx", "by")))))
         .filter(F.col("distance") <= F.lit(r))
         .select("id_a", "id_b", "distance")
     )
@@ -239,12 +237,10 @@ def distance_join(
         ((F.col("cx") + F.col("o.dx")) * F.lit(4294967296)
          + (F.col("cy") + F.col("o.dy"))).alias("cell"),
     )
-    dxf = F.col("bx") - F.col("fx")
-    dyf = F.col("by") - F.col("fy")
-    dist_f = F.sqrt(dxf * dxf + dyf * dyf)
     cross = (
         a_fwd.join(b, "cell")
-        .withColumn("distance", dist_f)
+        .withColumn("distance", F.expr(
+            R.planar_distance_sql(*map(R.col, ("fx", "fy", "bx", "by")))))
         .filter(F.col("distance") <= F.lit(r))
         .select(
             F.least(F.col("fid"), F.col("id_b")).alias("id_a"),

@@ -264,7 +264,6 @@ def mad_anomalies(
     day_col: str = "day",
     value_col: str = "cents",
     k_milli: int = 3500,
-    n_shards: int = 64,
 ) -> DataFrame:
     """Robust daily anomaly screen: flag days whose deviation from
     the MEDIAN exceeds ``k_milli/1000`` times the median absolute
@@ -287,8 +286,7 @@ def mad_anomalies(
     :func:`_bounded_rank_select`, lazily, with no driver round-trips
     — round 6 replaced two eager sharded selections that paid 2
     boundary sketches + 2 size collects to rank a few hundred rows.
-    ``n_shards`` is kept for API compatibility and ignored; rank a
-    FACT-scale column with rank.global_percentiles instead."""
+    Rank a FACT-scale column with rank.global_percentiles instead."""
     vals = days.select(
         F.col(day_col).alias("day"),
         F.col(value_col).cast("bigint").alias("value"),

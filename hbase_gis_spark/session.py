@@ -21,8 +21,9 @@ What each setting buys at 100 TB (and why it's safe at sf0.001):
   and toPandas edge moves via Arrow batches, not pickled rows.
 - **nanosAsLong**: the testdata parquet carries TIMESTAMP(NANOS);
   see sources/tables.py for the µs oracle convention.
-- **UI off**: local runs, tools and tests never read it; ``extra``
-  turns it back on.
+- **UI and console progress bars off**: local runs, tools and tests
+  never read the UI, and progress bars would break the line-per-result
+  output of the tools; ``extra`` turns either back on.
 
 This is the only place the package, its CLI, its tools and its test
 suite build a SparkSession.
@@ -30,6 +31,7 @@ suite build a SparkSession.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -45,10 +47,16 @@ def make_session(
     manager); tests and local runs pass ``local[N]``. Shuffle
     partitions are set to 2× defaultParallelism once the session
     exists, so they follow the actual core count. ``extra`` configs
-    go to the builder after the defaults above and override them."""
-    b = SparkSession.builder.appName(app)
-    if master:
-        b = b.master(master)
+    go to the builder after the defaults above and override them.
+
+    On a running session ``app`` and ``master`` are left out: the
+    builder would otherwise write them into the session's runtime conf,
+    where they would no longer match the running context."""
+    b = SparkSession.builder
+    if SparkContext._active_spark_context is None:
+        b = b.appName(app)
+        if master:
+            b = b.master(master)
     if driver_mem:
         b = b.config("spark.driver.memory", driver_mem)
     b = (
@@ -59,6 +67,7 @@ def make_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -127,17 +127,6 @@ def ts_us(col="ts"):
     return F.unix_micros(c.cast("timestamp"))
 
 
-def ts_us_from(df: DataFrame, col: str = "ts"):
-    """Schema-inspecting variant of :func:`ts_us` — handles the legacy
-    long-nanos layout explicitly (cast long->timestamp would misread
-    nanos as seconds, so the dtype check matters)."""
-    from pyspark.sql.types import LongType
-
-    if isinstance(df.schema[col].dataType, LongType):
-        return F.expr(f"{col} div 1000")
-    return F.unix_micros(F.col(col).cast("timestamp"))
-
-
 # --- derived geo points (lon/lat grid fabricated from event ids) -------------
 
 LON0, LON_SPAN, LON_MOD = -74.05, 0.2, 997

@@ -35,6 +35,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hbase_gis_spark.functions.geo import geohash_udf
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
 from hbase_gis_spark.geo.planner import (
@@ -112,8 +113,7 @@ def haversine_distance_sql(
     lat_expr: str = "lat",
 ) -> str:
     """Great-circle distance in meters, the same text
-    ``operators.knn`` applies (op order of
-    ``functions.geo.haversine_distance``)."""
+    ``operators.knn`` applies."""
     return R.haversine_distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)
 
 
@@ -495,18 +495,6 @@ def register_sql_api(spark: SparkSession) -> None:
     recompute per call site and are the ad-hoc / interactive surface.
     """
 
-    @F.pandas_udf(T.StringType())
-    def _hgs_geohash(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        from hbase_gis_spark.geo.geohash import encode_many
-
-        return pd.Series(
-            encode_many(
-                lat_s.to_numpy(dtype="float64", na_value=float("nan")),
-                lon_s.to_numpy(dtype="float64", na_value=float("nan")),
-                12,
-            )
-        )
-
     @F.pandas_udf(T.BooleanType())
     def _hgs_covers(
         wkt_s: pd.Series, lon_s: pd.Series, lat_s: pd.Series
@@ -521,7 +509,7 @@ def register_sql_api(spark: SparkSession) -> None:
             out[m] = poly.covers(lons[m], lats[m])
         return pd.Series(out)
 
-    spark.udf.register("hgs_geohash", _hgs_geohash)
+    spark.udf.register("hgs_geohash", geohash_udf(12))
     spark.udf.register("hgs_covers", _hgs_covers)
 
     spark.sql(

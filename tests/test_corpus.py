@@ -220,15 +220,18 @@ def test_make_session_configs(spark):
     """The suite's session already runs the factory's settings:
     ``make_session`` on it (getOrCreate re-applies every runtime conf)
     returns the same session and changes no setting, so no test's
-    configuration depends on which test called the factory first. The
-    app name is passed through, being the session's name, not a
-    setting."""
+    configuration depends on which test called the factory first. A
+    different app name and master (as the CLI passes) leave the running
+    session's name and master as they are."""
     from hbase_gis_spark import make_session
 
     before = dict(spark.conf.getAll)
-    s = make_session(app=spark.conf.get("spark.app.name"))
+    s = make_session(app="another-app", master="local[1]")
     assert s is spark
     assert dict(s.conf.getAll) == before
+    assert s.conf.get("spark.app.name") == s.sparkContext.appName
+    assert s.conf.get("spark.master") == s.sparkContext.master
+    assert s.conf.get("spark.ui.showConsoleProgress") == "false"
     assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert s.conf.get("spark.sql.shuffle.partitions") == str(

@@ -383,6 +383,7 @@ def test_minhash_arrow_kernel_bit_identical(spark):
     from pyspark.sql import functions as F
     from hbase_gis_spark.operators.dedup import (
         minhash_signature_from_hashes,
+        minhash_signature_hof,
         shingle_hashes32,
         word_shingles,
     )
@@ -395,8 +396,8 @@ def test_minhash_arrow_kernel_bit_identical(spark):
     )
     both = sh.select(
         "doc_id",
-        minhash_signature_from_hashes("h", 16, use_arrow=True).alias("sa"),
-        minhash_signature_from_hashes("h", 16, use_arrow=False).alias("se"),
+        minhash_signature_from_hashes("h", 16).alias("sa"),
+        minhash_signature_hof("h", 16).alias("se"),
     ).collect()
     for r in both:
         assert r["sa"] == r["se"], r["doc_id"]

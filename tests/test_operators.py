@@ -526,7 +526,7 @@ def test_within_radius_bbox_is_lossless(spark):
     """The conservative bbox prefilter never drops a true match:
     within_radius == bare exact haversine filter."""
     from pyspark.sql import functions as F
-    from hbase_gis_spark.functions.geo import haversine_distance
+    from hbase_gis_spark.geo.sqlrender import haversine_distance_sql
     from hbase_gis_spark.operators.knn import within_radius
     from hbase_gis_spark.sources.tables import derived_points
     from tests.conftest import SF0001
@@ -536,7 +536,7 @@ def test_within_radius_bbox_is_lossless(spark):
     exact = {
         r.id
         for r in pts.withColumn(
-            "d", haversine_distance(F.col("lon"), F.col("lat"), -73.95, 40.75)
+            "d", F.expr(haversine_distance_sql(-73.95, 40.75, "lon", "lat"))
         )
         .filter("d <= 5000.0")
         .collect()

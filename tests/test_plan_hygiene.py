@@ -61,6 +61,27 @@ def test_sessions_come_from_make_session():
     assert offenders == [], f"sessions built outside make_session: {offenders}"
 
 
+def test_no_use_arrow_switch():
+    """Each vector/MinHash kernel has one production path: no function
+    under ``hbase_gis_spark/`` takes a ``use_arrow`` parameter. (The
+    HOF folds the Arrow kernels are checked against are named functions
+    of their own, such as ``similarity.dots_expr``.)"""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted((root / "hbase_gis_spark").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if any(p.arg == "use_arrow" for p in params):
+                    offenders.append(
+                        f"{path.relative_to(root)}:{node.lineno} {node.name}")
+    assert offenders == [], f"use_arrow switches: {offenders}"
+
+
 def test_tpch_date_filters_reach_parquet_scans(spark):
     """The sargable timestamp predicates of the TPC-H-shaped queries
     must appear as PushedFilters on their parquet scans — the property
@@ -332,19 +353,16 @@ def test_round4b_plan_shapes(spark):
 
     # small-shape geo queries: the covers test is rendered SQL and the
     # knn_multi origins an inline VALUES relation — no Python stage, no RDD.
-    # The one exception: spatial_join_cells derives its point geohash
-    # with the pandas-UDF encoder (sources.tables.points_from_events
-    # keeps it as a pushdown barrier), so that UDF alone may appear.
-    import re
-
+    # DataFrames cached by earlier tests would be read in place of these
+    # plans' own scans (and printed with their cached plans, such as
+    # derived_points' pandas-UDF geohash), so the cache is dropped first.
+    spark.catalog.clearCache()
     for name in ["within_concave", "within_multipolygon", "within_hole",
                  "spatial_join", "spatial_join_cells", "knn_multi"]:
         p = plan_of(name)
         assert "BatchEvalPython" not in p, name
-        udfs = re.findall(r"ArrowEvalPython \[(\w+)\(", p)
-        allowed = {"_geohash"} if name == "spatial_join_cells" else set()
-        assert set(udfs) <= allowed, (
-            f"{name} unexpectedly crosses the Python boundary: {udfs}"
+        assert "ArrowEvalPython" not in p, (
+            f"{name} unexpectedly crosses the Python boundary"
         )
         assert "Scan ExistingRDD" not in p, name
 

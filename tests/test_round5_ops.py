@@ -248,7 +248,7 @@ def test_node_jaccard_triangle_plus_leaf(spark):
 def test_embedding_outliers_bottom_k(spark):
     import numpy as np
 
-    from hbase_gis_spark.operators.similarity import embedding_outliers
+    from hbase_gis_spark.operators.similarity import dots_expr, embedding_outliers
 
     C = np.array([[1.0, 0.0], [0.0, 1.0]])
     rows = [
@@ -258,9 +258,18 @@ def test_embedding_outliers_bottom_k(spark):
         (4, [0.6, 0.8]),
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got = embedding_outliers(df, C, k=2, use_arrow=False).collect()
+    got = embedding_outliers(df, C, k=2).collect()
     assert [r.vec_id for r in got] == [3, 4]
     assert got[0].cdot < got[1].cdot
+    # the kernel's best dots equal the HOF fold's, bit for bit
+    ref = {
+        r.vec_id: r.cdot
+        for r in df.select(
+            "vec_id",
+            F.array_max(dots_expr(F.col("embedding"), C)).alias("cdot"),
+        ).collect()
+    }
+    assert [r.cdot for r in got] == [ref[3], ref[4]]
 
 
 def test_bounce_rate_query_counts(spark):

@@ -145,25 +145,37 @@ def test_arrow_kernels_bit_identical_to_fold_expressions(spark):
     stay valid after the vectorization."""
     from pyspark.sql import functions as F
     from hbase_gis_spark.operators.similarity import (
+        argmax_expr,
+        dots_expr,
         hyperplane_planes,
         ivf_cell_expr,
         lsh_signature,
         train_ivf_centroids,
     )
-    from hbase_gis_spark.functions.arrowkernels import pair_cosine
+    from hbase_gis_spark.functions.arrowkernels import fold_dots, pair_cosine
     from hbase_gis_spark.operators.similarity import cosine_expr
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     planes = hyperplane_planes(64, 12, seed=13)
     C = train_ivf_centroids(emb, 8, train_rows=256, seed=13)
+    v = F.col("embedding")
+    # the HOF reference: fold dots, then the same sign bits / argmax
+    ref_sig = sum(
+        F.shiftleft((F.element_at(dots_expr(v, planes), i + 1) >= 0)
+                    .cast("bigint"), i)
+        for i in range(len(planes))
+    )
     both = emb.select(
         "vec_id",
-        lsh_signature(F.col("embedding"), planes, use_arrow=True).alias("sa"),
-        lsh_signature(F.col("embedding"), planes, use_arrow=False).alias("se"),
-        ivf_cell_expr(F.col("embedding"), C, use_arrow=True).alias("ca"),
-        ivf_cell_expr(F.col("embedding"), C, use_arrow=False).alias("ce"),
+        (fold_dots(v, planes) == dots_expr(v, planes)).alias("pe"),
+        (fold_dots(v, C) == dots_expr(v, C)).alias("de"),
+        lsh_signature(v, planes).alias("sa"),
+        ref_sig.alias("se"),
+        ivf_cell_expr(v, C).alias("ca"),
+        argmax_expr(dots_expr(v, C)).alias("ce"),
     )
-    assert both.filter("sa != se OR ca != ce").count() == 0
+    assert both.count() > 0
+    assert both.filter("NOT pe OR NOT de OR sa != se OR ca != ce").count() == 0
     # pair cosine vs expression cosine on a self-join sample
     a = emb.limit(20).select(
         F.col("vec_id").alias("ia"), F.col("embedding").alias("va")
@@ -713,8 +725,14 @@ def test_mrl_truncation_report_hand_vectors(spark):
 def test_ivf_reassign_report_hand_centroids(spark):
     """Frozen quantizer {x-axis, y-axis}; retrained quantizer rotated
     45 degrees — vectors near the diagonal MOVE, axis-aligned ones
-    stay split deterministically by the argmax tiebreak."""
-    from hbase_gis_spark.operators.similarity import ivf_reassign_report
+    stay split deterministically by the argmax tiebreak. The Arrow
+    kernel's report equals the one built from the HOF fold's cells."""
+    from pyspark.sql import functions as F
+    from hbase_gis_spark.operators.similarity import (
+        argmax_expr,
+        dots_expr,
+        ivf_reassign_report,
+    )
 
     frozen = np.array([[1.0, 0.0], [0.0, 1.0]])
     s = 1 / np.sqrt(2.0)
@@ -730,7 +748,7 @@ def test_ivf_reassign_report_hand_centroids(spark):
     got = {
         r.cell: (r.n_stored, r.n_batch, r.n_total, r.n_moved, r.move_milli)
         for r in ivf_reassign_report(
-            stored, batch, frozen, retrained, use_arrow=False
+            stored, batch, frozen, retrained
         ).collect()
     }
     # frozen cell 0 (x-dominant): ids 1, 3, 5. retrained cells: all
@@ -739,6 +757,20 @@ def test_ivf_reassign_report_hand_centroids(spark):
     # retrained cell 0 too (y-heavy vectors dot [s,s] > [s,-s]) ->
     # both MOVE (cell 1 -> 0).
     assert got == {0: (2, 1, 3, 0, 0), 1: (1, 1, 2, 2, 1000)}
+    # the same report from the HOF reference cells
+    ref = {}
+    for is_batch, part in ((0, stored), (1, batch)):
+        for r in part.select(
+            argmax_expr(dots_expr(F.col("embedding"), frozen)).alias("c"),
+            argmax_expr(dots_expr(F.col("embedding"), retrained)).alias("n"),
+        ).collect():
+            st, bt, tot, mv = ref.get(r.c, (0, 0, 0, 0))
+            ref[r.c] = (st + (1 - is_batch), bt + is_batch, tot + 1,
+                        mv + (r.n != r.c))
+    assert got == {
+        c: (st, bt, tot, mv, 1000 * mv // tot)
+        for c, (st, bt, tot, mv) in ref.items()
+    }
 
 
 def test_ivf_reassign_delta_changed_rows_and_bucketed_plan(spark):

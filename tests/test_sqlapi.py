@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import hbase_gis_spark as hgs
-from hbase_gis_spark.functions.geo import geohash_col, haversine_distance
+from hbase_gis_spark.functions.geo import geohash_col
 from hbase_gis_spark.sources.tables import derived_points
 from tests.conftest import SF0001
 
@@ -127,21 +127,22 @@ def test_knn_sql_is_take_ordered(spark, pts_view):
 
 
 def test_haversine_sql_matches_column_expr(spark, pts_view):
+    """The SQL haversine text returns the DataFrame operator's
+    distances (``with_distance(metric="haversine")``) bit for bit."""
     expr = hgs.haversine_distance_sql(-73.95, 40.75)
     via_sql = {
         r.id: r.d
         for r in spark.sql(f"SELECT id, {expr} AS d FROM pts LIMIT 100").collect()
     }
-    via_col = {
+    via_op = {
         r.id: r.d
-        for r in derived_points(spark, SF0001)
-        .select(
-            "id",
-            haversine_distance(F.col("lon"), F.col("lat"), -73.95, 40.75).alias("d"),
-        )
-        .collect()
+        for r in hgs.with_distance(
+            derived_points(spark, SF0001), -73.95, 40.75,
+            dist_col="d", metric="haversine",
+        ).collect()
     }
-    assert all(via_sql[i] == via_col[i] for i in via_sql)
+    assert len(via_sql) == 100
+    assert all(via_sql[i] == via_op[i] for i in via_sql)
 
 
 def test_geohash_prefix_sql_is_superset_filter(spark, pts_view):
