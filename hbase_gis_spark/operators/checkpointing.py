@@ -12,18 +12,17 @@ to reliable storage (HDFS/object store via
 ``sc.setCheckpointDir(...)``) survives executor loss at the cost of a
 write+read round-trip per truncation (VERDICT r6 next-round #4).
 
-Policy:
+Policy: the session conf ``spark.hbase_gis.checkpoint.mode`` is the
+one switch — a deployment-level setting, so a cluster job opts every
+operator in with one conf + ``sc.setCheckpointDir`` and no signature
+changes.
 
-- mode ``"local"`` (default): ``localCheckpoint`` — right for
-  short-lived jobs and local[`n`] where executor loss means the whole
-  app died anyway.
-- mode ``"reliable"``: ``DataFrame.checkpoint`` — requires a
-  checkpoint dir; raises a clear error instead of Spark's deep
-  stack trace when it is missing.
-- mode ``None``: read the session conf
-  ``spark.hbase_gis.checkpoint.mode`` (default ``local``) — the
-  deployment-level switch, so a cluster job opts every operator in
-  with one conf + ``sc.setCheckpointDir`` and no signature changes.
+- ``"local"`` (default): ``localCheckpoint`` — right for short-lived
+  jobs and local[`n`] where executor loss means the whole app died
+  anyway.
+- ``"reliable"``: ``DataFrame.checkpoint`` — requires a checkpoint
+  dir; raises a clear error instead of Spark's deep stack trace when
+  it is missing.
 
 Eagerness is orthogonal and preserved per call site (lazy for loop
 bodies, eager where the caller needs the cut to materialize NOW).
@@ -37,21 +36,15 @@ CONF_KEY = "spark.hbase_gis.checkpoint.mode"
 _MODES = ("local", "reliable")
 
 
-def truncate_lineage(
-    df: DataFrame,
-    mode: str | None = None,
-    eager: bool = False,
-) -> DataFrame:
-    """Truncate ``df``'s lineage via the configured checkpoint backend.
-
-    See the module docstring for the mode semantics. Identical rows
-    under either backend (pinned in tests/test_round7_ops.py)."""
-    if mode is None:
-        mode = df.sparkSession.conf.get(CONF_KEY, "local")
+def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Truncate ``df``'s lineage via the checkpoint backend the
+    session conf selects (module docstring). Identical rows under
+    either backend (pinned in tests/test_round7_ops.py)."""
+    mode = df.sparkSession.conf.get(CONF_KEY, "local")
     if mode not in _MODES:
         raise ValueError(
             f"checkpoint mode must be one of {_MODES} (got {mode!r}) — "
-            f"set it per call or via the {CONF_KEY} session conf"
+            f"set it via the {CONF_KEY} session conf"
         )
     if mode == "reliable":
         sc = df.sparkSession.sparkContext

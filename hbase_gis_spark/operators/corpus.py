@@ -1236,6 +1236,49 @@ def funnel_report(counts: DataFrame) -> DataFrame:
     )
 
 
+def _ticket_keys(
+    df: DataFrame,
+    weight_col: str,
+    id_col: str,
+    salt: str,
+    max_weight: int,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ticket race's selection keys, one row per item:
+    (``*by``, ``id_col``, __w, sel_key) — the clamped weight and the
+    minimum ``md5(salt:id:ticket)`` over the item's tickets. The
+    global and per-group weighted samples select from these rows."""
+    w_int = (
+        F.least(
+            F.greatest(F.col(weight_col).cast("bigint"), F.lit(1)),
+            F.lit(max_weight),
+        )
+    ).alias("__w")
+    tickets = df.select(*[F.col(c) for c in by], F.col(id_col), w_int).select(
+        *by,
+        id_col,
+        "__w",
+        F.explode(F.sequence(F.lit(1), F.col("__w"))).alias("__t"),
+    )
+    return (
+        tickets.select(
+            *by,
+            id_col,
+            "__w",
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.lit(salt),
+                    F.col(id_col).cast("string"),
+                    F.col("__t").cast("string"),
+                )
+            ).alias("__key"),
+        )
+        .groupBy(*by, id_col, "__w")
+        .agg(F.min("__key").alias("sel_key"))
+    )
+
+
 def weighted_sample_k(
     df: DataFrame,
     k: int,
@@ -1273,33 +1316,7 @@ def weighted_sample_k(
     columns); the min-key aggregate combines map-side; the top-k is
     ``TakeOrderedAndProject`` (bounded heap per partition + driver
     merge of k·partitions rows), never a global sort."""
-    w_int = (
-        F.least(
-            F.greatest(F.col(weight_col).cast("bigint"), F.lit(1)),
-            F.lit(max_weight),
-        )
-    ).alias("__w")
-    tickets = df.select(F.col(id_col), w_int).select(
-        id_col,
-        "__w",
-        F.explode(F.sequence(F.lit(1), F.col("__w"))).alias("__t"),
-    )
-    keys = (
-        tickets.select(
-            id_col,
-            "__w",
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(salt),
-                    F.col(id_col).cast("string"),
-                    F.col("__t").cast("string"),
-                )
-            ).alias("__key"),
-        )
-        .groupBy(id_col, "__w")
-        .agg(F.min("__key").alias("sel_key"))
-    )
+    keys = _ticket_keys(df, weight_col, id_col, salt, max_weight)
     return (
         keys.orderBy(F.col("sel_key").asc(), F.col(id_col).asc())
         .limit(k)
@@ -1377,34 +1394,8 @@ def weighted_sample_k_per_group(
     Output: (``group_col``, ``id_col``, weight, sel_key, rnk 1..k)."""
     from pyspark.sql import Window
 
-    w_int = (
-        F.least(
-            F.greatest(F.col(weight_col).cast("bigint"), F.lit(1)),
-            F.lit(max_weight),
-        )
-    ).alias("__w")
-    tickets = df.select(F.col(group_col), F.col(id_col), w_int).select(
-        group_col,
-        id_col,
-        "__w",
-        F.explode(F.sequence(F.lit(1), F.col("__w"))).alias("__t"),
-    )
-    keys = (
-        tickets.select(
-            group_col,
-            id_col,
-            "__w",
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(salt),
-                    F.col(id_col).cast("string"),
-                    F.col("__t").cast("string"),
-                )
-            ).alias("__key"),
-        )
-        .groupBy(group_col, id_col, "__w")
-        .agg(F.min("__key").alias("sel_key"))
+    keys = _ticket_keys(
+        df, weight_col, id_col, salt, max_weight, by=(group_col,)
     )
     win = Window.partitionBy(group_col).orderBy(
         F.col("sel_key").asc(), F.col(id_col).asc()

@@ -73,6 +73,11 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def _check_threshold(threshold: float) -> None:
+    if threshold <= 0:
+        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
+
+
 def _scan_split_estimate(spark, files) -> int | None:
     """Estimated scan partition count: sum of per-file
     ceil(size / maxPartitionBytes), Spark's own splitting rule.
@@ -241,7 +246,6 @@ def _bucket_pairs(
 def star_components(
     pairs: DataFrame,
     max_phases: int = 60,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Connected components by ALTERNATING STAR CONTRACTION (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -286,7 +290,7 @@ def star_components(
         )
         .distinct()
     )
-    E = truncate_lineage(E, mode=checkpoint_mode, eager=True)
+    E = truncate_lineage(E, eager=True)
 
     def _fingerprint(edges: DataFrame) -> tuple:
         # DECIMAL(38,0) accumulators: summing 64-bit hashes (and ids
@@ -339,7 +343,6 @@ def star_components(
     for _ in range(max_phases):
         nxt = truncate_lineage(
             _phase(_phase(E, large=True), large=False),
-            mode=checkpoint_mode,
         )
         nfp = _fingerprint(nxt)
         E = nxt
@@ -362,7 +365,6 @@ def near_dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs: every document
     gets a ``cluster_id`` = the smallest doc id reachable through the
@@ -385,10 +387,10 @@ def near_dup_clusters(
     labels (an action per round — the loop is driver-side control
     flow, the data never leaves executors).
 
-    ``checkpoint_mode``: ``"local"`` (default), ``"reliable"`` (needs
+    The checkpoint backend is the ``spark.hbase_gis.checkpoint.mode``
+    session conf: ``local`` (default) or ``reliable`` (needs
     ``sc.setCheckpointDir``; survives executor loss on long cluster
-    jobs), or None to read the ``spark.hbase_gis.checkpoint.mode``
-    session conf — see operators/checkpointing.py (VERDICT r6 #4)."""
+    jobs) — see operators/checkpointing.py."""
     from hbase_gis_spark.operators.checkpointing import truncate_lineage
 
     ids = df.select(F.col(id_col).alias("id"))
@@ -402,7 +404,6 @@ def near_dup_clusters(
     # round-1 aggregate that consumes it next.
     sym = truncate_lineage(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
-        mode=checkpoint_mode,
     )
     # iterate ONLY over nodes that appear in the pair graph (usually a
     # tiny fraction of the corpus); singletons label themselves in the
@@ -442,7 +443,7 @@ def near_dup_clusters(
             F.least(F.col("a"), F.col("__nbr")).alias("label"),
         )
     )
-    labels = truncate_lineage(_jump(_jump(labels)), mode=checkpoint_mode)
+    labels = truncate_lineage(_jump(_jump(labels)))
     if labels.filter(F.col("label") != F.col("__old")).count() == 0:
         labels = labels.select("id", "label")
         return ids.join(labels, ids["id"] == labels["id"], "left").select(
@@ -488,9 +489,7 @@ def near_dup_clusters(
         # materializes it as a side effect — eager would compute the
         # step twice per round (measured ~15% off the whole clusters
         # query at sf0.1)
-        jumped = truncate_lineage(
-            _jump(_jump(stepped)), mode=checkpoint_mode
-        )
+        jumped = truncate_lineage(_jump(_jump(stepped)))
         changed = jumped.filter(F.col("label") != F.col("__old")).count()
         labels = jumped.select("id", "label")
         if changed == 0:
@@ -526,9 +525,7 @@ def near_dup_clusters(
                     F.col("__la").alias("id_a"), F.col("__lb").alias("id_b")
                 )
             )
-            roots = star_components(
-                q, checkpoint_mode=checkpoint_mode
-            ).select(
+            roots = star_components(q).select(
                 F.col("id").alias("__rid"), F.col("cluster_id").alias("__root")
             )
             labels = truncate_lineage(
@@ -541,7 +538,6 @@ def near_dup_clusters(
                         F.coalesce(F.col("__root"), F.col("label")),
                     ).alias("label"),
                 ),
-                mode=checkpoint_mode,
                 eager=True,
             )
             history.clear()
@@ -705,8 +701,7 @@ def jaccard_pairs(
     mostly in stop shingles — quantified in tests); with
     ``max_df=None`` the result is exact.
     """
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
+    _check_threshold(threshold)
     sh = _spread(df).select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
     )
@@ -741,7 +736,6 @@ def leakage_safe_split(
     weights: dict[str, int] | None = None,
     salt: str = "split",
     max_iter: int = 25,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Train/val/test assignment that CANNOT leak near-duplicates
     across splits: connected components over the near-dup pair graph
@@ -769,7 +763,7 @@ def leakage_safe_split(
     split)."""
     clusters = near_dup_clusters(
         df, pairs, id_col=id_col,
-        max_iter=max_iter, checkpoint_mode=checkpoint_mode,
+        max_iter=max_iter,
     )
     return split_assign(
         clusters, id_col="cluster_id", weights=weights, salt=salt
@@ -1203,8 +1197,7 @@ def cell_footprint_pairs(
     ``max_df`` hot-cell cap drops whole cells BEFORE the join (same
     false-negative-only contract), via a broadcast anti-join on the
     over-cap cell list."""
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
+    _check_threshold(threshold)
     sets = (
         _spread(df)
         .select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell"))
@@ -1278,22 +1271,51 @@ def dedup_incremental(
     guarantee as :func:`jaccard_pairs`. The catalog side would be a
     pre-materialized postings table in production; here it is computed
     from the catalog docs."""
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
-    cat = _spread(catalog).select(
+    _check_threshold(threshold)
+    cat_hash, cat_post = _catalog_tables(catalog, n, id_col, text_col)
+    return _incremental_verdicts(
+        incoming, cat_hash, cat_post, n, threshold, max_df,
+        id_col, text_col,
+    )
+
+
+def _catalog_tables(
+    docs: DataFrame, n: int, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The incremental-dedup catalog built from documents: the md5
+    exact-match dim (h, exact_id) and the shingle postings (cid, szc,
+    shingle). Every catalog writer and :func:`dedup_incremental` build
+    it here; :func:`_read_catalog` reads it back."""
+    cat = _spread(docs).select(
         F.col(id_col).alias("cid"), F.col(text_col).alias("ct")
     )
     cat_hash = cat.groupBy(F.md5("ct").alias("h")).agg(
         F.min("cid").alias("exact_id")
     )
-    cat_sh = cat.select("cid", word_shingles("ct", n).alias("s"))
-    cat_post = cat_sh.select(
+    cat_post = cat.select("cid", word_shingles("ct", n).alias("s")).select(
         "cid", F.size("s").alias("szc"), F.explode("s").alias("shingle")
     )
-    return _incremental_verdicts(
-        incoming, cat_hash, cat_post, n, threshold, max_df,
-        id_col, text_col,
+    return cat_hash, cat_post
+
+
+def _read_catalog(
+    spark, path: str | None = None, table_prefix: str | None = None
+) -> tuple[int, DataFrame, DataFrame]:
+    """A stored catalog — the parquet sidecars under ``path`` or the
+    ``{table_prefix}_*`` tables — as (shingle width n, exact dim,
+    postings). An appended ``hash`` sidecar can hold one (h, exact_id)
+    row per batch for the same content; the min-id winner is
+    re-reduced here, so verdicts stay batch-layout independent."""
+    def read(part: str) -> DataFrame:
+        if path is not None:
+            return spark.read.parquet(f"{path}/{part}")
+        return spark.table(f"{table_prefix}_{part}")
+
+    n = int(read("meta").head()["n"])
+    cat_hash = (
+        read("hash").groupBy("h").agg(F.min("exact_id").alias("exact_id"))
     )
+    return n, cat_hash, read("postings")
 
 
 def _incremental_verdicts(
@@ -2553,8 +2575,7 @@ def jaccard_pairs_prefix(
     and wins without max_df's false negatives. The registry keeps
     jaccard_pairs; this operator is the drop-in for zipfian corpora
     (equality pinned by tests/test_dedup.py)."""
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
+    _check_threshold(threshold)
     sh = _spread(df).select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
     )
@@ -2800,8 +2821,7 @@ def containment_pairs(
     containment_b = |A∩B|/|B|) — filtered on the larger one, so the
     consumer reads which side is the contained (quoted) document.
     """
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
+    _check_threshold(threshold)
     sh = _spread(df).select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
     )
@@ -2908,15 +2928,9 @@ def write_catalog_postings(
     postings table is the big artifact; bucket or sort it on
     ``shingle`` at write time if the batch join becomes
     shuffle-bound."""
-    cat = _spread(catalog).select(
-        F.col(id_col).alias("cid"), F.col(text_col).alias("ct")
-    )
-    cat.groupBy(F.md5("ct").alias("h")).agg(
-        F.min("cid").alias("exact_id")
-    ).write.mode(mode).parquet(f"{path}/hash")
-    cat.select("cid", word_shingles("ct", n).alias("s")).select(
-        "cid", F.size("s").alias("szc"), F.explode("s").alias("shingle")
-    ).write.mode(mode).parquet(f"{path}/postings")
+    cat_hash, cat_post = _catalog_tables(catalog, n, id_col, text_col)
+    cat_hash.write.mode(mode).parquet(f"{path}/hash")
+    cat_post.write.mode(mode).parquet(f"{path}/postings")
     spark = catalog.sparkSession
     spark.createDataFrame([(int(n),)], "n int").write.mode(mode).parquet(
         f"{path}/meta"
@@ -2934,16 +2948,10 @@ def append_catalog_postings(
     contract that keeps appended postings byte-compatible with the
     original write (the layout.py bounds-sidecar discipline)."""
     spark = new_docs.sparkSession
-    n = spark.read.parquet(f"{path}/meta").head()["n"]
-    cat = _spread(new_docs).select(
-        F.col(id_col).alias("cid"), F.col(text_col).alias("ct")
-    )
-    cat.groupBy(F.md5("ct").alias("h")).agg(
-        F.min("cid").alias("exact_id")
-    ).write.mode("append").parquet(f"{path}/hash")
-    cat.select("cid", word_shingles("ct", int(n)).alias("s")).select(
-        "cid", F.size("s").alias("szc"), F.explode("s").alias("shingle")
-    ).write.mode("append").parquet(f"{path}/postings")
+    n = int(spark.read.parquet(f"{path}/meta").head()["n"])
+    cat_hash, cat_post = _catalog_tables(new_docs, n, id_col, text_col)
+    cat_hash.write.mode("append").parquet(f"{path}/hash")
+    cat_post.write.mode("append").parquet(f"{path}/postings")
 
 
 def dedup_incremental_stored(
@@ -2958,21 +2966,9 @@ def dedup_incremental_stored(
     (written by :func:`write_catalog_postings`): identical verdicts
     to :func:`dedup_incremental` over the same catalog docs (pinned
     in tests/test_dedup.py), but the catalog side is a parquet scan
-    instead of a re-tokenization — the steady-state production plan.
-
-    Note: an appended ``hash`` sidecar can hold one (h, exact_id) row
-    per batch for the same content; the min-id winner is re-reduced
-    here, so verdicts stay batch-layout independent."""
-    if threshold <= 0:
-        raise ValueError("threshold must be > 0 (zero-overlap pairs are pruned)")
-    spark = incoming.sparkSession
-    n = int(spark.read.parquet(f"{path}/meta").head()["n"])
-    cat_hash = (
-        spark.read.parquet(f"{path}/hash")
-        .groupBy("h")
-        .agg(F.min("exact_id").alias("exact_id"))
-    )
-    cat_post = spark.read.parquet(f"{path}/postings")
+    instead of a re-tokenization — the steady-state production plan."""
+    _check_threshold(threshold)
+    n, cat_hash, cat_post = _read_catalog(incoming.sparkSession, path=path)
     return _incremental_verdicts(
         incoming, cat_hash, cat_post, n, threshold, max_df,
         id_col, text_col,
@@ -2998,23 +2994,15 @@ def write_catalog_postings_bucketed(
     removes its Exchange AND its per-task sort from every probe —
     only the small incoming batch shuffles (Exchange-count delta
     pinned in tests/test_dedup.py)."""
-    cat = _spread(catalog).select(
-        F.col(id_col).alias("cid"), F.col(text_col).alias("ct")
-    )
+    cat_hash, cat_post = _catalog_tables(catalog, n, id_col, text_col)
     (
-        cat.groupBy(F.md5("ct").alias("h"))
-        .agg(F.min("cid").alias("exact_id"))
-        .write.mode(mode)
+        cat_hash.write.mode(mode)
         .bucketBy(buckets, "h")
         .format("parquet")
         .saveAsTable(f"{table_prefix}_hash")
     )
     (
-        cat.select("cid", word_shingles("ct", n).alias("s"))
-        .select(
-            "cid", F.size("s").alias("szc"), F.explode("s").alias("shingle")
-        )
-        .write.mode(mode)
+        cat_post.write.mode(mode)
         .bucketBy(buckets, "shingle")
         .sortBy("shingle")
         .format("parquet")
@@ -3041,18 +3029,10 @@ def dedup_incremental_bucketed(
     join arrives pre-partitioned from the table catalog — no Exchange,
     no per-task sort on the catalog side; only the arriving batch
     shuffles."""
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-overlap pairs are pruned)"
-        )
-    spark = incoming.sparkSession
-    n = int(spark.table(f"{table_prefix}_meta").head()["n"])
-    cat_hash = (
-        spark.table(f"{table_prefix}_hash")
-        .groupBy("h")
-        .agg(F.min("exact_id").alias("exact_id"))
+    _check_threshold(threshold)
+    n, cat_hash, cat_post = _read_catalog(
+        incoming.sparkSession, table_prefix=table_prefix
     )
-    cat_post = spark.table(f"{table_prefix}_postings")
     return _incremental_verdicts(
         incoming, cat_hash, cat_post, n, threshold, max_df,
         id_col, text_col,

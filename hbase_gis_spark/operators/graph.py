@@ -28,7 +28,6 @@ def pagerank_int(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank, ``iters`` fixed power iterations, all-integer
     arithmetic: ranks in micro-units (sum ~= RANK_SCALE), damping in
@@ -75,7 +74,7 @@ def pagerank_int(
     # only ever joins (edges+ow) against the small rank table
     from hbase_gis_spark.operators.checkpointing import truncate_lineage
 
-    ew = truncate_lineage(e.join(out_w, "src"), mode=checkpoint_mode)
+    ew = truncate_lineage(e.join(out_w, "src"))
 
     # Loop shape (optimization r12): the old recurrence consumed
     # rank_{k-1} TWICE per iteration (contrib probe + the left join
@@ -87,9 +86,7 @@ def pagerank_int(
     # recurrence becomes rank_k = nodesN ⟕ agg(ew ⋈ rank_{k-1}) —
     # one use of rank per iteration, linear plan depth, identical
     # arithmetic on the identical node set.
-    nodes_n = truncate_lineage(
-        nodes.crossJoin(F.broadcast(n1)), mode=checkpoint_mode
-    )
+    nodes_n = truncate_lineage(nodes.crossJoin(F.broadcast(n1)))
 
     # integer floor division throughout — `div` in expr form because
     # the Python / operator on Columns goes through double
@@ -230,9 +227,7 @@ def association_rules(
     )
 
 
-def triangle_stats(
-    edges: DataFrame, checkpoint_mode: str | None = None
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """One-row global graph summary over an undirected (a < b) edge
     list: node/edge counts, wedge (open 2-path) count, triangle count,
     and the global clustering coefficient in exact milli-units
@@ -257,7 +252,7 @@ def triangle_stats(
     ``cooccurrence_edges``) is too expensive to re-run four times."""
     from hbase_gis_spark.operators.checkpointing import truncate_lineage
 
-    e = truncate_lineage(edges.select("a", "b"), mode=checkpoint_mode)
+    e = truncate_lineage(edges.select("a", "b"))
     deg = (
         e.select(F.col("a").alias("v"))
         .union(e.select(F.col("b").alias("v")))
@@ -295,7 +290,6 @@ def triangle_stats(
 def lpa_communities(
     edges: DataFrame,
     iters: int = 3,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Synchronous label propagation over an undirected (a < b) edge
     list: ``iters`` fixed rounds where every node simultaneously
@@ -323,7 +317,6 @@ def lpa_communities(
     sym = truncate_lineage(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v"))),
-        mode=checkpoint_mode,
     )
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("community")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.planner import knn_prefixes, partition_cover, partition_layout
+from hbase_gis_spark.operators.topx import top_x
 
 _METRICS = {
     "planar": R.planar_distance_sql,
@@ -120,20 +121,14 @@ def knn_per_region(
     true global top-k, a subset of this union) — this variant exists
     for output-shape parity with the reference client. Plan shape:
     WindowGroupLimit partial → shuffle on region → final, i.e. the
-    per-region bounded heap runs map-side before the exchange."""
-    from pyspark.sql import Window
-
+    per-region bounded heap runs map-side before the exchange — the
+    grouped top-X (:func:`~hbase_gis_spark.operators.topx.top_x`) over
+    the distance column."""
     out = with_distance(
         df, origin_lon, origin_lat, lon_col, lat_col, metric=metric
     ).filter(~F.isnan(F.col("distance")))
-    order = [F.col("distance").asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy(region_col).orderBy(*order)
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .withColumnRenamed("__rn", "region_rank")
+    return top_x(
+        out, region_col, "distance", k, tiebreak_col, rank_col="region_rank"
     )
 
 
@@ -168,8 +163,6 @@ def knn_multi(
     reference's approximate candidate semantics per origin
     (KNNQuery.java:84-88). A table with a recorded layout then reads
     only the partitions holding any origin's cells."""
-    from pyspark.sql import Window
-
     spark = df.sparkSession
     rows = [(int(q), float(lo), float(la)) for q, lo, la in origins]
     if pruned:
@@ -201,15 +194,9 @@ def knn_multi(
     scored = joined.withColumn("distance", F.expr(dist)).filter(
         ~F.isnan(F.col("distance"))
     )
-    order = [F.col("distance").asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("q_lon", "q_lat")
-    )
+    return top_x(
+        scored, "query_id", "distance", k, tiebreak_col, rank_col="rnk"
+    ).drop("q_lon", "q_lat")
 
 
 def within_radius(

@@ -108,6 +108,34 @@ def _sql_literal(v) -> str | None:
     return None
 
 
+def range_shard_sql(key_sql: str, bounds: list) -> str | None:
+    """The shard id as SQL text: how many boundary literals the
+    ``key_sql`` expression exceeds. None when a boundary has no SQL
+    literal (:func:`_sql_literal`); ±inf and NaN render as quoted
+    DOUBLEs. Shared by :func:`apply_range_shards` and the ``sqlapi``
+    statement generators."""
+    lits = [_sql_literal(b) for b in bounds]
+    if any(x is None for x in lits):
+        return None
+    terms = " + ".join(f"IF({key_sql} > {x}, 1, 0)" for x in lits) or "0"
+    return f"CAST(({terms}) AS INT)"
+
+
+def ntile_bucket_sql(total: int, n: int, gr: str = "__gr") -> str:
+    """ANSI ``NTILE(n)`` bucket of the 1-based global row number
+    ``gr`` among ``total`` rows, as SQL text: the first ``total % n``
+    buckets hold ``total div n + 1`` rows, the rest ``total div n``;
+    with fewer rows than buckets, row r is bucket r."""
+    q, rem = divmod(total, n)
+    if q == 0:
+        return gr
+    head = rem * (q + 1)  # rows covered by the q+1-sized buckets
+    return (
+        f"(CASE WHEN {gr} <= {head} THEN ({gr} + {q}) div {q + 1} "
+        f"ELSE {rem} + ({gr} - {head} + {q - 1}) div {q} END)"
+    )
+
+
 def apply_range_shards(
     df: DataFrame,
     key: str,
@@ -127,12 +155,9 @@ def apply_range_shards(
     EVERY rank consumer (guide §1.2: the planning edge must be cheap,
     not just bounded). ``IF(key > b, 1, 0)`` is the identical
     expression (NULL condition → 0, same NaN/type coercions)."""
-    lits = [_sql_literal(b) for b in bounds]
-    if bounds and all(x is not None for x in lits):
-        terms = " + ".join(f"IF(`{key}` > {x}, 1, 0)" for x in lits)
-        return df.withColumn(
-            shard_col, F.expr(f"CAST(({terms}) AS INT)")
-        )
+    sql = range_shard_sql(f"`{key}`", bounds)
+    if bounds and sql is not None:
+        return df.withColumn(shard_col, F.expr(sql))
     shard = F.lit(0)
     for b in bounds:
         shard = shard + F.when(F.col(key) > F.lit(b), 1).otherwise(0)
@@ -171,6 +196,16 @@ def warn_tie_mass(
     return total
 
 
+def prefix_offsets(sizes: dict[int, int]) -> tuple[list[tuple[int, int]], int]:
+    """(shard, number of rows in earlier shards) in shard order, and
+    the total row count, from a per-shard size map."""
+    offsets, acc = [], 0
+    for sid in sorted(sizes):
+        offsets.append((int(sid), int(acc)))
+        acc += sizes[sid]
+    return offsets, int(acc)
+
+
 def _offsets_from_sizes(
     spark,
     sizes: dict[int, int],
@@ -182,11 +217,8 @@ def _offsets_from_sizes(
     """Shared driver-side tail of :func:`shard_offsets` /
     :func:`shard_offsets_multi`: tie-mass skew warning + prefix-sum
     offsets frame from a per-shard size map."""
-    total = warn_tie_mass(sizes, key, n_bounds, n_shards)
-    offsets, acc = [], 0
-    for sid in sorted(sizes):
-        offsets.append((int(sid), int(acc)))
-        acc += sizes[sid]
+    warn_tie_mass(sizes, key, n_bounds, n_shards)
+    offsets, total = prefix_offsets(sizes)
     odf = spark.createDataFrame(
         offsets or [(0, 0)], f"{shard_col} int, __off bigint"
     )
@@ -454,18 +486,10 @@ def sharded_ntile(
     ranked = sharded.join(F.broadcast(odf), "__shard").withColumn(
         "__gr", F.row_number().over(w) + F.col("__off")
     )
-    q, rem = divmod(total, n)
-    if q == 0:
-        # fewer rows than buckets: NTILE gives row r bucket r
-        bucket = F.col("__gr")
-    else:
-        head = rem * (q + 1)  # rows covered by the q+1-sized buckets
-        bucket = F.when(
-            F.col("__gr") <= F.lit(head),
-            F.expr(f"(__gr + {q}) div {q + 1}"),
-        ).otherwise(F.expr(f"{rem} + (__gr - {head} + {q - 1}) div {q}"))
     return (
-        ranked.withColumn(out_col, bucket.cast("int"))
+        ranked.withColumn(
+            out_col, F.expr(ntile_bucket_sql(total, n)).cast("int")
+        )
         .drop("__shard", "__off", "__gr")
     )
 
@@ -509,20 +533,9 @@ def sharded_ntiles(
         out = out.join(F.broadcast(odf), f"__shard{i}").withColumn(
             "__gr", F.row_number().over(w) + F.col("__off")
         )
-        q, rem = divmod(total, n)
-        if q == 0:
-            bucket = F.col("__gr")
-        else:
-            head = rem * (q + 1)
-            bucket = F.when(
-                F.col("__gr") <= F.lit(head),
-                F.expr(f"(__gr + {q}) div {q + 1}"),
-            ).otherwise(
-                F.expr(f"{rem} + (__gr - {head} + {q - 1}) div {q}")
-            )
-        out = out.withColumn(out_col, bucket.cast("int")).drop(
-            "__off", "__gr"
-        )
+        out = out.withColumn(
+            out_col, F.expr(ntile_bucket_sql(total, n)).cast("int")
+        ).drop("__off", "__gr")
     return out.drop(*[f"__shard{i}" for i in range(len(keys))])
 
 

@@ -129,6 +129,46 @@ def hybrid_rrf_topk(
     )
 
 
+def _mmr_pick(rows, k: int, lam: float):
+    """The MMR greedy over one query's candidate rows (``__id``,
+    ``__v``, ``__rel``): returns the picked row indices in selection
+    order and the (rel desc, id asc)-sorted ids and rels they index.
+    Shared by :func:`mmr_rerank` and :func:`mmr_rerank_multi`."""
+    import numpy as np
+
+    # deterministic candidate order (rel desc, id asc) regardless of
+    # Arrow batch arrival
+    rows = rows.sort_values(
+        ["__rel", "__id"], ascending=[False, True], ignore_index=True
+    )
+    V = np.array(rows["__v"].tolist(), dtype=np.float64)
+    rel = rows["__rel"].to_numpy()
+    ids = rows["__id"].to_numpy()
+    n = len(rows)
+    # sequential-fold pair cosines (dim-major accumulation — the
+    # arrowkernels fold order, bit-identical to the SQL oracle)
+    acc = np.zeros((n, n))
+    sq = np.zeros(n)
+    for j in range(V.shape[1]):
+        acc += V[:, j : j + 1] * V[:, j][None, :]
+        sq += V[:, j] * V[:, j]
+    norm = np.sqrt(sq)
+    sim = acc / (norm[:, None] * norm[None, :])
+    mu = 1.0 - lam
+    picked: list[int] = [0]  # rows sorted: first = argmax rel
+    remaining = set(range(1, n))
+    while remaining and len(picked) < k:
+        best, best_score = None, None
+        for c in sorted(remaining, key=lambda i: ids[i]):
+            ms = max(sim[c, s] for s in picked)
+            score = lam * rel[c] - mu * ms
+            if best_score is None or score > best_score:
+                best, best_score = c, score
+        picked.append(best)
+        remaining.discard(best)
+    return picked, ids, rel
+
+
 def mmr_rerank(
     df: DataFrame,
     query_id: int,
@@ -200,8 +240,6 @@ def mmr_rerank(
         .coalesce(1)
     )
     lam = lam_ppm / 1_000_000.0
-    mu = 1.0 - lam
-    kk = k
 
     def _greedy(batches):
         parts = list(batches)
@@ -217,36 +255,7 @@ def mmr_rerank(
                  "rel": pd.Series([], dtype="float64")}
             )
             return
-        # deterministic candidate order (rel desc, id asc) regardless
-        # of Arrow batch arrival
-        rows = rows.sort_values(
-            ["__rel", "__id"], ascending=[False, True],
-            ignore_index=True,
-        )
-        V = np.array(rows["__v"].tolist(), dtype=np.float64)
-        rel = rows["__rel"].to_numpy()
-        ids = rows["__id"].to_numpy()
-        n = len(rows)
-        # sequential-fold pair cosines (dim-major accumulation — the
-        # arrowkernels fold order, bit-identical to the SQL oracle)
-        acc = np.zeros((n, n))
-        sq = np.zeros(n)
-        for j in range(V.shape[1]):
-            acc += V[:, j : j + 1] * V[:, j][None, :]
-            sq += V[:, j] * V[:, j]
-        norm = np.sqrt(sq)
-        sim = acc / (norm[:, None] * norm[None, :])
-        picked: list[int] = [0]  # rows sorted: first = argmax rel
-        remaining = set(range(1, n))
-        while remaining and len(picked) < kk:
-            best, best_score = None, None
-            for c in sorted(remaining, key=lambda i: ids[i]):
-                ms = max(sim[c, s] for s in picked)
-                score = lam * rel[c] - mu * ms
-                if best_score is None or score > best_score:
-                    best, best_score = c, score
-            picked.append(best)
-            remaining.discard(best)
+        picked, ids, rel = _mmr_pick(rows, k, lam)
         yield pd.DataFrame(
             {
                 "rank": np.arange(1, len(picked) + 1, dtype="int64"),
@@ -314,35 +323,9 @@ def mmr_rerank_multi(
         F.col("__r") <= fetch_k
     )
     lam = lam_ppm / 1_000_000.0
-    mu = 1.0 - lam
-    kk = k
 
     def _greedy(key: tuple, rows: pd.DataFrame) -> pd.DataFrame:
-        rows = rows.sort_values(
-            ["__rel", "__id"], ascending=[False, True], ignore_index=True
-        )
-        V = np.array(rows["__v"].tolist(), dtype=np.float64)
-        rel = rows["__rel"].to_numpy()
-        ids = rows["__id"].to_numpy()
-        n = len(rows)
-        acc = np.zeros((n, n))
-        sq = np.zeros(n)
-        for j in range(V.shape[1]):
-            acc += V[:, j : j + 1] * V[:, j][None, :]
-            sq += V[:, j] * V[:, j]
-        norm = np.sqrt(sq)
-        sim = acc / (norm[:, None] * norm[None, :])
-        picked = [0]
-        remaining = set(range(1, n))
-        while remaining and len(picked) < kk:
-            best, best_score = None, None
-            for c in sorted(remaining, key=lambda i: ids[i]):
-                ms = max(sim[c, s] for s in picked)
-                score = lam * rel[c] - mu * ms
-                if best_score is None or score > best_score:
-                    best, best_score = c, score
-            picked.append(best)
-            remaining.discard(best)
+        picked, ids, rel = _mmr_pick(rows, k, lam)
         return pd.DataFrame(
             {
                 "query_id": np.full(len(picked), key[0], dtype="int64"),

@@ -56,6 +56,79 @@ def argmax_expr(dots: Column) -> Column:
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
+def _query_vector(
+    df: DataFrame, query_id: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """The float64 vector of row ``query_id``, fetched to the driver."""
+    qrow = df.filter(F.col(id_col) == query_id).select(vec_col).head()
+    if qrow is None:
+        raise ValueError(f"query_id {query_id} not found")
+    return np.asarray(qrow[0], dtype=np.float64)
+
+
+def _probe_cells(
+    centroids: np.ndarray, q: np.ndarray, nprobe: int | None = None
+) -> list[int]:
+    """IVF cells by descending centroid dot with the unit query — the
+    first ``nprobe`` of them (all when None)."""
+    qn = q / np.linalg.norm(q)
+    return [int(j) for j in np.argsort(-(centroids @ qn))[:nprobe]]
+
+
+def _pq_luts(q: np.ndarray, codebooks, dsub: int) -> list[list[float]]:
+    """ADC lookup tables: per subspace, the dot of the query's
+    sub-vector with every codeword, folded dim-sequentially (the
+    ``fold_dots`` accumulation order)."""
+    luts = []
+    for i, Cb in enumerate(codebooks):
+        qs = q[i * dsub : (i + 1) * dsub]
+        acc = np.zeros(len(Cb))
+        for j in range(dsub):
+            acc += qs[j] * Cb[:, j]
+        luts.append([float(v) for v in acc])
+    return luts
+
+
+def _adc_score(luts: list[list[float]], code_cols: list[str]) -> Column:
+    """ADC score: the sum, left to right, of one literal-array lookup
+    per subspace (``luts[i]`` at code ``code_cols[i]``)."""
+    from functools import reduce
+
+    return reduce(
+        lambda acc, t: acc + t,
+        [
+            F.element_at(F.array(*[F.lit(v) for v in lut]), F.col(c) + 1)
+            for lut, c in zip(luts, code_cols)
+        ],
+    )
+
+
+def _cosine_topk_vs(
+    df: DataFrame,
+    cands: DataFrame,
+    query_id: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Top-k rows of ``cands`` by cosine against the vector of row
+    ``query_id`` in ``df``: the 1-row query side is broadcast (no
+    shuffle); ranking is orderBy(desc).limit(k) → per-partition heap
+    + merge."""
+    q = df.filter(F.col(id_col) == query_id).select(
+        F.col(vec_col).alias("__qv")
+    )
+    return (
+        cands.crossJoin(F.broadcast(q))
+        .select(
+            F.col(id_col),
+            pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
+        )
+        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_id: int,
@@ -63,22 +136,10 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors of the vector with ``query_id``.
-
-    The 1-row query side is broadcast (no shuffle); ranking is
-    orderBy(desc).limit(k) → per-partition heap + merge."""
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-    return (
-        df.filter(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
+    """Exact top-k cosine neighbors of the vector with ``query_id``
+    (a broadcast 1-row query side, TakeOrderedAndProject)."""
+    return _cosine_topk_vs(
+        df, df.filter(F.col(id_col) != query_id), query_id, k, id_col, vec_col
     )
 
 
@@ -157,27 +218,14 @@ def ann_ivf_topk(
     C = train_ivf_centroids(
         df, nlist, id_col, vec_col, train_rows=train_rows, seed=seed
     )
-    qrow = df.filter(F.col(id_col) == query_id).select(vec_col).head()
-    if qrow is None:
-        raise ValueError(f"query_id {query_id} not found")
-    q = np.asarray(qrow[0], dtype=np.float64)
-    q = q / np.linalg.norm(q)
-    probes = [int(j) for j in np.argsort(-(C @ q))[:nprobe]]
-    qv = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-    return (
+    q = _query_vector(df, query_id, id_col, vec_col)
+    probes = _probe_cells(C, q, nprobe)
+    cands = (
         df.filter(F.col(id_col) != query_id)
         .withColumn("__cell", ivf_cell_expr(F.col(vec_col), C))
         .filter(F.col("__cell").isin(probes))
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col(id_col),
-            pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
     )
+    return _cosine_topk_vs(df, cands, query_id, k, id_col, vec_col)
 
 
 def write_ivf_table(
@@ -217,8 +265,7 @@ def ann_ivf_topk_stored(
     ``ivf_cell IN (...)`` predicate is evaluated against partition
     VALUES, so non-probed directories are never opened."""
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probes = [int(j) for j in np.argsort(-(centroids @ qn))[:nprobe]]
+    probes = _probe_cells(centroids, q, nprobe)
     df = spark.read.parquet(path).filter(F.col("ivf_cell").isin(probes))
     if exclude_id is not None:
         df = df.filter(F.col(id_col) != exclude_id)
@@ -879,24 +926,12 @@ def pq_adc_topk(
     inner-product approximations sum_m dot(q_m, c[code_m]); exact
     re-ranking of the shortlist composes with :func:`cosine_topk` when
     recall demands it."""
-    from functools import reduce
-
     books = train_pq_codebooks(
         df, m, ksub, dim, id_col, vec_col, train_rows=train_rows, seed=seed
     )
-    qrow = df.filter(F.col(id_col) == query_id).select(vec_col).head()
-    if qrow is None:
-        raise ValueError(f"query_id {query_id} not found")
-    q = np.asarray(qrow[0], dtype=np.float64)
+    q = _query_vector(df, query_id, id_col, vec_col)
     dsub = dim // m
-    luts = []
-    for i, C in enumerate(books):
-        qs = q[i * dsub : (i + 1) * dsub]
-        # dim-sequential fold, same accumulation order as fold_dots
-        acc = np.zeros(len(C))
-        for j in range(dsub):
-            acc += qs[j] * C[:, j]
-        luts.append([float(v) for v in acc])
+    luts = _pq_luts(q, books, dsub)
     coded = df.filter(F.col(id_col) != query_id).select(
         F.col(id_col),
         *[
@@ -904,16 +939,7 @@ def pq_adc_topk(
             for i in range(m)
         ],
     )
-    score = reduce(
-        lambda acc, i: acc
-        + F.element_at(
-            F.array(*[F.lit(v) for v in luts[i]]), F.col(f"__c{i}") + 1
-        ),
-        range(1, m),
-        F.element_at(
-            F.array(*[F.lit(v) for v in luts[0]]), F.col("__c0") + 1
-        ),
-    )
+    score = _adc_score(luts, [f"__c{i}" for i in range(m)])
     return (
         coded.select(F.col(id_col), score.alias("adc_score"))
         .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
@@ -956,22 +982,10 @@ def ann_ivfpq_topk(
     books = train_pq_codebooks(
         df, m, ksub, dim, id_col, vec_col, train_rows=train_rows, seed=seed
     )
-    qrow = df.filter(F.col(id_col) == query_id).select(vec_col).head()
-    if qrow is None:
-        raise ValueError(f"query_id {query_id} not found")
-    q = np.asarray(qrow[0], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probes = [int(j) for j in np.argsort(-(C @ qn))[:nprobe]]
+    q = _query_vector(df, query_id, id_col, vec_col)
+    probes = _probe_cells(C, q, nprobe)
     dsub = dim // m
-    luts = []
-    for i, Cb in enumerate(books):
-        qs = q[i * dsub : (i + 1) * dsub]
-        acc = np.zeros(len(Cb))
-        for j in range(dsub):
-            acc += qs[j] * Cb[:, j]
-        luts.append([float(v) for v in acc])
-    from functools import reduce
-
+    luts = _pq_luts(q, books, dsub)
     coded = (
         df.filter(F.col(id_col) != query_id)
         .withColumn("__cell", ivf_cell_expr(F.col(vec_col), C))
@@ -986,16 +1000,7 @@ def ann_ivfpq_topk(
             ],
         )
     )
-    score = reduce(
-        lambda acc, i: acc
-        + F.element_at(
-            F.array(*[F.lit(v) for v in luts[i]]), F.col(f"__c{i}") + 1
-        ),
-        range(1, m),
-        F.element_at(
-            F.array(*[F.lit(v) for v in luts[0]]), F.col("__c0") + 1
-        ),
-    )
+    score = _adc_score(luts, [f"__c{i}" for i in range(m)])
     return (
         coded.select(F.col(id_col), score.alias("adc_score"))
         .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
@@ -1057,20 +1062,11 @@ def ann_ivfpq_topk_stored(
     scoring is ``m`` literal-array lookups per row — the steady-state
     production shape of :func:`ann_ivfpq_topk`, whose inline form
     recomputes codes per query for self-containment."""
-    from functools import reduce
-
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probes = [int(j) for j in np.argsort(-(centroids @ qn))[:nprobe]]
+    probes = _probe_cells(centroids, q, nprobe)
     m = len(codebooks)
     dsub = int(np.asarray(codebooks[0]).shape[1])
-    luts = []
-    for i, Cb in enumerate(codebooks):
-        qs = q[i * dsub : (i + 1) * dsub]
-        acc = np.zeros(len(Cb))
-        for j in range(dsub):
-            acc += qs[j] * Cb[:, j]
-        luts.append([float(v) for v in acc])
+    luts = _pq_luts(q, codebooks, dsub)
     df = (
         spark.read.parquet(path)
         .filter(F.col("ivf_cell").isin(probes))
@@ -1078,16 +1074,7 @@ def ann_ivfpq_topk_stored(
     )
     if exclude_id is not None:
         df = df.filter(F.col(id_col) != exclude_id)
-    score = reduce(
-        lambda acc, i: acc
-        + F.element_at(
-            F.array(*[F.lit(v) for v in luts[i]]), F.col(f"pq_code{i}") + 1
-        ),
-        range(1, m),
-        F.element_at(
-            F.array(*[F.lit(v) for v in luts[0]]), F.col("pq_code0") + 1
-        ),
-    )
+    score = _adc_score(luts, [f"pq_code{i}" for i in range(m)])
     return (
         df.select(F.col(id_col), score.alias("adc_score"))
         .orderBy(F.col("adc_score").desc(), F.col(id_col).asc())
@@ -1133,9 +1120,7 @@ def ann_ivf_topk_multi(
         raise ValueError(f"query ids not found: {sorted(missing)}")
     origin_rows = []
     for r in qrows:
-        q = np.asarray(r[1], dtype=np.float64)
-        qn = q / np.linalg.norm(q)
-        probes = [int(j) for j in np.argsort(-(C @ qn))[:nprobe]]
+        probes = _probe_cells(C, np.asarray(r[1], dtype=np.float64), nprobe)
         origin_rows.append((int(r[0]), [float(x) for x in r[1]], probes))
     origins = df.sparkSession.createDataFrame(
         origin_rows, "query_id bigint, __qv array<float>, __probes array<int>"
@@ -1357,12 +1342,9 @@ def ivf_nprobe_recall_curve(
     table."""
     spark = df.sparkSession
     nlist = len(centroids)
-    qrow = (
-        df.filter(F.col(id_col) == query_id).select(vec_col).collect()
+    probe_order = _probe_cells(
+        centroids, _query_vector(df, query_id, id_col, vec_col)
     )
-    q = np.asarray(qrow[0][0], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probe_order = [int(j) for j in np.argsort(-(centroids @ qn))]
     ranks = spark.createDataFrame(
         [(int(c), int(r)) for r, c in enumerate(probe_order)],
         "cell int, probe_rank int",
@@ -1799,18 +1781,13 @@ def cosine_topk_filtered(
     query side broadcasts; ranking stays TakeOrderedAndProject.
     The query vector is looked up UNFILTERED — the query point itself
     need not satisfy the predicate."""
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-    return (
-        df.filter(predicate & (F.col(id_col) != query_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _cosine_topk_vs(
+        df,
+        df.filter(predicate & (F.col(id_col) != query_id)),
+        query_id,
+        k,
+        id_col,
+        vec_col,
     )
 
 

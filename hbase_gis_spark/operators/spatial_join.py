@@ -258,7 +258,6 @@ def dbscan(
     id_col: str = "id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Full DBSCAN (core / border / noise) over planar points — the
     minPts generalization of the minPts=2 density clustering in
@@ -307,7 +306,6 @@ def dbscan(
                 F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
             )
         ),
-        mode=checkpoint_mode,
     )
     deg = sym.groupBy(F.col("id_a").alias("id")).agg(
         F.count(F.lit(1)).alias("__n")
@@ -319,9 +317,7 @@ def dbscan(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    comp = near_dup_clusters(
-        core, core_edges, id_col="id", checkpoint_mode=checkpoint_mode
-    ).select(
+    comp = near_dup_clusters(core, core_edges, id_col="id").select(
         F.col("id").alias("__coreid"), F.col("cluster_id").alias("__ccl")
     )
     border = (

@@ -163,31 +163,6 @@ def tokens_sql(text_expr: str = "text") -> str:
 # tests/test_sqlapi.py.
 
 
-def _shard_expr_sql(key_expr: str, bounds: list) -> str:
-    """Shard id = how many boundary literals the key exceeds (the
-    rank.range_sharded comparison ladder, as SQL text).
-
-    Non-finite boundaries are dropped before rendering (ADVICE r6
-    #4): an infinite double reaching the sketch would render as the
-    bare token ``inf`` — invalid SQL — and a boundary at ±inf never
-    splits anything anyway (no value compares strictly above +inf;
-    everything does above -inf), so dropping it only merges shards,
-    never changes a rank."""
-    import math
-
-    bounds = [
-        b
-        for b in bounds
-        if not (isinstance(b, float) and not math.isfinite(b))
-    ]
-    if not bounds:
-        return "0"
-    terms = " + ".join(
-        f"(CASE WHEN {key_expr} > {b!r} THEN 1 ELSE 0 END)" for b in bounds
-    )
-    return f"CAST({terms} AS INT)"
-
-
 def _off_case_sql(offsets: list[tuple[int, int]]) -> str:
     """Shard-id -> prefix-offset mapping as a CASE projection (the
     broadcast-join-free SQL form of range_sharded's offsets frame)."""
@@ -209,24 +184,24 @@ def _sharded_plan_parts(
     """Shared driver-side prep: boundary literals from the view, then
     shard sizes/offsets/total via one bounded aggregate — both frozen
     into SQL text. Returns (shard_expr, offsets, total)."""
-    from hbase_gis_spark.operators.rank import shard_boundaries
+    from hbase_gis_spark.operators.rank import (
+        prefix_offsets,
+        range_shard_sql,
+        shard_boundaries,
+    )
 
     src = spark.table(view)
     if where_sql:
         src = src.filter(where_sql)
     key_df = src.selectExpr(f"{key_expr} AS __k")
     bounds = shard_boundaries(key_df, "__k", n_shards)
-    shard = _shard_expr_sql(key_expr, bounds)
+    shard = range_shard_sql(key_expr, bounds)
     where = f"WHERE {where_sql}" if where_sql else ""
     sizes = spark.sql(
         f"SELECT {shard} AS s, count(*) AS c FROM {view} {where} GROUP BY 1"
     ).collect()
-    by_sid = {int(r.s): int(r.c) for r in sizes}
-    offsets, acc = [], 0
-    for sid in sorted(by_sid):
-        offsets.append((sid, acc))
-        acc += by_sid[sid]
-    return shard, offsets, acc
+    offsets, total = prefix_offsets({int(r.s): int(r.c) for r in sizes})
+    return shard, offsets, total
 
 
 def sharded_ntile_sql(
@@ -251,16 +226,10 @@ def sharded_ntile_sql(
     shard, offsets, total = _sharded_plan_parts(
         spark, view, order_cols[0], n_shards
     )
+    from hbase_gis_spark.operators.rank import ntile_bucket_sql
+
     order = ", ".join(f"{c} ASC" for c in order_cols)
-    q, rem = divmod(total, n)
-    if q == 0:
-        bucket = "__gr"
-    else:
-        head = rem * (q + 1)
-        bucket = (
-            f"(CASE WHEN __gr <= {head} THEN (__gr + {q}) div {q + 1} "
-            f"ELSE {rem} + (__gr - {head} + {q - 1}) div {q} END)"
-        )
+    bucket = ntile_bucket_sql(total, n)
     return f"""
     SELECT * EXCEPT (__shard, __gr), CAST({bucket} AS INT) AS {out_col}
     FROM (

@@ -414,20 +414,14 @@ def streaming_dedup_incremental_stored(
     Arrow kernel whose per-group width is bounded by the doc's
     candidate count (capped by max_df). No BNLJ, no broadcast of the
     fact-scale catalog."""
-    from hbase_gis_spark.operators.dedup import word_shingles
-
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-overlap pairs are pruned)"
-        )
-    spark = docs.sparkSession
-    n = int(spark.read.parquet(f"{path}/meta").head()["n"])
-    cat_hash = (
-        spark.read.parquet(f"{path}/hash")
-        .groupBy("h")
-        .agg(F.min("exact_id").alias("exact_id"))
+    from hbase_gis_spark.operators.dedup import (
+        _check_threshold,
+        _read_catalog,
+        word_shingles,
     )
-    cat_post = spark.read.parquet(f"{path}/postings")
+
+    _check_threshold(threshold)
+    n, cat_hash, cat_post = _read_catalog(docs.sparkSession, path=path)
     base = (
         docs.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("t")

@@ -785,6 +785,35 @@ def test_dedup_incremental_stored_matches_on_the_fly(spark, tmp_path):
     assert got2 != got1
 
 
+def test_incremental_dedup_entry_points_reject_nonpositive_threshold(
+    spark, tmp_path
+):
+    """threshold <= 0 would need the zero-overlap pairs the shingle join
+    never forms: the on-the-fly, stored, bucketed and streaming entry
+    points all refuse it before reading any catalog."""
+    from hbase_gis_spark.operators.dedup import (
+        dedup_incremental,
+        dedup_incremental_bucketed,
+        dedup_incremental_stored,
+    )
+    from hbase_gis_spark.streaming.events import (
+        streaming_dedup_incremental_stored,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    missing = str(tmp_path / "no_catalog")
+    calls = [
+        lambda t: dedup_incremental(docs, docs, threshold=t),
+        lambda t: dedup_incremental_stored(docs, missing, t),
+        lambda t: dedup_incremental_bucketed(docs, "no_such_catalog", t),
+        lambda t: streaming_dedup_incremental_stored(docs, missing, t),
+    ]
+    for call in calls:
+        for t in (0, -0.5):
+            with pytest.raises(ValueError, match="threshold must be > 0"):
+                call(t)
+
+
 def test_dup_substring_spans_one_span_not_93_grams(spark):
     """A 100-token cross-doc duplicate is reported as ONE maximal
     span of exactly 100 tokens (its 93 consecutive 8-gram anchors

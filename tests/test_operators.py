@@ -16,6 +16,27 @@ from hbase_gis_spark.sources.tables import derived_points, load_table
 from tests.conftest import SF0001
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _module_cache_starts_empty(spark):
+    # test_module_leaves_cache_empty counts what this module caches
+    spark.catalog.clearCache()
+
+
+@pytest.fixture
+def cached():
+    """Cache DataFrames for one test; unpersisted when the test ends,
+    so later tests' plans never read its InMemoryRelations."""
+    frames = []
+
+    def _cache(df):
+        frames.append(df)
+        return df.cache()
+
+    yield _cache
+    for df in frames:
+        df.unpersist(blocking=True)
+
+
 @pytest.fixture(scope="module")
 def line_points(spark):
     # the reference's y=x fixture (TestWithinFilter.java:43-55)
@@ -43,8 +64,8 @@ def test_within_nan_rows_dropped(spark):
     assert [r.id for r in out.collect()] == [2]
 
 
-def test_within_pruned_equals_unpruned(spark):
-    pts = derived_points(spark, SF0001, with_geohash=True).cache()
+def test_within_pruned_equals_unpruned(spark, cached):
+    pts = cached(derived_points(spark, SF0001, with_geohash=True))
     wkt = (
         "POLYGON ((-74.01 40.68, -73.96 40.86, -73.89 40.77, "
         "-73.93 40.63, -74.01 40.68))"
@@ -54,8 +75,8 @@ def test_within_pruned_equals_unpruned(spark):
     assert plain == pruned and len(plain) > 0
 
 
-def test_knn_exact_matches_bruteforce(spark):
-    pts = derived_points(spark, SF0001).cache()
+def test_knn_exact_matches_bruteforce(spark, cached):
+    pts = cached(derived_points(spark, SF0001))
     ox, oy, k = -73.95, 40.75, 15
     got = hgs.knn(pts, ox, oy, k, tiebreak_col="id").collect()
     assert len(got) == k
@@ -69,13 +90,13 @@ def test_knn_exact_matches_bruteforce(spark):
     assert dists == sorted(dists)
 
 
-def test_knn_pruned_is_subset_of_candidates(spark):
+def test_knn_pruned_is_subset_of_candidates(spark, cached):
     """Pruned KNN reproduces the reference's 9-cell approximation:
     every result falls in the origin's precision-7 neighborhood
     (KNNQuery.java:84-88) — and may return < k rows."""
     from hbase_gis_spark.geo.planner import knn_prefixes
 
-    pts = derived_points(spark, SF0001, with_geohash=True).cache()
+    pts = cached(derived_points(spark, SF0001, with_geohash=True))
     ox, oy = -73.95, 40.75
     # precision 5 (the derived grid is too sparse for 7-char cells —
     # the reference's approximation would likewise return 0 rows there)
@@ -90,7 +111,7 @@ def test_knn_pruned_is_subset_of_candidates(spark):
         assert r.geohash[:p] in prefixes
 
 
-def test_knn_per_region_unmerged_shape(spark):
+def test_knn_per_region_unmerged_shape(spark, cached):
     """Reference-faithful unmerged coprocessor output (KNNClient
     prints one list per region, no merge): ≤k per region, ranks
     contiguous from 1, per-region rows distance-ordered, and the TRUE
@@ -98,10 +119,9 @@ def test_knn_per_region_unmerged_shape(spark):
     is in its own region's top-k)."""
     from hbase_gis_spark.operators.knn import knn_per_region
 
-    pts = (
+    pts = cached(
         derived_points(spark, SF0001, with_geohash=True)
         .withColumn("region", F.substring("geohash", 1, 4))
-        .cache()
     )
     ox, oy, k = -73.95, 40.75, 5
     out = knn_per_region(pts, ox, oy, k, "region", tiebreak_col="id").collect()
@@ -587,12 +607,12 @@ def test_scd2_intervals_collapse_runs(spark):
     assert u2 == [("X", 5, None)]
 
 
-def test_knn_multi_matches_single_origin_knn(spark):
+def test_knn_multi_matches_single_origin_knn(spark, cached):
     """Batched multi-origin KNN == the single-origin operator run per
     origin, in both exact and 9-cell-pruned modes."""
     from hbase_gis_spark.operators.knn import knn_multi
 
-    pts = derived_points(spark, SF0001, with_geohash=True).cache()
+    pts = cached(derived_points(spark, SF0001, with_geohash=True))
     origins = [(1, -73.97, 40.72), (2, -73.92, 40.78)]
     k = 8
 
@@ -753,3 +773,10 @@ def test_window_funnel_any_anchor_semantics(spark):
     }
     assert got == {1: 3, 2: 2, 3: 1}
     # u2's view IS within 24h of signup (level 2); only u1 finishes
+
+
+def test_module_leaves_cache_empty(spark):
+    """Runs last: every DataFrame this module cached was unpersisted by
+    the test that cached it, so no later module's plan reads one of
+    its InMemoryRelations."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -61,11 +61,9 @@ def test_sessions_come_from_make_session():
     assert offenders == [], f"sessions built outside make_session: {offenders}"
 
 
-def test_no_use_arrow_switch():
-    """Each vector/MinHash kernel has one production path: no function
-    under ``hbase_gis_spark/`` takes a ``use_arrow`` parameter. (The
-    HOF folds the Arrow kernels are checked against are named functions
-    of their own, such as ``similarity.dots_expr``.)"""
+def _param_offenders(is_offender) -> list[str]:
+    """``path:line name`` of every function under ``hbase_gis_spark/``
+    with a parameter for which ``is_offender(function, param)`` holds."""
     import ast
     import pathlib
 
@@ -76,10 +74,31 @@ def test_no_use_arrow_switch():
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = node.args
                 params = a.posonlyargs + a.args + a.kwonlyargs
-                if any(p.arg == "use_arrow" for p in params):
+                if any(is_offender(node.name, p.arg) for p in params):
                     offenders.append(
                         f"{path.relative_to(root)}:{node.lineno} {node.name}")
+    return offenders
+
+
+def test_no_use_arrow_switch():
+    """Each vector/MinHash kernel has one production path: no function
+    under ``hbase_gis_spark/`` takes a ``use_arrow`` parameter. (The
+    HOF folds the Arrow kernels are checked against are named functions
+    of their own, such as ``similarity.dots_expr``.)"""
+    offenders = _param_offenders(lambda fn, p: p == "use_arrow")
     assert offenders == [], f"use_arrow switches: {offenders}"
+
+
+def test_no_checkpoint_mode_parameter():
+    """The checkpoint backend has one switch, the
+    ``spark.hbase_gis.checkpoint.mode`` session conf: no function takes
+    a ``checkpoint_mode`` parameter, and ``truncate_lineage`` takes no
+    ``mode``."""
+    offenders = _param_offenders(
+        lambda fn, p: p == "checkpoint_mode"
+        or (fn == "truncate_lineage" and p == "mode")
+    )
+    assert offenders == [], f"checkpoint mode parameters: {offenders}"
 
 
 def test_tpch_date_filters_reach_parquet_scans(spark):

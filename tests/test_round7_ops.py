@@ -258,11 +258,16 @@ def test_bootstrap_means_truncates_negative_sums(spark):
 
 
 def test_reliable_checkpoint_identical_outputs(spark, tmp_path):
-    """VERDICT r6 #4: the iterative operators accept
-    checkpoint_mode='reliable' (spark.checkpoint to a checkpoint dir —
-    survives executor loss on long cluster jobs) and produce the same
-    rows as the local default; a missing checkpoint dir fails loudly."""
-    from hbase_gis_spark.operators.checkpointing import truncate_lineage
+    """VERDICT r6 #4: the iterative operators run under the 'reliable'
+    backend (spark.checkpoint to a checkpoint dir — survives executor
+    loss on long cluster jobs), selected by the
+    spark.hbase_gis.checkpoint.mode session conf, and produce the same
+    rows as the local default; a missing checkpoint dir and an unknown
+    mode fail loudly."""
+    from hbase_gis_spark.operators.checkpointing import (
+        CONF_KEY,
+        truncate_lineage,
+    )
     from hbase_gis_spark.operators.dedup import near_dup_clusters
     from hbase_gis_spark.operators.graph import lpa_communities
 
@@ -282,35 +287,29 @@ def test_reliable_checkpoint_identical_outputs(spark, tmp_path):
     local_lpa = sorted(map(tuple, lpa_communities(edges).collect()))
 
     # no checkpoint dir set -> clear error, not a Spark stack trace
-    with pytest.raises(ValueError, match="checkpoint directory"):
-        near_dup_clusters(docs, pairs, checkpoint_mode="reliable")
-    with pytest.raises(ValueError, match="must be one of"):
-        truncate_lineage(docs, mode="bogus")
+    spark.conf.set(CONF_KEY, "reliable")
+    try:
+        with pytest.raises(ValueError, match="checkpoint directory"):
+            near_dup_clusters(docs, pairs)
+    finally:
+        spark.conf.unset(CONF_KEY)
+    spark.conf.set(CONF_KEY, "bogus")
+    try:
+        with pytest.raises(ValueError, match="must be one of"):
+            truncate_lineage(docs)
+    finally:
+        spark.conf.unset(CONF_KEY)
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    rel_cc = sorted(
-        map(
-            tuple,
-            near_dup_clusters(
-                docs, pairs, checkpoint_mode="reliable"
-            ).collect(),
-        )
-    )
-    rel_lpa = sorted(
-        map(
-            tuple,
-            lpa_communities(edges, checkpoint_mode="reliable").collect(),
-        )
-    )
-    # the session-conf switch drives parameterless call sites too
-    spark.conf.set("spark.hbase_gis.checkpoint.mode", "reliable")
+    spark.conf.set(CONF_KEY, "reliable")
     try:
-        conf_cc = sorted(
+        rel_cc = sorted(
             map(tuple, near_dup_clusters(docs, pairs).collect())
         )
+        rel_lpa = sorted(map(tuple, lpa_communities(edges).collect()))
     finally:
-        spark.conf.unset("spark.hbase_gis.checkpoint.mode")
-    assert rel_cc == local_cc == conf_cc
+        spark.conf.unset(CONF_KEY)
+    assert rel_cc == local_cc
     assert rel_lpa == local_lpa
 
 
@@ -331,12 +330,32 @@ def test_seasonal_decompose_rejects_even_period(spark):
 
 def test_sqlapi_drops_nonfinite_boundaries(spark):
     """ADVICE r6 #4: an infinite double boundary used to render as the
-    bare token `inf` — invalid SQL. Non-finite bounds are dropped (a
-    ±inf split never separates anything), the statement stays valid."""
-    from hbase_gis_spark.sqlapi import _shard_expr_sql, quantile_transform_sql
+    bare token `inf` — invalid SQL. The shared shard-id text renders
+    ±inf and NaN as quoted DOUBLEs: Spark runs it, and it assigns the
+    same shard ids as apply_range_shards (NaN keys compare above every
+    boundary but NaN itself, Spark's NaN ordering)."""
+    from hbase_gis_spark.operators.rank import (
+        apply_range_shards,
+        range_shard_sql,
+    )
+    from hbase_gis_spark.sqlapi import quantile_transform_sql
 
-    expr = _shard_expr_sql("v", [1.0, float("inf"), float("-inf"), float("nan")])
-    assert "inf" not in expr and "nan" not in expr
+    bounds = [1.0, float("inf"), float("-inf"), float("nan")]
+    expr = range_shard_sql("v", bounds)
+    assert " inf" not in expr.lower() and " nan" not in expr.lower()
+    keys = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(
+            [None, -1.0, 1.0, 2.0, float("inf"), float("-inf"), float("nan")]
+        )],
+        "id bigint, v double",
+    )
+    via_sql = {r.id: r.s for r in keys.selectExpr("id", f"{expr} AS s").collect()}
+    via_df = {
+        r.id: r.s
+        for r in apply_range_shards(keys, "v", bounds, "s").collect()
+    }
+    assert via_sql == via_df
+    assert via_sql == {0: 0, 1: 1, 2: 1, 3: 2, 4: 2, 5: 0, 6: 3}
 
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(1, 9)]

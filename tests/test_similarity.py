@@ -847,3 +847,6 @@ def test_ivf_nprobe_recall_curve_monotone_and_complete(emb):
     exact = {r.vec_id for r in cosine_topk(emb, 0, 10).collect()}
     approx = {r.vec_id for r in ann_ivf_topk(emb, 0, 10).collect()}
     assert rows[6][0] == len(exact & approx)
+    # a missing query id is the shared lookup's clear error
+    with pytest.raises(ValueError, match="not found"):
+        ivf_nprobe_recall_curve(emb, -1, 10, C)
