@@ -478,12 +478,7 @@ def _q_dedup_geocell(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = derived_points(spark, sf_dir).withColumn(
         "gh6", geohash_col(F.col("lat"), F.col("lon"), 6)
     )
-    w = Window.partitionBy("gh6").orderBy(F.col("id").asc())
-    return (
-        pts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("id", "lon", "lat")
-    )
+    return top_x(pts, "gh6", "id", 1).select("id", "lon", "lat")
 
 
 # ---- training-data pipeline queries (documents / embeddings tables) --------

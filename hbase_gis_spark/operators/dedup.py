@@ -673,6 +673,66 @@ def _jaccard(a: Column, b: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
+def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate (id_a, id_b) pairs against the
+    (id, s) shingle-set frame ``sh``, kept at ``threshold`` or above."""
+    return (
+        cand.join(sh.alias("sa"), F.col("id_a") == F.col("sa.id"))
+        .join(sh.alias("sb"), F.col("id_b") == F.col("sb.id"))
+        .select(
+            "id_a",
+            "id_b",
+            _jaccard(F.col("sa.s"), F.col("sb.s")).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= F.lit(threshold))
+    )
+
+
+def _shingle_postings(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, sz, shingle) postings: one row per distinct n-gram shingle
+    of each document, carrying the document's shingle-set size."""
+    sh = _spread(df).select(
+        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
+    )
+    return sh.select(
+        "id", F.size("s").alias("sz"), F.explode("s").alias("shingle")
+    )
+
+
+def _pair_intersections(
+    postings: DataFrame, key: str, max_df: int | None
+) -> DataFrame:
+    """(id_a, id_b, sz_a, sz_b, inter) for every pair of ids sharing a
+    ``key`` value in the (id, sz, key) postings. Each bucket is one set
+    element, so a pair's co-occurrence count across buckets IS |A∩B|;
+    the set sizes ride along as carry columns (no re-join, no second
+    pass over the producing pipeline). ``max_df`` drops buckets longer
+    than the cap before the join (see :func:`_bucket_pairs`)."""
+    return (
+        _bucket_pairs(postings, [key], carry=["sz"], max_bucket=max_df)
+        .groupBy("id_a", "id_b", "sz_a", "sz_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
+def _intersection_jaccard(inter: DataFrame, threshold: float) -> DataFrame:
+    """|A∩B| / (|A| + |B| − |A∩B|) of :func:`_pair_intersections`
+    rows, kept at ``threshold`` or above."""
+    return (
+        inter.select(
+            "id_a",
+            "id_b",
+            (
+                F.col("inter").cast("double")
+                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= F.lit(threshold))
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -702,30 +762,9 @@ def jaccard_pairs(
     ``max_df=None`` the result is exact.
     """
     _check_threshold(threshold)
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
-    )
-    postings = sh.select(
-        "id", F.size("s").alias("sz"), F.explode("s").alias("shingle")
-    )
-    # each posting bucket is one shingle, so a pair's co-occurrence
-    # count across buckets IS |A∩B|; set sizes ride along as carry
-    # columns (no re-join, no second pass over the shingle pipeline)
-    inter = (
-        _bucket_pairs(postings, ["shingle"], carry=["sz"], max_bucket=max_df)
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    postings = _shingle_postings(df, id_col, text_col, n)
+    return _intersection_jaccard(
+        _pair_intersections(postings, "shingle", max_df), threshold
     )
 
 
@@ -1147,16 +1186,7 @@ def sorted_neighborhood_pairs(
     if len(keys) > 1:
         cand = cand.distinct()
     sh = base.select("id", word_shingles(F.col("t"), n).alias("s"))
-    return (
-        cand.join(sh.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sh.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            _jaccard(F.col("sa.s"), F.col("sb.s")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return _verify_jaccard(cand, sh, threshold)
 
 
 def cell_footprint_pairs(
@@ -1186,17 +1216,14 @@ def cell_footprint_pairs(
     executor row (same bound :func:`jaccard_pairs` puts on a doc's
     shingle set; cell sets are bounded by the cell space).
 
-    Pair generation is a CODEGEN'D equality self-join over the
-    localCheckpoint'ed postings (the checkpoint keeps the upstream
-    aggregate single-evaluation), NOT the ``_bucket_pairs`` HOF
-    explosion: movement footprints make DENSE buckets (df up to ~170
-    here), and interpreted per-element slice/struct generation is
-    where the time went. Interleaved warm-JVM A/B at sf0.1 (1500
-    users, Σdf² = 10.4M, 4 repeats, min): HOF explode 5.6 s →
-    checkpointed self-join 2.42 s (2.3×), identical rows. The
-    ``max_df`` hot-cell cap drops whole cells BEFORE the join (same
-    false-negative-only contract), via a broadcast anti-join on the
-    over-cap cell list."""
+    Pair generation and the ``max_df`` hot-cell cap are
+    :func:`_bucket_pairs` (the codegen'd self-join over the
+    lineage-cut postings; the cut keeps the upstream aggregate
+    single-evaluation), with the same false-negative-only cap
+    contract as :func:`jaccard_pairs`. Movement footprints make DENSE
+    buckets (df up to ~170 at sf0.1), where the self-join beat an
+    in-bucket HOF pair explosion 2.42 s to 5.6 s (sf0.1, 1500 users,
+    Σdf² = 10.4M, identical rows)."""
     _check_threshold(threshold)
     sets = (
         _spread(df)
@@ -1207,39 +1234,8 @@ def cell_footprint_pairs(
     sized = sets.select(
         "id", F.size("__cs").alias("sz"), F.explode("__cs").alias("cell")
     )
-    if max_df is not None:
-        hot = (
-            sized.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("cell")
-        )
-        sized = sized.join(F.broadcast(hot), "cell", "left_anti")
-    from hbase_gis_spark.operators.checkpointing import truncate_lineage
-
-    sized = truncate_lineage(sized)  # conf-driven backend
-    a = sized.select(
-        F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), "cell"
-    )
-    b = sized.select(
-        F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), "cell"
-    )
-    inter = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    return _intersection_jaccard(
+        _pair_intersections(sized, "cell", max_df), threshold
     )
 
 
@@ -1482,16 +1478,7 @@ def minhash_lsh_pairs(
     cand = _bucket_pairs(
         banded, ["band", "bh"], max_bucket=max_bucket
     ).dropDuplicates(["id_a", "id_b"])
-    return (
-        cand.join(sh.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sh.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            _jaccard(F.col("sa.s"), F.col("sb.s")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
+    return _verify_jaccard(cand, sh, threshold)
 
 
 # --------------------------------------------------------------- SimHash ----
@@ -2536,96 +2523,6 @@ def tfidf_cosine_pairs(
     )
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """EXACT n-gram Jaccard pairs via PREFIX FILTERING (the
-    AllPairs/PPJoin candidate scheme, Bayardo et al. WWW'07 / Xiao et
-    al. ICDE'08) — identical output to :func:`jaccard_pairs`, far
-    fewer candidates.
-
-    The completeness argument: order all shingles by a global total
-    order (rarity-first: df asc, shingle asc). If J(A,B) >= t then
-    |A∩B| >= ceil(t·|A|), so A's sorted shingle list cannot skip its
-    first |A| − ceil(t·|A|) + 1 entries without missing every element
-    of the intersection — the PREFIX. Any qualifying pair therefore
-    shares at least one shingle lying in BOTH prefixes, so the
-    postings index only needs prefix entries: the indexed posting
-    lists concentrate on RARE shingles (the global order puts
-    stop-shingles last, exactly where prefixes never reach), which is
-    what collapses sum(df^2) — the stop-shingle buckets that force
-    jaccard_pairs' max_df cap simply never enter the index, with NO
-    false negatives (the cap trades recall; the prefix does not).
-
-    Verification joins each candidate pair back to the two full
-    shingle SETS (array columns, candidate docs only) and computes the
-    exact intersection — per-candidate cost, linear in set size.
-
-    WHEN TO USE WHICH (measured): on the synthetic corpus the shingle
-    df distribution is near-uniform (no stop-shingle head), so the
-    scheme's fixed costs (df join + per-doc rank window + verify
-    joins) exceed its candidate savings — interleaved warm A/B at
-    sf0.1: inverted index 2.0 s, prefix filter 5.4 s, identical 256
-    pairs. On real text the df distribution is zipfian and the head
-    buckets ARE the cost; there the prefix index never touches them
-    and wins without max_df's false negatives. The registry keeps
-    jaccard_pairs; this operator is the drop-in for zipfian corpora
-    (equality pinned by tests/test_dedup.py)."""
-    _check_threshold(threshold)
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
-    )
-    postings = sh.select(
-        "id", F.size("s").alias("sz"), F.explode("s").alias("shingle")
-    )
-    dfreq = postings.groupBy("shingle").agg(
-        F.count(F.lit(1)).alias("__df")
-    )
-    wpos = Window.partitionBy("id").orderBy(
-        F.col("__df").asc(), F.col("shingle").asc()
-    )
-    prefix = (
-        postings.join(dfreq, "shingle")
-        .withColumn("__pos", F.row_number().over(wpos))
-        .filter(
-            F.col("__pos")
-            <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        )
-        .select("id", "sz", "shingle")
-    )
-    cand = (
-        _bucket_pairs(prefix, ["shingle"], carry=["sz"])
-        .select("id_a", "id_b", "sz_a", "sz_b")
-        .distinct()
-    )
-    amap = sh.select(F.col("id").alias("__ma"), F.col("s").alias("__sa"))
-    bmap = sh.select(F.col("id").alias("__mb"), F.col("s").alias("__sb"))
-    verified = (
-        cand.join(amap, F.col("id_a") == F.col("__ma"))
-        .join(bmap, F.col("id_b") == F.col("__mb"))
-        .withColumn(
-            "inter", F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        )
-    )
-    return (
-        verified.select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast(
-                    "double"
-                )
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-    )
-
-
 def _deletion_keys(col: Column) -> Column:
     """The FastSS 1-deletion neighborhood of a string: the string
     itself plus every variant with one character removed, distinct.
@@ -2822,16 +2719,8 @@ def containment_pairs(
     consumer reads which side is the contained (quoted) document.
     """
     _check_threshold(threshold)
-    sh = _spread(df).select(
-        F.col(id_col).alias("id"), word_shingles(text_col, n).alias("s")
-    )
-    postings = sh.select(
-        "id", F.size("s").alias("sz"), F.explode("s").alias("shingle")
-    )
-    inter = (
-        _bucket_pairs(postings, ["shingle"], carry=["sz"], max_bucket=max_df)
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    inter = _pair_intersections(
+        _shingle_postings(df, id_col, text_col, n), "shingle", max_df
     )
     ca = F.col("inter").cast("double") / F.col("sz_a").cast("double")
     cb = F.col("inter").cast("double") / F.col("sz_b").cast("double")

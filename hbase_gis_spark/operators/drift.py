@@ -366,6 +366,15 @@ def _psi_prep(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
 
 
+def _bin_counts(binned: DataFrame, name: str, key_col: str = "__k") -> DataFrame:
+    """(key_col, bin, name) row counts of (__k, bin) rows — the
+    per-(key, bin) histogram of the batch and streaming drift
+    monitors."""
+    return binned.groupBy(F.col("__k").alias(key_col), F.col("bin")).agg(
+        F.count(F.lit(1)).alias(name)
+    )
+
+
 def psi_cuts(
     ref: DataFrame,
     key_col: str,
@@ -448,11 +457,7 @@ def value_psi(
     cuts = psi_cuts(ref, key_col, value_col, n_bins)
     counts = []
     for name, side in (("n_ref", r), ("n_cur", _psi_prep(cur, key_col, value_col))):
-        counts.append(
-            psi_assign_bins(side, cuts)
-            .groupBy("__k", "bin")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
+        counts.append(_bin_counts(psi_assign_bins(side, cuts), name))
     spine = cuts.select(
         "__k", F.explode(F.sequence(F.lit(1), F.lit(n_bins))).alias("bin")
     )
@@ -571,10 +576,8 @@ def value_histogram(
         if range_dim is not None
         else histogram_range(df, key_col, value_col)
     )
-    binned = (
-        histogram_assign_bins(prepped, rng, n_bins)
-        .groupBy("__k", "bin")
-        .agg(F.count(F.lit(1)).alias("n_values"))
+    binned = _bin_counts(
+        histogram_assign_bins(prepped, rng, n_bins), "n_values"
     )
     spine = rng.select(
         "__k",

@@ -286,10 +286,9 @@ def write_zorder_table(
     :func:`append_zorder_table` re-derives byte-identical keys for
     later batches (the append_ivf_table frozen-quantizer contract:
     re-aggregating bounds per batch would silently shift every bin)."""
-    bounds = compute_curve_bounds(df, x_col, y_col)
-    keyed = zorder_key_2d(df, x_col, y_col, bits=bits, bounds=bounds)
-    _write_curve_clustered(keyed, path, "zkey", n_files, mode)
-    _write_curve_bounds(df.sparkSession, path, bounds, bits)
+    _write_curve_table(
+        zorder_key_2d, "zkey", df, path, x_col, y_col, n_files, bits, mode
+    )
 
 
 def append_zorder_table(
@@ -305,9 +304,7 @@ def append_zorder_table(
     to what the create-time write would have produced (rows outside
     the frozen bounds clamp into the edge bins — same rule as create).
     Map-only key computation + one range shuffle of the batch."""
-    bounds, bits = read_curve_bounds(df.sparkSession, path)
-    keyed = zorder_key_2d(df, x_col, y_col, bits=bits, bounds=bounds)
-    _write_curve_clustered(keyed, path, "zkey", n_files, "append")
+    _append_curve_table(zorder_key_2d, "zkey", df, path, x_col, y_col, n_files)
 
 
 def write_hilbert_table(
@@ -325,10 +322,9 @@ def write_hilbert_table(
     Hilbert indices are adjacent cells, a rectangle predicate touches
     fewer files than under the Morton layout. Bounds + bits persist
     in the same ``_bounds`` sidecar for :func:`append_hilbert_table`."""
-    bounds = compute_curve_bounds(df, x_col, y_col)
-    keyed = hilbert_key_2d(df, x_col, y_col, bits=bits, bounds=bounds)
-    _write_curve_clustered(keyed, path, "hkey", n_files, mode)
-    _write_curve_bounds(df.sparkSession, path, bounds, bits)
+    _write_curve_table(
+        hilbert_key_2d, "hkey", df, path, x_col, y_col, n_files, bits, mode
+    )
 
 
 def append_hilbert_table(
@@ -340,9 +336,28 @@ def append_hilbert_table(
 ) -> None:
     """Append to an existing :func:`write_hilbert_table` layout using
     the persisted bounds sidecar — see :func:`append_zorder_table`."""
+    _append_curve_table(hilbert_key_2d, "hkey", df, path, x_col, y_col, n_files)
+
+
+def _write_curve_table(
+    keyer, key: str, df: DataFrame, path: str, x_col: str, y_col: str,
+    n_files: int, bits: int, mode: str,
+) -> None:
+    # create: bounds from one aggregate of df, frozen into the sidecar
+    bounds = compute_curve_bounds(df, x_col, y_col)
+    keyed = keyer(df, x_col, y_col, bits=bits, bounds=bounds)
+    _write_curve_clustered(keyed, path, key, n_files, mode)
+    _write_curve_bounds(df.sparkSession, path, bounds, bits)
+
+
+def _append_curve_table(
+    keyer, key: str, df: DataFrame, path: str, x_col: str, y_col: str,
+    n_files: int,
+) -> None:
+    # append: bounds and bits from the create-time sidecar
     bounds, bits = read_curve_bounds(df.sparkSession, path)
-    keyed = hilbert_key_2d(df, x_col, y_col, bits=bits, bounds=bounds)
-    _write_curve_clustered(keyed, path, "hkey", n_files, "append")
+    keyed = keyer(df, x_col, y_col, bits=bits, bounds=bounds)
+    _write_curve_clustered(keyed, path, key, n_files, "append")
 
 
 def _write_curve_clustered(

@@ -1977,6 +1977,42 @@ def embedding_diversity(
     )
 
 
+def _labelled_topk(
+    df: DataFrame,
+    query_ids: list[int],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The labelled exact top-k scaffolding of the retrieval-quality
+    reports: (hits, lhist). Each hit row is one
+    :func:`cosine_topk_multi` neighbour (query_id, __nid, rnk) with its
+    own label ``__nlbl`` and the query's ``label`` (broadcast join of
+    the |queries|-row label dim). ``lhist`` is the corpus label
+    histogram (__hlbl, __lcnt)."""
+    nb = cosine_topk_multi(df, query_ids, k, id_col, vec_col).select(
+        "query_id", F.col(id_col).alias("__nid"), "rnk"
+    )
+    labels = df.select(
+        F.col(id_col).alias("__lid"), F.col(label_col).alias("__lbl")
+    )
+    qlab = labels.filter(
+        F.col("__lid").isin([int(i) for i in query_ids])
+    ).select(
+        F.col("__lid").alias("query_id"), F.col("__lbl").alias("label")
+    )
+    hits = (
+        nb.join(labels, nb["__nid"] == labels["__lid"])
+        .withColumnRenamed("__lbl", "__nlbl")
+        .join(F.broadcast(qlab), "query_id")
+    )
+    lhist = labels.groupBy(F.col("__lbl").alias("__hlbl")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("__lcnt")
+    )
+    return hits, lhist
+
+
 def label_knn_agreement(
     df: DataFrame,
     query_ids: list[int],
@@ -2003,22 +2039,9 @@ def label_knn_agreement(
     per-query bounded rank windows), then label joins against the
     |queries|·k result and a |labels|-row aggregate. The probe list is
     a bounded design parameter — fact scale is touched once."""
-    nb = cosine_topk_multi(df, query_ids, k, id_col, vec_col).select(
-        "query_id", F.col(id_col).alias("__nid")
-    )
-    labels = df.select(
-        F.col(id_col).alias("__lid"), F.col(label_col).alias("__lbl")
-    )
-    qlab = labels.filter(
-        F.col("__lid").isin([int(i) for i in query_ids])
-    ).select(
-        F.col("__lid").alias("query_id"), F.col("__lbl").alias("label")
-    )
+    hits, _ = _labelled_topk(df, query_ids, k, id_col, vec_col, label_col)
     return (
-        nb.join(labels, nb["__nid"] == labels["__lid"])
-        .withColumnRenamed("__lbl", "__nlbl")
-        .join(F.broadcast(qlab), "query_id")
-        .groupBy("label")
+        hits.groupBy("label")
         .agg(
             F.countDistinct("query_id").cast("bigint").alias("n_queries"),
             F.count(F.lit(1)).cast("bigint").alias("n_neighbors"),
@@ -2075,26 +2098,12 @@ def retrieval_map_report(
             "lcm(1..10), so (2520 * hits) div i is exact only for "
             "i <= 10 — use k <= 10 (the schema bakes in the scale)"
         )
-    nb = cosine_topk_multi(df, query_ids, k, id_col, vec_col).select(
-        "query_id", F.col(id_col).alias("__nid"), "rnk"
-    )
-    labels = df.select(
-        F.col(id_col).alias("__lid"), F.col(label_col).alias("__lbl")
-    )
-    qlab = labels.filter(
-        F.col("__lid").isin([int(i) for i in query_ids])
-    ).select(
-        F.col("__lid").alias("query_id"), F.col("__lbl").alias("label")
-    )
-    lhist = labels.groupBy(F.col("__lbl").alias("__hlbl")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__lcnt")
+    hits, hist = _labelled_topk(
+        df, query_ids, k, id_col, vec_col, label_col
     )
     w = Window.partitionBy("query_id").orderBy("rnk")
     scored = (
-        nb.join(labels, nb["__nid"] == labels["__lid"])
-        .withColumnRenamed("__lbl", "__nlbl")
-        .join(F.broadcast(qlab), "query_id")
-        .withColumn(
+        hits.withColumn(
             "__rel",
             F.when(F.col("__nlbl") == F.col("label"), 1).otherwise(0),
         )
@@ -2113,7 +2122,7 @@ def retrieval_map_report(
     )
     return (
         per.join(
-            F.broadcast(lhist), per["label"] == lhist["__hlbl"]
+            F.broadcast(hist), per["label"] == hist["__hlbl"]
         )
         .select(
             "query_id",
@@ -2182,19 +2191,8 @@ def ndcg_report(
             f"{len(NDCG_GAIN_NANO)}) — the nano-gain spec is exact "
             "only for k <= 10 (the schema bakes in the scale)"
         )
-    nb = cosine_topk_multi(df, query_ids, k, id_col, vec_col).select(
-        "query_id", F.col(id_col).alias("__nid"), "rnk"
-    )
-    labels = df.select(
-        F.col(id_col).alias("__lid"), F.col(label_col).alias("__lbl")
-    )
-    qlab = labels.filter(
-        F.col("__lid").isin([int(i) for i in query_ids])
-    ).select(
-        F.col("__lid").alias("query_id"), F.col("__lbl").alias("label")
-    )
-    lhist = labels.groupBy(F.col("__lbl").alias("__hlbl")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__lcnt")
+    hits, hist = _labelled_topk(
+        df, query_ids, k, id_col, vec_col, label_col
     )
     gain = F.lit(0).cast("bigint")
     for i, g in enumerate(NDCG_GAIN_NANO[:k], start=1):
@@ -2202,10 +2200,7 @@ def ndcg_report(
             gain
         )
     per = (
-        nb.join(labels, nb["__nid"] == labels["__lid"])
-        .withColumnRenamed("__lbl", "__nlbl")
-        .join(F.broadcast(qlab), "query_id")
-        .withColumn(
+        hits.withColumn(
             "__rel",
             F.when(F.col("__nlbl") == F.col("label"), 1).otherwise(0),
         )
@@ -2222,7 +2217,7 @@ def ndcg_report(
             F.lit(s).cast("bigint"),
         ).otherwise(ideal)
     return (
-        per.join(F.broadcast(lhist), per["label"] == lhist["__hlbl"])
+        per.join(F.broadcast(hist), per["label"] == hist["__hlbl"])
         .withColumn("idcg_nano", ideal)
         .select(
             "query_id",

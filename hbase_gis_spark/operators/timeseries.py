@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# the closed-form day-pair count n(n−1)/2 over an ``n_days`` column
+_N_PAIRS_SQL = "CAST(n_days * (n_days - 1) div 2 AS BIGINT)"
+
 US_PER_DAY = 86_400_000_000
 
 
@@ -679,9 +682,7 @@ def theil_sen_slope(
     n = d.agg(F.count(F.lit(1)).alias("n_days"))
     return n.crossJoin(F.broadcast(med)).select(
         F.col("n_days").cast("bigint").alias("n_days"),
-        F.expr("CAST(n_days * (n_days - 1) div 2 AS BIGINT)").alias(
-            "n_pairs"
-        ),
+        F.expr(_N_PAIRS_SQL).alias("n_pairs"),
         F.col("__m").cast("bigint").alias("slope_micro"),
     )
 
@@ -709,81 +710,38 @@ def mann_kendall_trend(
     Output: 1 row (n_days, n_pairs, s_stat, tau_milli); NULL tau when
     fewer than 2 days.
 
+    Computed as Kendall's pair counts with the day as x
+    (:func:`_kendall_pair_counts`): every day pair is strictly
+    increasing in x, so S = C − D.
+
     Scale shape: per-DAY input by contract → the pair self-join is
     calendar²-bounded (the theil_sen argument); ONE aggregate over the
     pairs, no window anywhere."""
-    from pyspark import StorageLevel
-
-    # d feeds both pair-join sides and the day count — persist so the
-    # fact scan+aggregate runs once (optimization r11)
-    d = days.select(
-        F.col(day_col).cast("bigint").alias("__d"),
-        F.col(value_col).cast("bigint").alias("__y"),
-    ).filter(
-        F.col("__y").isNotNull() & F.col("__d").isNotNull()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    a = d.select(F.col("__d").alias("__d1"), F.col("__y").alias("__y1"))
-    b = d.select(F.col("__d").alias("__d2"), F.col("__y").alias("__y2"))
-    s = (
-        a.join(F.broadcast(b), F.col("__d2") > F.col("__d1"))
-        .agg(
-            F.coalesce(
-                F.sum(F.signum(F.col("__y2") - F.col("__y1")).cast("bigint")),
-                F.lit(0),
-            ).alias("s_stat")
-        )
-    )
-    n = d.agg(F.count(F.lit(1)).alias("n_days"))
-    return n.crossJoin(F.broadcast(s)).select(
+    return _kendall_pair_counts(days, day_col, day_col, value_col).select(
         F.col("n_days").cast("bigint").alias("n_days"),
-        F.expr("CAST(n_days * (n_days - 1) div 2 AS BIGINT)").alias(
-            "n_pairs"
-        ),
-        F.col("s_stat").cast("bigint").alias("s_stat"),
+        F.expr(_N_PAIRS_SQL).alias("n_pairs"),
+        (F.col("n_concordant") - F.col("n_discordant"))
+        .cast("bigint")
+        .alias("s_stat"),
         F.expr(
-            "CASE WHEN n_days >= 2 THEN CAST((1000 * s_stat)"
-            " div (n_days * (n_days - 1) div 2) AS BIGINT) END"
+            "CASE WHEN n_days >= 2 THEN CAST((1000 * (n_concordant -"
+            f" n_discordant)) div {_N_PAIRS_SQL} AS BIGINT) END"
         ).alias("tau_milli"),
     )
 
 
-def kendall_tau_xy(
-    days: DataFrame,
-    day_col: str = "day",
-    x_col: str = "x",
-    y_col: str = "y",
+def _kendall_pair_counts(
+    days: DataFrame, day_col: str, x_col: str, y_col: str
 ) -> DataFrame:
-    """Bivariate Kendall τ-b between two daily measures — the
-    rank-association member the correlation family was missing:
-    ``rolling_corr``/``spearman`` measure linear/rank-linear
-    co-movement, τ-b counts CONCORDANT vs DISCORDANT pairs, with the
-    standard tie correction (τ-b, the one every stats package
-    reports) — robust to any monotone transform of either measure
-    and exact on ties. :func:`mann_kendall_trend` is the univariate
-    special case (y against time, no tie term needed on the
-    strictly-increasing day axis).
-
-    Engine-exact integer pieces: C, D, and the tie counts are BIGINT
-    pair counts over the day-pair join (each summand is a {0,1}
-    indicator built from a sign product, so every count is ≤
-    n(n−1)/2 of a per-DAY frame — int64 overflow is impossible
-    below ~4·10^9 days); only the final τ-b is a double — two sqrts
-    and one divide over exact integers, rounded to 9 (the spearman
-    convention). NULL-measure days are dropped
-    before pairing (the rolling_corr contract). τ-b is NULL when
-    either tie-corrected denominator leg is zero (a constant series
-    has no rank signal — the nullif convention).
-
-    Output: 1 row (n_days, n_pairs, n_concordant, n_discordant,
-    n_tie_x, n_tie_y, tau_b_r9).
-
-    Scale shape: per-DAY input by contract → the pair self-join is
-    calendar²-bounded (the theil_sen/mann_kendall argument, broadcast
-    both sides); ONE aggregate over the pairs, no window anywhere."""
+    """1 row (n_days, n_concordant, n_discordant, n_tie_x, n_tie_y):
+    counts over every day pair of the days whose day, x and y are all
+    non-NULL (see :func:`kendall_tau_xy`). Each count sums {0,1}
+    indicators built from sign products, so it is ≤ n(n−1)/2 of a
+    per-DAY frame: int64 overflow is impossible below ~4·10^9 days."""
     from pyspark import StorageLevel
 
-    # d feeds both pair-join sides — persist so the fact
-    # scan+aggregate runs once (optimization r11)
+    # d feeds both pair-join sides and the day count — persist so the
+    # fact scan+aggregate runs once (optimization r11)
     d = days.select(
         F.col(day_col).cast("bigint").alias("__d"),
         F.col(x_col).cast("bigint").alias("__x"),
@@ -820,11 +778,45 @@ def kendall_tau_xy(
         ).alias("n_tie_y"),
     )
     n = d.agg(F.count(F.lit(1)).alias("n_days"))
-    return n.crossJoin(F.broadcast(pairs)).select(
+    return n.crossJoin(F.broadcast(pairs))
+
+
+def kendall_tau_xy(
+    days: DataFrame,
+    day_col: str = "day",
+    x_col: str = "x",
+    y_col: str = "y",
+) -> DataFrame:
+    """Bivariate Kendall τ-b between two daily measures — the
+    rank-association member the correlation family was missing:
+    ``rolling_corr``/``spearman`` measure linear/rank-linear
+    co-movement, τ-b counts CONCORDANT vs DISCORDANT pairs, with the
+    standard tie correction (τ-b, the one every stats package
+    reports) — robust to any monotone transform of either measure
+    and exact on ties. :func:`mann_kendall_trend` is the univariate
+    special case (y against time, no tie term needed on the
+    strictly-increasing day axis).
+
+    Engine-exact integer pieces: C, D, and the tie counts are BIGINT
+    pair counts over the day-pair join (each summand is a {0,1}
+    indicator built from a sign product, so every count is ≤
+    n(n−1)/2 of a per-DAY frame — int64 overflow is impossible
+    below ~4·10^9 days); only the final τ-b is a double — two sqrts
+    and one divide over exact integers, rounded to 9 (the spearman
+    convention). NULL-measure days are dropped
+    before pairing (the rolling_corr contract). τ-b is NULL when
+    either tie-corrected denominator leg is zero (a constant series
+    has no rank signal — the nullif convention).
+
+    Output: 1 row (n_days, n_pairs, n_concordant, n_discordant,
+    n_tie_x, n_tie_y, tau_b_r9).
+
+    Scale shape: per-DAY input by contract → the pair self-join is
+    calendar²-bounded (the theil_sen/mann_kendall argument, broadcast
+    both sides); ONE aggregate over the pairs, no window anywhere."""
+    return _kendall_pair_counts(days, day_col, x_col, y_col).select(
         F.col("n_days").cast("bigint").alias("n_days"),
-        F.expr("CAST(n_days * (n_days - 1) div 2 AS BIGINT)").alias(
-            "n_pairs"
-        ),
+        F.expr(_N_PAIRS_SQL).alias("n_pairs"),
         F.col("n_concordant").cast("bigint").alias("n_concordant"),
         F.col("n_discordant").cast("bigint").alias("n_discordant"),
         F.col("n_tie_x").cast("bigint").alias("n_tie_x"),

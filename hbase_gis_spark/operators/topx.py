@@ -59,15 +59,12 @@ def binned_limit(
     (docs/testtopxkeys.md:24-52).
 
     ``bin_col`` may be a name or a Column (e.g. a rowkey substring, the
-    spec's byte-slice bin id)."""
+    spec's byte-slice bin id). The per-bin cut is :func:`top_x` over
+    the bin column."""
     bin_c = F.col(bin_col) if isinstance(bin_col, str) else bin_col
-    tagged = df.withColumn("__bin", bin_c)
-    w = Window.partitionBy("__bin").orderBy(F.col(order_col).asc())
-    out = tagged.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= per_bin
-    )
+    out = top_x(df.withColumn("__bin", bin_c), "__bin", order_col, per_bin)
     if total_limit is not None:
         out = out.orderBy(F.col("__bin").asc(), F.col(order_col).asc()).limit(
             total_limit
         )
-    return out.drop("__rn").withColumnRenamed("__bin", "bin")
+    return out.withColumnRenamed("__bin", "bin")

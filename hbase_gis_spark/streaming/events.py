@@ -530,19 +530,14 @@ def streaming_psi_counts(
     stream length; no watermark needed because the dimension is
     bounded (unlike time-windowed counts, there is no unbounded key
     space to expire)."""
-    from hbase_gis_spark.operators.drift import psi_assign_bins
-
-    prepped = events.select(
-        F.col(key_col).alias("__k"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-    return (
-        psi_assign_bins(prepped, cuts)
-        .groupBy(
-            F.col("__k").alias(key_col), F.col("bin")
-        )
-        .agg(F.count(F.lit(1)).alias("n_cur"))
+    from hbase_gis_spark.operators.drift import (
+        _bin_counts,
+        _psi_prep,
+        psi_assign_bins,
     )
+
+    prepped = _psi_prep(events, key_col, value_col)
+    return _bin_counts(psi_assign_bins(prepped, cuts), "n_cur", key_col)
 
 
 def streaming_orphan_counts(
@@ -597,16 +592,15 @@ def streaming_histogram_counts(
 
     State: |keys| x n_bins cells, constant in stream length — no
     watermark needed, the dimension is bounded."""
-    from hbase_gis_spark.operators.drift import histogram_assign_bins
+    from hbase_gis_spark.operators.drift import (
+        _bin_counts,
+        _psi_prep,
+        histogram_assign_bins,
+    )
 
-    prepped = events.select(
-        F.col(key_col).alias("__k"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-    return (
-        histogram_assign_bins(prepped, range_dim, n_bins)
-        .groupBy(F.col("__k").alias(key_col), F.col("bin"))
-        .agg(F.count(F.lit(1)).alias("n_values"))
+    prepped = _psi_prep(events, key_col, value_col)
+    return _bin_counts(
+        histogram_assign_bins(prepped, range_dim, n_bins), "n_values", key_col
     )
 
 

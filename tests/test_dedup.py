@@ -494,29 +494,69 @@ def test_cell_footprint_pairs_matches_bruteforce(spark):
     assert got == expect and len(expect) > 0
 
 
-def test_jaccard_prefix_filter_equals_inverted_index(spark):
-    """Prefix filtering (AllPairs/PPJoin candidates) must return
-    EXACTLY the inverted-index result — completeness of the
-    both-prefix join under the global rarity order, plus a skewed
-    hand corpus where stop-shingles exist (the case max_df would
-    lose pairs on but the prefix scheme must not)."""
+def _brute_pairs(rows, n, threshold):
+    """(jaccard, containment) pair dicts over all document pairs of
+    (doc_id, text) rows, from Python shingle sets: Spark's ``trim``
+    strips spaces only and ``\\s+`` splits on the ASCII whitespace set."""
+    import itertools
+    import re
+
+    sets = {}
+    for doc_id, text in rows:
+        w = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+        sets[doc_id] = {
+            " ".join(w[i:i + n]) for i in range(len(w) - n + 1)
+        }
+    jac, con = {}, {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        i = len(sets[a] & sets[b])
+        if i == 0:
+            continue
+        j = i / (len(sets[a]) + len(sets[b]) - i)
+        if j >= threshold:
+            jac[(a, b)] = j
+        ca, cb = i / len(sets[a]), i / len(sets[b])
+        if max(ca, cb) >= threshold:
+            con[(a, b)] = (ca, cb)
+    return jac, con
+
+
+def _spark_pairs(df, n, threshold, max_df=None):
     from hbase_gis_spark.operators.dedup import (
+        containment_pairs,
         jaccard_pairs,
-        jaccard_pairs_prefix,
     )
+
+    jac = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in jaccard_pairs(
+            df, n=n, threshold=threshold, max_df=max_df
+        ).collect()
+    }
+    con = {
+        (r.id_a, r.id_b): (r.containment_a, r.containment_b)
+        for r in containment_pairs(
+            df, n=n, threshold=threshold, max_df=max_df
+        ).collect()
+    }
+    return jac, con
+
+
+def test_jaccard_and_containment_pairs_match_brute_force(spark):
+    """The shared inverted-index core of jaccard_pairs and
+    containment_pairs equals brute force over every document pair, on
+    the sf0.001 documents and on a skewed hand corpus whose stop-word
+    shingles sit in every posting list but one. Under ``max_df`` the
+    stop shingles drop out, and each result is a strict subset of the
+    uncapped one."""
     from hbase_gis_spark.sources.tables import load_table
     from tests.conftest import SF0001
 
     docs = load_table(spark, SF0001, "documents")
-    a = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in jaccard_pairs(docs, n=3, threshold=0.5).collect()
-    }
-    b = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in jaccard_pairs_prefix(docs, n=3, threshold=0.5).collect()
-    }
-    assert a == b and len(a) > 0
+    rows = [(r.doc_id, r.text) for r in docs.select("doc_id", "text").collect()]
+    jac, con = _spark_pairs(docs, 3, 0.5)
+    assert (jac, con) == _brute_pairs(rows, 3, 0.5)
+    assert len(jac) > 0 and len(con) >= len(jac)
 
     # zipfian hand corpus: 'the common stop run' appears everywhere
     stop = "the of and a to in is it on at"
@@ -528,15 +568,13 @@ def test_jaccard_prefix_filter_equals_inverted_index(spark):
         (5, "totally different words here entirely unrelated content"),
     ]
     hand = spark.createDataFrame(rows, "doc_id bigint, text string")
-    ha = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in jaccard_pairs(hand, n=2, threshold=0.4).collect()
-    }
-    hb = {
-        (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in jaccard_pairs_prefix(hand, n=2, threshold=0.4).collect()
-    }
-    assert ha == hb and len(ha) > 0
+    jac, con = _spark_pairs(hand, 2, 0.1)
+    assert (jac, con) == _brute_pairs(rows, 2, 0.1)
+    assert len(jac) == 6 and len(con) == 6
+
+    cjac, ccon = _spark_pairs(hand, 2, 0.1, max_df=3)
+    assert set(cjac) < set(jac) and set(ccon) < set(con)
+    assert set(cjac) == set(ccon) == {(1, 2), (3, 4)}
 
 
 def test_cell_footprint_pairs_max_df_false_negative_only(spark):

@@ -359,11 +359,19 @@ def test_round4b_plan_shapes(spark):
     p = plan_of("group_sample")
     assert "WindowGroupLimit" in p, p[:400]
 
-    # hilbert/zorder/psi/segment/novelty: pure JVM — no Python stage
+    # hilbert/zorder/psi/segment/novelty and the operators that share
+    # one core with a sibling (Kendall, the n-gram/cell pair family,
+    # histogram counts, top_x): pure JVM — no Python stage. DataFrames
+    # cached by earlier tests would be read in place of these plans'
+    # own scans, so the cache is dropped first.
+    spark.catalog.clearCache()
     for name in ["hilbert_layout", "zorder_layout", "value_psi",
                  "segment_dedup", "ngram_novelty_first",
                  "triangle_count", "cusum_days", "snapshot_diff",
-                 "lpa_communities", "profile_diff"]:
+                 "lpa_communities", "profile_diff",
+                 "mann_kendall", "kendall_tau", "containment_pairs",
+                 "dedup_ngram_jaccard", "trajectory_similarity",
+                 "value_histogram", "binned_limit", "dedup_geocell"]:
         p = plan_of(name)
         assert "BatchEvalPython" not in p, name
         assert "ArrowEvalPython" not in p, (

@@ -10,7 +10,10 @@ from hypothesis import given, settings, strategies as st
 
 from hbase_gis_spark.operators.corpus import negative_sample_k
 from hbase_gis_spark.operators.drift import ks_two_sample
-from hbase_gis_spark.operators.timeseries import kendall_tau_xy
+from hbase_gis_spark.operators.timeseries import (
+    kendall_tau_xy,
+    mann_kendall_trend,
+)
 
 
 @settings(max_examples=5, deadline=None)
@@ -71,7 +74,9 @@ def test_ks_matches_brute_force(spark, ref, cur):
     )
 )
 def test_kendall_matches_brute_force(spark, rows):
-    """C/D/tie counts and tau-b equal the O(n^2) Python model."""
+    """C/D/tie counts and tau-b equal the O(n^2) Python model, and
+    mann_kendall_trend over the same days is its x = day case:
+    S = C − D over the y signs, tau_milli truncated toward zero."""
     data = [(i, x, y) for i, (x, y) in enumerate(rows)]
     df = spark.createDataFrame(
         data or [(0, 0, 0)], "day int, x int, y int"
@@ -102,6 +107,20 @@ def test_kendall_matches_brute_force(spark, rows):
         assert r.tau_b_r9 is None
     else:
         assert r.tau_b_r9 == round((C - D) / den, 9)
+
+    m = mann_kendall_trend(df, "day", "y").collect()[0]
+    S = sum(
+        (data[j][2] > data[i][2]) - (data[j][2] < data[i][2])
+        for i in range(n)
+        for j in range(i + 1, n)
+    )
+    n_pairs = n * (n - 1) // 2
+    assert (m.n_days, m.n_pairs, m.s_stat) == (n, n_pairs, S)
+    if n < 2:
+        assert m.tau_milli is None
+    else:
+        q = abs(1000 * S) // n_pairs
+        assert m.tau_milli == (q if S >= 0 else -q)
 
 
 def _md5(s: str) -> str:

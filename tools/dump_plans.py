@@ -1,6 +1,9 @@
 """Dump explain('formatted') for named queries to plans/<tag>/<q>_<suffix>.txt.
 
 Usage: python tools/dump_plans.py <suffix> <query> [query ...]
+A query is a registry key of ``__spark_entry__.queries()`` or the name of
+its ``_q_...`` function. Every name is resolved before Spark starts; if
+any does not resolve, all of them are listed and nothing is written.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_PLANS_TAG (default r11).
 """
@@ -14,12 +17,33 @@ here = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.join(here, ".."))
 
 
+def resolve(names: list[str], qs: dict) -> tuple[list[str], list[str]]:
+    """(registry keys, names that are neither a key nor a function name)."""
+    by_fn = {fn.__name__: key for key, fn in qs.items()}
+    keys, unknown = [], []
+    for name in names:
+        key = name if name in qs else by_fn.get(name)
+        if key is None:
+            unknown.append(name)
+        else:
+            keys.append(key)
+    return keys, unknown
+
+
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tag = os.environ.get("SPARK_GRAFT_PLANS_TAG", "r11")
     outdir = os.path.join(here, "..", "plans", tag)
+
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    keys, unknown = resolve(names, qs)
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     os.makedirs(outdir, exist_ok=True)
 
     from hbase_gis_spark.session import make_session
@@ -28,13 +52,10 @@ def main() -> None:
     spark = make_session("dump-plans", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    for name in names:
+    for name in keys:
         df = qs[name](spark, sf_dir)
         txt = df._jdf.queryExecution().explainString(mode)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
