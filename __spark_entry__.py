@@ -9013,8 +9013,8 @@ def oracle_sql() -> dict[str, str]:
            row_number() OVER (PARTITION BY h % 64 ORDER BY h, doc_id) AS pos
     FROM h
     """,
-        # domain_cap: the oracle ranks every key (under-cap keys pass
-        # trivially); the Spark plan short-circuits them pre-window
+        # domain_cap: one row_number window per source (NULL sources
+        # are one group), the same window the Spark plan runs
         "domain_cap": """
     SELECT doc_id, source FROM (
       SELECT doc_id, source,

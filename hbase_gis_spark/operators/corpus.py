@@ -22,6 +22,8 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.topx import top_x
+
 
 def content_hash(salt: str, id_col, modulus: int | None = None) -> Column:
     """md5(salt:id) folded to a non-negative bigint — the repo-standard
@@ -71,29 +73,23 @@ def domain_cap(
     """Keep at most ``cap`` rows per key, chosen by deterministic
     md5 order (so the survivors are a stable pseudo-random sample, not
     ingestion-order-biased) — the standard per-domain cap of web-corpus
-    pipelines.
+    pipelines. NULL keys form one group and are capped like any other.
 
-    Plan shape for scale: a per-key count aggregate first (small output
-    — one row per domain), broadcast back; keys already under the cap
-    bypass the rank entirely (no sort), only over-cap keys flow through
-    the row_number window. A single mega-domain still sorts on one task
-    — at that point pre-filter its hash range (h < cap/n fraction, with
-    slack) before the exact rank; documented rather than implemented
-    because it only matters past ~10^8 rows per single key.
+    This is :func:`~hbase_gis_spark.operators.topx.top_x` over the
+    content hash: one ``row_number() <= cap`` window, so ``df`` is read
+    once and the plan has one shuffle, on the key. While ``cap`` is at
+    most ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+    1000), Spark puts a partial ``WindowGroupLimit`` in front of that
+    shuffle, so each map task forwards at most ``cap`` rows per key.
+    Above the threshold there is no partial limit: every row is
+    shuffled and sorted once, all rows of one key in one task. That is
+    the trade against the form that lets under-cap keys skip the sort
+    (a per-key count aggregate and a broadcast anti-join): it reads
+    each row of ``df`` three times and so re-runs any unpersisted
+    upstream plan three times.
     """
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n"))
-    over_keys = counts.filter(F.col("__n") > cap).select(key_col)
-    under = df.join(F.broadcast(over_keys), key_col, "left_anti")
-    h = content_hash(salt, id_col)
-    w = Window.partitionBy(key_col).orderBy("__h", id_col)
-    capped = (
-        df.join(F.broadcast(over_keys), key_col)
-        .withColumn("__h", h)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= cap)
-        .drop("__h", "__rn")
-    )
-    return under.unionByName(capped.select(*under.columns))
+    hashed = df.withColumn("__h", content_hash(salt, id_col))
+    return top_x(hashed, key_col, "__h", cap, tiebreak_col=id_col).drop("__h")
 
 
 def mixture_rates(

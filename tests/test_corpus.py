@@ -41,13 +41,22 @@ def test_global_shuffle_layout_invariant(spark, docs):
 
 
 def test_domain_cap_enforces_cap(spark, docs):
-    out = domain_cap(docs, "source", cap=3)
-    top = out.groupBy("source").count().agg(F.max("count")).first()[0]
-    assert top <= 3
-    # under-cap keys pass through untouched
-    small = docs.groupBy("source").count().filter("count <= 3")
-    kept = out.groupBy("source").count().join(small, "source", "semi")
-    assert kept.exceptAll(small.select("source", "count")).count() == 0
+    # NULL keys are one group and are capped like any other key: 10
+    # NULL-source rows against a cap of 4, beside over- and under-cap keys
+    nulls = spark.createDataFrame(
+        [(i, None if i < 10 else f"s{i % 3}") for i in range(30)]
+        + [(30, "tiny")],
+        "doc_id long, source string",
+    )
+    for df, cap in [(docs, 3), (nulls, 4)]:
+        out = domain_cap(df, "source", cap=cap)
+        # every key, NULL included, keeps min(n, cap) rows: over-cap keys
+        # are cut to the cap, under-cap keys pass through untouched
+        n_in, n_out = (
+            {r.source: r["count"] for r in d.groupBy("source").count().collect()}
+            for d in (df, out)
+        )
+        assert n_out == {k: min(n, cap) for k, n in n_in.items()}
 
 
 def test_domain_cap_survivors_deterministic(spark, docs):
@@ -57,6 +66,19 @@ def test_domain_cap_survivors_deterministic(spark, docs):
         for r in domain_cap(docs.repartition(5), "source", cap=2).collect()
     )
     assert a == b
+
+
+def test_curation_funnel_cap_count_equals_corpus_pipeline_rows(spark):
+    """The funnel derives its domain_cap count as sum(min(n_key, cap))
+    over the near-dup survivors without running the cap; it must equal
+    the rows corpus_pipeline keeps after running it."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    funnel = {
+        r.stage: r.n_docs for r in qs["curation_funnel"](spark, SF0001).collect()
+    }
+    assert funnel["domain_cap"] == qs["corpus_pipeline"](spark, SF0001).count()
 
 
 def test_mixture_rates_upweight_rare(spark, docs):

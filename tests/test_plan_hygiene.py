@@ -340,6 +340,8 @@ def test_round4b_plan_shapes(spark):
     """Physical-plan pins for the late round-4 operators: the shapes
     the 100 TB story depends on, so a refactor can't silently degrade
     them."""
+    import re
+
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -358,6 +360,21 @@ def test_round4b_plan_shapes(spark):
     # forward at most k rows per group
     p = plan_of("group_sample")
     assert "WindowGroupLimit" in p, p[:400]
+
+    # domain_cap is top_x over its hash order: one window behind a
+    # partial group limit, one shuffle on the key, no count aggregate
+    # joined back
+    p = plan_of("domain_cap")
+    assert re.search(r"WindowGroupLimit .*Partial", p), p[:400]
+    assert p.count("Exchange hashpartitioning") == 1, p
+    assert "BroadcastExchange" not in p and "Join" not in p, p
+
+    # ... so corpus_pipeline evaluates its near-dup stage once: it holds
+    # the _bucket_pairs checkpoint scan as often as dedup_minhash_lsh
+    spark.catalog.clearCache()
+    n_lsh = plan_of("dedup_minhash_lsh").count("Scan ExistingRDD")
+    assert n_lsh > 0
+    assert plan_of("corpus_pipeline").count("Scan ExistingRDD") == n_lsh
 
     # hilbert/zorder/psi/segment/novelty and the operators that share
     # one core with a sibling (Kendall, the n-gram/cell pair family,
