@@ -1762,7 +1762,7 @@ def _q_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("shard").cast("bigint") * SHUF_ORD_BASE + F.col("pos")
         ).alias("ordkey"),
     )
-    return spearman_corr(keyed, "doc_id", "ordkey", cache=True)
+    return spearman_corr(keyed, "doc_id", "ordkey")
 
 
 ATTR_LOOKBACK_US = 24 * 3600 * 1_000_000
@@ -4058,7 +4058,7 @@ def _q_spearman_value_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "value", ts_us().cast("double").alias("__t")
     )
-    return spearman_corr(ev, "value", "__t", cache=True)
+    return spearman_corr(ev, "value", "__t")
 
 
 def _q_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:

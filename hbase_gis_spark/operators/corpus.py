@@ -620,9 +620,9 @@ def token_budget_sample(
     without a global sort (a global window would funnel 100 TB through
     one task): per-shard local window cumsums + a driver-side prefix
     over the ``num_shards`` per-shard totals (num_shards rows — O(64)
-    driver work at any corpus size), folded back in as a broadcast
-    offset dim. Every document's ``cum_tokens`` equals what the global
-    window would produce, shard by shard.
+    driver work at any corpus size), folded back in as a plan-literal
+    offset (``rank.shard_case_sql``). Every document's ``cum_tokens``
+    equals what the global window would produce, shard by shard.
 
     Whole-document semantics: a doc is kept iff its OWN end position
     fits the budget (no document splitting — chunking is
@@ -631,6 +631,7 @@ def token_budget_sample(
 
     Output: (id_col, n_tokens, cum_tokens) for kept docs.
     """
+    from hbase_gis_spark.operators.rank import prefix_offsets, shard_case_sql
     from hbase_gis_spark.operators.textstats import token_count
 
     h = content_hash(salt, id_col)
@@ -645,25 +646,14 @@ def token_budget_sample(
         .agg(F.sum("n_tokens").alias("__t"))
         .collect()
     )
-    per_shard = {r["__shard"]: r["__t"] for r in totals}
-    offsets, acc = [], 0
-    for s in range(num_shards):
-        offsets.append((s, acc))
-        acc += per_shard.get(s, 0)
-    off_df = df.sparkSession.createDataFrame(
-        offsets, "__shard int, __off bigint"
-    )
+    offsets, _ = prefix_offsets({r["__shard"]: r["__t"] for r in totals})
+    off = F.expr(shard_case_sql(offsets, "__shard"))
     w = Window.partitionBy("__shard").orderBy("__h", id_col)
-    return (
-        base.withColumn("__local", F.sum("n_tokens").over(w))
-        .join(F.broadcast(off_df), "__shard")
-        .select(
-            id_col,
-            "n_tokens",
-            (F.col("__off") + F.col("__local")).alias("cum_tokens"),
-        )
-        .filter(F.col("cum_tokens") <= budget_tokens)
-    )
+    return base.select(
+        id_col,
+        "n_tokens",
+        (off + F.sum("n_tokens").over(w)).alias("cum_tokens"),
+    ).filter(F.col("cum_tokens") <= budget_tokens)
 
 
 def k_anonymity_report(

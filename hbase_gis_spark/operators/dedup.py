@@ -997,7 +997,9 @@ def sorted_neighborhood_pairs(
 
     from hbase_gis_spark.operators.rank import (
         apply_range_shards,
+        prefix_offsets,
         shard_boundaries_multi,
+        shard_case_sql,
         shard_size_maps_multi,
         warn_tie_mass,
     )
@@ -1069,34 +1071,20 @@ def sorted_neighborhood_pairs(
         order = [
             f"__k{j}_sk{i}" for i in range(len(exprs_per_key[j]))
         ] + ["id"]
-        sizes = size_maps[j]
-        sids = sorted(sizes)  # non-empty shard ids, ascending
-        if not sids:
+        offsets, _ = prefix_offsets(size_maps[j])
+        if not offsets:
             return None
-        offs, acc = [], 0
-        for sid in sids:
-            offs.append(acc)
-            acc += sizes[sid]
-        # shard id -> dense index / prefix offset, baked in as plan
-        # constants (no broadcast join). Built as ONE SQL string per
-        # expression: the equivalent Column-API construction issues
-        # hundreds of py4j round-trips for the n_shards-entry literal
-        # maps, measured ~2 s of pure driver time per build at
-        # n_shards=64 (guide §1.2 — the planning edge must stay
-        # bounded AND cheap).
-        off_case = (
-            f"CASE __shard{j} "
-            + " ".join(
-                f"WHEN {sid} THEN {o}" for sid, o in zip(sids, offs)
-            )
-            + " END"
-        )
-        idx_case = (
-            f"CASE __shard{j} "
-            + " ".join(
-                f"WHEN {sid} THEN {i}" for i, sid in enumerate(sids)
-            )
-            + " END"
+        offs = [o for _sid, o in offsets]
+        # shard id -> prefix offset / dense index, baked in as plan
+        # constants (no broadcast join) by rank.shard_case_sql: ONE SQL
+        # string per expression, where the equivalent Column-API
+        # construction issues hundreds of py4j round-trips for the
+        # n_shards-entry literal maps, measured ~2 s of pure driver
+        # time per build at n_shards=64 (guide §1.2 — the planning
+        # edge must stay bounded AND cheap).
+        off_case = shard_case_sql(offsets, f"__shard{j}")
+        idx_case = shard_case_sql(
+            [(sid, i) for i, (sid, _o) in enumerate(offsets)], f"__shard{j}"
         )
         w1 = Window.partitionBy(f"__shard{j}").orderBy(
             *[F.col(c).asc() for c in order]
@@ -1106,10 +1094,8 @@ def sorted_neighborhood_pairs(
             .withColumn("__r", F.row_number().over(w1))
             .select(
                 "id",
-                F.expr(
-                    f"__r + CAST(({off_case}) AS BIGINT)"
-                ).alias("__g"),
-                F.expr(f"CAST(({idx_case}) AS INT)").alias("__si"),
+                F.expr(f"__r + {off_case}").alias("__g"),
+                F.expr(f"CAST({idx_case} AS INT)").alias("__si"),
             )
         )
         # highest shard index this row's successor window reaches:

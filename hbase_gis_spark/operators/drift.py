@@ -598,7 +598,6 @@ def global_quantile_cuts(
     value_col: str,
     n_bins: int = 20,
     n_shards: int = 64,
-    cache: bool = False,
 ) -> DataFrame:
     """EXACT global quantile boundaries of a numeric column with NO
     single-task global sort — the keyless companion of
@@ -620,48 +619,32 @@ def global_quantile_cuts(
     shuffle + a |shards|-row aggregate; compare a naive
     ``row_number() OVER (ORDER BY v)``, which is a single-task sort
     of the whole table."""
-    from hbase_gis_spark.operators.rank import range_sharded
+    from hbase_gis_spark.operators.rank import range_sharded, shard_case_sql
 
     prepped = df.select(
         F.col(value_col).cast("double").alias("__v")
     ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-    if cache:
-        # ``cache=True`` (optimization r12, guide §5): the 1-column
-        # projection feeds three consumptions (boundary sketch,
-        # shard-size aggregate, rank window) — persist computes the
-        # source scan once instead of three times. Lineage-kept,
-        # narrow (one double per row), opt-in like spearman_corr's
-        # knob; release is the session's ContextCleaner (or
-        # clearCache) — see the rank.py module note.
-        from pyspark import StorageLevel
-
-        from hbase_gis_spark.operators.dedup import _spread
-
-        prepped = _spread(prepped).persist(StorageLevel.MEMORY_AND_DISK)
     # range_sharded derives __shard from boundary LITERALS frozen in
     # the plan, so both consumptions of the sharded frame (size
     # aggregate + rank window) agree deterministically — retry-safe,
     # no pinning materialization (VERDICT r5 #2 replaced the old
     # eager localCheckpoint, which truncated lineage).
-    sharded, odf, total = range_sharded(prepped, ["__v"], n_shards)
+    sharded, off, total = range_sharded(prepped, ["__v"], n_shards)
     w = Window.partitionBy("__shard").orderBy(F.col("__v").asc())
-    ranked = sharded.withColumn("__r", F.row_number().over(w))
-    spark = df.sparkSession
+    # cut rank -> cut index as a plan-literal CASE; the highest i wins
+    # a rank that several cuts share, and ranks at no cut map to 0
     cut_ranks = {
         (i * total + n_bins - 1) // n_bins: i
         for i in range(1, n_bins)
     }
-    rdf = spark.createDataFrame(
-        [(int(r), int(i)) for r, i in cut_ranks.items()],
-        "__gr bigint, cut_idx int",
-    )
+    cut_idx = shard_case_sql(sorted(cut_ranks.items()), "__gr")
     return (
-        ranked.join(F.broadcast(odf), "__shard")
+        sharded.select((F.row_number().over(w) + off).alias("__gr"), "__v")
         .select(
-            (F.col("__r") + F.col("__off")).alias("__gr"), "__v"
+            F.expr(cut_idx).cast("int").alias("cut_idx"),
+            F.col("__v").alias("cut_value"),
         )
-        .join(F.broadcast(rdf), "__gr")
-        .select("cut_idx", F.col("__v").alias("cut_value"))
+        .filter(F.col("cut_idx") > 0)
     )
 
 
@@ -670,7 +653,6 @@ def spearman_corr(
     x_col: str,
     y_col: str,
     n_shards: int = 64,
-    cache: bool = False,
 ) -> DataFrame:
     """Spearman rank correlation between two numeric columns — the
     monotone-association QA check (is quality score actually related
@@ -710,25 +692,23 @@ def spearman_corr(
         F.col(x_col).cast("double").alias("__x"),
         F.col(y_col).cast("double").alias("__y"),
     ]
+    from pyspark import StorageLevel
+
     from hbase_gis_spark.operators.dedup import _spread
 
+    # the 2-column projected frame feeds three consumptions (the
+    # batched boundary sketch, the batched shard-size aggregate, the
+    # chained rank plan); a lineage-KEPT persist computes it once and
+    # stays recoverable — it is a narrow projection, never the fact
+    # table. _spread (no-op at scale) keeps the cached partitions, and
+    # every job over them, parallel when the input arrives as one row
+    # group.
     base = _spread(
         df.select(*proj).filter(
             F.col("__x").isNotNull() & ~F.isnan("__x")
             & F.col("__y").isNotNull() & ~F.isnan("__y")
         )
-    )
-    if cache:
-        # the 2-column projected frame feeds three consumptions (the
-        # batched boundary sketch, the batched shard-size aggregate,
-        # the chained rank plan); a lineage-KEPT persist computes it
-        # once and stays recoverable — it is a narrow projection,
-        # never the fact table. _spread (no-op at scale) keeps the
-        # cached partitions, and every job over them, parallel when
-        # the input arrives as one row group.
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     # CHAINED two-pass rank plan (round 6): each row carries (x, y)
     # through BOTH shard/rank passes, so the rank frames never need
     # re-pairing — no row-identity join (formerly 2 extra exchanges),
@@ -737,49 +717,36 @@ def spearman_corr(
     # sizes depend only on the y values, identical before and after
     # the x pass), so every driver action is a cheap cache/projection
     # read, never a window recompute.
-    from hbase_gis_spark.operators.rank import apply_range_shards
-
-    def hr2(order_col: str, shard_col: str):
-        w = Window.partitionBy(shard_col).orderBy(F.col(order_col).asc())
-        tie = Window.partitionBy(shard_col, order_col)
-        return (
-            (F.rank().over(w) + F.col("__off")) * 2
-            + F.count(F.lit(1)).over(tie)
-            - 1
-        )
-
+    #
     # BATCHED planning edge (optimization r11, guide §1.2): one
     # two-column sketch pass + one two-key size aggregate replace the
     # former four eager driver jobs (x sketch, x sizes, y sketch, y
     # sizes). Boundaries, offsets and totals are identical (the multi
     # helpers compute each column independently; base is pre-filtered
-    # for NaN/null in both columns, satisfying the batch contract),
-    # so the lazy rank plan below is byte-identical.
+    # for NaN/null in both columns, satisfying the batch contract).
     from hbase_gis_spark.operators.rank import (
+        apply_range_shards,
+        half_rank2,
         shard_boundaries_multi,
-        shard_offsets_multi,
+        shard_offset_col,
+        shard_size_maps_multi,
     )
 
     bmap = shard_boundaries_multi(base, ["__x", "__y"], n_shards)
     bx, by = bmap["__x"], bmap["__y"]
-    omap = shard_offsets_multi(
+    sizes_x, sizes_y = shard_size_maps_multi(
         apply_range_shards(
             apply_range_shards(base, "__x", bx, "__sx"), "__y", by, "__sy"
         ),
-        [("__x", "__sx", len(bx)), ("__y", "__sy", len(by))],
-        n_shards,
+        ["__sx", "__sy"],
     )
-    ox, _ = omap["__x"]
-    oy, _ = omap["__y"]
-    ranked_x = (
-        apply_range_shards(base, "__x", bx, "__sx")
-        .join(F.broadcast(ox), "__sx")
-        .select("__y", hr2("__x", "__sx").alias("__rx2"))
+    ox, _ = shard_offset_col(sizes_x, "__x", len(bx), n_shards, "__sx")
+    oy, _ = shard_offset_col(sizes_y, "__y", len(by), n_shards, "__sy")
+    ranked_x = apply_range_shards(base, "__x", bx, "__sx").select(
+        "__y", half_rank2("__x", "__sx", ox).alias("__rx2")
     )
-    ranked = (
-        apply_range_shards(ranked_x, "__y", by, "__sy")
-        .join(F.broadcast(oy), "__sy")
-        .select("__rx2", hr2("__y", "__sy").alias("__ry2"))
+    ranked = apply_range_shards(ranked_x, "__y", by, "__sy").select(
+        "__rx2", half_rank2("__y", "__sy", oy).alias("__ry2")
     )
     # quarter-units of d² (both ranks doubled). Accumulate in
     # DECIMAL(38,0): ranks reach 2n, so uncorrelated data sums to
@@ -1326,14 +1293,16 @@ def pareto_threshold(
     Output: 1 row (n_rows, total_value, k_rows, k_frac_milli =
     (1000·k) div n — non-negative, truncate == floor).
 
-    Scale shape: one boundary sketch on the value, one shard-size /
-    shard-sum bounded collect, per-shard DESC cumsum windows + a
-    broadcast offset dim, one 1-row aggregate. The
-    token_budget_sample shape pointed at a value order instead of a
-    hash order."""
+    Scale shape: one boundary sketch on the value, one shard-sum
+    bounded collect, per-shard DESC cumsum windows + the higher
+    shards' sums as a plan-literal offset (``rank.shard_case_sql``),
+    one 1-row aggregate. The token_budget_sample shape pointed at a
+    value order instead of a hash order."""
     from hbase_gis_spark.operators.rank import (
         apply_range_shards,
+        prefix_offsets,
         shard_boundaries,
+        shard_case_sql,
     )
 
     v = F.col(value_col) if isinstance(value_col, str) else value_col
@@ -1346,26 +1315,20 @@ def pareto_threshold(
     rows = shard_sums.collect()  # bounded: one integer per shard
     by_sid = {int(r["__s"]): int(r["__t"]) for r in rows}
     # DESC value order = shards from HIGH id to LOW: a shard's offset
-    # is the total value of all HIGHER shards
-    offsets, acc = [], 0
-    for sid in sorted(by_sid, reverse=True):
-        offsets.append((sid, acc))
-        acc += by_sid[sid]
-    spark = df.sparkSession
-    off = spark.createDataFrame(
-        offsets or [(0, 0)], "__s int, __off bigint"
+    # is the total value of all HIGHER shards, i.e. the total minus
+    # its ascending prefix and its own sum
+    asc, total = prefix_offsets(by_sid)
+    off = shard_case_sql(
+        [(sid, total - lower - by_sid[sid]) for sid, lower in asc], "__s"
     )
     w = (
         Window.partitionBy("__s")
         .orderBy(F.col("__x").desc(), F.col("__id").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = (
-        sharded.join(F.broadcast(off), "__s")
-        .withColumn("__cum", F.sum("__x").over(w) + F.col("__off"))
-        .withColumn("__prefix", F.col("__cum") - F.col("__x"))
-    )
-    total = acc
+    cum = sharded.withColumn(
+        "__cum", F.sum("__x").over(w) + F.expr(off)
+    ).withColumn("__prefix", F.col("__cum") - F.col("__x"))
     return cum.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.lit(total).cast("bigint").alias("total_value"),

@@ -9,7 +9,12 @@ ordered, DISJOINT value ranges (equal keys land in one shard), each
 shard ranks locally in parallel, and the true global rank is the
 local rank plus the prefix-sum of earlier shards' row counts — a
 driver-side prefix over ``n_shards`` integers, constant in table
-size (the token_budget_sample bounded-collect pattern).
+size (the token_budget_sample bounded-collect pattern). That offset
+step is written once: :func:`shard_offset_col` turns a per-shard size
+map into a plan-literal CASE over the shard id
+(:func:`shard_case_sql`), so no offsets frame is built or joined —
+the same text the ``sqlapi`` statements embed, and the form every
+sharded rank or cumulative sum in drift, corpus and dedup uses.
 
 Consumers: :func:`sharded_ntile` (rfm_segments, balance_deciles),
 :func:`global_percentiles` (sketch_stats, mad_anomalies),
@@ -49,7 +54,7 @@ in this repo are milli/cent units << 2**53; the guard is documented
 here rather than paid for per row.
 
 Persist/release policy (ADVICE r11 #4): operator-level persists across
-the repo (the ``cache=True`` knobs here and in drift.py, plus the
+the repo (drift.spearman_corr's narrow two-column projection, plus the
 always-on narrow persists in dedup/similarity/textstats) are
 lineage-kept MEMORY_AND_DISK frames that the operator cannot unpersist
 itself — the returned DataFrame still reads them lazily. Release is
@@ -63,7 +68,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -96,9 +101,11 @@ def shard_boundaries(
 
 def _sql_literal(v) -> str | None:
     """Exact SQL rendering of an int/float boundary literal, or None
-    when the value needs the Column API (non-numeric). Floats render
-    via ``DOUBLE('<repr>')``: repr round-trips every double exactly
-    (incl. inf) and the quoted form parses as DOUBLE, never DECIMAL."""
+    for a non-numeric value (:func:`apply_range_shards` rejects it;
+    :func:`apply_pair_range_shards` falls back to the Column API for
+    string tiebreak cuts). Floats render via ``DOUBLE('<repr>')``:
+    repr round-trips every double exactly (incl. inf) and the quoted
+    form parses as DOUBLE, never DECIMAL."""
     if isinstance(v, bool) or v is None:
         return None
     if isinstance(v, int):
@@ -156,12 +163,12 @@ def apply_range_shards(
     not just bounded). ``IF(key > b, 1, 0)`` is the identical
     expression (NULL condition → 0, same NaN/type coercions)."""
     sql = range_shard_sql(f"`{key}`", bounds)
-    if bounds and sql is not None:
-        return df.withColumn(shard_col, F.expr(sql))
-    shard = F.lit(0)
-    for b in bounds:
-        shard = shard + F.when(F.col(key) > F.lit(b), 1).otherwise(0)
-    return df.withColumn(shard_col, shard.cast("int"))
+    if sql is None:
+        raise TypeError(
+            f"apply_range_shards: boundaries of {key!r} must be int or "
+            f"float SQL literals, got {bounds!r}"
+        )
+    return df.withColumn(shard_col, F.expr(sql))
 
 
 def warn_tie_mass(
@@ -206,23 +213,34 @@ def prefix_offsets(sizes: dict[int, int]) -> tuple[list[tuple[int, int]], int]:
     return offsets, int(acc)
 
 
-def _offsets_from_sizes(
-    spark,
+def shard_case_sql(mapping: list[tuple[int, int]], shard_col: str) -> str:
+    """An id -> BIGINT mapping (shard -> prefix offset, shard -> dense
+    index, global rank -> cut index) as ONE CASE projection over
+    ``shard_col``, the values plan literals: no dim frame is built or
+    joined. Ids outside the mapping take 0. Shared by every sharded rank and cumulative sum here, in
+    drift, corpus and dedup, and by the ``sqlapi`` statements."""
+    if not mapping:
+        return "CAST(0 AS BIGINT)"
+    whens = " ".join(
+        f"WHEN {sid} THEN CAST({v} AS BIGINT)" for sid, v in mapping
+    )
+    return f"(CASE {shard_col} {whens} ELSE CAST(0 AS BIGINT) END)"
+
+
+def shard_offset_col(
     sizes: dict[int, int],
     key: str,
     n_bounds: int,
     n_shards: int,
-    shard_col: str = "__shard",
-) -> tuple[DataFrame, int]:
-    """Shared driver-side tail of :func:`shard_offsets` /
-    :func:`shard_offsets_multi`: tie-mass skew warning + prefix-sum
-    offsets frame from a per-shard size map."""
+    shard_col: str,
+) -> tuple[Column, int]:
+    """The offset step of every sharded rank: the tie-mass skew
+    warning, then the prefix offsets of the per-shard size map as a
+    plan-literal Column over ``shard_col`` (``local rank + offset`` is
+    the global rank), and the total row count."""
     warn_tie_mass(sizes, key, n_bounds, n_shards)
     offsets, total = prefix_offsets(sizes)
-    odf = spark.createDataFrame(
-        offsets or [(0, 0)], f"{shard_col} int, __off bigint"
-    )
-    return odf, total
+    return F.expr(shard_case_sql(offsets, shard_col)), total
 
 
 def shard_offsets(
@@ -231,22 +249,20 @@ def shard_offsets(
     n_bounds: int,
     n_shards: int,
     shard_col: str = "__shard",
-) -> tuple[DataFrame, int]:
+) -> tuple[Column, int]:
     """Bounded collect of per-shard sizes (one integer per shard —
     never grows with data; recomputable, so losing an executor
-    replays lineage instead of killing the job): returns the
-    (shard, prefix-offset) frame and the total row count, and raises
-    the tie-mass skew RuntimeWarning when one shard holds
-    > max(25%, 4/n_shards) of the rows."""
+    replays lineage instead of killing the job), then
+    :func:`shard_offset_col`: returns the prefix-offset Column and the
+    total row count, and raises the tie-mass skew RuntimeWarning when
+    one shard holds > max(25%, 4/n_shards) of the rows."""
     sizes = {
         r[shard_col]: r["cnt"]
         for r in sharded.groupBy(shard_col)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     }
-    return _offsets_from_sizes(
-        sharded.sparkSession, sizes, key, n_bounds, n_shards, shard_col
-    )
+    return shard_offset_col(sizes, key, n_bounds, n_shards, shard_col)
 
 
 def shard_boundaries_multi(
@@ -324,39 +340,6 @@ def shard_size_maps_multi(
         {r["s"]: r["cnt"] for r in rows if r["k"] == i}
         for i in range(len(shard_cols))
     ]
-
-
-def shard_offsets_multi(
-    sharded: DataFrame,
-    specs: list[tuple[str, str, int]],
-    n_shards: int,
-) -> dict[str, tuple[DataFrame, int]]:
-    """:func:`shard_offsets` for SEVERAL shard columns of ONE frame in
-    ONE aggregate job (optimization r11): ``specs`` is a list of
-    ``(key_label, shard_col, n_bounds)``. The per-key size maps,
-    offsets frames, totals, and tie-mass skew warnings are identical
-    to the single-key version. The result dict is keyed by key_label,
-    so duplicate labels would collide silently — they raise instead
-    (ADVICE r11 #1; use :func:`shard_size_maps_multi` directly when
-    specs can repeat a label)."""
-    labels = [key for key, _sc, _nb in specs]
-    if len(set(labels)) != len(labels):
-        raise ValueError(
-            "shard_offsets_multi: duplicate key labels "
-            f"{sorted({k for k in labels if labels.count(k) > 1})} would "
-            "collide in the label-keyed result; deduplicate the specs or "
-            "use shard_size_maps_multi (position-aligned) instead"
-        )
-    size_maps = shard_size_maps_multi(
-        sharded, [sc for _key, sc, _nb in specs]
-    )
-    spark = sharded.sparkSession
-    out: dict[str, tuple[DataFrame, int]] = {}
-    for (key, shard_col, n_bounds), sizes in zip(specs, size_maps):
-        out[key] = _offsets_from_sizes(
-            spark, sizes, key, n_bounds, n_shards, shard_col
-        )
-    return out
 
 
 def pair_shard_boundaries(
@@ -445,15 +428,14 @@ def range_sharded(
     df: DataFrame,
     order_cols: list[str],
     n_shards: int = 64,
-) -> tuple[DataFrame, DataFrame, int]:
+) -> tuple[DataFrame, Column, int]:
     """Shard ``df`` into ordered, disjoint ranges of
-    ``order_cols[0]`` and return ``(sharded, offsets, total)``:
+    ``order_cols[0]`` and return ``(sharded, off, total)``:
     ``sharded`` carries every input column plus ``__shard``
-    (:func:`apply_range_shards`), ``offsets`` is a
-    (``__shard``, ``__off``) frame where ``__off`` is the number of
-    rows in earlier shards (:func:`shard_offsets`), and ``total`` is
-    the overall row count. ``local rank + __off`` is then an exact
-    global rank.
+    (:func:`apply_range_shards`), ``off`` is the number of rows in
+    earlier shards as a plan-literal Column over ``__shard``
+    (:func:`shard_offsets`), and ``total`` is the overall row count.
+    ``local rank + off`` is then an exact global rank.
 
     Sharding on the FIRST order column alone is sufficient for any
     ``order_cols`` suffix: rows strictly below a cut precede every
@@ -462,8 +444,19 @@ def range_sharded(
     key = order_cols[0]
     bounds = shard_boundaries(df, key, n_shards)
     sharded = apply_range_shards(df, key, bounds)
-    odf, total = shard_offsets(sharded, key, len(bounds), n_shards)
-    return sharded, odf, total
+    off, total = shard_offsets(sharded, key, len(bounds), n_shards)
+    return sharded, off, total
+
+
+def half_rank2(order_col: str, shard_col: str, off: Column) -> Column:
+    """``2 * average rank`` of ``order_col`` as an exact BIGINT: local
+    ``rank()`` plus the shard offset is the global min-rank, and the
+    per-(shard, value) count is the global tie count because range
+    shards never split a tie group, so ``2 * (min_rank + (ties-1)/2)``
+    is ``(rank + off) * 2 + ties - 1``."""
+    w = Window.partitionBy(shard_col).orderBy(F.col(order_col).asc())
+    tie = Window.partitionBy(shard_col, order_col)
+    return (F.rank().over(w) + off) * 2 + F.count(F.lit(1)).over(tie) - 1
 
 
 def sharded_ntile(
@@ -479,18 +472,16 @@ def sharded_ntile(
     ``N div n`` — derived arithmetically from the sharded global
     row_number, all integer ops, engine-exact. ``order_cols`` must be
     a total order (append a key tiebreak) for deterministic output."""
-    sharded, odf, total = range_sharded(df, order_cols, n_shards)
+    sharded, off, total = range_sharded(df, order_cols, n_shards)
     w = Window.partitionBy("__shard").orderBy(
         *[F.col(c).asc() for c in order_cols]
     )
-    ranked = sharded.join(F.broadcast(odf), "__shard").withColumn(
-        "__gr", F.row_number().over(w) + F.col("__off")
-    )
+    ranked = sharded.withColumn("__gr", F.row_number().over(w) + off)
     return (
         ranked.withColumn(
             out_col, F.expr(ntile_bucket_sql(total, n)).cast("int")
         )
-        .drop("__shard", "__off", "__gr")
+        .drop("__shard", "__gr")
     )
 
 
@@ -515,28 +506,27 @@ def sharded_ntiles(
     batch contract); each spec's ``order_cols`` must be a total order
     for deterministic output."""
     keys = [order_cols[0] for order_cols, _ in specs]
+    shard_cols = [f"__shard{i}" for i in range(len(keys))]
     bmap = shard_boundaries_multi(df, keys, n_shards)
     cur = df
-    for i, key in enumerate(keys):
-        cur = apply_range_shards(cur, key, bmap[key], f"__shard{i}")
-    omap = shard_offsets_multi(
-        cur,
-        [(key, f"__shard{i}", len(bmap[key])) for i, key in enumerate(keys)],
-        n_shards,
-    )
+    for key, sc in zip(keys, shard_cols):
+        cur = apply_range_shards(cur, key, bmap[key], sc)
+    size_maps = shard_size_maps_multi(cur, shard_cols)
     out = cur
-    for i, (order_cols, out_col) in enumerate(specs):
-        odf, total = omap[keys[i]]
-        w = Window.partitionBy(f"__shard{i}").orderBy(
+    for (order_cols, out_col), key, sc, sizes in zip(
+        specs, keys, shard_cols, size_maps
+    ):
+        off, total = shard_offset_col(
+            sizes, key, len(bmap[key]), n_shards, sc
+        )
+        w = Window.partitionBy(sc).orderBy(
             *[F.col(c).asc() for c in order_cols]
         )
-        out = out.join(F.broadcast(odf), f"__shard{i}").withColumn(
-            "__gr", F.row_number().over(w) + F.col("__off")
-        )
+        out = out.withColumn("__gr", F.row_number().over(w) + off)
         out = out.withColumn(
             out_col, F.expr(ntile_bucket_sql(total, n)).cast("int")
-        ).drop("__off", "__gr")
-    return out.drop(*[f"__shard{i}" for i in range(len(keys))])
+        ).drop("__gr")
+    return out.drop(*shard_cols)
 
 
 def global_percentiles(
@@ -545,14 +535,15 @@ def global_percentiles(
     percentiles: dict[str, tuple[int, int]],
     n_shards: int = 64,
     tiebreak_col: str | None = None,
-    cache: bool = False,
 ) -> DataFrame:
     """One row holding the EXACT value at global rank
     ``ceil(num*N/den)`` for each ``name: (num, den)`` requested —
     pure rank selection, no value arithmetic, so the outputs are
     engine-exact doubles (the global_quantile_cuts convention,
     generalized from evenly spaced cuts to arbitrary fractions).
-    NULL/NaN values are dropped before ranking.
+    NULL/NaN values are dropped before ranking. The requested ranks
+    are plan literals, so selection is a conditional aggregate (the
+    ``sqlapi.global_percentiles_sql`` form) — no join.
 
     ``tiebreak_col`` (a deterministic, preferably near-unique column,
     e.g. ``xxhash64`` of the row's natural key) switches sharding to
@@ -562,65 +553,40 @@ def global_percentiles(
     all-ties slope frame was the motivating case). The selected
     values are unchanged: ties carry equal values, so the value at
     global rank k under ``(v, t)`` order IS the k-th smallest v."""
-    def _cache(frame: DataFrame) -> DataFrame:
-        # ``cache=True`` (optimization r12, guide §5): the narrow
-        # projection feeds three bounded planning jobs plus the lazy
-        # rank plan — persist computes the source scan once. Opt-in
-        # (spearman_corr's knob pattern); lineage kept; released by
-        # the session's ContextCleaner or clearCache.
-        if not cache:
-            return frame
-        from pyspark import StorageLevel
-
-        from hbase_gis_spark.operators.dedup import _spread
-
-        return _spread(frame).persist(StorageLevel.MEMORY_AND_DISK)
-
     if tiebreak_col is not None:
-        prepped = _cache(
-            df.select(
-                F.col(value_col).cast("double").alias("__v"),
-                F.col(tiebreak_col).alias("__t"),
-            ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-        )
+        prepped = df.select(
+            F.col(value_col).cast("double").alias("__v"),
+            F.col(tiebreak_col).alias("__t"),
+        ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
         bounds = pair_shard_boundaries(prepped, "__v", "__t", n_shards)
         sharded = apply_pair_range_shards(prepped, "__v", "__t", bounds)
-        odf, total = shard_offsets(
+        off, total = shard_offsets(
             sharded, f"({value_col},{tiebreak_col})", len(bounds), n_shards
         )
     else:
-        prepped = _cache(
-            df.select(
-                F.col(value_col).cast("double").alias("__v")
-            ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-        )
-        sharded, odf, total = range_sharded(prepped, ["__v"], n_shards)
-    # ceil(num*N/den) as (num*N + den-1) div den: positive operands,
-    # identical on Spark `div` and DuckDB `//`
-    ranks = [
-        (name, (num * total + den - 1) // den)
-        for name, (num, den) in percentiles.items()
-    ]
-    spark = df.sparkSession
-    rdf = spark.createDataFrame(
-        [(n_, int(r)) for n_, r in ranks], "__name string, __gr bigint"
-    )
+        prepped = df.select(
+            F.col(value_col).cast("double").alias("__v")
+        ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
+        sharded, off, total = range_sharded(prepped, ["__v"], n_shards)
     order = [F.col("__v").asc()]
     if tiebreak_col is not None:
         # window order must match the pair cuts' lexicographic order
         order.append(F.col("__t").asc())
     w = Window.partitionBy("__shard").orderBy(*order)
-    hits = (
-        sharded.join(F.broadcast(odf), "__shard")
-        .select(
-            (F.row_number().over(w) + F.col("__off")).alias("__gr"), "__v"
-        )
-        .join(F.broadcast(rdf), "__gr")
+    ranked = sharded.select(
+        (F.row_number().over(w) + off).alias("__gr"), "__v"
     )
-    return hits.agg(
+    # ceil(num*N/den) as (num*N + den-1) div den: positive operands,
+    # identical on Spark `div` and DuckDB `//`
+    return ranked.agg(
         *[
-            F.max(F.when(F.col("__name") == name, F.col("__v"))).alias(name)
-            for name, _ in ranks
+            F.max(
+                F.when(
+                    F.col("__gr") == (num * total + den - 1) // den,
+                    F.col("__v"),
+                )
+            ).alias(name)
+            for name, (num, den) in percentiles.items()
         ]
     )
 
@@ -634,19 +600,10 @@ def global_half_ranks(
     """(id, ``2 * average rank`` of ``col``) with no single-task sort
     — the Spearman building block. Average tie rank = min_rank +
     (tie_count - 1)/2 is always whole or half, so it is carried
-    DOUBLED in exact BIGINTs. Range sharding puts every tie group in
-    one shard, so the per-(shard, value) count IS the global tie
-    count and local ``rank()`` + shard offset IS the global min-rank."""
-    sharded, odf, _ = range_sharded(df.select(id_col, col), [col], n_shards)
-    w = Window.partitionBy("__shard").orderBy(F.col(col).asc())
-    tie = Window.partitionBy("__shard", col)
-    return sharded.join(F.broadcast(odf), "__shard").select(
-        id_col,
-        (
-            (F.rank().over(w) + F.col("__off")) * 2
-            + F.count(F.lit(1)).over(tie)
-            - 1
-        ).alias("__hr2"),
+    DOUBLED in exact BIGINTs (:func:`half_rank2`)."""
+    sharded, off, _ = range_sharded(df.select(id_col, col), [col], n_shards)
+    return sharded.select(
+        id_col, half_rank2(col, "__shard", off).alias("__hr2")
     )
 
 
@@ -655,7 +612,6 @@ def quantile_transform(
     col: str,
     id_col: str,
     n_shards: int = 64,
-    cache: bool = False,
 ) -> DataFrame:
     """Global quantile (rank) normalization of a column — the
     feature transform that maps any distribution to ~uniform [0, 1]
@@ -672,34 +628,15 @@ def quantile_transform(
     n_shards-integer driver prefix, and the total row count as a plan
     LITERAL (known from the same bounded collect) — never a
     single-task global sort, no totals join."""
-    narrow = df.select(id_col, col)
-    if cache:
-        # cache=True (optimization r12, guide §5): the (id, value)
-        # projection feeds the boundary sketch, the shard-size
-        # aggregate, and the per-row rank plan — persist computes the
-        # source scan once. Opt-in; lineage kept; ContextCleaner or
-        # clearCache releases it.
-        from pyspark import StorageLevel
-
-        from hbase_gis_spark.operators.dedup import _spread
-
-        narrow = _spread(narrow).persist(StorageLevel.MEMORY_AND_DISK)
-    sharded, odf, total = range_sharded(narrow, [col], n_shards)
-    w = Window.partitionBy("__shard").orderBy(F.col(col).asc())
-    tie = Window.partitionBy("__shard", col)
-    hr2 = (
-        (F.rank().over(w) + F.col("__off")) * 2
-        + F.count(F.lit(1)).over(tie)
-        - 1
+    sharded, off, total = range_sharded(
+        df.select(id_col, col), [col], n_shards
     )
-    return (
-        sharded.join(F.broadcast(odf), "__shard")
-        .select(id_col, col, hr2.alias("__hr2"))
-        .select(
-            id_col,
-            col,
-            F.expr(f"(__hr2 * 1000) div {max(1, 2 * total)}").alias(
-                "pct_milli"
-            ),
-        )
+    return sharded.select(
+        id_col, col, half_rank2(col, "__shard", off).alias("__hr2")
+    ).select(
+        id_col,
+        col,
+        F.expr(f"(__hr2 * 1000) div {max(1, 2 * total)}").alias(
+            "pct_milli"
+        ),
     )

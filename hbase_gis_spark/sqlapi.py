@@ -163,31 +163,22 @@ def tokens_sql(text_expr: str = "text") -> str:
 # tests/test_sqlapi.py.
 
 
-def _off_case_sql(offsets: list[tuple[int, int]]) -> str:
-    """Shard-id -> prefix-offset mapping as a CASE projection (the
-    broadcast-join-free SQL form of range_sharded's offsets frame)."""
-    if not offsets:
-        return "CAST(0 AS BIGINT)"
-    whens = " ".join(
-        f"WHEN {sid} THEN CAST({off} AS BIGINT)" for sid, off in offsets
-    )
-    return f"(CASE __shard {whens} ELSE CAST(0 AS BIGINT) END)"
-
-
 def _sharded_plan_parts(
     spark: SparkSession,
     view: str,
     key_expr: str,
     n_shards: int,
     where_sql: str = "",
-) -> tuple[str, list[tuple[int, int]], int]:
+) -> tuple[str, str, int]:
     """Shared driver-side prep: boundary literals from the view, then
     shard sizes/offsets/total via one bounded aggregate — both frozen
-    into SQL text. Returns (shard_expr, offsets, total)."""
+    into SQL text. Returns (shard_expr, offset_expr, total): the
+    offsets are ``rank.shard_case_sql``'s CASE over ``__shard``."""
     from hbase_gis_spark.operators.rank import (
         prefix_offsets,
         range_shard_sql,
         shard_boundaries,
+        shard_case_sql,
     )
 
     src = spark.table(view)
@@ -201,7 +192,7 @@ def _sharded_plan_parts(
         f"SELECT {shard} AS s, count(*) AS c FROM {view} {where} GROUP BY 1"
     ).collect()
     offsets, total = prefix_offsets({int(r.s): int(r.c) for r in sizes})
-    return shard, offsets, total
+    return shard, shard_case_sql(offsets, "__shard"), total
 
 
 def sharded_ntile_sql(
@@ -223,7 +214,7 @@ def sharded_ntile_sql(
     the text after the view's data changes silently corrupts every
     global rank (unseen shards fall into the CASE's ELSE-0 offset);
     this is a snapshot statement, not a reusable view definition."""
-    shard, offsets, total = _sharded_plan_parts(
+    shard, off, total = _sharded_plan_parts(
         spark, view, order_cols[0], n_shards
     )
     from hbase_gis_spark.operators.rank import ntile_bucket_sql
@@ -235,7 +226,7 @@ def sharded_ntile_sql(
     FROM (
       SELECT *,
              row_number() OVER (PARTITION BY __shard ORDER BY {order})
-               + {_off_case_sql(offsets)} AS __gr
+               + {off} AS __gr
       FROM (SELECT *, {shard} AS __shard FROM {view})
     )"""
 
@@ -259,7 +250,7 @@ def global_percentiles_sql(
     silently mis-ranks."""
     val = f"CAST({value_expr} AS DOUBLE)"
     where = f"{val} IS NOT NULL AND NOT isnan({val})"
-    shard, offsets, total = _sharded_plan_parts(
+    shard, off, total = _sharded_plan_parts(
         spark, view, val, n_shards, where_sql=where
     )
     sels = ", ".join(
@@ -271,7 +262,7 @@ def global_percentiles_sql(
     SELECT {sels} FROM (
       SELECT __v,
              row_number() OVER (PARTITION BY __shard ORDER BY __v ASC)
-               + {_off_case_sql(offsets)} AS __gr
+               + {off} AS __gr
       FROM (SELECT {val} AS __v, {shard} AS __shard
             FROM {view} WHERE {where})
     )"""
@@ -292,14 +283,14 @@ def quantile_transform_sql(
     frozen from the view AT GENERATION TIME — generate immediately
     before executing; the text is a snapshot statement, stale data
     silently mis-ranks."""
-    shard, offsets, total = _sharded_plan_parts(spark, view, col, n_shards)
+    shard, off, total = _sharded_plan_parts(spark, view, col, n_shards)
     return f"""
     SELECT {id_col}, {col},
            (__hr2 * 1000) div {max(1, 2 * total)} AS pct_milli
     FROM (
       SELECT {id_col}, {col},
              (rank() OVER (PARTITION BY __shard ORDER BY {col} ASC)
-                + {_off_case_sql(offsets)}) * 2
+                + {off}) * 2
                + count(*) OVER (PARTITION BY __shard, {col}) - 1 AS __hr2
       FROM (SELECT {id_col}, {col}, {shard} AS __shard FROM {view})
     )"""

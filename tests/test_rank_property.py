@@ -71,16 +71,17 @@ def test_half_ranks_property(spark, vals):
 @given(vals=VALS)
 @_SETTINGS
 def test_batched_planning_matches_single(spark, vals):
-    """shard_boundaries_multi / shard_offsets_multi (optimization r11)
-    produce exactly the per-column boundaries, offsets frames, and
-    totals of the single-key helpers, and sharded_ntiles assigns
-    exactly sharded_ntile's buckets per spec."""
+    """shard_boundaries_multi / shard_size_maps_multi (optimization
+    r11) produce exactly the per-column boundaries, shard-size maps,
+    prefix offsets and totals of the single-key helpers, and
+    sharded_ntiles assigns exactly sharded_ntile's buckets per spec."""
     from hbase_gis_spark.operators.rank import (
         apply_range_shards,
+        prefix_offsets,
         shard_boundaries,
         shard_boundaries_multi,
         shard_offsets,
-        shard_offsets_multi,
+        shard_size_maps_multi,
         sharded_ntile,
         sharded_ntiles,
     )
@@ -93,24 +94,25 @@ def test_batched_planning_matches_single(spark, vals):
     for j, c in enumerate(["v", "w"]):
         assert bm[c] == shard_boundaries(df, c, n_shards)
         sh = apply_range_shards(sh, c, bm[c], f"__shard{j}")
-    om = shard_offsets_multi(
-        sh,
-        [("v", "__shard0", len(bm["v"])), ("w", "__shard1", len(bm["w"]))],
-        n_shards,
-    )
+    maps = shard_size_maps_multi(sh, ["__shard0", "__shard1"])
     for j, c in enumerate(["v", "w"]):
-        odf_s, tot_s = shard_offsets(
-            apply_range_shards(df, c, bm[c], f"__shard{j}"),
-            c,
-            len(bm[c]),
-            n_shards,
-            f"__shard{j}",
+        single = apply_range_shards(df, c, bm[c], f"__shard{j}")
+        counts = single.groupBy(f"__shard{j}").count().collect()
+        assert maps[j] == dict(map(tuple, counts))
+        offsets, total = prefix_offsets(maps[j])
+        off_s, tot_s = shard_offsets(
+            single, c, len(bm[c]), n_shards, f"__shard{j}"
         )
-        odf_m, tot_m = om[c]
-        assert tot_s == tot_m
-        assert sorted(map(tuple, odf_s.collect())) == sorted(
-            map(tuple, odf_m.collect())
+        assert tot_s == total == len(vals)
+        got = sorted(
+            map(
+                tuple,
+                single.select(f"__shard{j}", off_s.alias("off"))
+                .distinct()
+                .collect(),
+            )
         )
+        assert got == offsets
 
     multi = {
         (r.id): (r.bv, r.bw)

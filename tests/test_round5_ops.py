@@ -62,14 +62,14 @@ def test_range_sharded_balanced_no_warn(spark):
     df = spark.range(400).select((F.col("id") * 7 % 401).alias("v"))
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        sharded, odf, total = range_sharded(df, ["v"], n_shards=8)
+        sharded, off, total = range_sharded(df, ["v"], n_shards=8)
     assert total == 400
     w = Window.partitionBy("__shard").orderBy("v")
     ranks = sorted(
         r.gr
-        for r in sharded.join(F.broadcast(odf), "__shard")
-        .select((F.row_number().over(w) + F.col("__off")).alias("gr"))
-        .collect()
+        for r in sharded.select(
+            (F.row_number().over(w) + off).alias("gr")
+        ).collect()
     )
     assert ranks == list(range(1, 401))
 
@@ -83,12 +83,32 @@ def test_range_sharded_deterministic_and_lineage_safe(spark):
     from hbase_gis_spark.operators.rank import range_sharded
 
     df = spark.range(1000).select((F.col("id") * 131 % 997).alias("v"), "id")
-    sharded, odf, _ = range_sharded(df, ["v"], n_shards=8)
+    sharded, off, _ = range_sharded(df, ["v"], n_shards=8)
     a = {r.id: r["__shard"] for r in sharded.collect()}
     b = {r.id: r["__shard"] for r in sharded.collect()}
     assert a == b
     plan = sharded._jdf.queryExecution().executedPlan().toString()
     assert "Checkpoint" not in plan and "LogicalRDD" not in plan
+    # the offsets are plan literals too: the ranked frame scans no
+    # local RDD of offsets rows
+    ranked = sharded.withColumn("__off", off)
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan and "LogicalRDD" not in plan
+
+
+def test_apply_range_shards_rejects_non_numeric_bounds(spark):
+    """Shard ids are one SQL expression over int/float boundary
+    literals; a boundary with no SQL literal raises instead of
+    falling back to a Column-API shard id."""
+    from hbase_gis_spark.operators.rank import apply_range_shards
+
+    df = spark.createDataFrame([("a",), ("m",)], "v string")
+    with pytest.raises(TypeError, match="boundaries"):
+        apply_range_shards(df, "v", ["k"])
+    assert apply_range_shards(df, "v", []).select("__shard").collect() == [
+        (0,),
+        (0,),
+    ]
 
 
 def test_global_percentiles_rank_selection(spark):

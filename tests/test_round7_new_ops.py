@@ -92,6 +92,44 @@ def test_lorenz_curve_deciles(spark):
     }
 
 
+def _pareto_replay(rows, share_milli):
+    """pareto_threshold in plain Python: walk (value desc, id asc),
+    count rows whose exclusive prefix * 1000 < share_milli * total."""
+    order = sorted(rows, key=lambda r: (-r[1], r[0]))
+    total = sum(v for _, v in order)
+    k, prefix = 0, 0
+    for _, v in order:
+        k += prefix * 1000 < share_milli * total
+        prefix += v
+    n = len(order)
+    if not n:
+        return (0, 0, None, None)
+    return (n, total, k, (1000 * k) // n)
+
+
+def test_pareto_threshold_matches_python_replay(spark):
+    """pareto_threshold equals a sorted Python walk for every shard
+    count, with tie groups large enough that range cuts land inside
+    them (equal values share a shard, so the DESC offsets of the
+    higher shards must still line up), and on an empty frame."""
+    from hbase_gis_spark.operators.drift import pareto_threshold
+
+    vals = [50] * 12 + [20] * 10 + [7] * 9 + [3] * 6 + [0] * 3
+    rows = [(i, v) for i, v in enumerate(reversed(vals), start=1)]
+    df = spark.createDataFrame(rows, "id bigint, v bigint")
+    empty = spark.createDataFrame([], "id bigint, v bigint")
+    for n_shards in (1, 3, 64):
+        for share in (0, 800):
+            got = pareto_threshold(
+                df, "v", "id", share_milli=share, n_shards=n_shards
+            ).collect()
+            assert [tuple(r) for r in got] == [
+                _pareto_replay(rows, share)
+            ], (n_shards, share)
+        got = pareto_threshold(empty, "v", "id", n_shards=n_shards).collect()
+        assert [tuple(r) for r in got] == [_pareto_replay([], 800)]
+
+
 def test_lorenz_curve_no_int64_wrap_on_huge_totals(spark):
     """ADVICE r7 #2: bare int64 ``1000 * cum_value`` wrapped silently
     past ~9.2e15 total value while DuckDB's HUGEINT sum stayed exact

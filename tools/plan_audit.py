@@ -118,25 +118,22 @@ BNLJ_SANCTIONED = {
 
 
 # Queries whose plans scan an RDD today: a local
-# createDataFrame(list) dim (rank shards, corpus offsets, similarity and
-# dedup dims, ...) or a checkpointed stage (graph and clustering
-# loops). None is on the geo serving path; a new small table there
-# belongs in a VALUES relation, not in this set.
+# createDataFrame(list) dim (curriculum_order's (source, shard)
+# offsets, similarity and dedup dims, ...) or a checkpointed stage
+# (graph and clustering loops). Sharded-rank offsets are plan literals
+# (rank.shard_case_sql) and never scan an RDD. None is on the geo
+# serving path; a new small table there belongs in a VALUES relation,
+# not in this set.
 LOCAL_RDD_SANCTIONED = {
-    "ann_recall_report", "balance_deciles", "benford_revenue",
-    "boilerplate_coverage", "bpe_learned_counts", "containment_pairs",
-    "corpus_pipeline", "curation_funnel", "curriculum_order", "dbscan",
-    "dedup_clusters", "dedup_keep_best", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_recall_report",
-    "dedup_threshold_curve", "dup_cluster_sizes", "dup_source_matrix",
-    "edit_distance_pairs", "global_value_cuts", "heaps_law",
-    "ivf_nprobe_curve", "leakage_safe_split", "lorenz_revenue",
-    "lpa_communities", "pagerank_event_types", "pareto_customers",
-    "quality_dup_calibration", "quantile_transform", "retrieval_mrr",
-    "revenue_gini", "rfm_segments", "shuffle_audit", "sketch_stats",
-    "spatial_clusters", "spearman_value_time", "split_balance",
+    "ann_recall_report", "benford_revenue", "boilerplate_coverage",
+    "bpe_learned_counts", "containment_pairs", "corpus_pipeline",
+    "curation_funnel", "curriculum_order", "dbscan", "dedup_clusters",
+    "dedup_keep_best", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+    "dedup_recall_report", "dedup_threshold_curve", "dup_cluster_sizes",
+    "dup_source_matrix", "edit_distance_pairs", "ivf_nprobe_curve",
+    "leakage_safe_split", "lpa_communities", "pagerank_event_types",
+    "retrieval_mrr", "spatial_clusters", "split_balance",
     "split_drift_audit", "srm_check", "tfidf_cosine_pairs",
-    "theil_sen_trend", "time_to_purchase", "token_budget_sample",
     "trajectory_similarity", "triangle_count",
 }
 
