@@ -2785,13 +2785,8 @@ def _q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "unit_micro_cents"
         )
     )
-    w = Window.partitionBy("l_partkey").orderBy(
-        F.col("unit_micro_cents").asc(), F.col("l_suppkey").asc()
-    )
-    best = (
-        per_ps.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    best = top_x(
+        per_ps, "l_partkey", "unit_micro_cents", 1, tiebreak_col="l_suppkey"
     )
     p = (
         load_table(spark, sf_dir, "part")

@@ -831,18 +831,15 @@ def group_sample_k(
     (fixed-k sampling cannot be append-stable; use stratified_sample
     when stability matters more than size).
 
-    Scale shape: ONE shuffle on the group key; the rank window is
-    eligible for WindowGroupLimit, so each map task forwards at most
-    k rows per group it sees — the shuffle carries ~k rows per
-    (group, task), never whole groups. Output: input columns +
-    ``sample_rank`` (1..k in hash order)."""
-    pri = content_hash(salt, id_col)
-    w = Window.partitionBy(group_col).orderBy(
-        pri.asc(), F.col(id_col).asc()
-    )
-    return (
-        df.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= k)
+    Scale shape: :func:`~hbase_gis_spark.operators.topx.top_x` over
+    the hash order — ONE shuffle on the group key behind a partial
+    WindowGroupLimit, so each map task forwards at most k rows per
+    group it sees — the shuffle carries ~k rows per (group, task),
+    never whole groups. Output: input columns + ``sample_rank`` (1..k
+    in hash order)."""
+    return top_x(
+        df, group_col, content_hash(salt, id_col).asc(), k,
+        tiebreak_col=id_col, rank_col="sample_rank",
     )
 
 
@@ -1378,24 +1375,17 @@ def weighted_sample_k_per_group(
     semantics).
 
     Output: (``group_col``, ``id_col``, weight, sel_key, rnk 1..k)."""
-    from pyspark.sql import Window
-
     keys = _ticket_keys(
         df, weight_col, id_col, salt, max_weight, by=(group_col,)
     )
-    win = Window.partitionBy(group_col).orderBy(
-        F.col("sel_key").asc(), F.col(id_col).asc()
-    )
-    return (
-        keys.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= k)
-        .select(
-            group_col,
-            id_col,
-            F.col("__w").cast("bigint").alias("weight"),
-            "sel_key",
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
+    return top_x(
+        keys, group_col, "sel_key", k, tiebreak_col=id_col, rank_col="rnk"
+    ).select(
+        group_col,
+        id_col,
+        F.col("__w").cast("bigint").alias("weight"),
+        "sel_key",
+        F.col("rnk").cast("bigint").alias("rnk"),
     )
 
 
@@ -1462,14 +1452,9 @@ def negative_sample_k(
         ).alias("__pt"),
     )
     if pool_per_group:
-        gw = Window.partitionBy("__ng").orderBy(
-            F.col("__pt").asc(), F.col("__nid").asc()
-        )
-        pool_df = (
-            ticketed.withColumn("__pr", F.row_number().over(gw))
-            .filter(F.col("__pr") <= pool)
-            .select("__nid", "__ng")
-        )
+        pool_df = top_x(
+            ticketed, "__ng", "__pt", pool, tiebreak_col="__nid"
+        ).select("__nid", "__ng")
     else:
         pool_df = (
             ticketed.orderBy(F.col("__pt").asc(), F.col("__nid").asc())
@@ -1494,17 +1479,12 @@ def negative_sample_k(
             ).alias("__tick"),
         )
     )
-    win = Window.partitionBy("__id").orderBy(
-        F.col("__tick").asc(), F.col("__nid").asc()
-    )
-    return (
-        pairs.withColumn("neg_rank", F.row_number().over(win))
-        .filter(F.col("neg_rank") <= k)
-        .select(
-            F.col("__id").alias(id_col),
-            F.col("__nid").alias("neg_id"),
-            F.col("neg_rank").cast("bigint").alias("neg_rank"),
-        )
+    return top_x(
+        pairs, "__id", "__tick", k, tiebreak_col="__nid", rank_col="neg_rank"
+    ).select(
+        F.col("__id").alias(id_col),
+        F.col("__nid").alias("neg_id"),
+        F.col("neg_rank").cast("bigint").alias("neg_rank"),
     )
 
 

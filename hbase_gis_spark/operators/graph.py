@@ -310,9 +310,8 @@ def lpa_communities(
     edges-vs-small-table recurrence as ``pagerank_int``, cost linear
     in |E| per round with a fixed small ``iters``. The symmetrized
     edge list is lazily checkpointed once, before the loop."""
-    from pyspark.sql import Window
-
     from hbase_gis_spark.operators.checkpointing import truncate_lineage
+    from hbase_gis_spark.operators.topx import top_x
 
     sym = truncate_lineage(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -320,9 +319,6 @@ def lpa_communities(
     )
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("community")
-    )
-    w = Window.partitionBy("node").orderBy(
-        F.col("n").desc(), F.col("community").asc()
     )
     for _ in range(iters):
         votes = (
@@ -335,11 +331,9 @@ def lpa_communities(
             .groupBy(F.col("u").alias("node"), "community")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        labels = (
-            votes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("node", "community")
-        )
+        labels = top_x(
+            votes, "node", F.col("n").desc(), 1, tiebreak_col="community"
+        ).select("node", "community")
     return labels.select(F.col("node").alias("v"), "community")
 
 

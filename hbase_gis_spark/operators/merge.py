@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.topx import top_x
+
 
 def merge_upsert(
     base: DataFrame,
@@ -38,15 +40,10 @@ def merge_upsert(
     cols = base.columns
     lo = base.select(*cols).withColumn("__pri", F.lit(0))
     hi = updates.select(*cols).withColumn("__pri", F.lit(1))
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(version_col).desc(), F.col("__pri").desc()
-    )
-    merged = (
-        lo.unionByName(hi)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__pri")
-    )
+    merged = top_x(
+        lo.unionByName(hi), key_col, F.col(version_col).desc(), 1,
+        tiebreak_col=F.col("__pri").desc(),
+    ).drop("__pri")
     if tombstone_col is not None:
         merged = merged.filter(
             ~F.coalesce(F.col(tombstone_col), F.lit(False))

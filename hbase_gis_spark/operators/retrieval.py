@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.topx import top_x
+
 
 def rrf_fuse(
     arms: list[tuple[str, DataFrame, str]],
@@ -292,8 +294,8 @@ def mmr_rerank_multi(
 
     Scale shape: the big side streams ONCE through a broadcast
     |queries|-row dim join (n·|queries| scored rows — the bulk
-    retrieval trade); per-query top-fetch_k is a rank window
-    PARTITIONED by query (never global); the greedy stage touches
+    retrieval trade); per-query top-fetch_k is ``top_x`` grouped by
+    query (never global); the greedy stage touches
     |queries|·fetch_k rows total.
 
     Output: (query_id, rank 1..k, ``id_col``, rel_r9)."""
@@ -316,11 +318,8 @@ def mmr_rerank_multi(
         )
         .filter(~F.isnan("__rel") & F.col("__rel").isNotNull())
     )
-    win = Window.partitionBy("__qid").orderBy(
-        F.col("__rel").desc(), F.col("__id").asc()
-    )
-    cand = scored.withColumn("__r", F.row_number().over(win)).filter(
-        F.col("__r") <= fetch_k
+    cand = top_x(
+        scored, "__qid", F.col("__rel").desc(), fetch_k, tiebreak_col="__id"
     )
     lam = lam_ppm / 1_000_000.0
 

@@ -25,6 +25,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.topx import top_x
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product of two float arrays."""
@@ -404,25 +406,14 @@ def label_purity(
     the stored layout) + a (cell,label) hash aggregate whose output is
     at most nlist x |labels| rows; the majority pick is a rank window
     over that tiny aggregate, never over raw vectors."""
-    from pyspark.sql import Window
-
     cell = ivf_cell_expr(F.col(vec_col), centroids)
     per = (
         df.select(cell.alias("cell"), F.col(label_col).alias("lbl"))
         .groupBy("cell", "lbl")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("cell").orderBy(
-        F.col("n").desc(), F.col("lbl").asc()
-    )
-    top = (
-        per.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "cell",
-            F.col("lbl").alias("top_label"),
-            F.col("n").alias("top_n"),
-        )
+    top = top_x(per, "cell", F.col("n").desc(), 1, tiebreak_col="lbl").select(
+        "cell", F.col("lbl").alias("top_label"), F.col("n").alias("top_n")
     )
     tot = per.groupBy("cell").agg(
         F.sum("n").alias("n_vecs"), F.count(F.lit(1)).alias("n_labels")
@@ -523,14 +514,10 @@ def ivf_prototypes(
     unhealthy one is visible first in ``ivf_cells_hist``. No joins,
     no candidate explosion; cost is linear in the table."""
     staged = _best_cells(df, centroids, id_col, vec_col)
-    w = Window.partitionBy("cell").orderBy(
-        F.col("cdot").desc(), F.col(id_col).asc()
-    )
-    return (
-        staged.withColumn("proto_rank", F.row_number().over(w))
-        .filter(F.col("proto_rank") <= k)
-        .select("cell", "proto_rank", id_col, "cdot")
-    )
+    return top_x(
+        staged, "cell", F.col("cdot").desc(), k,
+        tiebreak_col=id_col, rank_col="proto_rank",
+    ).select("cell", "proto_rank", id_col, "cdot")
 
 
 def embedding_outliers(
@@ -648,10 +635,11 @@ def cosine_topk_multi(
     The query side is a tiny broadcast dim (|queries| rows); the big
     side streams once through a broadcast hash/nested-loop join, pair
     cosines run in the fold-exact Arrow kernel, and the per-query
-    top-k is a rank window partitioned by query id (bounded groups:
-    each query's partition ranks the candidate set; with AQE the
-    post-join shuffle is per-query-key and skew-free since every query
-    sees the same row count). Self-matches are excluded.
+    top-k is :func:`~hbase_gis_spark.operators.topx.top_x` grouped by
+    query id (bounded groups: each query's partition ranks the
+    candidate set; with AQE the post-join shuffle is per-query-key and
+    skew-free since every query sees the same row count). Self-matches
+    are excluded.
 
     Output: (query_id, vec_id, cosine, rnk) with rnk 1..k per query.
     """
@@ -666,12 +654,9 @@ def cosine_topk_multi(
         F.col(id_col),
         pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+    return top_x(
+        scored, "query_id", F.col("cosine").desc(), k,
+        tiebreak_col=id_col, rank_col="rnk",
     )
 
 
@@ -1096,8 +1081,8 @@ def ann_ivf_topk_multi(
     """Batched IVF retrieval: top-k for a SET of query vectors in one
     scan — cell assignment runs once per row, each query contributes
     only its ``nprobe`` probed cells (array_contains against the
-    query's broadcast probe list), and per-query ranking is a window
-    partitioned by query id.
+    query's broadcast probe list), and per-query ranking is
+    :func:`~hbase_gis_spark.operators.topx.top_x` grouped by query id.
 
     The amortization matters at scale: N separate IVF queries scan
     the (pruned) table N times; this shape streams it once and fans
@@ -1138,12 +1123,10 @@ def ann_ivf_topk_multi(
             pair_cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+    return top_x(
+        pairs, "query_id", F.col("cosine").desc(), k,
+        tiebreak_col=id_col, rank_col="rnk",
     )
-    return pairs.withColumn(
-        "rnk", F.row_number().over(w).cast("int")
-    ).filter(F.col("rnk") <= k)
 
 
 def ann_recall_report(

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hbase_gis_spark.operators.dedup import tokens
+from hbase_gis_spark.operators.topx import top_x
 
 # marker words per language; argmax with fixed precedence order breaks ties
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -343,13 +344,10 @@ def top_rare_terms(
         .filter(F.col("term") != "")
     )
     dfreq = posting.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("term").asc())
-    return (
-        posting.join(dfreq, "term")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("id").alias(id_col), "term", "df", "rnk")
-    )
+    return top_x(
+        posting.join(dfreq, "term"), "id", "df", k,
+        tiebreak_col="term", rank_col="rnk",
+    ).select(F.col("id").alias(id_col), "term", "df", "rnk")
 
 
 def tfidf_topk_terms(
@@ -397,14 +395,10 @@ def tfidf_topk_terms(
             ),
         )
     )
-    w = Window.partitionBy("id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("id").alias(id_col), "term", "tf", "doc_freq", "tfidf", "rnk")
-    )
+    return top_x(
+        scored, "id", F.col("tfidf").desc(), k,
+        tiebreak_col="term", rank_col="rnk",
+    ).select(F.col("id").alias(id_col), "term", "tf", "doc_freq", "tfidf", "rnk")
 
 
 def unigram_lm_score(

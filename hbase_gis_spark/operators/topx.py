@@ -10,34 +10,46 @@ Reference semantics:
 
 Spark-first: both are the canonical window-ranking shape —
 ``row_number() OVER (PARTITION BY ref ORDER BY ts)`` ≤ X. Catalyst
-plans a shuffle on the group key + in-partition sort; at scale this is
-one shuffle, skew-handled by AQE. No driver-side merging.
+plans a shuffle on the group key + in-partition sort, with a partial
+``WindowGroupLimit`` before the shuffle; at scale this is one shuffle,
+skew-handled by AQE. No driver-side merging.
+
+:func:`top_x` is the engine's one per-group cut: every "first k rows
+per group in this order" (per-doc top terms, per-query top-k
+neighbours, per-key latest version, per-node majority vote, keyed
+dedup) calls it with its order given as column names or sort Columns,
+so the order, the tie rule and the ``<= x`` predicate that Catalyst
+turns into ``WindowGroupLimit`` are written once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def top_x(
     df: DataFrame,
     ref_col: str,
-    ts_col: str,
+    ts_col: str | Column,
     x: int,
-    tiebreak_col: str | None = None,
+    tiebreak_col: str | Column | None = None,
     rank_col: str | None = None,
 ) -> DataFrame:
     """Per distinct ``ref_col`` value, the ``x`` rows with smallest
     ``ts_col`` (TopXEndpoint semantics).
 
-    ``tiebreak_col`` pins a total order under timestamp ties (the
-    reference's heap keeps an arbitrary one; oracle comparison needs
-    determinism). ``rank_col`` optionally keeps the rank in the output.
+    ``ts_col`` and ``tiebreak_col`` are column names, sorted ascending,
+    or sort Columns such as ``F.col("cosine").desc()``. ``tiebreak_col``
+    pins a total order under ``ts_col`` ties (the reference's heap
+    keeps an arbitrary one; oracle comparison needs determinism).
+    ``rank_col`` keeps the 1-based rank in the output under that name.
     """
-    order = [F.col(ts_col).asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
+    order = [
+        F.col(c).asc() if isinstance(c, str) else c
+        for c in (ts_col, tiebreak_col)
+        if c is not None
+    ]
     w = Window.partitionBy(ref_col).orderBy(*order)
     ranked = df.withColumn("__rn", F.row_number().over(w))
     out = ranked.filter(F.col("__rn") <= x)

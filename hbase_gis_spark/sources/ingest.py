@@ -21,11 +21,12 @@ via try_cast, mirroring the reference's NaN-on-parse-failure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_gis_spark.functions.geo import geohash_col
 from hbase_gis_spark.geo.planner import LAYOUT_ROLES, layout_metadata
+from hbase_gis_spark.operators.topx import top_x
 
 WIFI_COLUMNS = [
     "lon", "lat", "id", "name", "address", "city", "url", "phone", "type", "zip"
@@ -49,13 +50,7 @@ def _dedup_keyed(
     semantics (a later ``Put`` on the same rowkey overwrites,
     Ingest.java:78-83) — users replaying HBase ingest order need this
     mode for parity."""
-    direction = F.col(order).asc() if keep == "first" else F.col(order).desc()
-    w = Window.partitionBy(key).orderBy(direction)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_x(df, key, order if keep == "first" else F.col(order).desc(), 1)
 
 
 def ingest_points_tsv(

@@ -124,13 +124,11 @@ def dedup_events(
     return events.dropDuplicates(keys)
 
 
-def streaming_top_x_earliest(
-    events: DataFrame, x: int, group_col: str = "user_id"
-) -> DataFrame:
-    """Stateful streaming grouped top-X: per group, the x earliest
+def streaming_top_x_earliest(events: DataFrame, x: int) -> DataFrame:
+    """Stateful streaming grouped top-X: per ``user_id``, the x earliest
     events seen so far (ties broken by event_id), emitted incrementally.
 
-    State per group is a bounded (x rows) frame — the streaming
+    State per user is a bounded (x rows) frame — the streaming
     translation of the reference's per-group MinMaxPriorityQueue
     (TopXEndpoint.java:89-103). Emits each batch's new/changed top rows.
     """
@@ -164,11 +162,11 @@ def streaming_top_x_earliest(
 
     return (
         events.select(
-            group_col,
+            "user_id",
             "event_id",
             F.unix_micros(event_time("ts")).alias("ts"),
         )
-        .groupBy(group_col)
+        .groupBy("user_id")
         .applyInPandasWithState(
             fn,
             out_schema,

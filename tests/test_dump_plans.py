@@ -1,5 +1,7 @@
-"""tools/dump_plans.py resolves every query name before Spark starts."""
+"""tools/dump_plans.py resolves every query name before Spark starts and
+writes plans with their session ids masked."""
 
+import importlib.util
 import os
 import pathlib
 import subprocess
@@ -34,3 +36,46 @@ def test_dump_plans_lists_every_unknown_name_and_writes_nothing(tmp_path):
     assert "nope1" in out and "nope2" in out, out
     assert "_q_binned_limit" not in out, out
     assert not outdir.exists()
+
+
+def _dump_plans_module():
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", ROOT / "tools" / "dump_plans.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_mask_plan_replaces_session_ids_only():
+    """Two dumps of one plan from different sessions differ only in the
+    ids the session hands out; masking makes them equal text and keeps
+    every other number (operator ids, codegen ids, literals)."""
+    mask_plan = _dump_plans_module().mask_plan
+    a = (
+        "(1) Scan ExistingRDD [codegen id : 1]\n"
+        "Output [2]: [id#12L, v#13]\n"
+        "Arguments: [id#12L, v#13], MapPartitionsRDD[41] at "
+        "applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, "
+        "ExistingRDD, UnknownPartitioning(0)\n"
+        "(4) Exchange\n"
+        "Arguments: hashpartitioning(id#12L, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=207]\n"
+        "(5) Filter [codegen id : 2]\n"
+        "Condition : ((__rn#30 <= 5) AND (_common_expr_0#31 > 1.5))\n"
+    )
+    b = (
+        a.replace("#12L", "#980L").replace("#13", "#981")
+        .replace("RDD[41]", "RDD[7]").replace("plan_id=207", "plan_id=3")
+        .replace("#30", "#1002").replace("#31", "#1003")
+        .replace("_common_expr_0", "_common_expr_4")
+    )
+    assert a != b
+    assert mask_plan(a) == mask_plan(b)
+    m = mask_plan(a)
+    assert "#N" in m and "#12" not in m and "#N]" in m
+    assert "plan_id=N" in m and "RDD[N]" in m and "_common_expr_N" in m
+    for kept in ["(1) Scan", "codegen id : 1", "(5) Filter", "<= 5",
+                 "1.5", "hashpartitioning(id#N, 8)",
+                 "UnknownPartitioning(0)"]:
+        assert kept in m, kept

@@ -141,27 +141,31 @@ def test_knn_per_region_unmerged_shape(spark, cached):
 
 
 def test_topx_group_sizes(spark):
-    ev = load_table(spark, SF0001, "events")
-    x = 4
-    out = hgs.top_x(ev, "user_id", "ts", x, tiebreak_col="event_id")
-    sizes = out.groupBy("user_id").count().collect()
-    full = dict(ev.groupBy("user_id").count().collect())
-    for row in sizes:
-        assert row["count"] == min(x, full[row.user_id])
-    # every kept row's ts is <= the group's x-th smallest
-    ev_rows = ev.select("user_id", "ts", "event_id").collect()
+    """Names sort ascending; sort Columns (here both descending) are
+    taken as given. Each case matches a Python replay of the order."""
     import collections
 
+    ev = load_table(spark, SF0001, "events")
+    x = 4
+    full = dict(ev.groupBy("user_id").count().collect())
     by_group = collections.defaultdict(list)
-    for r in ev_rows:
+    for r in ev.select("user_id", "ts", "event_id").collect():
         by_group[r.user_id].append((r.ts, r.event_id))
-    kept = {(r.user_id, r.event_id) for r in out.collect()}
-    for uid, rows in by_group.items():
-        expect = set(uid for _ in range(1))  # placeholder to keep flake quiet
-        top = sorted(rows)[:x]
-        assert {(uid, eid) for _, eid in top} == {
-            (u, e) for (u, e) in kept if u == uid
-        }
+    cases = [
+        ("ts", "event_id", False),
+        (F.col("ts").desc(), F.col("event_id").desc(), True),
+    ]
+    for ts_col, tiebreak_col, reverse in cases:
+        out = hgs.top_x(ev, "user_id", ts_col, x, tiebreak_col=tiebreak_col)
+        sizes = out.groupBy("user_id").count().collect()
+        for row in sizes:
+            assert row["count"] == min(x, full[row.user_id])
+        kept = {(r.user_id, r.event_id) for r in out.collect()}
+        for uid, rows in by_group.items():
+            top = sorted(rows, reverse=reverse)[:x]
+            assert {(uid, eid) for _, eid in top} == {
+                (u, e) for (u, e) in kept if u == uid
+            }, (reverse, uid)
 
 
 def test_binned_limit_respects_caps(spark):

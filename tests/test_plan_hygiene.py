@@ -277,6 +277,80 @@ def test_no_partitionless_global_sort_windows():
     )
 
 
+_ROW_NUMBER_ALLOWED = {
+    # file basename -> (F.row_number() calls, reason). A per-group
+    # "first k rows in this order" cut is topx.top_x; every other
+    # row_number is a position or a rank that is kept, not cut on.
+    "topx.py": (1, "top_x: the engine's one per-group row_number <= x cut"),
+    "rank.py": (
+        3,
+        "sharded_ntile, sharded_ntiles and global_percentiles: "
+        "shard-local ranks plus the shard's prefix offset (global ranks)",
+    ),
+    "corpus.py": (
+        3,
+        "global_shuffle and curriculum_order number rows into a "
+        "permutation; winsorize picks the value at a computed rank",
+    ),
+    "dedup.py": (
+        3,
+        "sorted_neighborhood_pairs positions rows in the sorted key "
+        "order; dup_substring_spans and remove_dup_spans group runs "
+        "(pos - row_number)",
+    ),
+    "drift.py": (
+        2,
+        "psi_cuts picks the values at computed ranks; "
+        "global_quantile_cuts is a sharded global rank",
+    ),
+    "timeseries.py": (
+        3,
+        "cusum_days and changepoint_days count days into the running "
+        "sum; _bounded_rank_select picks the value at a computed rank",
+    ),
+    "funnel.py": (1, "position_attribution: touch position per user"),
+    "retrieval.py": (1, "rrf_fuse: rank within an arm for 1/(k + rank)"),
+    "textstats.py": (1, "ngram_coverage_curve: position on the curve"),
+    "__spark_entry__.py": (
+        3,
+        "grouped_median, inter_arrival_median and grouped_quantiles "
+        "pick the value at a computed rank",
+    ),
+}
+
+
+def test_row_number_only_for_positions_and_top_x():
+    """``row_number()`` filtered against ``k`` is a grouped top-X, and
+    the engine writes that cut once, in ``topx.top_x`` (order, tie
+    rule and the ``<= x`` predicate Catalyst turns into a partial
+    ``WindowGroupLimit``). AST count of ``F.row_number()`` per file
+    against the reasoned allowlist: a new hand-rolled cut fails here;
+    call top_x instead."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = sorted((root / "hbase_gis_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    counts: dict[str, int] = {}
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "row_number"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+            ):
+                counts[path.name] = counts.get(path.name, 0) + 1
+    allowed = {name: n for name, (n, _) in _ROW_NUMBER_ALLOWED.items()}
+    assert counts == allowed, (
+        f"F.row_number() per file {counts} != allowlist {allowed} — a "
+        f"per-group cut goes through operators.topx.top_x; a new "
+        f"position or rank use needs an allowlist entry with its reason"
+    )
+
+
 def test_round5_plan_shapes(spark):
     """Physical-plan pins for the round-5 operators: bounded top-k
     stays TakeOrderedAndProject (never a global sort), the orphan

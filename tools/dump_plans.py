@@ -6,11 +6,22 @@ its ``_q_...`` function. Every name is resolved before Spark starts; if
 any does not resolve, all of them are listed and nothing is written.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_PLANS_TAG (default r11).
+
+Dumps of two commits compare as text: ``mask_plan`` replaces the ids a
+session hands out (expression ids ``#123``/``#123L``, ``plan_id=``, the
+RDD ids of ``Scan ExistingRDD`` and ``_common_expr_N``), and the cache
+is cleared before each query is built, so a frame an earlier query
+cached cannot change a later plan. One difference stays: queries with
+several DISTINCT aggregates (``table_profile``, ``window_funnel``,
+``profile_diff``, ``dataset_card``, ``contamination_report``) order the
+projections of their ``Expand`` by what ran earlier in the session, so
+a reordered ``Expand`` there is confirmed by dumping the query alone.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 here = os.path.dirname(os.path.abspath(__file__))
@@ -28,6 +39,21 @@ def resolve(names: list[str], qs: dict) -> tuple[list[str], list[str]]:
         else:
             keys.append(key)
     return keys, unknown
+
+
+_SESSION_IDS = [
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+]
+
+
+def mask_plan(txt: str) -> str:
+    """``txt`` with every session-assigned id replaced by ``N``."""
+    for pat, repl in _SESSION_IDS:
+        txt = pat.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -56,8 +82,9 @@ def main() -> None:
         "formatted"
     )
     for name in keys:
+        spark.catalog.clearCache()
         df = qs[name](spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(mode)
+        txt = mask_plan(df._jdf.queryExecution().explainString(mode))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)
