@@ -1070,32 +1070,21 @@ def _q_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer balances by market segment — the exact twin of
     sketch_stats' approximate quantiles. Rank-based, so it is
     deterministic under ties and engine-portable (no interpolation
-    convention to match). The window sorts only within each segment;
-    at 100 TB the same shape holds because group count is bounded and
-    rows partition by segment."""
+    convention to match): one pick of rank.grouped_percentiles, whose
+    window sorts only within each segment and whose exchange on the
+    segment is the only shuffle."""
+    from hbase_gis_spark.operators.rank import grouped_percentiles
+
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
         "c_custkey",
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("bal_cents").asc(), F.col("c_custkey").asc()
-    )
-    ranked = c.select(
-        "c_mktsegment",
-        "bal_cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("c_mktsegment"))
-        .alias("n"),
-    )
-    return (
-        ranked.filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select(
-            "c_mktsegment",
-            F.col("n").alias("n_customers"),
-            F.col("bal_cents").alias("median_bal_cents"),
-        )
+    return grouped_percentiles(
+        c, ["c_mktsegment"], "bal_cents", {"median_bal_cents": (1, 2)},
+        tiebreak_col="c_custkey",
+    ).select(
+        "c_mktsegment", F.col("n").alias("n_customers"), "median_bal_cents"
     )
 
 
@@ -2090,9 +2079,11 @@ def _q_inter_arrival_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the later event's type — the activity-cadence profile behind
     session-gap tuning. Median is rank-selection (lower median at
     ceil(n/2)) partitioned by type — deterministic under ties,
-    engine-portable, never a global sort (the grouped_median shape:
-    user-partitioned lag window, then type-partitioned rank window —
-    both keyed, group count bounded)."""
+    engine-portable, never a global sort: a user-partitioned lag
+    window, then the grouped_median pick (rank.grouped_percentiles)
+    keyed by type — both keyed, group count bounded."""
+    from hbase_gis_spark.operators.rank import grouped_percentiles
+
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -2106,23 +2097,11 @@ def _q_inter_arrival_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         (F.col("us") - F.lag("us").over(uw)).alias("gap_us"),
-    ).filter(F.col("gap_us").isNotNull())
-    tw = Window.partitionBy("event_type").orderBy(
-        F.col("gap_us").asc(), F.col("event_id").asc()
     )
-    ranked = gaps.select(
-        "event_type",
-        "gap_us",
-        F.row_number().over(tw).alias("__rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .alias("__n"),
-    )
-    return ranked.filter(F.col("__rn") == F.expr("(__n + 1) div 2")).select(
-        "event_type",
-        F.col("__n").alias("n_gaps"),
-        F.col("gap_us").alias("median_gap_us"),
-    )
+    return grouped_percentiles(
+        gaps, ["event_type"], "gap_us", {"median_gap_us": (1, 2)},
+        tiebreak_col="event_id",
+    ).select("event_type", F.col("n").alias("n_gaps"), "median_gap_us")
 
 
 CHUNK_TOKENS, CHUNK_OVERLAP = 64, 16
@@ -2874,38 +2853,20 @@ def _q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value at rank ceil(q*n/100)), so results are deterministic under
     ties and engine-portable with no interpolation to match.
 
-    ONE window pass ranks each segment; the four quantile ranks filter
-    from the same ranked frame (Catalyst reuses the window exchange),
-    then a pivot-shaped conditional aggregation emits one row per
-    segment. Groups partition the sort; no global ordering."""
+    Four picks of rank.grouped_percentiles: ONE window pass ranks each
+    segment and one conditional aggregate on the same key emits a row
+    per segment. Groups partition the sort; no global ordering."""
+    from hbase_gis_spark.operators.rank import grouped_percentiles
+
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
         "c_custkey",
     )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("bal_cents").asc(), F.col("c_custkey").asc()
-    )
-    ranked = c.select(
-        "c_mktsegment",
-        "bal_cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("c_mktsegment"))
-        .alias("n"),
-    )
-    conds = [
-        F.max(
-            F.when(
-                F.col("rn") == F.expr(f"cast(ceil({q} * n / 100.0) as bigint)"),
-                F.col("bal_cents"),
-            )
-        ).alias(f"p{q}_cents")
-        for q in QUANT_QS
-    ]
-    return ranked.groupBy("c_mktsegment").agg(
-        F.max("n").alias("n_customers"), *conds
-    )
+    picks = {f"p{q}_cents": (q, 100) for q in QUANT_QS}
+    return grouped_percentiles(
+        c, ["c_mktsegment"], "bal_cents", picks, tiebreak_col="c_custkey"
+    ).select("c_mktsegment", F.col("n").alias("n_customers"), *picks)
 
 
 def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:

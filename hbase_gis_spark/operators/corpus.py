@@ -18,6 +18,7 @@ same determinism contract as its ingest dedup (Ingest.java:78-83).
 from __future__ import annotations
 
 import warnings
+from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -960,45 +961,33 @@ def winsorize(
     step before a numeric column feeds model features or averages that
     one fat-finger row would poison.
 
-    Quantile convention: value at rank ceil(p * n) under ascending
-    order (the repo's grouped_median/grouped_quantiles lower-quantile
-    rule) — deterministic under ties (the value at a rank is the tied
-    value whatever order ties enumerate), integer-exact when the
-    column is integer, no interpolation to match across engines.
+    Quantile convention: value at rank ceil(p * n) (``rank.cut_rank``)
+    with ``p`` read as the decimal it prints as (0.07 is 7/100) and
+    ``n`` the group's non-NULL, non-NaN values; NULL/NaN values come
+    out unchanged, a NULL key is one group, and ``p_lo = 0`` (rank 0,
+    no bound) clamps like rank 1. Deterministic under ties, exact,
+    no interpolation to match across engines.
 
-    Scale shape: ONE window exchange per group computes rank and group
-    size; the per-group bounds collapse to a |groups|-row dim
-    (conditional aggregate) that joins back BROADCAST; the clamp is
-    map-only. Groups partition the sort — no global ordering anywhere.
+    Scale shape: the bounds are a two-pick
+    ``rank.grouped_percentiles`` (ONE window exchange) — a
+    |groups|-row dim that joins back BROADCAST; the clamp is map-only.
     Output: input columns + ``win_<value_col>``.
     """
-    w = Window.partitionBy(group_col).orderBy(F.col(value_col).asc())
-    ranked = df.select(
+    from hbase_gis_spark.operators.rank import grouped_percentiles, rankable
+
+    lo, hi = Fraction(str(p_lo)), Fraction(str(p_hi))
+    picks = {"__lo": lo.as_integer_ratio(), "__hi": hi.as_integer_ratio()}
+    bounds = grouped_percentiles(df, [group_col], value_col, picks).select(
+        F.col(group_col).alias("__g"), "__lo", "__hi"
+    )
+    v = F.col(value_col)
+    clamped = F.when(
+        rankable(df, value_col), F.least(F.greatest(v, "__lo"), "__hi")
+    ).otherwise(v)
+    on = F.col(group_col).eqNullSafe(F.col("__g"))
+    return df.join(F.broadcast(bounds), on, "left").select(
         *[F.col(c) for c in df.columns],
-        F.row_number().over(w).alias("__rnk"),
-        F.count(F.lit(1)).over(
-            Window.partitionBy(group_col)
-        ).alias("__n"),
-    )
-    lo_rank = F.greatest(F.ceil(F.lit(p_lo) * F.col("__n")), F.lit(1))
-    hi_rank = F.ceil(F.lit(p_hi) * F.col("__n"))
-    bounds = (
-        ranked.select(
-            F.col(group_col).alias("__g"),
-            F.when(F.col("__rnk") == lo_rank, F.col(value_col)).alias("__lo_v"),
-            F.when(F.col("__rnk") == hi_rank, F.col(value_col)).alias("__hi_v"),
-        )
-        .groupBy("__g")
-        .agg(F.max("__lo_v").alias("__lo"), F.max("__hi_v").alias("__hi"))
-    )
-    clamped = F.least(F.greatest(F.col(value_col), F.col("__lo")), F.col("__hi"))
-    return (
-        ranked.drop("__rnk", "__n")
-        .join(F.broadcast(bounds), F.col(group_col) == F.col("__g"))
-        .select(
-            *[F.col(c) for c in df.columns],
-            clamped.alias(f"win_{value_col}"),
-        )
+        clamped.alias(f"win_{value_col}"),
     )
 
 

@@ -386,26 +386,19 @@ def psi_cuts(
     REUSABLE half of :func:`value_psi`. Persist this next to the
     reference snapshot and every later cohort (batch or stream) bins
     against the same boundaries, the precondition for comparable PSI
-    series over time."""
-    w = Window.partitionBy("__k").orderBy(F.col("__v").asc())
-    ranked = _psi_prep(ref, key_col, value_col).select(
-        "__k",
-        "__v",
-        F.row_number().over(w).alias("__r"),
-        F.count(F.lit(1)).over(Window.partitionBy("__k")).alias("__n"),
+    series over time. One boundary per DISTINCT rank ⌈i·n/n_bins⌉
+    (``rank.cut_rank``) over ``rank.grouped_ranks``' frame: with
+    n < n_bins several i share a rank and the array is shorter."""
+    from hbase_gis_spark.operators.rank import cut_rank, grouped_ranks
+
+    prepped = _psi_prep(ref, key_col, value_col)
+    ranked = grouped_ranks(prepped, ["__k"], "__v", None)
+    is_cut = F.exists(
+        F.sequence(F.lit(1), F.lit(n_bins - 1)),
+        lambda i: F.col("__r") == cut_rank(F.col("__n"), i, n_bins),
     )
     return (
-        ranked.withColumn(
-            "__is_cut",
-            # ceil(i*N/nb) written as (i*N + nb-1) div nb: operands stay
-            # positive, where Spark's truncating `div` and DuckDB's
-            # flooring `//` agree
-            F.expr(
-                f"exists(sequence(1, {n_bins - 1}), "
-                f"i -> __r = ((i * __n + {n_bins - 1}) div {n_bins}))"
-            ),
-        )
-        .filter(F.col("__is_cut"))
+        ranked.filter(is_cut)
         .groupBy("__k")
         .agg(F.array_sort(F.collect_list("__v")).alias("__cuts"))
     )
@@ -612,14 +605,18 @@ def global_quantile_cuts(
     with no arithmetic at all — pure selection.
 
     Output: (cut_idx 1..n_bins-1, cut_value) with
-    cut rank = ceil(i*N/n_bins) — the same ceil-rank convention as
-    psi_cuts.
+    cut rank = ceil(i*N/n_bins) (``rank.cut_rank``) — the same rank
+    rule as psi_cuts.
 
     Cost: one range shuffle + one same-size pid-clustered window
     shuffle + a |shards|-row aggregate; compare a naive
     ``row_number() OVER (ORDER BY v)``, which is a single-task sort
     of the whole table."""
-    from hbase_gis_spark.operators.rank import range_sharded, shard_case_sql
+    from hbase_gis_spark.operators.rank import (
+        cut_rank,
+        range_sharded,
+        shard_case_sql,
+    )
 
     prepped = df.select(
         F.col(value_col).cast("double").alias("__v")
@@ -633,10 +630,7 @@ def global_quantile_cuts(
     w = Window.partitionBy("__shard").orderBy(F.col("__v").asc())
     # cut rank -> cut index as a plan-literal CASE; the highest i wins
     # a rank that several cuts share, and ranks at no cut map to 0
-    cut_ranks = {
-        (i * total + n_bins - 1) // n_bins: i
-        for i in range(1, n_bins)
-    }
+    cut_ranks = {cut_rank(total, i, n_bins): i for i in range(1, n_bins)}
     cut_idx = shard_case_sql(sorted(cut_ranks.items()), "__gr")
     return (
         sharded.select((F.row_number().over(w) + off).alias("__gr"), "__v")
@@ -1485,8 +1479,8 @@ def conformal_coverage(
 
     Engine-exact: the split is the md5 ticket discipline
     (``md5('{salt}:id') % 2``), scores are used as exact BIGINTs
-    (quantize first if fractional), ``q_index = ((n_cal + 1) *
-    (1000 - alpha_milli) + 999) div 1000`` (exact ceiling), and the
+    (quantize first if fractional), ``q_index`` is ``rank.cut_rank``
+    of (1000 - alpha_milli)/1000 among n_cal + 1, and the
     threshold is the min score whose cumulative calibration count
     reaches q_index. NULL scores are dropped on both halves (stated
     convention).
@@ -1504,6 +1498,7 @@ def conformal_coverage(
     if not 0 < alpha_milli < 1000:
         raise ValueError("alpha_milli must be in (0, 1000)")
     from hbase_gis_spark.operators.corpus import content_hash
+    from hbase_gis_spark.operators.rank import cut_rank
 
     scored = df.filter(F.col(score_col).isNotNull()).select(
         F.col(score_col).cast("bigint").alias("__s"),
@@ -1518,9 +1513,7 @@ def conformal_coverage(
         F.sum("__cnt").cast("bigint").alias("n_cal")
     ).select(
         "n_cal",
-        F.expr(
-            f"((n_cal + 1) * {1000 - int(alpha_milli)} + 999) div 1000"
-        )
+        cut_rank(F.col("n_cal") + 1, 1000 - int(alpha_milli), 1000)
         .cast("bigint")
         .alias("q_index"),
     )

@@ -1,41 +1,36 @@
-"""Scale-safe EXACT global ranking: range shards + per-shard ranks +
-a bounded driver prefix, never a single-task global sort.
+"""EXACT ranks and rank picks, never a single-task global sort.
 
-The classic scale-killer is ``row_number() OVER (ORDER BY v)`` — one
-task sorts the whole table. Every helper here replaces that shape
-with the machinery drift.global_quantile_cuts introduced (VERDICT r4
-next-round #2): the order-column domain is split into ``n_shards``
-ordered, DISJOINT value ranges (equal keys land in one shard), each
-shard ranks locally in parallel, and the true global rank is the
-local rank plus the prefix-sum of earlier shards' row counts — a
-driver-side prefix over ``n_shards`` integers, constant in table
-size (the token_budget_sample bounded-collect pattern). That offset
-step is written once: :func:`shard_offset_col` turns a per-shard size
-map into a plan-literal CASE over the shard id
-(:func:`shard_case_sql`), so no offsets frame is built or joined —
-the same text the ``sqlapi`` statements embed, and the form every
-sharded rank or cumulative sum in drift, corpus and dedup uses.
-
+Global ranks: ``row_number() OVER (ORDER BY v)`` sorts the whole
+table in one task. Here the order column's domain is split into
+``n_shards`` ordered, DISJOINT value ranges (equal keys share a
+shard), each shard ranks locally in parallel, and the global rank is
+the local rank plus the row count of earlier shards: a driver-side
+prefix over ``n_shards`` integers, constant in table size, written
+once as a plan-literal CASE over the shard id
+(:func:`shard_offset_col` over :func:`shard_case_sql`, the text the
+``sqlapi`` statements embed), so no offsets frame is built or joined.
 Consumers: :func:`sharded_ntile` (rfm_segments, balance_deciles),
-:func:`global_percentiles` (sketch_stats, mad_anomalies),
-:func:`global_half_ranks` (spearman_corr, shuffle_audit), and
-:func:`quantile_transform` — all previously global single-task
-``Window.orderBy`` windows, now banned repo-wide by the AST check in
-tests/test_plan_hygiene.py.
+:func:`global_percentiles` (sketch_stats, theil_sen_slope),
+:func:`global_half_ranks` (spearman_corr, shuffle_audit),
+:func:`quantile_transform`, and every sharded rank or cumulative sum
+in drift, corpus and dedup. Partition-less ``Window.orderBy`` is
+banned elsewhere by the AST check in tests/test_plan_hygiene.py.
 
-Determinism & fault tolerance (VERDICT r5 next-round #2): shard ids
-derive from BOUNDARY LITERALS baked into the plan — n_shards-1 cut
-values collected ONCE driver-side (a single bounded
-``approxQuantile`` sketch pass) and frozen as plan constants. A
-retried task re-evaluates ``value vs literals`` and lands every row
-in the same shard, so no pinning materialization is needed: the old
-implementation pinned a nondeterministic ``spark_partition_id()``
-with an eager ``localCheckpoint()``, which truncated lineage (a lost
-executor killed the job instead of recomputing) and double-stored a
-fact-table-sized frame. Output VALUES are boundary-independent —
-offsets correct every shard's ranks to the same global ranks
-regardless of where the cuts fall — so balance (not correctness)
-is all the sketch accuracy buys.
+Rank picks: every "value at rank ⌈q·n⌉" in the engine takes its rank
+from :func:`cut_rank`. :func:`grouped_percentiles` is the per-group
+twin of :func:`global_percentiles` (grouped_median,
+grouped_quantiles, inter_arrival_median, winsorize, mad_anomalies);
+psi_cuts filters its ranked frame (:func:`grouped_ranks`) at every
+cut rank.
+
+Determinism & fault tolerance: shard ids derive from n_shards-1
+BOUNDARY LITERALS, collected once by a bounded ``approxQuantile``
+sketch pass and frozen into the plan, so a retried task lands every
+row in the same shard with no pinning materialization (an eager
+``localCheckpoint`` of a ``spark_partition_id()`` would truncate
+lineage and double-store the frame). Offsets re-anchor every shard's
+ranks wherever the cuts fall: sketch accuracy buys balance, not
+correctness.
 
 Tie-mass skew contract: equal keys MUST share a shard (the tie-count
 identity in :func:`global_half_ranks` needs it), so a heavily
@@ -44,24 +39,18 @@ one shard and degenerates back toward a single-task sort. The
 bounded shard-size collect doubles as the guard: when the fattest
 shard holds more than ``max(25%, 4/n_shards)`` of the rows a
 ``RuntimeWarning`` names the column and the fraction (pinned in
-tests/test_round5_ops.py). The fix at that point is upstream —
-rank a finer quantization or add a tiebreak column.
+tests/test_round5_ops.py). Rank a finer quantization or add a
+tiebreak column.
 
-Overflow bound: boundary literals are chosen via a double-precision
-sketch, so integral order columns beyond 2**53 could see cast
-round-trips disagree with native ordering near a cut. Ranked columns
-in this repo are milli/cent units << 2**53; the guard is documented
-here rather than paid for per row.
+Overflow bound: boundaries come from a double sketch, so integral
+order columns beyond 2**53 could disagree with native ordering near
+a cut; ranked columns here are milli/cent units << 2**53.
 
-Persist/release policy (ADVICE r11 #4): operator-level persists across
-the repo (drift.spearman_corr's narrow two-column projection, plus the
-always-on narrow persists in dedup/similarity/textstats) are
-lineage-kept MEMORY_AND_DISK frames that the operator cannot unpersist
-itself — the returned DataFrame still reads them lazily. Release is
-the caller's session lifecycle: ``spark.catalog.clearCache()`` between
-units of work (bench.py does this before every timed query), or the
-ContextCleaner when the frames are GC'd. Long-lived sessions composing
-many operators should clear between pipelines.
+Persists: operator-level persists (drift.spearman_corr, dedup,
+similarity, textstats) stay lineage-kept because the returned
+DataFrame reads them lazily; release is the caller's
+``spark.catalog.clearCache()`` between units of work (bench.py
+clears before every timed query) or the ContextCleaner.
 """
 
 from __future__ import annotations
@@ -529,6 +518,28 @@ def sharded_ntiles(
     return out.drop(*shard_cols)
 
 
+def cut_rank(n, num, den: int):
+    """The 1-based rank ⌈num·n/den⌉, written once as
+    ``(num*n + den-1) div den``: the operands are never negative, so
+    Python ``//``, Spark ``div`` and DuckDB ``//`` agree. ``n`` and
+    ``num`` are ints (a plan-literal rank) or Columns."""
+    top = num * n + (den - 1)
+    if isinstance(top, Column):
+        return F.call_function("div", top, F.lit(den))
+    return top // den
+
+
+def _picks(rank_col: str, n, value_col: str, picks: dict) -> list[Column]:
+    """Per ``name: (num, den)``, the value at rank ``cut_rank(n, num,
+    den)`` as a conditional aggregate: a rank holds one row."""
+    return [
+        F.max(
+            F.when(F.col(rank_col) == cut_rank(n, num, den), F.col(value_col))
+        ).alias(name)
+        for name, (num, den) in picks.items()
+    ]
+
+
 def global_percentiles(
     df: DataFrame,
     value_col: str,
@@ -576,19 +587,59 @@ def global_percentiles(
     ranked = sharded.select(
         (F.row_number().over(w) + off).alias("__gr"), "__v"
     )
-    # ceil(num*N/den) as (num*N + den-1) div den: positive operands,
-    # identical on Spark `div` and DuckDB `//`
-    return ranked.agg(
-        *[
-            F.max(
-                F.when(
-                    F.col("__gr") == (num * total + den - 1) // den,
-                    F.col("__v"),
-                )
-            ).alias(name)
-            for name, (num, den) in percentiles.items()
-        ]
+    return ranked.agg(*_picks("__gr", total, "__v", percentiles))
+
+
+def rankable(df: DataFrame, value_col: str) -> Column:
+    """Rows whose ``value_col`` is ranked: not NULL, and not NaN."""
+    v = F.col(value_col)
+    if dict(df.dtypes)[value_col] in ("float", "double"):
+        return v.isNotNull() & ~F.isnan(v)
+    return v.isNotNull()
+
+
+def grouped_ranks(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    tiebreak_col: str | None,
+) -> DataFrame:
+    """(``group_cols``, ``value_col``, ``__r`` = row number in
+    ``(value, tiebreak)`` order, ``__n`` = group size) of the
+    :func:`rankable` rows, from ONE window: its exchange is the only
+    shuffle. No ``group_cols`` ranks in one task — calendar-bounded
+    frames only (mad_anomalies); fact scale is global_percentiles."""
+    order = [F.asc(c) for c in (value_col, tiebreak_col) if c is not None]
+    if group_cols:
+        w = Window.partitionBy(*group_cols).orderBy(*order)
+    else:
+        w = Window.orderBy(*order)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return df.filter(rankable(df, value_col)).select(
+        *group_cols,
+        value_col,
+        F.row_number().over(w).alias("__r"),
+        F.count(F.lit(1)).over(whole).alias("__n"),
     )
+
+
+def grouped_percentiles(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    picks: dict[str, tuple[int, int]],
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """One row per group holding a ranked value: ``group_cols``, ``n``
+    and, per ``name: (num, den)``, the value (type kept) at rank
+    :func:`cut_rank` ⌈num·n/den⌉ — NULL for rank 0. One shuffle:
+    :func:`grouped_ranks` plus a conditional aggregate."""
+    ranked = grouped_ranks(df, group_cols, value_col, tiebreak_col)
+    out = ranked.groupBy(*group_cols).agg(
+        F.max("__n").alias("n"), *_picks("__r", F.col("__n"), value_col, picks)
+    )
+    # a global aggregate has a row even when nothing was ranked
+    return out if group_cols else out.filter(F.col("n").isNotNull())
 
 
 def global_half_ranks(

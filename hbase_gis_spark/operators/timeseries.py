@@ -237,31 +237,6 @@ def weekday_profile(
     )
 
 
-def _bounded_rank_select(df, value_col: str, num: int, den: int):
-    """EXACT value at global rank ceil(num*N/den) of a DIM-BOUNDED
-    frame (|days| / calendar scale): one partition-less rank window —
-    allowlisted in tests/test_plan_hygiene.py under the
-    calendar-bounded argument; NEVER feed a fact-scale frame here,
-    that is rank.global_percentiles' job. NULL/NaN-free integer input
-    by contract. Lazy 1-row output (no driver action)."""
-    w = Window.orderBy(F.col("__v").asc())
-    tot = Window.partitionBy()
-    return (
-        df.select(F.col(value_col).alias("__v"))
-        .filter(F.col("__v").isNotNull())
-        .select(
-            "__v",
-            F.row_number().over(w).alias("__r"),
-            F.count(F.lit(1)).over(tot).alias("__n"),
-        )
-        .filter(
-            F.col("__r")
-            == F.expr(f"({num} * __n + {den - 1}) div {den}")
-        )
-        .select(F.col("__v").alias("__sel"))
-    )
-
-
 def mad_anomalies(
     days: DataFrame,
     day_col: str = "day",
@@ -276,26 +251,25 @@ def mad_anomalies(
     median barely moves).
 
     FULLY integer-exact — unusual for an anomaly detector: both the
-    median and the MAD are rank SELECTIONS at ceil(N/2) via
-    rank.global_percentiles (range shards + bounded driver prefix,
-    never a single-task sort, no arithmetic on the selected values),
-    and the flag compares 1000*|x - med| against k_milli*MAD in
-    BIGINTs. Output: every day with (value, deviation, median, mad,
-    is_anomaly).
+    median and the MAD are rank SELECTIONS at ceil(N/2) (no arithmetic
+    on the selected values), and the flag compares 1000*|x - med|
+    against k_milli*MAD in BIGINTs. Output: every day with (value,
+    deviation, median, mad, is_anomaly).
 
     Scale shape: the input is already a |days|-sized aggregate
     (calendar-bounded by contract — the daily_rolling allowlist
-    argument), so both selections run as ONE bounded rank window via
-    :func:`_bounded_rank_select`, lazily, with no driver round-trips
-    — round 6 replaced two eager sharded selections that paid 2
-    boundary sketches + 2 size collects to rank a few hundred rows.
-    Rank a FACT-scale column with rank.global_percentiles instead."""
+    argument), so each selection is ``rank.grouped_percentiles`` with
+    no group columns: ONE rank window, lazily, with no driver
+    round-trips. Rank a FACT-scale column with
+    rank.global_percentiles instead."""
+    from hbase_gis_spark.operators.rank import grouped_percentiles
+
     vals = days.select(
         F.col(day_col).alias("day"),
         F.col(value_col).cast("bigint").alias("value"),
     )
-    med = _bounded_rank_select(vals, "value", 1, 2).select(
-        F.col("__sel").cast("bigint").alias("__med")
+    med = grouped_percentiles(vals, [], "value", {"__med": (1, 2)}).select(
+        "__med"
     )
     devs = vals.crossJoin(F.broadcast(med)).select(
         "day",
@@ -303,8 +277,8 @@ def mad_anomalies(
         F.abs(F.col("value") - F.col("__med")).alias("deviation"),
         "__med",
     )
-    mad = _bounded_rank_select(devs, "deviation", 1, 2).select(
-        F.col("__sel").cast("bigint").alias("__mad")
+    mad = grouped_percentiles(devs, [], "deviation", {"__mad": (1, 2)}).select(
+        "__mad"
     )
     return devs.crossJoin(F.broadcast(mad)).select(
         "day",

@@ -240,7 +240,8 @@ def global_percentiles_sql(
 ) -> str:
     """One-row exact rank-selection percentiles for ``spark.sql`` —
     the SQL twin of ``rank.global_percentiles`` (NULL/NaN dropped,
-    value at global rank ceil(num*N/den) per requested name). The
+    value at global rank ``rank.cut_rank`` ceil(num*N/den) per
+    requested name). The
     requested ranks are plan literals, so selection is a conditional
     aggregate — no join.
 
@@ -248,13 +249,15 @@ def global_percentiles_sql(
     frozen from the view AT GENERATION TIME — generate immediately
     before executing; the text is a snapshot statement, stale data
     silently mis-ranks."""
+    from hbase_gis_spark.operators.rank import cut_rank
+
     val = f"CAST({value_expr} AS DOUBLE)"
     where = f"{val} IS NOT NULL AND NOT isnan({val})"
     shard, off, total = _sharded_plan_parts(
         spark, view, val, n_shards, where_sql=where
     )
     sels = ", ".join(
-        f"max(CASE WHEN __gr = {(num * total + den - 1) // den} "
+        f"max(CASE WHEN __gr = {cut_rank(total, num, den)} "
         f"THEN __v END) AS {name}"
         for name, (num, den) in percentiles.items()
     )

@@ -63,19 +63,25 @@ def test_mask_plan_replaces_session_ids_only():
         "[plan_id=207]\n"
         "(5) Filter [codegen id : 2]\n"
         "Condition : ((__rn#30 <= 5) AND (_common_expr_0#31 > 1.5))\n"
+        "(6) Filter [codegen id : 2]\n"
+        "Condition : exists(sequence(1, 9, None, Some(UTC)), "
+        "lambdafunction((__r#32 = (lambda i_226#33 * 7)), "
+        "lambda i_226#33, false))\n"
     )
     b = (
         a.replace("#12L", "#980L").replace("#13", "#981")
         .replace("RDD[41]", "RDD[7]").replace("plan_id=207", "plan_id=3")
         .replace("#30", "#1002").replace("#31", "#1003")
         .replace("_common_expr_0", "_common_expr_4")
+        .replace("i_226", "i_301")
     )
     assert a != b
     assert mask_plan(a) == mask_plan(b)
     m = mask_plan(a)
     assert "#N" in m and "#12" not in m and "#N]" in m
     assert "plan_id=N" in m and "RDD[N]" in m and "_common_expr_N" in m
+    assert "lambda i_N#N" in m
     for kept in ["(1) Scan", "codegen id : 1", "(5) Filter", "<= 5",
-                 "1.5", "hashpartitioning(id#N, 8)",
+                 "1.5", "hashpartitioning(id#N, 8)", "sequence(1, 9,",
                  "UnknownPartitioning(0)"]:
         assert kept in m, kept

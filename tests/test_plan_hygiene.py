@@ -218,13 +218,18 @@ _GLOBAL_WINDOW_ALLOWED = {
         "TakeOrderedAndProject",
     ),
     "timeseries.py": (
-        4,
-        "cumulative_users running sum, _bounded_rank_select rank "
-        "selection, seasonal_decompose_daily's centered moving "
-        "average, and rolling_corr's trailing frame — all over "
-        "pre-aggregated per-DAY frames (|days| rows, "
-        "calendar-bounded — the daily_rolling argument; fact-scale "
-        "ranking stays in rank.global_percentiles)",
+        3,
+        "cumulative_users running sum, seasonal_decompose_daily's "
+        "centered moving average, and rolling_corr's trailing frame — "
+        "all over pre-aggregated per-DAY frames (|days| rows, "
+        "calendar-bounded — the daily_rolling argument)",
+    ),
+    "rank.py": (
+        1,
+        "grouped_ranks with no group columns: mad_anomalies' median "
+        "and MAD picks over its pre-aggregated per-DAY frame (|days| "
+        "rows, calendar-bounded — the daily_rolling argument; "
+        "fact-scale ranking stays in rank.global_percentiles)",
     ),
     "__spark_entry__.py": (
         1,
@@ -279,18 +284,21 @@ def test_no_partitionless_global_sort_windows():
 
 _ROW_NUMBER_ALLOWED = {
     # file basename -> (F.row_number() calls, reason). A per-group
-    # "first k rows in this order" cut is topx.top_x; every other
-    # row_number is a position or a rank that is kept, not cut on.
+    # "first k rows in this order" cut is topx.top_x, a per-group
+    # "value at rank ceil(q*n)" is rank.grouped_percentiles; every
+    # other row_number is a position or a rank that is kept.
     "topx.py": (1, "top_x: the engine's one per-group row_number <= x cut"),
     "rank.py": (
-        3,
+        4,
         "sharded_ntile, sharded_ntiles and global_percentiles: "
-        "shard-local ranks plus the shard's prefix offset (global ranks)",
+        "shard-local ranks plus the shard's prefix offset (global "
+        "ranks); grouped_ranks: the one per-group rank that "
+        "grouped_percentiles and psi_cuts pick cut_rank values from",
     ),
     "corpus.py": (
-        3,
+        2,
         "global_shuffle and curriculum_order number rows into a "
-        "permutation; winsorize picks the value at a computed rank",
+        "permutation",
     ),
     "dedup.py": (
         3,
@@ -298,24 +306,15 @@ _ROW_NUMBER_ALLOWED = {
         "order; dup_substring_spans and remove_dup_spans group runs "
         "(pos - row_number)",
     ),
-    "drift.py": (
-        2,
-        "psi_cuts picks the values at computed ranks; "
-        "global_quantile_cuts is a sharded global rank",
-    ),
+    "drift.py": (1, "global_quantile_cuts is a sharded global rank"),
     "timeseries.py": (
-        3,
+        2,
         "cusum_days and changepoint_days count days into the running "
-        "sum; _bounded_rank_select picks the value at a computed rank",
+        "sum",
     ),
     "funnel.py": (1, "position_attribution: touch position per user"),
     "retrieval.py": (1, "rrf_fuse: rank within an arm for 1/(k + rank)"),
     "textstats.py": (1, "ngram_coverage_curve: position on the curve"),
-    "__spark_entry__.py": (
-        3,
-        "grouped_median, inter_arrival_median and grouped_quantiles "
-        "pick the value at a computed rank",
-    ),
 }
 
 
@@ -323,9 +322,11 @@ def test_row_number_only_for_positions_and_top_x():
     """``row_number()`` filtered against ``k`` is a grouped top-X, and
     the engine writes that cut once, in ``topx.top_x`` (order, tie
     rule and the ``<= x`` predicate Catalyst turns into a partial
-    ``WindowGroupLimit``). AST count of ``F.row_number()`` per file
-    against the reasoned allowlist: a new hand-rolled cut fails here;
-    call top_x instead."""
+    ``WindowGroupLimit``). Likewise a per-group pick of the value at
+    rank ⌈q·n⌉ is written once, in ``rank.grouped_percentiles``. AST
+    count of ``F.row_number()`` per file against the reasoned
+    allowlist: a new hand-rolled cut or pick fails here; call top_x
+    or grouped_percentiles instead."""
     import ast
     import pathlib
 

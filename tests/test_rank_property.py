@@ -2,9 +2,14 @@
 rank machinery — the round-6 rewrite of operators/rank.py. Each
 property compares against a brute-force python oracle on arbitrary
 small integer multisets (ties, negatives, constants, singletons), the
-shapes most likely to break shard-boundary arithmetic."""
+shapes most likely to break shard-boundary arithmetic. The grouped
+rank picks (grouped_percentiles, psi_cuts, winsorize) are checked
+against an exact Fraction replay of the rank ⌈num·n/den⌉."""
 
-from hypothesis import HealthCheck, given, settings
+import math
+from fractions import Fraction
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -168,3 +173,118 @@ def test_snm_lead_carry_matches_join(spark, vals, window, n_shards):
         for b in order[i + 1 : i + window]
     )
     assert got == want
+
+
+def _ceil_rank(n: int, q: Fraction) -> int:
+    """⌈q·n⌉ in exact rationals — the replay the engine's integer
+    ``(num*n + den-1) div den`` rule is checked against."""
+    return math.ceil(q * n)
+
+
+def _is_nan(v) -> bool:
+    return v is not None and v != v
+
+
+# (group, value) with ties (values 0..5), NULL and NaN, up to 4 groups
+# (one of them the NULL key), so groups of one row, groups smaller than
+# n_bins and groups holding only NULL/NaN values all occur
+ROWS = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+        st.one_of(
+            st.integers(min_value=0, max_value=5).map(float),
+            st.none(),
+            st.just(float("nan")),
+        ),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+PICKS = {"p50": (1, 2), "p07": (7, 100), "p55": (55, 100), "p90": (9, 10)}
+
+_RANK_SETTINGS = settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+
+
+@given(
+    rows=ROWS,
+    n_bins=st.sampled_from([2, 3, 4, 10]),
+    band=st.sampled_from([(0.07, 0.55), (0.05, 0.95), (0.0, 0.9), (0.5, 0.5)]),
+)
+@example(rows=[(0, 1.0)], n_bins=10, band=(0.07, 0.55))
+@example(
+    rows=[(0, 2.0), (0, 2.0), (0, None), (0, float("nan")), (1, 3.0),
+          (None, None)],
+    n_bins=4,
+    band=(0.0, 0.9),
+)
+@_RANK_SETTINGS
+def test_grouped_rank_picks_match_exact_replay(spark, rows, n_bins, band):
+    """grouped_percentiles, psi_cuts and winsorize pick the value at
+    rank ⌈num·n/den⌉ of each group's non-NULL, non-NaN values, with n
+    counting only those values, exactly as a Fraction replay does:
+    named picks per group, one psi boundary per distinct cut rank,
+    and winsorize bounds with NULL/NaN values passed through and
+    every row (the NULL key's too) returned once."""
+    from hbase_gis_spark.operators.corpus import winsorize
+    from hbase_gis_spark.operators.drift import psi_cuts
+    from hbase_gis_spark.operators.rank import grouped_percentiles
+
+    data = [(i, None if g is None else f"g{g}", v) for i, (g, v) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id bigint, g string, v double")
+    ranked = {}
+    for _, g, v in data:
+        ranked.setdefault(g, [])
+        if v is not None and not _is_nan(v):
+            ranked[g].append(v)
+    ranked = {g: sorted(vs) for g, vs in ranked.items() if vs}
+
+    got = {
+        r.g: (r.n, *(r[k] for k in PICKS))
+        for r in grouped_percentiles(
+            df, ["g"], "v", PICKS, tiebreak_col="id"
+        ).collect()
+    }
+    want = {
+        g: (
+            len(s),
+            *(s[_ceil_rank(len(s), Fraction(a, b)) - 1] for a, b in PICKS.values()),
+        )
+        for g, s in ranked.items()
+    }
+    assert got == want
+
+    got = {
+        r["__k"]: list(r["__cuts"])
+        for r in psi_cuts(df, "g", "v", n_bins).collect()
+    }
+    want = {
+        g: sorted(
+            s[k - 1]
+            for k in {_ceil_rank(len(s), Fraction(i, n_bins)) for i in range(1, n_bins)}
+        )
+        for g, s in ranked.items()
+    }
+    assert got == want
+
+    p_lo, p_hi = band
+    got = {
+        r.id: r.win_v
+        for r in winsorize(df, "v", "g", p_lo=p_lo, p_hi=p_hi).collect()
+    }
+    want = {}
+    for i, g, v in data:
+        if v is None or _is_nan(v):
+            want[i] = v
+            continue
+        s = ranked[g]
+        lo = s[max(1, _ceil_rank(len(s), Fraction(str(p_lo)))) - 1]
+        hi = s[_ceil_rank(len(s), Fraction(str(p_hi))) - 1]
+        want[i] = min(max(v, lo), hi)
+    assert {i: ("nan" if _is_nan(v) else v) for i, v in got.items()} == {
+        i: ("nan" if _is_nan(v) else v) for i, v in want.items()
+    }

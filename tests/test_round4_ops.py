@@ -325,6 +325,27 @@ def test_winsorize_hand_case(spark):
     assert got[8] == 8 and got[10] == 8
     assert got[100] == 7  # singleton group: lo == hi == the value
 
+    # p is the decimal it prints as: 0.07 * 100 is 7.000000000000001 in
+    # double, but rank ceil(7/100 * 100) = 7 and ceil(55/100 * 100) = 55
+    df = spark.createDataFrame(
+        [(i, "g", i) for i in range(1, 101)], "id bigint, grp string, v bigint"
+    )
+    got = {r.id: r.win_v for r in
+           winsorize(df, "v", "grp", p_lo=0.07, p_hi=0.55).collect()}
+    assert (got[1], got[7], got[8], got[55], got[56], got[100]) == (
+        7, 7, 8, 55, 55, 55)
+
+    # a NULL value holds no rank and comes out unchanged: n = 20, so
+    # lo = value@rank ceil(1.4) = 2 and hi = value@rank ceil(11) = 11
+    df = spark.createDataFrame(
+        [(i, "g", i) for i in range(1, 21)] + [(99, "g", None)],
+        "id bigint, grp string, v bigint",
+    )
+    got = {r.id: r.win_v for r in
+           winsorize(df, "v", "grp", p_lo=0.07, p_hi=0.55).collect()}
+    assert got[99] is None
+    assert (got[1], got[2], got[11], got[20]) == (2, 2, 11, 11)
+
 
 def test_conversion_lag_strictly_after(spark):
     from hbase_gis_spark.operators.funnel import conversion_lag

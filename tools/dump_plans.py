@@ -9,7 +9,8 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 Dumps of two commits compare as text: ``mask_plan`` replaces the ids a
 session hands out (expression ids ``#123``/``#123L``, ``plan_id=``, the
-RDD ids of ``Scan ExistingRDD`` and ``_common_expr_N``), and the cache
+RDD ids of ``Scan ExistingRDD``, ``_common_expr_N`` and the counter
+suffix of DataFrame-API lambda variables, ``lambda x_227``), and the cache
 is cleared before each query is built, so a frame an earlier query
 cached cannot change a later plan. One difference stays: queries with
 several DISTINCT aggregates (``table_profile``, ``window_funnel``,
@@ -46,6 +47,7 @@ _SESSION_IDS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_N#"),
 ]
 
 
