@@ -1078,13 +1078,11 @@ def _q_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
-        "c_custkey",
     )
     return grouped_percentiles(
-        c, ["c_mktsegment"], "bal_cents", {"median_bal_cents": (1, 2)},
-        tiebreak_col="c_custkey",
+        c, ["c_mktsegment"], "bal_cents", {"median_bal_cents": (1, 2)}
     ).select(
-        "c_mktsegment", F.col("n").alias("n_customers"), "median_bal_cents"
+        "c_mktsegment", F.col("__n").alias("n_customers"), "median_bal_cents"
     )
 
 
@@ -2094,14 +2092,11 @@ def _q_inter_arrival_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("us").asc(), F.col("event_id").asc()
     )
     gaps = ev.select(
-        "event_type",
-        "event_id",
-        (F.col("us") - F.lag("us").over(uw)).alias("gap_us"),
+        "event_type", (F.col("us") - F.lag("us").over(uw)).alias("gap_us")
     )
     return grouped_percentiles(
-        gaps, ["event_type"], "gap_us", {"median_gap_us": (1, 2)},
-        tiebreak_col="event_id",
-    ).select("event_type", F.col("n").alias("n_gaps"), "median_gap_us")
+        gaps, ["event_type"], "gap_us", {"median_gap_us": (1, 2)}
+    ).select("event_type", F.col("__n").alias("n_gaps"), "median_gap_us")
 
 
 CHUNK_TOKENS, CHUNK_OVERLAP = 64, 16
@@ -2861,12 +2856,11 @@ def _q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
-        "c_custkey",
     )
     picks = {f"p{q}_cents": (q, 100) for q in QUANT_QS}
-    return grouped_percentiles(
-        c, ["c_mktsegment"], "bal_cents", picks, tiebreak_col="c_custkey"
-    ).select("c_mktsegment", F.col("n").alias("n_customers"), *picks)
+    return grouped_percentiles(c, ["c_mktsegment"], "bal_cents", picks).select(
+        "c_mktsegment", F.col("__n").alias("n_customers"), *picks
+    )
 
 
 def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:

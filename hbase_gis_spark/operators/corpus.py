@@ -23,6 +23,14 @@ from fractions import Fraction
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.rank import (
+    apply_range_shards,
+    grouped_percentiles,
+    prefix_offsets,
+    rankable,
+    shard_boundaries,
+    shard_case_sql,
+)
 from hbase_gis_spark.operators.topx import top_x
 
 
@@ -632,7 +640,6 @@ def token_budget_sample(
 
     Output: (id_col, n_tokens, cum_tokens) for kept docs.
     """
-    from hbase_gis_spark.operators.rank import prefix_offsets, shard_case_sql
     from hbase_gis_spark.operators.textstats import token_count
 
     h = content_hash(salt, id_col)
@@ -962,30 +969,31 @@ def winsorize(
     one fat-finger row would poison.
 
     Quantile convention: value at rank ceil(p * n) (``rank.cut_rank``)
-    with ``p`` read as the decimal it prints as (0.07 is 7/100) and
-    ``n`` the group's non-NULL, non-NaN values; NULL/NaN values come
-    out unchanged, a NULL key is one group, and ``p_lo = 0`` (rank 0,
-    no bound) clamps like rank 1. Deterministic under ties, exact,
-    no interpolation to match across engines.
+    with ``p`` read as the nearest fraction whose denominator is at
+    most 10**6 (0.07 is 7/100, ``1 - 0.95`` is 1/20) and ``n`` the
+    group's non-NULL, non-NaN values. NULL/NaN values come out
+    unchanged; rows with a NULL group key are dropped, as an inner
+    join on the key drops them. ``p_lo = 0`` (rank 0, no bound) clamps
+    like rank 1. Deterministic under ties, exact, no interpolation to
+    match across engines.
 
     Scale shape: the bounds are a two-pick
     ``rank.grouped_percentiles`` (ONE window exchange) — a
     |groups|-row dim that joins back BROADCAST; the clamp is map-only.
     Output: input columns + ``win_<value_col>``.
     """
-    from hbase_gis_spark.operators.rank import grouped_percentiles, rankable
-
-    lo, hi = Fraction(str(p_lo)), Fraction(str(p_hi))
+    lo, hi = (Fraction(str(p)).limit_denominator(10**6) for p in (p_lo, p_hi))
     picks = {"__lo": lo.as_integer_ratio(), "__hi": hi.as_integer_ratio()}
-    bounds = grouped_percentiles(df, [group_col], value_col, picks).select(
+    keyed = df.filter(F.col(group_col).isNotNull())
+    bounds = grouped_percentiles(keyed, [group_col], value_col, picks).select(
         F.col(group_col).alias("__g"), "__lo", "__hi"
     )
     v = F.col(value_col)
     clamped = F.when(
         rankable(df, value_col), F.least(F.greatest(v, "__lo"), "__hi")
     ).otherwise(v)
-    on = F.col(group_col).eqNullSafe(F.col("__g"))
-    return df.join(F.broadcast(bounds), on, "left").select(
+    on = F.col(group_col) == F.col("__g")
+    return keyed.join(F.broadcast(bounds), on, "left").select(
         *[F.col(c) for c in df.columns],
         clamped.alias(f"win_{value_col}"),
     )
@@ -1512,11 +1520,6 @@ def curriculum_order(
     Output: (id, group, within_rank, global_pos), all exact integers;
     (within_rank, group) and global_pos induce the same total order.
     """
-    from hbase_gis_spark.operators.rank import (
-        apply_range_shards,
-        shard_boundaries,
-    )
-
     bounds = shard_boundaries(df, difficulty_col, n_shards)
     sharded = apply_range_shards(df, difficulty_col, bounds)
     pair_rows = (

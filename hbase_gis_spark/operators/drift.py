@@ -23,6 +23,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.rank import (
+    apply_range_shards,
+    cut_rank,
+    global_half_ranks,
+    grouped_ranks,
+    half_rank2,
+    prefix_offsets,
+    range_sharded,
+    rankable,
+    shard_boundaries,
+    shard_boundaries_multi,
+    shard_case_sql,
+    shard_offset_col,
+    shard_size_maps_multi,
+    sharded_ntile,
+)
+
 
 def ks_two_sample(
     ref: DataFrame,
@@ -360,10 +377,11 @@ def profile_diff(
 
 
 def _psi_prep(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    return df.select(
+    prepped = df.select(
         F.col(key_col).alias("__k"),
         F.col(value_col).cast("double").alias("__v"),
-    ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
+    )
+    return prepped.filter(rankable(prepped, "__v"))
 
 
 def _bin_counts(binned: DataFrame, name: str, key_col: str = "__k") -> DataFrame:
@@ -389,10 +407,8 @@ def psi_cuts(
     series over time. One boundary per DISTINCT rank ⌈i·n/n_bins⌉
     (``rank.cut_rank``) over ``rank.grouped_ranks``' frame: with
     n < n_bins several i share a rank and the array is shorter."""
-    from hbase_gis_spark.operators.rank import cut_rank, grouped_ranks
-
     prepped = _psi_prep(ref, key_col, value_col)
-    ranked = grouped_ranks(prepped, ["__k"], "__v", None)
+    ranked = grouped_ranks(prepped, ["__k"], "__v")
     is_cut = F.exists(
         F.sequence(F.lit(1), F.lit(n_bins - 1)),
         lambda i: F.col("__r") == cut_rank(F.col("__n"), i, n_bins),
@@ -612,15 +628,8 @@ def global_quantile_cuts(
     shuffle + a |shards|-row aggregate; compare a naive
     ``row_number() OVER (ORDER BY v)``, which is a single-task sort
     of the whole table."""
-    from hbase_gis_spark.operators.rank import (
-        cut_rank,
-        range_sharded,
-        shard_case_sql,
-    )
-
-    prepped = df.select(
-        F.col(value_col).cast("double").alias("__v")
-    ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
+    prepped = df.select(F.col(value_col).cast("double").alias("__v"))
+    prepped = prepped.filter(rankable(prepped, "__v"))
     # range_sharded derives __shard from boundary LITERALS frozen in
     # the plan, so both consumptions of the sharded frame (size
     # aggregate + rank window) agree deterministically — retry-safe,
@@ -718,14 +727,6 @@ def spearman_corr(
     # sizes). Boundaries, offsets and totals are identical (the multi
     # helpers compute each column independently; base is pre-filtered
     # for NaN/null in both columns, satisfying the batch contract).
-    from hbase_gis_spark.operators.rank import (
-        apply_range_shards,
-        half_rank2,
-        shard_boundaries_multi,
-        shard_offset_col,
-        shard_size_maps_multi,
-    )
-
     bmap = shard_boundaries_multi(base, ["__x", "__y"], n_shards)
     bx, by = bmap["__x"], bmap["__y"]
     sizes_x, sizes_y = shard_size_maps_multi(
@@ -1147,8 +1148,6 @@ def gini_coefficient(
     Scale shape: one boundary sketch + one shard-size aggregate + one
     shard rank window, an id-keyed join back for the values, one
     1-row aggregate."""
-    from hbase_gis_spark.operators.rank import global_half_ranks
-
     from pyspark import StorageLevel
 
     v = F.col(value_col) if isinstance(value_col, str) else value_col
@@ -1217,8 +1216,6 @@ def lorenz_curve(
     projection, one bucket-keyed aggregate (``buckets`` rows), then
     the cumulative sum as a triangle self-join over the bucket DIM
     (buckets² pairs — 100 for deciles; no window, no global sort)."""
-    from hbase_gis_spark.operators.rank import sharded_ntile
-
     from pyspark import StorageLevel
 
     v = F.col(value_col) if isinstance(value_col, str) else value_col
@@ -1292,13 +1289,6 @@ def pareto_threshold(
     shards' sums as a plan-literal offset (``rank.shard_case_sql``),
     one 1-row aggregate. The token_budget_sample shape pointed at a
     value order instead of a hash order."""
-    from hbase_gis_spark.operators.rank import (
-        apply_range_shards,
-        prefix_offsets,
-        shard_boundaries,
-        shard_case_sql,
-    )
-
     v = F.col(value_col) if isinstance(value_col, str) else value_col
     base = df.select(
         F.col(id_col).alias("__id"), v.cast("bigint").alias("__x")
@@ -1498,7 +1488,6 @@ def conformal_coverage(
     if not 0 < alpha_milli < 1000:
         raise ValueError("alpha_milli must be in (0, 1000)")
     from hbase_gis_spark.operators.corpus import content_hash
-    from hbase_gis_spark.operators.rank import cut_rank
 
     scored = df.filter(F.col(score_col).isNotNull()).select(
         F.col(score_col).cast("bigint").alias("__s"),

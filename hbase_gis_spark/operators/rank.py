@@ -14,14 +14,15 @@ Consumers: :func:`sharded_ntile` (rfm_segments, balance_deciles),
 :func:`global_half_ranks` (spearman_corr, shuffle_audit),
 :func:`quantile_transform`, and every sharded rank or cumulative sum
 in drift, corpus and dedup. Partition-less ``Window.orderBy`` is
-banned elsewhere by the AST check in tests/test_plan_hygiene.py.
+counted by the AST check in tests/test_plan_hygiene.py.
 
 Rank picks: every "value at rank ⌈q·n⌉" in the engine takes its rank
 from :func:`cut_rank`. :func:`grouped_percentiles` is the per-group
 twin of :func:`global_percentiles` (grouped_median,
-grouped_quantiles, inter_arrival_median, winsorize, mad_anomalies);
-psi_cuts filters its ranked frame (:func:`grouped_ranks`) at every
-cut rank.
+grouped_quantiles, inter_arrival_median, winsorize); psi_cuts
+filters its ranked frame (:func:`grouped_ranks`) at every cut rank.
+The one partition-less pick, :func:`_bounded_percentiles`, serves
+mad_anomalies' calendar-bounded frame only.
 
 Determinism & fault tolerance: shard ids derive from n_shards-1
 BOUNDARY LITERALS, collected once by a bounded ``approxQuantile``
@@ -564,20 +565,18 @@ def global_percentiles(
     all-ties slope frame was the motivating case). The selected
     values are unchanged: ties carry equal values, so the value at
     global rank k under ``(v, t)`` order IS the k-th smallest v."""
+    cols = [F.col(value_col).cast("double").alias("__v")]
     if tiebreak_col is not None:
-        prepped = df.select(
-            F.col(value_col).cast("double").alias("__v"),
-            F.col(tiebreak_col).alias("__t"),
-        ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
+        cols.append(F.col(tiebreak_col).alias("__t"))
+    prepped = df.select(*cols)
+    prepped = prepped.filter(rankable(prepped, "__v"))
+    if tiebreak_col is not None:
         bounds = pair_shard_boundaries(prepped, "__v", "__t", n_shards)
         sharded = apply_pair_range_shards(prepped, "__v", "__t", bounds)
         off, total = shard_offsets(
             sharded, f"({value_col},{tiebreak_col})", len(bounds), n_shards
         )
     else:
-        prepped = df.select(
-            F.col(value_col).cast("double").alias("__v")
-        ).filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
         sharded, off, total = range_sharded(prepped, ["__v"], n_shards)
     order = [F.col("__v").asc()]
     if tiebreak_col is not None:
@@ -598,24 +597,9 @@ def rankable(df: DataFrame, value_col: str) -> Column:
     return v.isNotNull()
 
 
-def grouped_ranks(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    tiebreak_col: str | None,
-) -> DataFrame:
-    """(``group_cols``, ``value_col``, ``__r`` = row number in
-    ``(value, tiebreak)`` order, ``__n`` = group size) of the
-    :func:`rankable` rows, from ONE window: its exchange is the only
-    shuffle. No ``group_cols`` ranks in one task — calendar-bounded
-    frames only (mad_anomalies); fact scale is global_percentiles."""
-    order = [F.asc(c) for c in (value_col, tiebreak_col) if c is not None]
-    if group_cols:
-        w = Window.partitionBy(*group_cols).orderBy(*order)
-    else:
-        w = Window.orderBy(*order)
+def _ranks(df: DataFrame, group_cols: list[str], value_col: str, w):
     whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return df.filter(rankable(df, value_col)).select(
+    return df.select(
         *group_cols,
         value_col,
         F.row_number().over(w).alias("__r"),
@@ -623,23 +607,51 @@ def grouped_ranks(
     )
 
 
+def _pick_rows(ranked, group_cols: list[str], value_col: str, picks: dict):
+    return ranked.groupBy(*group_cols).agg(
+        F.max("__n").alias("__n"),
+        *_picks("__r", F.col("__n"), value_col, picks),
+    )
+
+
+def grouped_ranks(
+    df: DataFrame, group_cols: list[str], value_col: str
+) -> DataFrame:
+    """(``group_cols``, ``value_col``, ``__r`` = row number in value
+    order, ``__n`` = group size) of every row, from ONE window whose
+    exchange is the only shuffle; drop non-:func:`rankable` rows
+    first. No group columns is an error: rank a whole frame with
+    :func:`global_percentiles`, never in one task."""
+    if not group_cols:
+        raise ValueError("grouped_ranks needs at least one group column")
+    w = Window.partitionBy(*group_cols).orderBy(F.col(value_col).asc())
+    return _ranks(df, group_cols, value_col, w)
+
+
 def grouped_percentiles(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
     picks: dict[str, tuple[int, int]],
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
-    """One row per group holding a ranked value: ``group_cols``, ``n``
-    and, per ``name: (num, den)``, the value (type kept) at rank
-    :func:`cut_rank` ⌈num·n/den⌉ — NULL for rank 0. One shuffle:
-    :func:`grouped_ranks` plus a conditional aggregate."""
-    ranked = grouped_ranks(df, group_cols, value_col, tiebreak_col)
-    out = ranked.groupBy(*group_cols).agg(
-        F.max("__n").alias("n"), *_picks("__r", F.col("__n"), value_col, picks)
-    )
-    # a global aggregate has a row even when nothing was ranked
-    return out if group_cols else out.filter(F.col("n").isNotNull())
+    """One row per group holding a :func:`rankable` value:
+    ``group_cols``, ``__n`` (the ranked values) and, per ``name: (num,
+    den)``, the value (type kept) at rank :func:`cut_rank`
+    ⌈num·n/den⌉, NULL for rank 0. One shuffle: :func:`grouped_ranks`
+    plus a conditional aggregate."""
+    kept = df.filter(rankable(df, value_col))
+    ranked = grouped_ranks(kept, group_cols, value_col)
+    return _pick_rows(ranked, group_cols, value_col, picks)
+
+
+def _bounded_percentiles(df: DataFrame, value_col: str, picks: dict):
+    """:func:`grouped_percentiles` over a whole CALENDAR-BOUNDED frame
+    (mad_anomalies' |days| rows) in ONE partition-less rank window,
+    one task; no row when nothing is ranked."""
+    w = Window.orderBy(F.col(value_col).asc())
+    ranked = _ranks(df.filter(rankable(df, value_col)), [], value_col, w)
+    out = _pick_rows(ranked, [], value_col, picks)
+    return out.filter(F.col("__n").isNotNull())
 
 
 def global_half_ranks(

@@ -15,6 +15,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.operators.rank import (
+    _bounded_percentiles,
+    global_percentiles,
+)
+
 # the closed-form day-pair count n(n−1)/2 over an ``n_days`` column
 _N_PAIRS_SQL = "CAST(n_days * (n_days - 1) div 2 AS BIGINT)"
 
@@ -258,17 +263,15 @@ def mad_anomalies(
 
     Scale shape: the input is already a |days|-sized aggregate
     (calendar-bounded by contract — the daily_rolling allowlist
-    argument), so each selection is ``rank.grouped_percentiles`` with
-    no group columns: ONE rank window, lazily, with no driver
+    argument), so each selection is ``rank._bounded_percentiles``:
+    ONE partition-less rank window, lazily, with no driver
     round-trips. Rank a FACT-scale column with
     rank.global_percentiles instead."""
-    from hbase_gis_spark.operators.rank import grouped_percentiles
-
     vals = days.select(
         F.col(day_col).alias("day"),
         F.col(value_col).cast("bigint").alias("value"),
     )
-    med = grouped_percentiles(vals, [], "value", {"__med": (1, 2)}).select(
+    med = _bounded_percentiles(vals, "value", {"__med": (1, 2)}).select(
         "__med"
     )
     devs = vals.crossJoin(F.broadcast(med)).select(
@@ -277,7 +280,7 @@ def mad_anomalies(
         F.abs(F.col("value") - F.col("__med")).alias("deviation"),
         "__med",
     )
-    mad = grouped_percentiles(devs, [], "deviation", {"__mad": (1, 2)}).select(
+    mad = _bounded_percentiles(devs, "deviation", {"__mad": (1, 2)}).select(
         "__mad"
     )
     return devs.crossJoin(F.broadcast(mad)).select(
@@ -597,8 +600,6 @@ def theil_sen_slope(
     n_pairs is the closed form n(n−1)/2 — never a second count over
     the pairs."""
     from pyspark import StorageLevel
-
-    from hbase_gis_spark.operators.rank import global_percentiles
 
     # the day dim is calendar-bounded but its producing aggregate
     # scans the fact table, and the pair frame feeds

@@ -42,6 +42,14 @@ from hbase_gis_spark.geo.planner import (
     minimum_bounding_prefixes,
     partition_cover,
 )
+from hbase_gis_spark.operators.rank import (
+    cut_rank,
+    ntile_bucket_sql,
+    prefix_offsets,
+    range_shard_sql,
+    shard_boundaries,
+    shard_case_sql,
+)
 
 
 def bbox_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
@@ -174,13 +182,6 @@ def _sharded_plan_parts(
     shard sizes/offsets/total via one bounded aggregate — both frozen
     into SQL text. Returns (shard_expr, offset_expr, total): the
     offsets are ``rank.shard_case_sql``'s CASE over ``__shard``."""
-    from hbase_gis_spark.operators.rank import (
-        prefix_offsets,
-        range_shard_sql,
-        shard_boundaries,
-        shard_case_sql,
-    )
-
     src = spark.table(view)
     if where_sql:
         src = src.filter(where_sql)
@@ -217,8 +218,6 @@ def sharded_ntile_sql(
     shard, off, total = _sharded_plan_parts(
         spark, view, order_cols[0], n_shards
     )
-    from hbase_gis_spark.operators.rank import ntile_bucket_sql
-
     order = ", ".join(f"{c} ASC" for c in order_cols)
     bucket = ntile_bucket_sql(total, n)
     return f"""
@@ -249,8 +248,6 @@ def global_percentiles_sql(
     frozen from the view AT GENERATION TIME — generate immediately
     before executing; the text is a snapshot statement, stale data
     silently mis-ranks."""
-    from hbase_gis_spark.operators.rank import cut_rank
-
     val = f"CAST({value_expr} AS DOUBLE)"
     where = f"{val} IS NOT NULL AND NOT isnan({val})"
     shard, off, total = _sharded_plan_parts(

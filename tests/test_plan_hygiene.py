@@ -226,9 +226,10 @@ _GLOBAL_WINDOW_ALLOWED = {
     ),
     "rank.py": (
         1,
-        "grouped_ranks with no group columns: mad_anomalies' median "
-        "and MAD picks over its pre-aggregated per-DAY frame (|days| "
+        "_bounded_percentiles, private to mad_anomalies: its median "
+        "and MAD picks over the pre-aggregated per-DAY frame (|days| "
         "rows, calendar-bounded — the daily_rolling argument; "
+        "grouped_percentiles refuses empty group columns and "
         "fact-scale ranking stays in rank.global_percentiles)",
     ),
     "__spark_entry__.py": (
@@ -292,8 +293,9 @@ _ROW_NUMBER_ALLOWED = {
         4,
         "sharded_ntile, sharded_ntiles and global_percentiles: "
         "shard-local ranks plus the shard's prefix offset (global "
-        "ranks); grouped_ranks: the one per-group rank that "
-        "grouped_percentiles and psi_cuts pick cut_rank values from",
+        "ranks); _ranks: the one per-group rank that "
+        "grouped_percentiles, _bounded_percentiles and psi_cuts pick "
+        "cut_rank values from",
     ),
     "corpus.py": (
         2,

@@ -9,6 +9,7 @@ against an exact Fraction replay of the rank ⌈num·n/den⌉."""
 import math
 from fractions import Fraction
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -210,17 +211,27 @@ _RANK_SETTINGS = settings(
 )
 
 
+# winsorize bands: the floats passed and the fractions they stand for
+# (1 - 0.95 prints as 0.050000000000000044 but means 1/20)
+BANDS = [
+    ((0.07, 0.55), (Fraction(7, 100), Fraction(55, 100))),
+    ((1 - 0.95, 0.95), (Fraction(1, 20), Fraction(19, 20))),
+    ((0.0, 0.9), (Fraction(0), Fraction(9, 10))),
+    ((0.5, 0.5), (Fraction(1, 2), Fraction(1, 2))),
+]
+
+
 @given(
     rows=ROWS,
     n_bins=st.sampled_from([2, 3, 4, 10]),
-    band=st.sampled_from([(0.07, 0.55), (0.05, 0.95), (0.0, 0.9), (0.5, 0.5)]),
+    band=st.sampled_from(BANDS),
 )
-@example(rows=[(0, 1.0)], n_bins=10, band=(0.07, 0.55))
+@example(rows=[(0, 1.0)], n_bins=10, band=BANDS[0])
 @example(
     rows=[(0, 2.0), (0, 2.0), (0, None), (0, float("nan")), (1, 3.0),
-          (None, None)],
+          (None, None), (None, 4.0)],
     n_bins=4,
-    band=(0.0, 0.9),
+    band=BANDS[2],
 )
 @_RANK_SETTINGS
 def test_grouped_rank_picks_match_exact_replay(spark, rows, n_bins, band):
@@ -229,12 +240,14 @@ def test_grouped_rank_picks_match_exact_replay(spark, rows, n_bins, band):
     counting only those values, exactly as a Fraction replay does:
     named picks per group, one psi boundary per distinct cut rank,
     and winsorize bounds with NULL/NaN values passed through and
-    every row (the NULL key's too) returned once."""
+    every row with a group key returned once."""
     from hbase_gis_spark.operators.corpus import winsorize
     from hbase_gis_spark.operators.drift import psi_cuts
     from hbase_gis_spark.operators.rank import grouped_percentiles
 
-    data = [(i, None if g is None else f"g{g}", v) for i, (g, v) in enumerate(rows)]
+    data = [
+        (i, None if g is None else f"g{g}", v) for i, (g, v) in enumerate(rows)
+    ]
     df = spark.createDataFrame(data, "id bigint, g string, v double")
     ranked = {}
     for _, g, v in data:
@@ -244,15 +257,16 @@ def test_grouped_rank_picks_match_exact_replay(spark, rows, n_bins, band):
     ranked = {g: sorted(vs) for g, vs in ranked.items() if vs}
 
     got = {
-        r.g: (r.n, *(r[k] for k in PICKS))
-        for r in grouped_percentiles(
-            df, ["g"], "v", PICKS, tiebreak_col="id"
-        ).collect()
+        r.g: (r["__n"], *(r[k] for k in PICKS))
+        for r in grouped_percentiles(df, ["g"], "v", PICKS).collect()
     }
     want = {
         g: (
             len(s),
-            *(s[_ceil_rank(len(s), Fraction(a, b)) - 1] for a, b in PICKS.values()),
+            *(
+                s[_ceil_rank(len(s), Fraction(a, b)) - 1]
+                for a, b in PICKS.values()
+            ),
         )
         for g, s in ranked.items()
     }
@@ -265,26 +279,34 @@ def test_grouped_rank_picks_match_exact_replay(spark, rows, n_bins, band):
     want = {
         g: sorted(
             s[k - 1]
-            for k in {_ceil_rank(len(s), Fraction(i, n_bins)) for i in range(1, n_bins)}
+            for k in {
+                _ceil_rank(len(s), Fraction(i, n_bins)) for i in range(1, n_bins)
+            }
         )
         for g, s in ranked.items()
     }
     assert got == want
 
-    p_lo, p_hi = band
+    (p_lo, p_hi), (q_lo, q_hi) = band
     got = {
         r.id: r.win_v
         for r in winsorize(df, "v", "g", p_lo=p_lo, p_hi=p_hi).collect()
     }
     want = {}
     for i, g, v in data:
+        if g is None:
+            continue
         if v is None or _is_nan(v):
             want[i] = v
             continue
         s = ranked[g]
-        lo = s[max(1, _ceil_rank(len(s), Fraction(str(p_lo)))) - 1]
-        hi = s[_ceil_rank(len(s), Fraction(str(p_hi))) - 1]
+        lo = s[max(1, _ceil_rank(len(s), q_lo)) - 1]
+        hi = s[_ceil_rank(len(s), q_hi) - 1]
         want[i] = min(max(v, lo), hi)
     assert {i: ("nan" if _is_nan(v) else v) for i, v in got.items()} == {
         i: ("nan" if _is_nan(v) else v) for i, v in want.items()
     }
+
+    # a whole-frame pick is a single-task sort: the public helper refuses
+    with pytest.raises(ValueError):
+        grouped_percentiles(df, [], "v", PICKS)

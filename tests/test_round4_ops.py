@@ -346,6 +346,18 @@ def test_winsorize_hand_case(spark):
     assert got[99] is None
     assert (got[1], got[2], got[11], got[20]) == (2, 2, 11, 11)
 
+    # 1 - 0.95 prints as 0.050000000000000044 and means 1/20: on
+    # 1..1000 lo = value@rank 50 and hi = value@rank 950 (read as
+    # 12500000000000011/2.5e17, num*n overflows BIGINT), and a group
+    # column may be named n
+    df = spark.createDataFrame(
+        [(i, "g", i) for i in range(1, 1001)], "id bigint, n string, v bigint"
+    )
+    got = {r.id: r.win_v for r in
+           winsorize(df, "v", "n", p_lo=1 - 0.95, p_hi=0.95).collect()}
+    assert (got[1], got[50], got[51], got[950], got[1000]) == (
+        50, 50, 51, 950, 950)
+
 
 def test_conversion_lag_strictly_after(spark):
     from hbase_gis_spark.operators.funnel import conversion_lag
