@@ -30,10 +30,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# prime > 2^32 for MinHash permutations (a*h+b) % P with h < 2^32
-_MINHASH_P = 4294967311
-# deterministic permutation parameters: small odd multipliers/offsets
-_MINHASH_A0, _MINHASH_B0 = 1048583, 97
+from hbase_gis_spark.functions import sqlkernels as K
+
+_MINHASH_P, _MINHASH_A0, _MINHASH_B0 = K.MINHASH_P, K.MINHASH_A0, K.MINHASH_B0
+_SIMHASH_BITS = K.SIMHASH_BITS
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -108,30 +108,20 @@ def _scan_split_estimate(spark, files) -> int | None:
 def tokens(text_col) -> Column:
     """Whitespace tokenization — written identically in oracle SQL
     (regexp_split_to_array(trim(text), '\\s+'))."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(F.trim(c), r"\s+")
+    return F.expr(K.tokens_sql(K.operand(text_col)))
 
 
 def word_shingles(text_col, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (JVM HOFs only).
 
-    Built as a zip_with fold over n shifted slices of the token array so
-    that the (non-cheap) tokenization appears only in ROW-level
-    positions — a per-element ``element_at(tokens(...), i)`` formulation
-    would re-evaluate the regex split once per element per reference
-    under interpreted HOF eval (measured ~100× slowdown).
+    Built as a zip_with fold over n shifted slices of the token array,
+    with the token array bound once (``sqlkernels.word_shingles_sql``):
+    a per-element ``element_at(tokens(...), i)`` formulation would
+    re-evaluate the regex split once per element per reference under
+    interpreted HOF eval (measured ~100× slowdown).
 
     Documents with fewer than n words yield an empty set."""
-    w = tokens(text_col)
-    m = F.greatest(F.size(w) - (n - 1), F.lit(0))
-    sh = F.slice(w, 1, m)
-    for k in range(1, n):
-        sh = F.zip_with(
-            sh, F.slice(w, k + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.when(
-        F.size(w) >= n, F.array_distinct(sh)
-    ).otherwise(F.array().cast("array<string>"))
+    return F.expr(K.word_shingles_sql(K.operand(text_col), n))
 
 
 def dedup_exact(
@@ -1367,8 +1357,7 @@ def _incremental_verdicts(
 
 def shingle_hashes32(shingle_col) -> Column:
     """xxhash64 of each shingle masked to 32 bits (array<bigint>)."""
-    sh = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    return F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(4294967295)))
+    return F.expr(K.shingle_hashes32_sql(K.operand(shingle_col)))
 
 
 def minhash_signature_from_hashes(h32_col, num_hashes: int = 64) -> Column:
@@ -1386,21 +1375,10 @@ def minhash_signature_from_hashes(h32_col, num_hashes: int = 64) -> Column:
 
 def minhash_signature_hof(h32_col, num_hashes: int = 64) -> Column:
     """The expression form of :func:`minhash_signature_from_hashes`:
-    the reference its Arrow kernel is checked against. It builds an
-    explicit ``num_hashes``-element array (not a nested transform over
-    a seed sequence) so each permutation references the hash array as
-    an attribute — Catalyst keeps the producing projection materialized
-    (multi-reference, non-cheap) and each min-reduction reads the same
-    computed array instead of re-hashing every shingle."""
-    h32 = F.col(h32_col) if isinstance(h32_col, str) else h32_col
-    mins = []
-    for i in range(num_hashes):
-        a = F.lit(i * 2 + _MINHASH_A0)
-        b = F.lit(i * 7 + _MINHASH_B0)
-        mins.append(
-            F.array_min(F.transform(h32, lambda h: (a * h + b) % F.lit(_MINHASH_P)))
-        )
-    return F.array(*mins)
+    the reference its Arrow kernel is checked against, and the
+    signature ``hgs_minhash_band`` builds
+    (``sqlkernels.minhash_signature_sql``)."""
+    return F.expr(K.minhash_signature_sql(K.operand(h32_col), num_hashes))
 
 
 def minhash_lsh_pairs(
@@ -1469,8 +1447,6 @@ def minhash_lsh_pairs(
 
 # --------------------------------------------------------------- SimHash ----
 
-_SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits signed bigint, oracle-portable
-
 
 def simhash(text_col) -> Column:
     """60-bit SimHash over the word multiset (md5-derived word hashes).
@@ -1481,46 +1457,14 @@ def simhash(text_col) -> Column:
     md5 (not xxhash) keeps it reproducible in DuckDB; all comparisons
     are exact integer math.
 
-    The expression is a single linear chain (tokens → word hashes →
-    per-word ±1 vote arrays → fold → pack): every intermediate is
-    referenced exactly once, so interpreted HOF evaluation computes each
-    stage once per row. An earlier form packed bits via 60
-    ``element_at(ones, j)`` references, which re-evaluated the entire
-    fold per bit (~60× the work).
+    The expression (``sqlkernels.simhash_sql``) is a single linear
+    chain (tokens → word hashes → per-word ±1 vote arrays → fold →
+    pack): every intermediate is referenced exactly once, so
+    interpreted HOF evaluation computes each stage once per row. An
+    earlier form packed bits via 60 ``element_at(ones, j)`` references,
+    which re-evaluated the entire fold per bit (~60× the work).
     """
-    w = tokens(text_col)
-    hashes = F.transform(
-        w, lambda x: F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint")
-    )
-    # per word: 60-element ±1 vote array (h is a lambda slot — cheap)
-    vote_arrays = F.transform(
-        hashes,
-        lambda h: F.array(
-            *[
-                (
-                    F.shiftright(h, j).bitwiseAND(F.lit(1)).cast("bigint") * 2 - 1
-                )
-                for j in range(_SIMHASH_BITS)
-            ]
-        ),
-    )
-    votes = F.aggregate(
-        vote_arrays,
-        F.array_repeat(F.lit(0).cast("bigint"), _SIMHASH_BITS),
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-    )
-    powers = F.array(
-        *[F.lit(1 << j).cast("bigint") for j in range(_SIMHASH_BITS)]
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            powers,
-            lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(K.simhash_sql(K.operand(text_col)))
 
 
 def simhash_pairs(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.functions import sqlkernels as K
 from hbase_gis_spark.operators.rank import (
     apply_range_shards,
     cut_rank,
@@ -406,8 +407,15 @@ def psi_cuts(
     against the same boundaries, the precondition for comparable PSI
     series over time. One boundary per DISTINCT rank ⌈i·n/n_bins⌉
     (``rank.cut_rank``) over ``rank.grouped_ranks``' frame: with
-    n < n_bins several i share a rank and the array is shorter."""
+    n < n_bins several i share a rank and the array is shorter; with
+    ``n_bins=1`` every key gets the empty array (one bin)."""
+    if n_bins < 1:
+        raise ValueError(f"n_bins must be at least 1, got {n_bins}")
     prepped = _psi_prep(ref, key_col, value_col)
+    if n_bins == 1:
+        return prepped.select("__k").distinct().select(
+            "__k", F.array().cast("array<double>").alias("__cuts")
+        )
     ranked = grouped_ranks(prepped, ["__k"], "__v")
     is_cut = F.exists(
         F.sequence(F.lit(1), F.lit(n_bins - 1)),
@@ -487,24 +495,8 @@ def value_psi(
             "bin",
             "n_ref",
             "n_cur",
-            F.round(
-                (
-                    (F.col("n_ref") + 0.5)
-                    / (F.col("__tr") + 0.5 * n_bins)
-                    - (F.col("n_cur") + 0.5)
-                    / (F.col("__tc") + 0.5 * n_bins)
-                )
-                * F.log(
-                    (
-                        (F.col("n_ref") + 0.5)
-                        / (F.col("__tr") + 0.5 * n_bins)
-                    )
-                    / (
-                        (F.col("n_cur") + 0.5)
-                        / (F.col("__tc") + 0.5 * n_bins)
-                    )
-                ),
-                9,
+            F.expr(
+                K.psi_term_sql("n_ref", "n_cur", "__tr", "__tc", str(n_bins))
             ).alias("psi"),
         )
     )

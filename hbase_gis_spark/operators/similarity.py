@@ -25,21 +25,22 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.functions import sqlkernels as K
+from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.operators.topx import top_x
 
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sequential-fold double dot product of two float arrays."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+    return F.expr(K.dot_sql(K.operand(a), K.operand(b)))
 
 
 def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
+    return F.expr(K.norm_sql(K.operand(a)))
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    return F.expr(K.cosine_sql(K.operand(a), K.operand(b)))
 
 
 def dots_expr(vec_col: Column, M) -> Column:
@@ -47,9 +48,12 @@ def dots_expr(vec_col: Column, M) -> Column:
     of ``M`` (literal arrays) — the codegen twin of the Arrow kernel
     ``fold_dots``, bit-identical to it (pinned in
     tests/test_similarity.py)."""
-    return F.array(
-        *[dot_expr(vec_col, F.array(*[F.lit(float(x)) for x in m])) for m in M]
+    v = K.operand(vec_col)
+    dots = (
+        K.dot_sql(v, "array(" + ", ".join(R.lit(x) for x in m) + ")")
+        for m in M
     )
+    return F.expr("array(" + ", ".join(dots) + ")")
 
 
 def argmax_expr(dots: Column) -> Column:
@@ -452,7 +456,7 @@ def mrl_truncation_report(
     )
     entries = []
     for k in dims:
-        pref = F.slice(F.col("__v"), 1, k)
+        pref = F.expr(f"slice(__v, 1, {k})")
         ratio = norm_expr(pref) / norm_expr(F.col("__v"))
         entries.append(
             F.struct(
@@ -1499,26 +1503,8 @@ def binary_signature_exprs(vec_col: Column) -> tuple[Column, Column]:
     and one that doesn't — the Hamming scan below is memory-bandwidth
     bound, so compression IS the speedup.
     """
-    e = F.transform(vec_col, lambda x: x.cast("double"))
-    lo = F.aggregate(
-        F.zip_with(
-            F.slice(e, 1, 32),
-            F.array(*[F.lit(1 << i).cast("bigint") for i in range(32)]),
-            lambda x, wgt: F.when(x > 0, wgt).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    hi = F.aggregate(
-        F.zip_with(
-            F.slice(e, 33, 32),
-            F.array(*[F.lit(1 << i).cast("bigint") for i in range(32)]),
-            lambda x, wgt: F.when(x > 0, wgt).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    return lo, hi
+    v = K.operand(vec_col)
+    return F.expr(K.sig_lo_sql(v)), F.expr(K.sig_hi_sql(v))
 
 
 def ann_hamming_topk(
@@ -1551,13 +1537,11 @@ def ann_hamming_topk(
     q = sigs.filter(F.col(id_col) == query_id).select(
         F.col("sig_lo").alias("__qlo"), F.col("sig_hi").alias("__qhi")
     )
-    ham = F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("__qlo"))) + F.bit_count(
-        F.col("sig_hi").bitwiseXOR(F.col("__qhi"))
-    )
+    ham = F.expr(K.hamming_sql("sig_lo", "sig_hi", "__qlo", "__qhi"))
     return (
         sigs.filter(F.col(id_col) != query_id)
         .crossJoin(F.broadcast(q))
-        .select(F.col(id_col), ham.cast("int").alias("hamming"))
+        .select(F.col(id_col), ham.alias("hamming"))
         .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -1731,12 +1715,10 @@ def ann_hamming_topk_stored(
     popcount/top-k shape matches :func:`ann_hamming_topk`."""
     qlo, qhi = int(query_sig[0]), int(query_sig[1])
     sigs = spark.read.parquet(path)
-    ham = F.bit_count(
-        F.col("sig_lo").bitwiseXOR(F.lit(qlo))
-    ) + F.bit_count(F.col("sig_hi").bitwiseXOR(F.lit(qhi)))
+    ham = F.expr(K.hamming_sql("sig_lo", "sig_hi", str(qlo), str(qhi)))
     return (
         sigs.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), ham.cast("int").alias("hamming"))
+        .select(F.col(id_col), ham.alias("hamming"))
         .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
         .limit(k)
     )

@@ -14,17 +14,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hbase_gis_spark.functions import sqlkernels as K
+from hbase_gis_spark.functions.sqlkernels import (  # noqa: F401
+    KNUTH_MULT, LANG_MARKERS, LANG_ORDER as _LANG_ORDER, QC_DIM,
+)
 from hbase_gis_spark.operators.dedup import tokens
 from hbase_gis_spark.operators.topx import top_x
-
-# marker words per language; argmax with fixed precedence order breaks ties
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "of", "and", "is"),
-    "fr": ("le", "la", "et", "les", "des"),
-    "de": ("der", "die", "und", "das", "ist"),
-    "es": ("el", "los", "las", "es", "una"),
-}
-_LANG_ORDER = ("en", "fr", "de", "es")
 
 
 def token_count(text_col) -> Column:
@@ -47,28 +42,16 @@ def bpe_token_count(text_col) -> Column:
 
 
 def marker_count(text_col, markers: tuple[str, ...]) -> Column:
-    w = tokens(text_col)
-    return F.size(F.filter(w, lambda x: x.isin(*markers)))
+    words = K.tokens_sql(K.operand(text_col))
+    return F.expr(K.marker_count_sql(words, markers))
 
 
 def lang_id(text_col) -> Column:
     """Marker-word argmax language guess ('und' when no marker hits).
 
-    Ties resolve in _LANG_ORDER precedence — the oracle SQL uses the
-    same CASE cascade."""
-    counts = {l: marker_count(text_col, m) for l, m in LANG_MARKERS.items()}
-    expr = F.lit("und")
-    # build the cascade back-to-front so earlier languages win ties
-    best = None
-    for lang in reversed(_LANG_ORDER):
-        c = counts[lang]
-        if best is None:
-            best = F.when(c > 0, F.lit(lang)).otherwise(F.lit("und"))
-            best_count = c
-        else:
-            best = F.when((c > 0) & (c >= best_count), F.lit(lang)).otherwise(best)
-            best_count = F.greatest(c, best_count)
-    return best
+    Ties resolve in LANG_ORDER precedence — the oracle SQL uses the
+    same CASE cascade (``sqlkernels.lang_id_sql``)."""
+    return F.expr(K.lang_id_sql(K.operand(text_col)))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -616,11 +599,8 @@ def bpe_learned_counts(
 # Verifiability: per-token weights are INTEGERS, so the per-document sum
 # is exact and order-independent (a float sum would drift between
 # Spark's fold order and DuckDB's list_sum order); the single division
-# by (QC_DIM * n_tokens) happens once at the end.
-
-QC_DIM = 1024          # weight buckets
-KNUTH_MULT = 2654435761  # Knuth multiplicative-hash constant
-
+# by (QC_DIM * n_tokens) happens once at the end. The constants and the
+# expressions live in functions/sqlkernels.py.
 
 
 def bm25_topk(
@@ -690,17 +670,7 @@ def bm25_topk(
         .crossJoin(F.broadcast(stats))
         .select(
             "w",
-            F.round(
-                F.lit(1000.0)
-                * F.log(
-                    F.lit(1.0)
-                    + (F.col("__n") - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                ),
-                0,
-            )
-            .cast("bigint")
-            .alias("idf_milli"),
+            F.expr(K.bm25_idf_sql("df", "__n")).alias("idf_milli"),
         )
     )
     scored = (
@@ -709,11 +679,10 @@ def bm25_topk(
         .select(
             "id",
             F.expr(
-                f"""(idf_milli * tf * (1000 + {k1_milli})) div (
-                  1000 * tf + ({k1_milli} * ((1000 - {b_milli})
-                  + ({b_milli} * ((dl * 1000000) div __avgdl_milli))
-                    div 1000)) div 1000
-                )"""
+                K.bm25_term_sql(
+                    "tf", "dl", "idf_milli", "__avgdl_milli",
+                    str(int(k1_milli)), str(int(b_milli)),
+                )
             ).alias("contrib"),
         )
     )
@@ -735,35 +704,15 @@ def quality_wsum_expr(text_col) -> Column:
     weight → fold sum. Exposed separately from the logit so callers
     needing exact-integer scores (e.g. milli-quantized calibration)
     can divide on their own terms. Pure JVM."""
-    w = tokens(text_col)
-    # 60-bit md5 prefix → bucket in [0, QC_DIM)
-    buckets = F.transform(
-        w,
-        lambda t: F.pmod(
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"),
-            F.lit(QC_DIM),
-        ),
-    )
-    return F.aggregate(
-        F.transform(
-            buckets,
-            lambda b: F.pmod(b * F.lit(KNUTH_MULT), F.lit(2 * QC_DIM))
-            - F.lit(QC_DIM),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
+    return F.expr(K.quality_wsum_sql(K.operand(text_col)))
 
 
 def quality_logit_expr(text_col) -> Column:
     """The hashed-linear quality logit as a reusable Column expression
     (see :func:`quality_classifier` for the model): the integer
-    :func:`quality_wsum_expr` over one division. Pure JVM."""
-    wsum = quality_wsum_expr(text_col)
-    n = F.size(tokens(text_col))
-    return F.when(n > 0, wsum / (F.lit(float(QC_DIM)) * n)).otherwise(
-        F.lit(0.0)
-    )
+    :func:`quality_wsum_expr` over one division, 0.0 for NULL text.
+    Pure JVM."""
+    return F.expr(K.quality_logit_sql(K.operand(text_col)))
 
 
 def quality_classifier(

@@ -1,26 +1,29 @@
-"""SQL-facing surface: run the engine's spatial primitives from
-``spark.sql(...)``.
+"""SQL-facing surface: run the engine's spatial primitives and corpus
+kernels from ``spark.sql(...)``.
 
 Two tiers, mirroring the DataFrame planner's fast/slow split:
 
 1. **Expression generators** (fast path): functions returning Spark-SQL
    text to splice into a query — plain comparisons/arithmetic that stay
-   inside whole-stage codegen. The spatial ones return the very text
-   the DataFrame operators apply (``geo.sqlrender``).
+   inside whole-stage codegen. Each returns the very text the DataFrame
+   operators apply: the spatial ones come from ``geo.sqlrender``, the
+   corpus ones (``tokens_sql``, ``word_shingles_sql``, ``simhash_sql``,
+   ``minhash_band_sql``, ``lang_id_sql``) from
+   ``functions.sqlkernels``.
    Generated-text SQL is the idiomatic Spark substitute for a custom
    Catalyst expression here: nothing to install, and Catalyst pushes
    the bbox / prefix conjuncts into the Parquet scan just as with the
    Column API (same predicates, same pushdown rules).
 
 2. **Registered functions** (general path): :func:`register_sql_api`
-   registers Arrow-batched pandas UDFs callable from SQL —
-   ``hgs_geohash(lat, lon)`` and ``hgs_covers(wkt, lon, lat)`` (any
-   polygon, including concave) — for the cases plain comparisons can't
-   express. Prefer tier 1 when the polygon is convex. ``hgs_covers`` is
-   still needed for non-convex shapes and for WKT held in a column; then
-   conjoin :func:`bbox_sql` so the UDF only sees rows surviving the
-   pushable pre-filter (the same discipline ``operators.within``
-   applies).
+   registers the ``sqlkernels`` texts as SQL functions (pure JVM) and
+   Arrow-batched pandas UDFs — ``hgs_geohash(lat, lon)`` and
+   ``hgs_covers(wkt, lon, lat)`` (any polygon, including concave) — for
+   the cases plain comparisons can't express. Prefer tier 1 when the
+   polygon is convex. ``hgs_covers`` is still needed for non-convex
+   shapes and for WKT held in a column; then conjoin :func:`bbox_sql`
+   so the UDF only sees rows surviving the pushable pre-filter (the
+   same discipline ``operators.within`` applies).
 
 Reference parity: this is the SQL analog of the reference's query
 surface (WithinFilter / KNN / TopX clients, SURVEY.md §2) — the same
@@ -35,7 +38,12 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hbase_gis_spark.functions import sqlkernels as K
 from hbase_gis_spark.functions.geo import geohash_udf
+from hbase_gis_spark.functions.sqlkernels import (  # noqa: F401
+    _let, lang_id_sql, minhash_band_sql, simhash_sql, tokens_sql,
+    word_shingles_sql,
+)
 from hbase_gis_spark.geo import sqlrender as R
 from hbase_gis_spark.geo.geometry import convex_ccw_edges, parse_wkt
 from hbase_gis_spark.geo.planner import (
@@ -50,6 +58,10 @@ from hbase_gis_spark.operators.rank import (
     shard_boundaries,
     shard_case_sql,
 )
+
+# the kernel constants' import paths from before they moved to sqlkernels
+_MINHASH_P, _MINHASH_A0, _MINHASH_B0 = K.MINHASH_P, K.MINHASH_A0, K.MINHASH_B0
+_SIMHASH_BITS = K.SIMHASH_BITS
 
 
 def bbox_sql(wkt: str, lon_expr: str = "lon", lat_expr: str = "lat") -> str:
@@ -123,37 +135,6 @@ def haversine_distance_sql(
     """Great-circle distance in meters, the same text
     ``operators.knn`` applies."""
     return R.haversine_distance_sql(origin_lon, origin_lat, lon_expr, lat_expr)
-
-
-# --- text/dedup expression generators (tier 1, corpus family) ---------------
-#
-# Spark-SQL text mirroring the Column builders in operators/dedup.py and
-# operators/textstats.py term for term (same functions, same operand
-# order), so `spark.sql` and the DataFrame operators return identical
-# values — pinned in tests/test_sqlapi.py.  All bodies are pure JVM
-# expressions (split/transform/aggregate/xxhash64/md5): registering them
-# as SQL UDFs (see register_sql_api) keeps SQL callers off the Python
-# path entirely.
-
-_MINHASH_P = 4294967311
-_MINHASH_A0, _MINHASH_B0 = 1048583, 97
-_SIMHASH_BITS = 60
-
-
-def _let(var: str, value_sql: str, body_sql: str) -> str:
-    """Single-evaluation binding inside one SQL expression:
-    ``transform(array(e), v -> body)[1]``.  The array literal computes
-    ``e`` once; the lambda variable is then an attribute reference
-    (cheap per use), which is the only way to get the staged-projection
-    discipline (operators/dedup.py docstrings) inside a SQL UDF body —
-    textual duplication of a non-cheap subtree re-evaluates it per
-    reference under interpreted HOF eval."""
-    return f"element_at(transform(array({value_sql}), {var} -> {body_sql}), 1)"
-
-
-def tokens_sql(text_expr: str = "text") -> str:
-    """Whitespace tokenization — twin of ``operators.dedup.tokens``."""
-    return f"split(trim({text_expr}), '\\\\s+')"
 
 
 # --- sharded-rank statement generators (VERDICT r5 next-round #6) ----------
@@ -296,114 +277,6 @@ def quantile_transform_sql(
     )"""
 
 
-def word_shingles_sql(text_expr: str = "text", n: int = 3) -> str:
-    """Distinct word n-gram shingles — twin of
-    ``operators.dedup.word_shingles`` (same zip_with fold over shifted
-    slices).  ``w`` is let-bound so tokenization runs once."""
-
-    def body(w: str) -> str:
-        m = f"greatest(size({w}) - {n - 1}, 0)"
-        sh = f"slice({w}, 1, {m})"
-        for k in range(1, n):
-            sh = (
-                f"zip_with({sh}, slice({w}, {k + 1}, {m}), "
-                f"(a, b) -> concat_ws(' ', a, b))"
-            )
-        return (
-            f"CASE WHEN size({w}) >= {n} THEN array_distinct({sh}) "
-            f"ELSE cast(array() AS array<string>) END"
-        )
-
-    return _let("w", tokens_sql(text_expr), body("w"))
-
-
-def simhash_sql(text_expr: str = "text") -> str:
-    """60-bit SimHash — twin of ``operators.dedup.simhash`` (md5 word
-    hashes, signed votes, power-of-two packing; single linear chain so
-    every stage evaluates once)."""
-    hashes = (
-        f"transform({tokens_sql(text_expr)}, "
-        f"x -> cast(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT))"
-    )
-    vote_terms = ", ".join(
-        f"(cast((shiftright(h, {j}) & 1) AS BIGINT) * 2 - 1)"
-        for j in range(_SIMHASH_BITS)
-    )
-    vote_arrays = f"transform({hashes}, h -> array({vote_terms}))"
-    votes = (
-        f"aggregate({vote_arrays}, "
-        f"array_repeat(cast(0 AS BIGINT), {_SIMHASH_BITS}), "
-        f"(acc, x) -> zip_with(acc, x, (a, b) -> a + b))"
-    )
-    powers = "array(" + ", ".join(
-        f"cast({1 << j} AS BIGINT)" for j in range(_SIMHASH_BITS)
-    ) + ")"
-    packed = (
-        f"zip_with({votes}, {powers}, "
-        f"(v, p) -> CASE WHEN v > 0 THEN p ELSE cast(0 AS BIGINT) END)"
-    )
-    return f"aggregate({packed}, cast(0 AS BIGINT), (acc, x) -> acc + x)"
-
-
-def minhash_band_sql(
-    text_expr: str = "text",
-    band_expr: str = "band",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> str:
-    """Murmur3 hash of one MinHash signature band — twin of the banding
-    in ``operators.dedup.minhash_lsh_pairs`` (same permutation
-    constants, same ``hash(slice(sig, band*r+1, r))``), with the
-    signature built by the expression form of
-    ``minhash_signature_from_hashes``.  Two documents agreeing on
-    ``hgs_minhash_band(text, b)`` for any ``b`` in [0, bands) are LSH
-    candidate pairs — the SQL route to the same buckets the operator
-    joins on.  Shingles and 32-bit hashes are let-bound so the shingle
-    pipeline runs once per row, not once per permutation."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    mins = ", ".join(
-        f"array_min(transform(h32, h -> "
-        f"({i * 2 + _MINHASH_A0} * h + {i * 7 + _MINHASH_B0}) "
-        f"% {_MINHASH_P}))"
-        for i in range(num_hashes)
-    )
-    sig_body = f"array({mins})"
-    h32 = "transform(s, x -> xxhash64(x) & 4294967295)"
-    sig = _let("s", word_shingles_sql(text_expr, n), _let("h32", h32, sig_body))
-    return f"hash(slice({sig}, ({band_expr}) * {r} + 1, {r}))"
-
-
-def lang_id_sql(text_expr: str = "text") -> str:
-    """Marker-word argmax language guess — twin of
-    ``operators.textstats.lang_id`` (same cascade built back-to-front,
-    earlier languages win ties)."""
-    from hbase_gis_spark.operators.textstats import _LANG_ORDER, LANG_MARKERS
-
-    def count(markers: tuple[str, ...], w: str) -> str:
-        in_list = ", ".join(f"'{m}'" for m in markers)
-        return f"size(filter({w}, x -> x IN ({in_list})))"
-
-    def body(w: str) -> str:
-        best = best_count = None
-        for lang in reversed(_LANG_ORDER):
-            c = count(LANG_MARKERS[lang], w)
-            if best is None:
-                best = f"CASE WHEN {c} > 0 THEN '{lang}' ELSE 'und' END"
-                best_count = c
-            else:
-                best = (
-                    f"CASE WHEN ({c} > 0 AND {c} >= {best_count}) "
-                    f"THEN '{lang}' ELSE {best} END"
-                )
-                best_count = f"greatest({c}, {best_count})"
-        return best
-
-    return _let("w", tokens_sql(text_expr), body("w"))
-
-
 def register_sql_api(spark: SparkSession) -> None:
     """Register the engine's SQL functions on a session (idempotent):
 
@@ -416,25 +289,26 @@ def register_sql_api(spark: SparkSession) -> None:
       :func:`bbox_sql` in the same WHERE clause so the scan still
       prunes before rows reach Python.
 
-    Corpus family — registered as Spark SQL UDFs (``CREATE TEMPORARY
-    FUNCTION ... RETURN <expr>``), so their bodies are the tier-1
-    expression text above: pure JVM, no Python worker, and exactly the
-    operators' values (equality pinned in tests/test_sqlapi.py):
+    Corpus, vector, retrieval and drift families — Spark SQL functions
+    (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``) whose bodies are
+    the ``functions.sqlkernels`` texts the DataFrame kernels apply, so
+    they return the operators' values, NULL input included (pinned in
+    tests/test_sqlapi.py). Pure JVM, no Python worker:
 
-    - ``hgs_simhash(text) -> bigint``: 60-bit SimHash.
+    - ``hgs_simhash(text) -> bigint``: 60-bit SimHash (``simhash``).
     - ``hgs_minhash_band(text, band) -> int``: MinHash LSH band hash
-      (n=3, 64 hashes, 16 bands — the operator defaults).
-    - ``hgs_lang_id(text) -> string``: marker-word language guess.
-    - ``hgs_sig_lo(a)`` / ``hgs_sig_hi(a) -> bigint``: sign-bit binary
-      signature half-words (bit-exact twins of
-      ``binary_signature_exprs``).
-    - ``hgs_hamming(a_lo, a_hi, b_lo, b_hi) -> int``: popcount Hamming
-      distance between two packed signatures (xor + bit_count
-      intrinsics — the SQL form of the ``ann_hamming_topk`` funnel).
-    - ``hgs_dot(a, b)`` / ``hgs_cosine(a, b) -> double``: fold-order
-      vector arithmetic (bit-matches the operators/oracles).
+      (n=3, 64 hashes, 16 bands — the ``minhash_lsh_pairs`` defaults).
+    - ``hgs_lang_id(text) -> string``: marker-word language guess
+      (``lang_id``).
     - ``hgs_quality_logit(text) -> double``: hashed-linear quality
-      score (exact DataFrame parity — integer weight fold).
+      score (``quality_logit_expr``; 0.0 for NULL text).
+    - ``hgs_dot(a, b)`` / ``hgs_cosine(a, b) -> double``: fold-order
+      vector arithmetic (``dot_expr`` / ``cosine_expr``).
+    - ``hgs_sig_lo(a)`` / ``hgs_sig_hi(a) -> bigint``: sign-bit binary
+      signature half-words (``binary_signature_exprs``).
+    - ``hgs_hamming(a_lo, a_hi, b_lo, b_hi) -> int``: popcount Hamming
+      distance between two packed signatures (the ``ann_hamming_topk``
+      distance).
     - ``hgs_bm25_idf(df, n_docs) -> bigint`` /
       ``hgs_bm25_term(tf, dl, idf_milli, avgdl_milli, k1_milli,
       b_milli) -> bigint``: the integer-exact BM25 scoring core of
@@ -443,6 +317,9 @@ def register_sql_api(spark: SparkSession) -> None:
     - ``hgs_psi_term(n_ref, n_cur, tot_ref, tot_cur, n_bins) ->
       double``: the Laplace-smoothed per-bin PSI contribution of
       ``value_psi`` — apply over any (key, bin) count table.
+
+    Arrow-batched pandas UDFs:
+
     - ``hgs_phash_lo(media)`` / ``hgs_phash_hi(media) -> bigint``:
       block-mean perceptual-hash halves over a binary payload
       (Arrow-batched; same kernel as ``media_phash``).
@@ -472,33 +349,9 @@ def register_sql_api(spark: SparkSession) -> None:
     spark.udf.register("hgs_geohash", geohash_udf(12))
     spark.udf.register("hgs_covers", _hgs_covers)
 
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_simhash(text STRING) "
-        f"RETURNS BIGINT RETURN {simhash_sql('text')}"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_minhash_band("
-        "text STRING, band INT) RETURNS INT "
-        f"RETURN {minhash_band_sql('text', 'band')}"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_lang_id(text STRING) "
-        f"RETURNS STRING RETURN {lang_id_sql('text')}"
-    )
-    # vector family: the tier-1 HOF fold expressions (pure JVM, same
-    # sequential-fold semantics as operators/similarity.py:dot_expr,
-    # so values match the Arrow kernels and DuckDB oracles bit-exactly)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_dot("
-        "a ARRAY<FLOAT>, b ARRAY<FLOAT>) RETURNS DOUBLE RETURN "
-        "aggregate(zip_with(a, b, (x, y) -> cast(x as double) * "
-        "cast(y as double)), cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_cosine("
-        "a ARRAY<FLOAT>, b ARRAY<FLOAT>) RETURNS DOUBLE RETURN "
-        "hgs_dot(a, b) / (sqrt(hgs_dot(a, a)) * sqrt(hgs_dot(b, b)))"
-    )
+    for name in K.SQL_FUNCTIONS:
+        spark.sql(K.create_function_sql(name))
+
     # multimodal: block-mean perceptual hash halves over a binary
     # payload column (Arrow-batched pandas UDFs — the kernel is a
     # byte-level loop, same function the DataFrame operator uses)
@@ -536,92 +389,3 @@ def register_sql_api(spark: SparkSession) -> None:
         return out
 
     spark.udf.register("hgs_hilbert", _hgs_hilbert)
-
-    # binary-signature retrieval family — SQL twins of
-    # operators/similarity.py::binary_signature_exprs / ann_hamming_topk
-    # (same strictly-positive sign rule and two 32-bit half-words, so
-    # SQL signatures join bit-exactly against DataFrame-built ones; see
-    # binary_signature_exprs for why two half-words). hgs_hamming is
-    # pure codegen intrinsics (xor + bit_count).
-    def _sig_fold_sql(first_dim: int) -> str:
-        weights = ", ".join(f"cast({1 << i} as bigint)" for i in range(32))
-        return (
-            "aggregate(zip_with("
-            f"slice(transform(a, x -> cast(x as double)), {first_dim}, 32), "
-            f"array({weights}), "
-            "(x, wgt) -> if(x > cast(0 as double), wgt, cast(0 as bigint))), "
-            "cast(0 as bigint), (acc, v) -> acc + v)"
-        )
-
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_sig_lo("
-        f"a ARRAY<FLOAT>) RETURNS BIGINT RETURN {_sig_fold_sql(1)}"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_sig_hi("
-        f"a ARRAY<FLOAT>) RETURNS BIGINT RETURN {_sig_fold_sql(33)}"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_hamming("
-        "a_lo BIGINT, a_hi BIGINT, b_lo BIGINT, b_hi BIGINT) "
-        "RETURNS INT RETURN "
-        "cast(bit_count(a_lo ^ b_lo) + bit_count(a_hi ^ b_hi) as int)"
-    )
-    # retrieval + drift-monitor family (VERDICT r4 next-round #8) —
-    # the scalar cores of bm25_topk and value_psi as pure-JVM SQL
-    # functions, so spark.sql callers can compose the full pipelines
-    # (grouping/joins are plain SQL; the formulas are what must match
-    # bit-for-bit). Parity with the DataFrame operators is pinned in
-    # tests/test_sqlapi.py by rebuilding both pipelines in SQL.
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_bm25_idf("
-        "df BIGINT, n_docs BIGINT) RETURNS BIGINT RETURN "
-        # idf_milli = round(1000*ln(1 + (N-df+0.5)/(df+0.5))) — the one
-        # float in BM25, integer-rounded BEFORE scoring (libm-ulp
-        # discipline of bm25_topk/textstats.py)
-        "cast(round(1000.0 * ln(1.0 + (cast(n_docs as double) "
-        "- cast(df as double) + 0.5) / (cast(df as double) + 0.5)), 0) "
-        "as bigint)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_bm25_term("
-        "tf BIGINT, dl BIGINT, idf_milli BIGINT, avgdl_milli BIGINT, "
-        "k1_milli BIGINT, b_milli BIGINT) RETURNS BIGINT RETURN "
-        # contrib = (idf*tf*(1000+k1)) div den, all-BIGINT floors —
-        # verbatim the scored expression in bm25_topk
-        "(idf_milli * tf * (1000 + k1_milli)) div ("
-        "1000 * tf + (k1_milli * ((1000 - b_milli) "
-        "+ (b_milli * ((dl * 1000000) div avgdl_milli)) div 1000)) "
-        "div 1000)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_psi_term("
-        "n_ref BIGINT, n_cur BIGINT, tot_ref BIGINT, tot_cur BIGINT, "
-        "n_bins INT) RETURNS DOUBLE RETURN "
-        # (p - q) * ln(p / q) with Laplace 0.5 smoothing, identical
-        # operand order to value_psi's Column form, rounded to 9
-        "round(((cast(n_ref as double) + 0.5) "
-        "/ (cast(tot_ref as double) + 0.5 * cast(n_bins as double)) "
-        "- (cast(n_cur as double) + 0.5) "
-        "/ (cast(tot_cur as double) + 0.5 * cast(n_bins as double))) "
-        "* ln(((cast(n_ref as double) + 0.5) "
-        "/ (cast(tot_ref as double) + 0.5 * cast(n_bins as double))) "
-        "/ ((cast(n_cur as double) + 0.5) "
-        "/ (cast(tot_cur as double) + 0.5 * cast(n_bins as double)))), 9)"
-    )
-    # hashed-linear quality logit — SQL twin of
-    # operators/textstats.py::quality_classifier (same md5 bucket and
-    # integer weight formula; integer fold, one final division)
-    from hbase_gis_spark.operators.textstats import KNUTH_MULT, QC_DIM
-
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION hgs_quality_logit("
-        "text STRING) RETURNS DOUBLE RETURN "
-        "aggregate(transform(split(trim(text), '\\\\s+'), t -> "
-        f"pmod(cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint), {QC_DIM})"
-        f"), cast(0 as bigint), (acc, b) -> acc + "
-        f"pmod(b * {KNUTH_MULT}, {2 * QC_DIM}) - {QC_DIM}) "
-        # cast: a bare 1024.0 literal is DECIMAL in Spark SQL and the
-        # decimal division rounds a last ulp away from the double path
-        f"/ (cast({QC_DIM} as double) * size(split(trim(text), '\\\\s+')))"
-    )

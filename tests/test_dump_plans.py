@@ -85,3 +85,53 @@ def test_mask_plan_replaces_session_ids_only():
                  "1.5", "hashpartitioning(id#N, 8)", "sequence(1, 9,",
                  "UnknownPartitioning(0)"]:
         assert kept in m, kept
+
+
+def _distinct_plan(order, gids):
+    """A formatted-explain fragment of a two-DISTINCT aggregate whose
+    Expand lists its groups in ``order`` with group ids ``gids``."""
+    cols = {"a": "a#12", "b": "b#13"}
+    rows = []
+    for pos, (c, gid) in enumerate(zip(order, gids)):
+        items = ["null", "null"]
+        items[pos] = cols[c]
+        rows.append("[" + ", ".join(items + [str(gid)]) + "]")
+    out = ", ".join(cols[c] for c in order)
+    filters = ", ".join(
+        f"partial_count({cols[c]}) FILTER (WHERE (gid#9 = {gid}))"
+        for c, gid in sorted(zip(order, gids))
+    )
+    return (
+        "(3) Expand\n"
+        "Input [2]: [a#12, b#13]\n"
+        f"Arguments: [{', '.join(rows)}], [{out}, gid#9]\n"
+        "\n"
+        "(4) Sort\n"
+        f"Input [3]: [{out}, gid#9]\n"
+        "Arguments: ["
+        + ", ".join(f"{cols[c]} ASC NULLS FIRST" for c in order)
+        + ", gid#9 ASC NULLS FIRST], false, 0\n"
+        "\n"
+        "(5) HashAggregate\n"
+        f"Keys [3]: [{out}, gid#9]\n"
+        f"Functions [2]: [{filters}]\n"
+    )
+
+
+def test_mask_plan_orders_expand_groups():
+    """Two sessions may list the DISTINCT groups of one Expand in a
+    different order, with different group ids; masking puts the groups,
+    the grouping keys above the Expand and the ids in one order, and
+    every ``FILTER`` keeps the id of its own column."""
+    mask_plan = _dump_plans_module().mask_plan
+    a = _distinct_plan("ab", [1, 2])
+    b = _distinct_plan("ba", [1, 2])
+    assert a != b
+    ma, mb = mask_plan(a), mask_plan(b)
+    assert ma == mb
+    assert ma == mask_plan(a.replace("#12", "#40").replace("#9", "#41"))
+    assert "[[a#N, null, 1], [null, b#N, 2]], [a#N, b#N, gid#N]" in ma
+    assert "Keys [3]: [a#N, b#N, gid#N]" in ma
+    assert "[a#N ASC NULLS FIRST, b#N ASC NULLS FIRST, gid#N" in ma
+    assert "partial_count(a#N) FILTER (WHERE (gid#N = 1))" in ma
+    assert "partial_count(b#N) FILTER (WHERE (gid#N = 2))" in ma

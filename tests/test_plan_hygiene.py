@@ -89,6 +89,110 @@ def test_no_use_arrow_switch():
     assert offenders == [], f"use_arrow switches: {offenders}"
 
 
+def test_sql_kernels_render_once(spark, monkeypatch):
+    """Each SQL-function kernel is rendered once, in
+    ``functions/sqlkernels.py``: every ``CREATE TEMPORARY FUNCTION
+    hgs_*`` body ``register_sql_api`` runs is a ``sqlkernels`` text over
+    the function's parameter names; every DataFrame kernel is one
+    ``F.expr`` of the same text; and the operators that embed a kernel
+    (``ann_hamming_topk``, ``bm25_topk``, ``value_psi``) render it
+    there while they build."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from hbase_gis_spark.functions import sqlkernels as K
+    from hbase_gis_spark.operators import dedup, drift, similarity, textstats
+    from hbase_gis_spark.sqlapi import register_sql_api
+
+    bodies = {}
+
+    class Capture:
+        udf = spark.udf
+
+        def sql(self, stmt):
+            m = re.fullmatch(
+                r"CREATE OR REPLACE TEMPORARY FUNCTION (hgs_\w+)\(.*?\) "
+                r"RETURNS \S+ RETURN (.*)",
+                stmt,
+                re.S,
+            )
+            bodies[m[1]] = m[2]
+
+    register_sql_api(Capture())
+    assert bodies == {
+        "hgs_simhash": K.simhash_sql("text"),
+        "hgs_minhash_band": K.minhash_band_sql("text", "band"),
+        "hgs_lang_id": K.lang_id_sql("text"),
+        "hgs_quality_logit": K.quality_logit_sql("text"),
+        "hgs_dot": K.dot_sql("a", "b"),
+        "hgs_cosine": K.cosine_sql("a", "b"),
+        "hgs_sig_lo": K.sig_lo_sql("a"),
+        "hgs_sig_hi": K.sig_hi_sql("a"),
+        "hgs_hamming": K.hamming_sql("a_lo", "a_hi", "b_lo", "b_hi"),
+        "hgs_bm25_idf": K.bm25_idf_sql("df", "n_docs"),
+        "hgs_bm25_term": K.bm25_term_sql(
+            "tf", "dl", "idf_milli", "avgdl_milli", "k1_milli", "b_milli"
+        ),
+        "hgs_psi_term": K.psi_term_sql(
+            "n_ref", "n_cur", "tot_ref", "tot_cur", "n_bins"
+        ),
+    }
+
+    t = "`text`"
+    lo, hi = similarity.binary_signature_exprs(F.col("v"))
+    kernels = {
+        "tokens": (dedup.tokens("text"), K.tokens_sql(t)),
+        "word_shingles": (
+            dedup.word_shingles("text", 4), K.word_shingles_sql(t, 4)
+        ),
+        "simhash": (dedup.simhash("text"), K.simhash_sql(t)),
+        "minhash_signature_hof": (
+            dedup.minhash_signature_hof("h", 16),
+            K.minhash_signature_sql("`h`", 16),
+        ),
+        "marker_count": (
+            textstats.marker_count("text", ("a", "b")),
+            K.marker_count_sql(K.tokens_sql(t), ("a", "b")),
+        ),
+        "lang_id": (textstats.lang_id("text"), K.lang_id_sql(t)),
+        "quality_wsum_expr": (
+            textstats.quality_wsum_expr("text"), K.quality_wsum_sql(t)
+        ),
+        "quality_logit_expr": (
+            textstats.quality_logit_expr("text"), K.quality_logit_sql(t)
+        ),
+        "dot_expr": (
+            similarity.dot_expr(F.col("v"), F.col("w")), K.dot_sql("v", "w")
+        ),
+        "norm_expr": (similarity.norm_expr(F.col("v")), K.norm_sql("v")),
+        "cosine_expr": (
+            similarity.cosine_expr(F.col("v"), F.col("w")),
+            K.cosine_sql("v", "w"),
+        ),
+        "binary_signature_exprs lo": (lo, K.sig_lo_sql("v")),
+        "binary_signature_exprs hi": (hi, K.sig_hi_sql("v")),
+    }
+    for name, (col, text) in kernels.items():
+        assert str(col) == str(F.expr(text)), name
+
+    rendered = []
+    for fn in ("hamming_sql", "bm25_idf_sql", "psi_term_sql"):
+        kernel = getattr(K, fn)
+        monkeypatch.setattr(
+            K, fn, lambda *a, _k=kernel, _n=fn: rendered.append(_n) or _k(*a)
+        )
+    emb = spark.createDataFrame(
+        [(1, [1.0] * 64), (2, [-1.0] * 64)], "vec_id bigint, embedding array<float>"
+    )
+    similarity.ann_hamming_topk(emb, 1, 1)
+    docs = spark.createDataFrame([(1, "a b")], "doc_id bigint, text string")
+    textstats.bm25_topk(docs, ["a"])
+    vals = spark.createDataFrame([("k", 1.0)], "g string, v double")
+    drift.value_psi(vals, vals, "g", "v")
+    assert rendered == ["hamming_sql", "bm25_idf_sql", "psi_term_sql"]
+
+
 def test_no_checkpoint_mode_parameter():
     """The checkpoint backend has one switch, the
     ``spark.hbase_gis.checkpoint.mode`` session conf: no function takes

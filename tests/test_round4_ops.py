@@ -940,6 +940,34 @@ def test_value_psi_short_reference_group(spark):
     assert sum(r.n_cur for r in rows) == 1
 
 
+def test_psi_single_bin_has_no_cut(spark):
+    """One bin has no boundary: every key keeps an empty cut array
+    (``sequence(1, 0)`` is [1, 0] in Spark, which once cut at the
+    maximum), every row lands in bin 1 with psi 0, and n_bins < 1 is
+    refused."""
+    from hbase_gis_spark.operators.drift import psi_cuts, value_psi
+
+    ref = spark.createDataFrame(
+        [("k", float(v)) for v in range(1, 11)]
+        + [("j", float(v)) for v in range(1, 11)],
+        "g string, v double",
+    )
+    cuts = {
+        r["__k"]: r["__cuts"]
+        for r in psi_cuts(ref, "g", "v", n_bins=1).collect()
+    }
+    assert cuts == {"k": [], "j": []}
+    cur = spark.createDataFrame([("k", 20.0), ("k", 0.0)], "g string, v double")
+    rows = sorted(
+        (r.g, r.bin, r.n_ref, r.n_cur, r.psi)
+        for r in value_psi(ref, cur, "g", "v", n_bins=1).collect()
+    )
+    assert rows == [("j", 1, 10, 0, 0.0), ("k", 1, 10, 2, 0.0)]
+    for bad in (0, -1):
+        with pytest.raises(ValueError):
+            psi_cuts(ref, "g", "v", n_bins=bad)
+
+
 def test_association_rules_hand_counts(spark):
     from hbase_gis_spark.operators.graph import association_rules
 

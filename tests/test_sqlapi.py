@@ -277,6 +277,49 @@ def test_sql_udfs_are_jvm_side(spark, docs_view):
     assert "ArrowEvalPython" not in plan
 
 
+def test_text_kernels_agree_on_edge_inputs(spark):
+    """NULL, empty, blank and one-word text: every DataFrame text
+    kernel returns what its SQL function (or generator) returns —
+    ``hgs_quality_logit(NULL)`` is the operator's 0.0, not NULL."""
+    from hbase_gis_spark.operators.dedup import (
+        minhash_signature_hof,
+        shingle_hashes32,
+        simhash,
+        tokens,
+        word_shingles,
+    )
+    from hbase_gis_spark.operators.textstats import lang_id, quality_logit_expr
+
+    hgs.register_sql_api(spark)
+    texts = [(0, None), (1, ""), (2, "   "), (3, "the")]
+    spark.createDataFrame(texts, "i int, text string").createOrReplaceTempView(
+        "edge_texts"
+    )
+    bands = range(16)
+    via_sql = spark.sql(
+        f"SELECT i, {hgs.tokens_sql('text')} AS tok, "
+        f"{hgs.word_shingles_sql('text')} AS sh, "
+        "hgs_simhash(text) AS simh, hgs_lang_id(text) AS lang, "
+        "hgs_quality_logit(text) AS q, "
+        + ", ".join(f"hgs_minhash_band(text, {b}) AS b{b}" for b in bands)
+        + " FROM edge_texts"
+    )
+    sig = minhash_signature_hof(shingle_hashes32(word_shingles("text", 3)), 64)
+    via_df = spark.table("edge_texts").select(
+        "i",
+        tokens("text").alias("tok"),
+        word_shingles("text").alias("sh"),
+        simhash("text").alias("simh"),
+        lang_id("text").alias("lang"),
+        quality_logit_expr("text").alias("q"),
+        *[F.hash(F.slice(sig, b * 4 + 1, 4)).alias(f"b{b}") for b in bands],
+    )
+    got = {r.i: r.asDict() for r in via_sql.collect()}
+    want = {r.i: r.asDict() for r in via_df.collect()}
+    assert got == want
+    assert want[0]["q"] == 0.0 and want[0]["lang"] == "und"
+
+
 def test_sql_vector_functions_match_operators(spark):
     """hgs_dot / hgs_cosine equal the DataFrame fold expressions
     bit-for-bit, and stay JVM-side."""
